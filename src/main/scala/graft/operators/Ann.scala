@@ -143,9 +143,9 @@ object Ann {
    * energy and the bound stays loose (the worst case), so the graded
    * configuration runs at dPrefix = 3d/4; MRL-trained embeddings
    * front-load energy and turn the same bound into deep pruning at small
-   * prefixes. Plan shape mirrors [[Refine.fetchedSplit]]: map-side
-   * WindowGroupLimit seeds, eager Q*k persists under the scope contract,
-   * broadcast tau0, map-side survive filter, AQE-sized survivor fetch.
+   * prefixes. Plan shape: map-side WindowGroupLimit seeds, eager Q*k
+   * persists under the scope contract, broadcast tau0, map-side survive
+   * filter, AQE-sized survivor fetch.
    */
   def prefixRefineTopK(emb: DataFrame, nq: Int, k: Int, d: Int,
                        dPrefix: Int): DataFrame = {

@@ -10,24 +10,31 @@ import graft.functions.VectorOps._
 /**
  * Bandwidth-first ANN refinement: precision-on-demand with early rejection.
  *
- * Relational (static-tau0) formulation of the reference's six refinement
- * operators (`/root/reference/ANNCode.py:307-647`):
+ * Static-tau0 formulation of the reference's six refinement operators
+ * (reference `ANNCode.py:307-647`), run by [[fetchedSplit]] as
+ * per-partition block passes over the cheap relation
+ * ([[RefineKernel.SeedPass]], [[RefineKernel.SurvivorPass]]) — no N*Q
+ * (row, query) pair relation is ever built:
  *
- *   1. ''reduced pass'': score every candidate against the truncated-
- *      precision copy (cheap columns only — at rest this is a scan of the
- *      small `rvec`/`delta` Parquet columns; column pruning keeps the full
- *      `vec` untouched, which is what makes the bandwidth win physical).
- *   2. ''seed'': top-K by reduced score; rescore those K at full precision;
- *      tau0 = worst seed full score (`ANNCode.py:339-345`).
- *   3. ''early rejection'': keep candidates whose cushion-adjusted reduced
- *      score could still beat tau0 (`ANNCode.py:352-356` etc.). The
- *      reference tightens tau as it walks candidates sequentially; the
- *      relational twin holds tau0 fixed — strictly conservative, so the
- *      zero-miss modes keep recall == 1.0 (paper §3.1.3-3.2.2) and
- *      Hoeffding recall here is >= the reference's.
- *   4. ''rescore'': equi-join survivors back to the full-precision table on
- *      id (broadcast-hash when survivors are small) and take the final
- *      top-K by full score.
+ *   1. ''seed pass'': each partition scores its rows against every query
+ *      on the truncated-precision copy only (at rest a scan of the small
+ *      `rvec` Parquet column; column pruning keeps the full `vec`
+ *      untouched, which is what makes the bandwidth win physical) and
+ *      keeps a k-bounded heap per query; the driver merges the P*Q*k
+ *      candidates into the Q*k seeds (`ANNCode.py:339`).
+ *   2. ''tau0'': the seeds are rescored at full precision, read through an
+ *      `id IN (seeds)` filter on the full side; tau0 = worst seed full
+ *      score per query (`ANNCode.py:339-345`).
+ *   3. ''survivor pass'': a second block pass keeps the non-seed rows
+ *      whose cushion-adjusted reduced score could still beat tau0
+ *      (`ANNCode.py:352-356` etc.). The reference tightens tau as it walks
+ *      candidates sequentially; this form holds tau0 fixed — strictly
+ *      conservative, so the zero-miss modes keep recall == 1.0 (paper
+ *      §3.1.3-3.2.2) and Hoeffding recall here is >= the reference's.
+ *   4. ''fetch'': the survivors (kept distributed) join the streamed
+ *      full-precision table on id as the build side — the full table is
+ *      never broadcast — and are rescored; callers rank seeds + survivors
+ *      with [[TopK.window]].
  *
  * Cushions (paper Table 2):
  *   cos_hoeff : sqrt(2 ln(1/delta)) * ||q_unit ∘ Delta_i||    (ANNCode.py:354)
@@ -41,7 +48,9 @@ import graft.functions.VectorOps._
  * (e.g. cos = dot(x,q)/(||x|| ||q||), ||u-ru||^2 = 2 - 2 dot(x,r)/(||x|| ||r||))
  * so that, on fp16-exact fixture data, every score is a fixed expression
  * tree over EXACT partial sums — bit-reproducible across engines and
- * partitionings (see Fixture docs).
+ * partitionings (see Fixture docs). The block passes evaluate the same
+ * trees in Scala ([[RefineKernel.Scores]]), so their rows are
+ * bit-identical to the column-expression forms used by [[metricsModes]].
  */
 object Refine {
 
@@ -103,7 +112,7 @@ object Refine {
     * columns (qvec, nq2, rvec, delta[, bb], s_hat) in scope. Fused codegen
     * folds (VecExprs) — numerically identical to the HOF forms (same fold
     * order / per-element trees). */
-  private def cushionExpr(p: Params,
+  private[graft] def cushionExpr(p: Params,
                           hcOverride: Option[Column] = None,
                           sHat: Column = col("s_hat")): Column = p.mode match {
     case "cos_hoeff" =>
@@ -123,52 +132,14 @@ object Refine {
   }
 
   /**
-   * Phase 1 for one or more param sets of the SAME metric family:
-   * per-(qid,id) candidate rows (qid, id, s_hat, cush_0..cush_{n-1}) —
-   * a pure map-side pass (broadcast cross join + column expressions),
-   * never ranked or shuffled. The reduced score depends only on the
-   * family, so n cushion columns ride one reduced pass instead of n.
-   * vpre: (id, rvec, delta, nr2[, bb]); queries: (qid, qvec).
-   */
-  private def candidatesMulti(vpre: DataFrame, queries: DataFrame,
-                              ps: Seq[Params],
-                              perQidHc: Boolean = false): DataFrame = {
-    val isCos = ps.head.isCos
-    require(ps.forall(_.isCos == isCos), "params must share a metric family")
-    // perQidHc: the query relation carries a per-qid Hoeffding constant
-    // column `hc` (precision-on-demand as a RELATION) — the cushion
-    // reads it instead of the param literal
-    val qCols = Seq(col("qid"), col("qvec"),
-      norm2Sq(col("qvec")).as("nq2")) ++
-      (if (perQidHc) Seq(col("hc")) else Nil)
-    val q = broadcast(queries.select(qCols: _*))
-
-    val pairs = vpre.crossJoin(q)
-
-    val sHat: Column =
-      if (isCos) dot(col("rvec"), col("qvec")) / (fnorm(col("nr2")) * fnorm(col("nq2")))
-      else l2DistSq(col("qvec"), col("rvec"))   // reduced-space distance (asc)
-
-    val withScore = pairs.withColumn("s_hat", sHat)
-    val hcOv = if (perQidHc) Some(col("hc")) else None
-    val cushions = ps.zipWithIndex.map { case (p, i) =>
-      cushionExpr(p, hcOv).as(s"cush_$i") }
-    withScore.select(col("qid") +: col("id") +: col("s_hat") +: cushions: _*)
-  }
-
-  private def candidates(vpre: DataFrame, queries: DataFrame, p: Params,
-                         perQidHc: Boolean = false): DataFrame =
-    candidatesMulti(vpre, queries, Seq(p), perQidHc)
-      .withColumnRenamed("cush_0", "cush")
-
-  /**
-   * [[candidatesMulti]] generalized over BOTH metric families in ONE
-   * reduced pass: per-(qid,id) rows (qid, id, [s_hat_c], [s_hat_l],
-   * cush_0..cush_{n-1}) — the cos and l2 reduced scores ride the same
-   * broadcast cross join instead of one full N*Q pass per family
-   * (guide §2.3: the pass is the dominant scan; extra columns are
-   * near-free next to a second scan). Expression trees per column are
-   * IDENTICAL to the per-family [[candidatesMulti]] forms.
+   * The reduced pass of the accounting fan-out ([[metricsModes]]) over
+   * BOTH metric families at once: per-(qid,id) rows (qid, id,
+   * [s_hat_c], [s_hat_l], cush_0..cush_{n-1}) off one broadcast cross
+   * join — the cos and l2 reduced scores ride the same pass instead of
+   * one full N*Q pass per family (guide §2.3: the pass is the dominant
+   * scan; extra columns are near-free next to a second scan). The column
+   * trees are the ones [[RefineKernel.Scores]] evaluates in the block
+   * passes. vpre: (id, rvec, delta, nr2[, bb]); queries: (qid, qvec).
    */
   private def candidatesMixed(vpre: DataFrame, queries: DataFrame,
                               ps: Seq[Params]): DataFrame = {
@@ -195,7 +166,7 @@ object Refine {
    * the argpartition analogue (`ANNCode.py:339`), and the reason this
    * shape survives a 100x corpus where a full per-query ranking dies.
    */
-  private def seedSelect(cand: DataFrame, k: Int, isCos: Boolean): DataFrame = {
+  private[graft] def seedSelect(cand: DataFrame, k: Int, isCos: Boolean): DataFrame = {
     val ord = if (isCos) Seq(col("s_hat").desc, col("id").asc)
               else Seq(col("s_hat").asc, col("id").asc)
     val w = Window.partitionBy(col("qid")).orderBy(ord: _*)
@@ -205,7 +176,7 @@ object Refine {
   }
 
   /** Full-precision score for rescoring (cos: unit-space ratio; l2: distance). */
-  private def fullScore(p: Params): Column =
+  private[graft] def fullScore(p: Params): Column =
     if (p.isCos)
       dot(col("vec"), col("qvec")) / (fnorm(norm2Sq(col("vec"))) * fnorm(col("nq2")))
     else l2DistSq(col("qvec"), col("vec"))
@@ -214,17 +185,19 @@ object Refine {
    * Candidate rows after early rejection, rescored at full precision.
    * Returns (qid, id, s_full, rn) — rn<=k are the seeds.
    *
-   * CACHE LIFECYCLE: construction eagerly persists two Q*k-row
-   * intermediates (seed ids + rescored seeds) registered with
-   * [[Dedup]]'s release tracker — Spark's CacheManager holds them
-   * strongly, so they are NOT garbage-collected. Under an enclosing
-   * [[Dedup.scopedRelease]] (Bench/Verify do this per query) the caller
-   * frees them via the returned release callback and gets the fully-lazy
-   * plan. WITHOUT a scope, the operator runs its pipeline eagerly,
-   * returns a self-contained checkpointed result, and releases all of
-   * its own intermediates before returning — a bare
-   * `Refine.topk(...).count()` leaves no cached blocks behind. Applies
-   * equally to [[fetchedSplit]], [[topk]], and [[topkSplit]].
+   * CACHE LIFECYCLE: construction runs the seed pass and the seed rescore
+   * eagerly (their Q*k results come back to the driver and re-enter the
+   * plan as a local relation) and eagerly persists the survivor set —
+   * (qid, id) pairs, kept distributed — registered with [[Dedup]]'s
+   * release tracker: Spark's CacheManager holds it strongly, so it is
+   * NOT garbage-collected. Under an enclosing [[Dedup.scopedRelease]]
+   * (Bench/Verify do this per query) the caller frees it via the
+   * returned release callback and gets the lazy fetch-and-rank plan.
+   * WITHOUT a scope, the operator runs its pipeline eagerly, returns a
+   * self-contained checkpointed result, and releases the survivor set
+   * before returning — a bare `Refine.topk(...).count()` leaves no cached
+   * blocks behind. Applies equally to [[fetchedSplit]], [[topk]], and
+   * [[topkSplit]].
    */
   def fetched(vectors: DataFrame, queries: DataFrame, p: Params): DataFrame =
     fetchedSplit(cheapSide(vectors, p), vectors, queries, p)
@@ -275,9 +248,10 @@ object Refine {
    * pruned scan, the column-pruning analogue of the filtered-multi
    * rung's union-of-langs partition pruning. ONE candidate pass serves
    * every tier: each qid's s_hat and Δ-cushion pick their tier's
-   * columns via a CASE over the broadcast relation; seeds, tau0,
-   * survivor rejection, and the full-precision rescore are the
-   * [[fetchedSplit]] shapes unchanged. Zero-miss mode only (cos_l1:
+   * columns via a CASE over the broadcast relation; seeds (a
+   * group-limited window), tau0, survivor rejection, and the
+   * full-precision rescore follow [[fetchedSplit]]'s static-tau0
+   * semantics as relational joins. Zero-miss mode only (cos_l1:
    * the cushion is a true error bound at ANY tier), so per-qid recall
    * is provably 1.0 at every tier — what makes the per-tier `bytes`
    * column a pure bandwidth trade, not a recall trade.
@@ -339,7 +313,7 @@ object Refine {
     def byTier(f: Int => Column): Column =
       ms.foldRight(lit(null).cast("double")) { (m, rest) =>
         when(col("m") === m, f(m)).otherwise(rest) }
-    // same expression trees as candidatesMulti/cushionExpr, with the
+    // same expression trees as candidatesMixed/cushionExpr, with the
     // tier's columns substituted — the oracle mirrors them per tier
     val sHat = byTier(m => dot(col(s"rvec_$m"), col("qvec")) /
       (fnorm(col(s"nr2_$m")) * fnorm(col("nq2"))))
@@ -350,10 +324,9 @@ object Refine {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     val vSel = full.select(col("id"), col("vec"))
-    // eager Q*k barrier (the fetchedSplitImpl discipline): the rescored
-    // seeds feed multiple branches — without materialization the
-    // concurrent consumers re-run the whole candidate pass per branch.
-    // One barrier suffices (r19, see fetchedSplitImpl): the seed-id
+    // eager Q*k barrier: the rescored seeds feed multiple branches —
+    // without materialization the concurrent consumers re-run the whole
+    // candidate pass per branch. One barrier suffices (r19): the seed-id
     // window runs once inside the probe's broadcast build; tau0 and the
     // exclusion read the persisted seeds (same (qid,id) set — cheap and
     // full are column subsets of one table).
@@ -419,31 +392,34 @@ object Refine {
   /** [[fetched]] with the cheap pass and the full-precision fetch side as
     * separate relations — the disaggregated-storage entry point, where
     * the two sides are different column subsets of one parquet table.
+    * `cheap` carries (id, rvec, delta, nr2[, bb]) ([[cheapSide]],
+    * [[cheapSideStored]]); `full` (id, vec); `queries` (qid, qvec[, hc]).
     *
-    * Plan shape (the 100 TB contract): the N*Q candidate relation is
-    * never ranked, shuffled, or persisted wholesale. Seeds come from a
-    * map-side WindowGroupLimit top-K; everything downstream joins the
-    * BIG relations (candidates, the full-precision table) against
-    * broadcast sets of at most Q*k + survivors rows, so the only
-    * exchange in the whole operator carries ~k rows per (partition, qid).
-    * The full-precision side is streamed and hash-probed against the tiny
-    * fetch set — never broadcast (a 100 TB table can't be) and never
-    * shuffled; at rest the id-sorted layout additionally gives parquet
-    * row-group skipping on the fetch. */
+    * Plan shape (the 100 TB contract): no (row, query) pair relation
+    * exists anywhere. The cheap relation is read by two per-partition
+    * block passes ([[RefineKernel.SeedPass]], [[RefineKernel.SurvivorPass]]
+    * — `RefineSeedPass` / `RefineSurvivorPass` in EXPLAIN); the driver
+    * holds at most the seed pass's P*Q*k candidates and the Q*k rescored
+    * seeds. The survivors stay distributed: they are persisted, counted,
+    * and joined to the full-precision table as the BUILD side — broadcast
+    * when their counted size fits `spark.sql.autoBroadcastJoinThreshold`,
+    * a shuffled hash join otherwise — with the full table streamed, never
+    * broadcast (a 100 TB table can't be). At rest the seed rescore reads
+    * the id-sorted full side through an `id IN (seeds)` filter. */
   def fetchedSplit(cheap: DataFrame, full: DataFrame, queries: DataFrame,
                    p: Params, perQidHc: Boolean = false): DataFrame =
     if (Dedup.scopeActive) fetchedSplitImpl(cheap, full, queries, p, perQidHc)
     else {
       // BARE library caller (no enclosing Dedup.scopedRelease): the
       // caller has no reason to know the release contract, so return a
-      // SELF-CONTAINED result instead of leaking the eager Q*k persists
-      // into the session's CacheManager. The pipeline runs under an
+      // SELF-CONTAINED result instead of leaking the persisted survivor
+      // set into the session's CacheManager. The pipeline runs under an
       // internal scope, the small result (Q*k seeds + survivors) is
       // pinned eagerly via localCheckpoint — acceptable lineage
       // truncation: the pin materializes immediately and holds only the
-      // final rows — and every intermediate is released before
-      // returning. Managed callers (Bench/Verify, anything under
-      // scopedRelease) keep the fully-lazy plan above.
+      // final rows — and the survivor set is released before returning.
+      // Managed callers (Bench/Verify, anything under scopedRelease)
+      // keep the lazy fetch-and-rank plan above.
       val (df, release) = Dedup.scopedRelease(
         fetchedSplitImpl(cheap, full, queries, p, perQidHc))
       try df.localCheckpoint(true)
@@ -452,69 +428,45 @@ object Refine {
 
   private def fetchedSplitImpl(cheap: DataFrame, full: DataFrame,
                                queries: DataFrame, p: Params,
-                               perQidHc: Boolean = false): DataFrame = {
-    val cand = candidates(cheap, queries, p, perQidHc)
+                               perQidHc: Boolean): DataFrame = {
+    import RefineKernel.{Cand, RescorePass, SeedPass, SurvivorPass}
+    import org.apache.spark.sql.graft.KernelPlan
+    val spark = cheap.sparkSession
+    import spark.implicits._
+    val qs = RefineKernel.passQueries(queries, p, perQidHc)
     val vSel = full.select(col("id"), col("vec"))
-    val qSel = broadcast(queries.select(col("qid"), col("qvec"),
-      norm2Sq(col("qvec")).as("nq2")))
 
-    // The rescored seeds are a Q*k-row relation consumed by three
-    // branches (tau0 / exclusion / final union): without an EAGER
-    // barrier the concurrent consumers race the cache fill and each
-    // RE-EXECUTES the whole candidate pass (and the full-table seed
-    // probe) — the dominant cost of the operator repeated 3x. Eager
-    // persist (not localCheckpoint: truncated lineage turns an executor
-    // loss into a hard "checkpoint block not found" failure, while a
-    // persisted plan just recomputes), registered with Dedup's release
-    // tracker — CacheManager holds persisted plans strongly, so
-    // Bench/Verify's per-query release is what actually frees them (the
-    // ContextCleaner cannot). ONE barrier suffices (r19): the seed-id
-    // window runs exactly once, inside the seed probe's broadcast build,
-    // and every downstream consumer (tau0, the anti-join exclusion)
-    // reads the persisted seeds — the former separate eager seedIds
-    // persist was a whole extra action + broadcast per query in a
-    // driver-bound suite. seeds.(qid,id) == seedIds.(qid,id) because
-    // cheap and full are column subsets of the SAME table (the split
-    // contract), so the exclusion set is unchanged.
-    def eager(df: DataFrame): DataFrame = {
-      val mat = Dedup.persistScoped(df)
-      mat.count(); mat
-    }
-    // seeds: stream the full table once, probing the broadcast seed set
-    val seeds = eager(
-      vSel.join(broadcast(seedSelect(cand, p.k, p.isCos)), Seq("id"))
-        .join(qSel, Seq("qid"))
-        .withColumn("s_full", fullScore(p))
-        .select(col("qid"), col("id"), col("s_full"), col("rn")))
+    // 1. seeds: each partition's k best per query, merged on the driver
+    val seedIds = RefineKernel.mergeSeeds(
+      KernelPlan.blockPass(cheap, SeedPass(p, qs)).as[Cand].collect().toSeq, p)
 
-    // tau0: worst full-precision score among the seeds
-    val tau0 = broadcast(
-      seeds.groupBy(col("qid")).agg(
-        (if (p.isCos) min(col("s_full")) else max(col("s_full"))).as("tau0")))
+    // 2. tau0: the seeds' full-precision scores, read through id IN (seeds)
+    val rescore = RescorePass(p, qs)
+    val seedVecs: Map[Long, Array[Float]] =
+      if (seedIds.isEmpty) Map.empty
+      else vSel.filter(col("id").isInCollection(seedIds.map(_._2).distinct))
+        .as[(Long, Array[Float])].collect().toMap
+    val seeds = seedIds.flatMap { case (qid, id, rn) =>
+      seedVecs.get(id).map(v => (qid, id, rescore.score(qid, v), rn)) }
+    val byQid = seeds.groupBy(_._1)
+    val live = qs.filter(q => byQid.contains(q.qid))
 
-    val survive =
-      if (p.isCos) col("s_hat") + col("cush") >= col("tau0")
-      else col("cush") <= col("tau0")   // cush is a lower bound on d^2
-    // early rejection: map-side filter of the candidate pass against the
-    // broadcast tau0 + seed-id exclusion — no shuffle, no sort
-    val survivorIds = cand
-      .join(broadcast(seeds.select(col("qid"), col("id"))),
-        Seq("qid", "id"), "left_anti")
-      .join(tau0, Seq("qid"))
-      .filter(survive)
-      .select(col("qid"), col("id"))
-    // survivor volume is data-dependent (tight cushions -> ~0, a lax
-    // Hoeffding delta -> approaching N*Q): no broadcast hint — AQE
-    // broadcasts the fetch set when its runtime size is small and keeps
-    // the join distributed when it is not, so the driver never has to
-    // collect an unbounded set
-    val survivors = vSel.join(survivorIds, Seq("id"))
-      .join(qSel, Seq("qid"))
-      .withColumn("s_full", fullScore(p))
+    // 3. survivors: the non-seed rows whose cushion can still reach tau0,
+    // persisted (kept distributed) and counted to size the fetch join
+    val survivors = Dedup.persistScoped(KernelPlan.blockPass(cheap,
+      SurvivorPass(p, live,
+        live.map(q => RefineKernel.tau0(p.isCos, byQid(q.qid).map(_._3))),
+        live.map(q => byQid(q.qid).map(_._2).sorted.toArray))))
+    val nSurvivors = survivors.queryExecution.toRdd.count()
 
-    seeds.select(col("qid"), col("id"), col("s_full"), col("rn"))
-      .unionByName(survivors.select(col("qid"), col("id"), col("s_full"),
-        lit(p.k + 1).as("rn")))   // any value > k: "not a seed"
+    // 4. fetch: survivors as the build side, the full table streamed
+    val build =
+      if (KernelPlan.fitsBroadcast(nSurvivors)) broadcast(survivors)
+      else survivors.hint("shuffle_hash")
+    val fetchedSurvivors = KernelPlan.blockPass(
+        vSel.join(build, Seq("id")), rescore, "s_full")
+      .withColumn("rn", lit(p.k + 1))   // any value > k: "not a seed"
+    seeds.toDF("qid", "id", "s_full", "rn").unionByName(fetchedSurvivors)
   }
 
   /** Final refined top-K: (qid, rank, id, score). Equals exact top-K for
@@ -581,7 +533,7 @@ object Refine {
                     redBytesOverride: Option[Double] = None): DataFrame = {
     val isCos = ps.head.isCos
     require(ps.forall(p => p.isCos == isCos),
-      "metricsFamily params must share k and metric family")
+      "metricsFamily params must share a metric family")
     metricsModes(vectors, queries, ps, d,
       groundTruth.map(g => Map(isCos -> g)).getOrElse(Map.empty),
       redBytesOverride)
@@ -618,12 +570,11 @@ object Refine {
     // extra column is inert for the other modes' expressions
     val vpre = cheapSide(vectors, ps.find(_.mode == "cos_l2").getOrElse(ps.head))
     // the candidate pass is a pure map-side projection off the (cached)
-    // fixture — the fetchedSplit contract: the N*Q relation is never
-    // ranked, shuffled, or persisted wholesale (at 100 TB x Q it is not
-    // storable). Its two consumers (the seed window, the survivor
-    // filter) each stream it map-side; recomputing the D-bounded folds
-    // twice is cheaper than materializing N*Q rows once (measured: see
-    // OPTIMIZATION_r19.md).
+    // fixture: the N*Q relation is never fully ranked, shuffled, or
+    // persisted (at 100 TB x Q it is not storable). Its two consumers
+    // (the seed windows, the survivor filter) each stream it map-side;
+    // recomputing the D-bounded folds twice is cheaper than
+    // materializing N*Q rows once (measured: see OPTIMIZATION_r19.md).
     val cand = candidatesMixed(vpre, queries, ps)
 
     val vSel = vectors.select(col("id"), col("vec"))
@@ -632,8 +583,8 @@ object Refine {
 
     def sHatOf(isCos: Boolean): Column =
       if (isCos) col("s_hat_c") else col("s_hat_l")
-    // per-family seed ids off the shared candidate pass (two cheap
-    // windows over one persisted relation instead of one window over
+    // per-family seed ids off the shared candidate pass (two map-side
+    // group-limited windows over one pass instead of one window over
     // each family's own full reduced pass)
     def seedIdsOf(isCos: Boolean): DataFrame =
       seedSelect(cand.select(col("qid"), col("id"),
@@ -682,9 +633,9 @@ object Refine {
     val survivorIds = withTau
       .select(col("qid") +: col("id") +: flags: _*)
       .filter(ps.indices.map(i => col(s"f_$i")).reduce(_ || _))
-    // no broadcast hint (see fetchedSplit): a lax Hoeffding delta in the
-    // param set can make the superset approach N*Q rows — AQE picks
-    // broadcast only when the runtime size allows it
+    // no broadcast hint: a lax Hoeffding delta in the param set can make
+    // the superset approach N*Q rows — AQE picks broadcast only when the
+    // runtime size allows it
     val sFullCols = fams.map(f =>
       (if (f) sFullC else sFullL).as(s"s_full_$f"))
     val survivorsAll = vSel.join(survivorIds, Seq("id"))
@@ -709,8 +660,8 @@ object Refine {
 
     try {
       // materialize the shared persisted relations BEFORE the accounting
-      // aggregates: seeds first (its probe job also materializes the
-      // persisted cand), then the survivor superset
+      // aggregates: seeds first (its probe job runs the candidate pass
+      // for the seed windows), then the survivor superset
       seeds.count()
       survivorsAll.count()
 

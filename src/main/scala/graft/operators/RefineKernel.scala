@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions.col
 
 /**
@@ -31,6 +32,10 @@ import org.apache.spark.sql.functions.col
  * per-query score/order/heap buffers are allocated once and reused, so
  * the per-query cost is the two array passes and the index sort, with no
  * per-query allocation beyond the emitted ~K candidates.
+ *
+ * The static-tau0 operator ([[Refine.fetchedSplit]]) runs here too, as
+ * block passes ([[SeedPass]], [[SurvivorPass]], [[RescorePass]]) planned
+ * by `KernelPlan`; both forms score through [[Scores]].
  */
 object RefineKernel {
 
@@ -39,13 +44,17 @@ object RefineKernel {
   final case class QRow(qid: Long, qvec: Array[Float])
   final case class Cand(qid: Long, id: Long, score: Double)
 
-  /** Hard cap on the query side: the kernel collects Q to the driver and
-    * broadcasts it (the reference's Q is an in-RAM matrix too, ~tens of
-    * rows), so an unbounded query relation here would be a silent driver
-    * OOM. 64k rows * (8B qid + D floats) stays comfortably in driver
-    * memory; beyond that, use the relational [[Refine]] path, which never
-    * collects Q. */
+  /** Hard cap on the query side: the kernels and the block passes
+    * collect Q to the driver and broadcast it (the reference's Q is an
+    * in-RAM matrix too, ~tens of rows), so an unbounded query relation
+    * would be a silent driver OOM. 64k rows * (8B qid + D floats) stays
+    * comfortably in driver memory; larger query sets go in batches. */
   final val MaxQueryRows: Int = 1 << 16
+
+  private def requireCapped(rows: Int): Unit =
+    require(rows <= MaxQueryRows,
+      s"refine query side exceeds MaxQueryRows=$MaxQueryRows rows; " +
+        "split the query relation into batches")
 
   /** Collect the query matrix with the cap enforced (limit cap+1 so the
     * overflow check never pulls an unbounded relation either). */
@@ -54,19 +63,103 @@ object RefineKernel {
     import spark.implicits._
     val qs = queries.select(col("qid"), col("qvec"))
       .limit(MaxQueryRows + 1).as[QRow].collect()
-    require(qs.length <= MaxQueryRows,
-      s"kernel query side exceeds MaxQueryRows=$MaxQueryRows rows; " +
-        "use the relational Refine path for large query relations")
+    requireCapped(qs.length)
     qs.sortBy(_.qid)
   }
 
-  private[operators] def dotD(a: Array[Float], b: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-    s
-  }
-  private[operators] def norm(a: Array[Float]): Double = {
-    math.max(math.sqrt(dotD(a, a)), 1e-12)
+  /**
+   * Per-mode score and cushion arithmetic: the one Scala copy, shared by
+   * the sequential walk ([[PartitionKernel]]) and the block passes
+   * ([[SeedPass]], [[SurvivorPass]]). Every fold accumulates in double,
+   * in array order, with the per-element expression tree of the matching
+   * codegen'd fold in `VecExprs`, and every ratio keeps the operation
+   * order of [[Refine]]'s column expressions — so a score here is
+   * bit-identical to the relational expression over the same inputs.
+   */
+  object Scores {
+    /** sum a_i * b_i (`VecExprs.DotD`). */
+    def dot(a: Array[Float], b: Array[Float]): Double = {
+      var s = 0.0; var i = 0
+      while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+      s
+    }
+    /** sum (q_i - r_i)^2 (`VecExprs.L2Sq`). */
+    def l2Sq(q: Array[Float], r: Array[Float]): Double = {
+      var s = 0.0; var i = 0
+      while (i < q.length) {
+        val d = q(i).toDouble - r(i).toDouble; s += d * d; i += 1
+      }
+      s
+    }
+    /** The floored norm of a squared norm (`VectorOps.fnorm`). */
+    def fnorm(x: Double): Double = math.max(math.sqrt(x), 1e-12)
+
+    /** cos_l2's query-free stat from the two norms (`Refine.cosL2Stat`). */
+    def cosL2Stat(vec: Array[Float], rvec: Array[Float],
+                  vn: Double, rn: Double): Double =
+      math.sqrt(math.max(0.0, 2.0 - 2.0 * dot(vec, rvec) / (vn * rn)))
+
+    /** Reduced score: cos ratio (rn, qn the floored norms) or l2 distance. */
+    def sHat(isCos: Boolean, q: Array[Float], rvec: Array[Float],
+             rn: Double, qn: Double): Double =
+      if (isCos) dot(rvec, q) / (rn * qn) else l2Sq(q, rvec)
+
+    /** Full-precision score: the same forms over `vec`. */
+    def full(isCos: Boolean, q: Array[Float], vec: Array[Float],
+             vn: Double, qn: Double): Double =
+      if (isCos) dot(vec, q) / (vn * qn) else l2Sq(q, vec)
+
+    /** The mode's cushion (paper Table 2). `hc` is the cos_hoeff constant
+      * (the param's, or a per-qid override), `bb` cos_l2's stored stat,
+      * `sHat` the reduced score l2_hoeff offsets. */
+    def cushion(p: Refine.Params, hc: Double, q: Array[Float],
+                rvec: Array[Float], delta: Array[Float], bb: Double,
+                sHat: Double, qn: Double): Double = p.mode match {
+      case "cos_hoeff" =>
+        var s = 0.0; var j = 0
+        while (j < q.length) {
+          val t = q(j).toDouble * delta(j).toDouble; s += t * t; j += 1
+        }
+        hc * math.sqrt(s) / qn
+      case "cos_l1" =>
+        var s = 0.0; var j = 0
+        while (j < q.length) {
+          s += math.abs(q(j).toDouble) * delta(j).toDouble; j += 1
+        }
+        p.alpha * s / qn
+      case "cos_l2" =>
+        p.alpha * bb
+      case "l2_sym" =>
+        var s = 0.0; var j = 0
+        while (j < q.length) {
+          val l = math.max(
+            math.abs(q(j).toDouble - rvec(j).toDouble) - delta(j).toDouble, 0.0)
+          s += l * l; j += 1
+        }
+        s
+      case "l2_tz" =>
+        // sign of the reduced value steers the branch; -0.0 counts negative
+        var s = 0.0; var j = 0
+        while (j < q.length) {
+          val r = rvec(j).toDouble; val d = delta(j).toDouble
+          val a = q(j).toDouble - r
+          val sg = if (r < 0.0 ||
+            (r == 0.0 && java.lang.Double.doubleToRawLongBits(r) != 0L)) -1.0
+            else 1.0
+          val b = a * sg
+          if (b <= 0.0) s += a * a
+          else if (b >= d) { val l = b - d; s += l * l }
+          j += 1
+        }
+        s
+      case "l2_hoeff" =>
+        var s = 0.0; var j = 0
+        while (j < q.length) {
+          val t = (q(j).toDouble - rvec(j).toDouble) * delta(j).toDouble
+          s += t * t; j += 1
+        }
+        sHat - 2.0 * p.hoeffConst * math.sqrt(s)
+    }
   }
 
   /**
@@ -76,31 +169,25 @@ object RefineKernel {
   final class PartitionKernel(rows: Array[VecRow], p: Refine.Params) {
     private val n = rows.length
     private val k = p.k
-    private val mode = p.mode
-    private val alpha = p.alpha
     private val hoeffC = p.hoeffConst
     private val isCos = p.isCos
 
     // ---- query-independent precompute (once per partition) ----
     // cos full/reduced scores divide by the row norms every time; the
-    // cos_l2 cushion alpha*sqrt(max(0, 2-2*cos(vec,rvec))) is entirely
-    // query-free. Same expression trees as before, so values (and the
-    // DuckDB oracle hashes) are bit-identical.
+    // cos_l2 stat sqrt(max(0, 2-2*cos(vec,rvec))) is entirely query-free
     private val vnorm: Array[Double] = if (isCos) new Array[Double](n) else null
     private val rnorm: Array[Double] = if (isCos) new Array[Double](n) else null
-    private val cosL2Cushion: Array[Double] =
-      if (mode == "cos_l2") new Array[Double](n) else null
+    private val bb: Array[Double] =
+      if (p.mode == "cos_l2") new Array[Double](n) else null
     locally {
       if (isCos) {
         var i = 0
         while (i < n) {
           val r = rows(i)
-          vnorm(i) = norm(r.vec)
-          rnorm(i) = norm(r.rvec)
-          if (cosL2Cushion != null) {
-            val b2 = 2.0 - 2.0 * dotD(r.vec, r.rvec) / (vnorm(i) * rnorm(i))
-            cosL2Cushion(i) = alpha * math.sqrt(math.max(0.0, b2))
-          }
+          vnorm(i) = Scores.fnorm(Scores.dot(r.vec, r.vec))
+          rnorm(i) = Scores.fnorm(Scores.dot(r.rvec, r.rvec))
+          if (bb != null)
+            bb(i) = Scores.cosL2Stat(r.vec, r.rvec, vnorm(i), rnorm(i))
           i += 1
         }
       }
@@ -183,59 +270,14 @@ object RefineKernel {
       if (n > 1) qsort(0, n - 1)
     }
 
-    private def fullScore(i0: Int, qv: Array[Float], nq: Double): Double = {
-      val r = rows(i0)
-      if (isCos) dotD(r.vec, qv) / (vnorm(i0) * nq)
-      else {
-        var s = 0.0; var j = 0
-        while (j < qv.length) {
-          val d = qv(j).toDouble - r.vec(j).toDouble; s += d * d; j += 1
-        }
-        s
-      }
-    }
+    private def fullScore(i0: Int, qv: Array[Float], nq: Double): Double =
+      Scores.full(isCos, qv, rows(i0).vec,
+        if (isCos) vnorm(i0) else 0.0, nq)
 
     private def cushion(i0: Int, qv: Array[Float], nq: Double): Double = {
       val r = rows(i0)
-      mode match {
-        case "cos_l1" =>
-          var s = 0.0; var j = 0
-          while (j < qv.length) { s += math.abs(qv(j).toDouble) * r.delta(j); j += 1 }
-          alpha * s / nq
-        case "cos_hoeff" =>
-          var s = 0.0; var j = 0
-          while (j < qv.length) { val t = qv(j).toDouble * r.delta(j); s += t * t; j += 1 }
-          hoeffC * math.sqrt(s) / nq
-        case "cos_l2" =>
-          cosL2Cushion(i0)
-        case "l2_sym" =>
-          var s = 0.0; var j = 0
-          while (j < qv.length) {
-            val a = qv(j).toDouble - r.rvec(j).toDouble
-            val l = math.max(math.abs(a) - r.delta(j), 0.0); s += l * l; j += 1
-          }
-          s
-        case "l2_tz" =>
-          var s = 0.0; var j = 0
-          while (j < qv.length) {
-            val a = qv(j).toDouble - r.rvec(j).toDouble
-            val sg = if (r.rvec(j) < 0 ||
-              (r.rvec(j) == 0.0f && 1.0f / r.rvec(j) < 0)) -1.0 else 1.0
-            val b = a * sg
-            val d = r.delta(j).toDouble
-            s += (if (b <= 0.0) a * a
-                  else if (b < d) 0.0
-                  else (math.abs(a) - d) * (math.abs(a) - d))
-            j += 1
-          }
-          s
-        case "l2_hoeff" =>
-          var s = 0.0; var j = 0
-          while (j < qv.length) {
-            val t = (qv(j).toDouble - r.rvec(j).toDouble) * r.delta(j); s += t * t; j += 1
-          }
-          sHat(i0) - 2.0 * hoeffC * math.sqrt(s)
-      }
+      Scores.cushion(p, hoeffC, qv, r.rvec, r.delta,
+        if (bb != null) bb(i0) else 0.0, sHat(i0), nq)
     }
 
     /** The running-tau walk for one query over this partition's block.
@@ -263,21 +305,13 @@ object RefineKernel {
                         fetchSink: scala.collection.mutable.ArrayBuffer[Cand])
         : Iterator[Cand] = {
       if (n == 0) return Iterator.empty
-      val nq = norm(qv)
+      val nq = Scores.fnorm(Scores.dot(qv, qv))
 
       // reduced pass: s_hat over the cheap columns only
       var i = 0
       while (i < n) {
-        val r = rows(i)
-        sHat(i) =
-          if (isCos) dotD(r.rvec, qv) / (rnorm(i) * nq)
-          else {
-            var s = 0.0; var j = 0
-            while (j < qv.length) {
-              val d = qv(j).toDouble - r.rvec(j).toDouble; s += d * d; j += 1
-            }
-            s
-          }
+        sHat(i) = Scores.sHat(isCos, qv, rows(i).rvec,
+          if (isCos) rnorm(i) else 0.0, nq)
         order(i) = i
         i += 1
       }
@@ -319,6 +353,195 @@ object RefineKernel {
         j += 1
       }
       out.iterator
+    }
+  }
+
+  // ---- static-tau0 block passes ([[Refine.fetchedSplit]]) --------------
+
+  /** Spark's order on scores, best first: doubles compare as
+    * `SQLOrderingUtil.compareDoubles` does (NaN greatest, -0.0 == 0.0),
+    * descending for cos and ascending for l2, ties to the smaller id —
+    * the order of a window's `ORDER BY s DESC|ASC, id ASC`. */
+  def ranksBefore(isCos: Boolean, sa: Double, ia: Long,
+                  sb: Double, ib: Long): Boolean = {
+    val c = SQLOrderingUtil.compareDoubles(sa, sb)
+    if (c != 0) { if (isCos) c > 0 else c < 0 } else ia < ib
+  }
+
+  /** tau0 of one query: the worst rescored seed, as Spark's `min` (cos) or
+    * `max` (l2) aggregate picks it — NaN compares greatest. */
+  def tau0(isCos: Boolean, sFull: Seq[Double]): Double =
+    sFull.reduce { (a, b) =>
+      val c = SQLOrderingUtil.compareDoubles(b, a)
+      if (if (isCos) c < 0 else c > 0) b else a
+    }
+
+  /** One query row of the block passes: `qn` is fnorm(||q||^2), `hc` the
+    * cos_hoeff constant its cushion reads (the param's, or the query
+    * relation's per-qid `hc` column). */
+  final case class PassQuery(qid: Long, qvec: Array[Float], qn: Double,
+                             hc: Double)
+
+  /** Collect the query side of the block passes under the same cap as
+    * [[collectQueries]]. */
+  def passQueries(queries: DataFrame, p: Refine.Params,
+                  perQidHc: Boolean): Array[PassQuery] = {
+    val cols = Seq(col("qid").cast("long"), col("qvec")) ++
+      (if (perQidHc) Seq(col("hc")) else Nil)
+    val rows = queries.select(cols: _*).limit(MaxQueryRows + 1).collect()
+    requireCapped(rows.length)
+    rows.map { r =>
+      val qv = r.getSeq[Float](1).toArray
+      PassQuery(r.getLong(0), qv, Scores.fnorm(Scores.dot(qv, qv)),
+        if (perQidHc) r.getDouble(2) else p.hoeffConst)
+    }
+  }
+
+  /** One decoded row of the cheap relation. `delta` is null when the pass
+    * reads no Δ; `rn` is fnorm of the stored nr2 (cos only) and `bb` the
+    * stored cos_l2 stat (cos_l2 only), 0.0 where unread. */
+  final class CheapRow(val id: Long, val rvec: Array[Float],
+                       val delta: Array[Float], val rn: Double, val bb: Double)
+
+  /** A pass of [[Refine.fetchedSplit]] over one partition: the physical
+    * operator (`KernelPlan.RefinePassExec`) decodes the child's `columns`
+    * and emits `(qid, id[, score])` rows. */
+  sealed trait BlockPass extends Serializable {
+    def name: String
+    def p: Refine.Params
+    def queries: Array[PassQuery]
+    def columns: Seq[String]
+    /** Whether emitted rows carry the score column. */
+    def emitsScore: Boolean
+    def describe: String = s"${p.mode} k=${p.k} queries=${queries.length}"
+  }
+
+  /** A block pass over the cheap relation: each row is read once and
+    * scored against the whole query matrix. */
+  sealed trait CheapPass extends BlockPass {
+    def run(rows: Iterator[CheapRow]): Iterator[Cand]
+  }
+
+  /** The cheap columns a block pass over the reduced copy reads. */
+  private def cheapColumns(p: Refine.Params, cushion: Boolean): Seq[String] =
+    Seq("id", "rvec") ++ (if (p.isCos) Seq("nr2") else Nil) ++
+      (if (!cushion) Nil
+       else if (p.mode == "cos_l2") Seq("bb")
+       else Seq("delta"))
+
+  /** The `cap` best (score, id) pairs under [[ranksBefore]]: a binary heap
+    * with the worst kept pair at the root, grown on demand up to `cap`. */
+  private final class BestK(cap: Int, isCos: Boolean) {
+    private var s = new Array[Double](math.min(cap, 64))
+    private var id = new Array[Long](s.length)
+    private var size = 0
+    private def worse(a: Int, b: Int): Boolean =
+      ranksBefore(isCos, s(b), id(b), s(a), id(a))
+    private def swap(a: Int, b: Int): Unit = {
+      val ts = s(a); s(a) = s(b); s(b) = ts
+      val ti = id(a); id(a) = id(b); id(b) = ti
+    }
+    def offer(sc: Double, i: Long): Unit =
+      if (size < cap) {
+        if (size == s.length) {
+          val n = math.min(cap.toLong, 2L * size).toInt
+          s = java.util.Arrays.copyOf(s, n); id = java.util.Arrays.copyOf(id, n)
+        }
+        s(size) = sc; id(size) = i
+        var c = size; size += 1
+        while (c > 0 && worse(c, (c - 1) / 2)) {
+          swap(c, (c - 1) / 2); c = (c - 1) / 2
+        }
+      } else if (size > 0 && ranksBefore(isCos, sc, i, s(0), id(0))) {
+        s(0) = sc; id(0) = i
+        var c = 0; var done = false
+        while (!done) {
+          val l = 2 * c + 1; var w = c
+          if (l < size && worse(l, w)) w = l
+          if (l + 1 < size && worse(l + 1, w)) w = l + 1
+          if (w == c) done = true else { swap(c, w); c = w }
+        }
+      }
+    def emit(qid: Long): Iterator[Cand] =
+      Iterator.range(0, size).map(j => Cand(qid, id(j), s(j)))
+  }
+
+  /** Seed pass: per query, the partition's k best rows by reduced score,
+    * as `(qid, id, s_hat)`. The global seeds are the k best of these per
+    * qid ([[mergeSeeds]]) — the rows a `row_number() <= k` window over
+    * every (row, query) pair keeps. */
+  final case class SeedPass(p: Refine.Params, queries: Array[PassQuery])
+      extends CheapPass {
+    def name: String = "RefineSeedPass"
+    def columns: Seq[String] = cheapColumns(p, cushion = false)
+    def emitsScore: Boolean = true
+
+    def run(rows: Iterator[CheapRow]): Iterator[Cand] = {
+      val heaps = Array.fill(queries.length)(new BestK(p.k, p.isCos))
+      rows.foreach { r =>
+        var j = 0
+        while (j < queries.length) {
+          val q = queries(j)
+          heaps(j).offer(Scores.sHat(p.isCos, q.qvec, r.rvec, r.rn, q.qn), r.id)
+          j += 1
+        }
+      }
+      queries.indices.iterator.flatMap(j => heaps(j).emit(queries(j).qid))
+    }
+  }
+
+  /** The global seeds from the seed pass's per-partition candidates: per
+    * qid the k best under [[ranksBefore]], as (qid, id, rn) with rn 1..k. */
+  def mergeSeeds(cands: Seq[Cand], p: Refine.Params): Seq[(Long, Long, Int)] =
+    cands.groupBy(_.qid).toSeq.flatMap { case (qid, cs) =>
+      cs.sortWith((a, b) => ranksBefore(p.isCos, a.score, a.id, b.score, b.id))
+        .take(p.k).zipWithIndex.map { case (c, i) => (qid, c.id, i + 1) }
+    }
+
+  /** Survivor pass: `(qid, id)` of every non-seed row whose cushioned
+    * reduced score can still reach its query's tau0 — cos:
+    * s_hat + cushion >= tau0; l2: cushion (a lower bound on d^2) <= tau0 —
+    * compared as Spark compares doubles. `queries` holds only the queries
+    * with seeds; `tau0` and the sorted `seeds` ids align with it. */
+  final case class SurvivorPass(p: Refine.Params, queries: Array[PassQuery],
+                                tau0: Array[Double], seeds: Array[Array[Long]])
+      extends CheapPass {
+    def name: String = "RefineSurvivorPass"
+    def columns: Seq[String] = cheapColumns(p, cushion = true)
+    def emitsScore: Boolean = false
+    // only cos and l2_hoeff read s_hat in the survival test
+    private def needsSHat = p.isCos || p.mode == "l2_hoeff"
+
+    private def survives(r: CheapRow, j: Int): Boolean =
+      java.util.Arrays.binarySearch(seeds(j), r.id) < 0 && {
+        val q = queries(j)
+        val sh =
+          if (needsSHat) Scores.sHat(p.isCos, q.qvec, r.rvec, r.rn, q.qn)
+          else 0.0
+        val cush = Scores.cushion(p, q.hc, q.qvec, r.rvec, r.delta, r.bb, sh, q.qn)
+        if (p.isCos) SQLOrderingUtil.compareDoubles(sh + cush, tau0(j)) >= 0
+        else SQLOrderingUtil.compareDoubles(cush, tau0(j)) <= 0
+      }
+
+    def run(rows: Iterator[CheapRow]): Iterator[Cand] =
+      rows.flatMap(r => queries.indices.iterator
+        .filter(j => survives(r, j))
+        .map(j => Cand(queries(j).qid, r.id, 0.0)))
+  }
+
+  /** Fetch pass: the full-precision score of each fetched `(qid, id, vec)`
+    * row against its query, as `(qid, id, s_full)`. */
+  final case class RescorePass(p: Refine.Params, queries: Array[PassQuery])
+      extends BlockPass {
+    def name: String = "RefineRescorePass"
+    def columns: Seq[String] = Seq("qid", "id", "vec")
+    def emitsScore: Boolean = true
+    @transient private lazy val byQid: Map[Long, PassQuery] =
+      queries.map(q => q.qid -> q).toMap
+    def score(qid: Long, vec: Array[Float]): Double = {
+      val q = byQid(qid)
+      Scores.full(p.isCos, q.qvec, vec,
+        if (p.isCos) Scores.fnorm(Scores.dot(vec, vec)) else 0.0, q.qn)
     }
   }
 

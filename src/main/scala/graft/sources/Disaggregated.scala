@@ -96,25 +96,13 @@ object Disaggregated {
                  p: graft.operators.Refine.Params): DataFrame = {
     val stored = spark.read.parquet(path)
     // The pruned cheap tier (id, rvec, delta[, bb] — the reduced column
-    // chunks only) is consumed by BOTH refine passes: the seed window
-    // pass and the survivor filter. Without a pin each consumer re-scans
-    // and re-decompresses the zstd parquet chunks — measured at 2x the
-    // whole cheap-tier scan cost per query (the in-memory twin reads a
-    // cached fixture and never pays this). Persist the cheap tier once
-    // under the caller's release scope: this is the tier you'd pin in
-    // cluster cache at 100 TB (it is the small fraction of the table by
-    // bytes), while the full-precision side stays streaming as the
-    // topkSplit contract requires. The seed pass runs eagerly first
-    // inside fetchedSplitImpl, so it fills the cache before the survivor
-    // pass reads it — no concurrent-fill race. Bare callers (no scope)
-    // keep the plain lazy scan: no leak into the session CacheManager.
-    val cheap0 = graft.operators.Refine.cheapSideStored(stored, p)
-    val cheap =
-      if (graft.operators.Dedup.scopeActive)
-        graft.operators.Dedup.persistScoped(cheap0)
-      else cheap0
+    // chunks only) feeds the two block passes of Refine.fetchedSplit: the
+    // seed pass reads (id, rvec) and the survivor pass (id, rvec, delta)
+    // — or (id, rvec, bb) for cos_l2. Each is one streaming scan; the
+    // tier is not pinned, because the two scans measured no slower per
+    // call than building a cached copy of the tier on every call.
     graft.operators.Refine.topkSplit(
-      cheap,
+      graft.operators.Refine.cheapSideStored(stored, p),
       stored.select(col("id"), col("vec")),
       queries, p)
   }
@@ -860,18 +848,14 @@ object Disaggregated {
     val s = math.pow(2.0, scaleLog2)
     val half = (0.5 / s).toFloat
     val stored = spark.read.parquet(path)
-    val cheap0 = stored.select(col("id"),
+    val cheap = stored.select(col("id"),
         transform(col("code"),
           c => (c.cast("double") / s).cast("float")).as("rvec"))
       .withColumn("delta", transform(col("rvec"), _ => lit(half)))
       .select(col("id"), col("rvec"), col("delta"),
         VectorOps.norm2Sq(col("rvec")).as("nr2"))
-    // same cheap-tier pin as [[refineTopK]]: dequantized codes feed both
-    // refine passes; persist once under the caller's scope
-    val cheap =
-      if (graft.operators.Dedup.scopeActive)
-        graft.operators.Dedup.persistScoped(cheap0)
-      else cheap0
+    // not pinned, as in [[refineTopK]]: each block pass dequantizes the
+    // codes in one streaming scan
     graft.operators.Refine.topkSplit(cheap,
       stored.select(col("id"), col("vec")), queries, p)
   }

@@ -9,21 +9,28 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
-import graft.operators.{Refine, TopK}
+import graft.operators.{Refine, RefineKernel, TopK}
 
 /**
- * Whole-operator integration of the sequential refinement kernel into
- * Catalyst: a custom logical node, planner strategy, and physical
- * operator (SURVEY §4.3 ladder step (c) — the mapPartitions form in
- * [[graft.operators.RefineKernel]] is step (d); this variant processes
- * the child's InternalRows directly, no Dataset encoder round-trip).
+ * Whole-operator integration of the refinement kernels into Catalyst:
+ * custom logical nodes, one planner strategy, and physical operators
+ * that process the child's InternalRows directly (no Dataset encoder
+ * round-trip).
  *
- * The physical node emits each partition's local top-K candidate rows
- * (qid, id, score) after the running-threshold walk; the public API wraps
- * the global partial-merge on top. EXPLAIN shows `RefineKernelExec` as a
- * first-class operator in the plan.
+ *  - `RefineKernelExec`: the sequential running-threshold walk (SURVEY
+ *    §4.3 ladder step (c) — the mapPartitions form in
+ *    [[graft.operators.RefineKernel]] is step (d)). It emits each
+ *    partition's local top-K (qid, id, score); [[refineTopK]] wraps the
+ *    global partial-merge on top.
+ *  - `RefinePassExec`: the per-partition block passes of the static-tau0
+ *    operator ([[graft.operators.Refine.fetchedSplit]]) — the seed pass,
+ *    the survivor pass and the full-precision rescore of fetched rows.
+ *
+ * EXPLAIN shows each as a first-class operator (`RefineKernel`,
+ * `RefineSeedPass`, `RefineSurvivorPass`, `RefineRescorePass`).
  */
 object KernelPlan {
 
@@ -110,13 +117,116 @@ object KernelPlan {
     }
   }
 
-  /** Planner strategy turning the logical node into the exec. */
+  /** Logical node of one [[RefineKernel.BlockPass]] over its child, whose
+    * output holds the pass's `columns`. */
+  case class RefinePassNode(
+      child: LogicalPlan,
+      pass: RefineKernel.BlockPass,
+      output: Seq[Attribute]) extends UnaryNode {
+    override def nodeName: String = pass.name
+    override protected def stringArgs: Iterator[Any] = Iterator(pass.describe)
+    override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
+      child.outputSet
+    override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
+      org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
+    override protected def withNewChildInternal(newChild: LogicalPlan): RefinePassNode =
+      copy(child = newChild)
+  }
+
+  /** Physical block pass: the child's rows stream through the pass,
+    * decoded one at a time. */
+  case class RefinePassExec(
+      child: SparkPlan,
+      pass: RefineKernel.BlockPass,
+      output: Seq[Attribute]) extends UnaryExecNode {
+    override def nodeName: String = pass.name
+    override protected def stringArgs: Iterator[Any] = Iterator(pass.describe)
+    override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
+      org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
+    override protected def withNewChildInternal(newChild: SparkPlan): RefinePassExec =
+      copy(child = newChild)
+
+    override protected def doExecute(): RDD[InternalRow] = {
+      val names = child.output.map(_.name)
+      def idx(c: String): Int = names.indexOf(c)
+      val (idI, rvecI, deltaI, nr2I, bbI, qidI, vecI) = (idx("id"),
+        idx("rvec"), idx("delta"), idx("nr2"), idx("bb"), idx("qid"), idx("vec"))
+      // the query matrix (and the survivor pass's tau0 + seed ids) ship
+      // once per job, not inside every task closure
+      val bp = sparkContext.broadcast(pass)
+      val outSchema = StructType(output.map(a =>
+        StructField(a.name, a.dataType, nullable = false)))
+      child.execute().mapPartitionsInternal { it =>
+        val proj = UnsafeProjection.create(outSchema)
+        val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+          outSchema.length)
+        def emit(c: RefineKernel.Cand): InternalRow = {
+          row.update(0, c.qid); row.update(1, c.id)
+          if (row.numFields > 2) row.update(2, c.score)
+          proj(row)
+        }
+        bp.value match {
+          case r: RefineKernel.RescorePass =>
+            it.map { x =>
+              val qid = x.getLong(qidI)
+              emit(RefineKernel.Cand(qid, x.getLong(idI),
+                r.score(qid, x.getArray(vecI).toFloatArray())))
+            }
+          case c: RefineKernel.CheapPass =>
+            c.run(it.map(x => new RefineKernel.CheapRow(x.getLong(idI),
+              x.getArray(rvecI).toFloatArray(),
+              if (deltaI >= 0) x.getArray(deltaI).toFloatArray() else null,
+              if (nr2I >= 0) RefineKernel.Scores.fnorm(x.getDouble(nr2I)) else 0.0,
+              if (bbI >= 0) x.getDouble(bbI) else 0.0))).map(emit)
+        }
+      }
+    }
+  }
+
+  /** Planner strategy turning the logical nodes into their execs. */
   object KernelStrategy extends SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
       case n: RefineKernelNode =>
         RefineKernelExec(planLater(n.child), n.output, n.queries, n.params) :: Nil
+      case n: RefinePassNode =>
+        RefinePassExec(planLater(n.child), n.pass, n.output) :: Nil
       case _ => Nil
     }
+  }
+
+  /** Register [[KernelStrategy]] with the session once (operators may
+    * build plans from several threads of one session). */
+  def install(spark: org.apache.spark.sql.SparkSession): Unit =
+    KernelStrategy.synchronized {
+      if (!spark.experimental.extraStrategies.contains(KernelStrategy))
+        spark.experimental.extraStrategies =
+          spark.experimental.extraStrategies :+ KernelStrategy
+    }
+
+  /** `pass` over the pass's columns of `input`, as a DataFrame of
+    * (qid, id) or (qid, id, score) rows named `scoreName`. */
+  def blockPass(input: DataFrame, pass: RefineKernel.BlockPass,
+                scoreName: String = "score"): DataFrame = {
+    val spark = input.sparkSession
+    install(spark)
+    val cols = pass.columns.map(c =>
+      if (c == "id" || c == "qid") org.apache.spark.sql.functions.col(c).cast(LongType).as(c)
+      else org.apache.spark.sql.functions.col(c))
+    val out = Seq(
+      AttributeReference("qid", LongType, nullable = false)(),
+      AttributeReference("id", LongType, nullable = false)()) ++
+      (if (pass.emitsScore)
+        Seq(AttributeReference(scoreName, DoubleType, nullable = false)())
+       else Nil)
+    Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      RefinePassNode(input.select(cols: _*).queryExecution.analyzed, pass, out))
+  }
+
+  /** Whether `rows` (qid, id) rows fit Spark's broadcast threshold, sized
+    * as Spark estimates a relation from its row count (8 + 8 per long). */
+  def fitsBroadcast(rows: Long): Boolean = {
+    val limit = SQLConf.get.autoBroadcastJoinThreshold
+    limit > 0 && BigInt(rows) * 24 <= limit
   }
 
   /** Public API: plan the kernel as a first-class operator and merge the
@@ -124,10 +234,7 @@ object KernelPlan {
   def refineTopK(vectors: DataFrame, queriesDf: DataFrame,
                  p: Refine.Params): DataFrame = {
     val spark = vectors.sparkSession
-    if (!spark.experimental.extraStrategies.contains(KernelStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ KernelStrategy
-    import spark.implicits._
+    install(spark)
     // same driver-collect cap as the Dataset kernel (see
     // RefineKernel.MaxQueryRows): the query matrix is broadcast, so an
     // unbounded relation here would be a silent driver OOM

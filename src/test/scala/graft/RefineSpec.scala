@@ -31,8 +31,8 @@ class RefineSpec extends AnyFunSuite {
     val (df, release) = graft.operators.Dedup.scopedRelease(
       Refine.topk(v, q, Refine.Params("cos_l1", k = 5, keepM = SparkEntry.KeepM)))
     assert(df.count() > 0)
-    // the two eager Q*k relations must be tracked (CacheManager holds
-    // them strongly — only this release actually frees them)
+    // the persisted survivor set must be tracked (CacheManager holds it
+    // strongly — only this release actually frees it)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
       "expected tracked persists during the refine query")
     release()

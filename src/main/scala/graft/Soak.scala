@@ -319,14 +319,12 @@ object Soak {
       r.length.toLong
     }
     step("metrics_family") {
-      // metricsFamily's persist / eager-barrier choreography is the most
-      // cache-sensitive code in the repo (three MEMORY_AND_DISK relations
-      // materialized before a parallel per-mode fan-out) and was never
-      // soaked — run BOTH families over the full multi-million-row corpus
-      // so eviction/spill pressure is real, with the zero-miss invariant
-      // riding along
+      // the accounting fan-out persists one survivor set per mode under
+      // its own release scope — run BOTH families over the full
+      // multi-million-row corpus so eviction/spill pressure is real, with
+      // the zero-miss invariant riding along
       Seq(operators.Refine.CosModes, operators.Refine.L2Modes).map { fam =>
-        val ms = operators.Refine.metricsFamily(v, q,
+        val ms = operators.Refine.metricsModes(v, q,
           fam.map(m => operators.Refine.Params(m, k = SparkEntry.K,
             keepM = SparkEntry.KeepM)), dVec).collect()
         ms.foreach { r =>

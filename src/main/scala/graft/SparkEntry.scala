@@ -532,14 +532,11 @@ object SparkEntry {
   }
 
   /** Accounting metrics (recall/save/fpr) for all six modes. The fixture
-    * and per-family ground truth are computed once and reused; ALL SIX
-    * modes share one fused reduced pass, one seed probe, one survivor
-    * rescore, and a fixed-size accounting fan-out
-    * ([[Refine.metricsModes]]) — the heavy N*Q work runs ONCE, not per
-    * family, and the former per-mode count jobs collapse into two
-    * aggregates (r19: the suite is driver-bound at bench SF, so job
-    * count is the cost). Row values and order (cos modes then l2 modes,
-    * each in declaration order) are identical to the per-family form. */
+    * and per-family ground truth are computed once and reused; each mode
+    * runs the block-pass refine that serves queries, and one aggregate
+    * counts every mode's fetched and hit rows ([[Refine.metricsModes]]).
+    * Rows come in mode order: cos modes then l2 modes, each in
+    * declaration order. */
   def qRefineMetrics(spark: SparkSession, dir: String): DataFrame = {
     val v = Fixture.fp16VectorsCached(spark, dir, D, KeepM)
     val q = Fixture.queries(v, NQ).select(col("qid"), col("qvec"))

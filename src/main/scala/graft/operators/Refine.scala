@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.VecExprs
 import graft.functions.VectorOps
 import graft.functions.VectorOps._
 
@@ -50,7 +49,10 @@ import graft.functions.VectorOps._
  * tree over EXACT partial sums — bit-reproducible across engines and
  * partitionings (see Fixture docs). The block passes evaluate the same
  * trees in Scala ([[RefineKernel.Scores]]), so their rows are
- * bit-identical to the column-expression forms used by [[metricsModes]].
+ * bit-identical to the relational cross-join form the oracle mirrors.
+ * The accounting fan-outs ([[metricsModes]], [[perQidMkeepMetricsSplit]])
+ * are composed from the same passes, so the paper's (recall, save, fpr)
+ * triple is measured on the passes that serve queries.
  */
 object Refine {
 
@@ -107,79 +109,6 @@ object Refine {
     val cols = if (p.mode == "cos_l2") base :+ col("bb") else base
     stored.select(cols: _*)
   }
-
-  /** Cushion expression for one param set; expects the candidate-pair
-    * columns (qvec, nq2, rvec, delta[, bb], s_hat) in scope. Fused codegen
-    * folds (VecExprs) — numerically identical to the HOF forms (same fold
-    * order / per-element trees). */
-  private[graft] def cushionExpr(p: Params,
-                          hcOverride: Option[Column] = None,
-                          sHat: Column = col("s_hat")): Column = p.mode match {
-    case "cos_hoeff" =>
-      hcOverride.getOrElse(lit(p.hoeffConst)) *
-        sqrt(VecExprs.hoeffSum(col("qvec"), col("delta"))) / fnorm(col("nq2"))
-    case "cos_l1" =>
-      lit(p.alpha) * VecExprs.absDot(col("qvec"), col("delta")) / fnorm(col("nq2"))
-    case "cos_l2" =>
-      lit(p.alpha) * col("bb")
-    case "l2_sym" =>
-      VecExprs.lbSymE(col("qvec"), col("rvec"), col("delta"))
-    case "l2_tz" =>
-      VecExprs.lbTzE(col("qvec"), col("rvec"), col("delta"))
-    case "l2_hoeff" =>
-      sHat - lit(2.0 * p.hoeffConst) *
-        sqrt(VecExprs.hoeffDiffSum(col("qvec"), col("rvec"), col("delta")))
-  }
-
-  /**
-   * The reduced pass of the accounting fan-out ([[metricsModes]]) over
-   * BOTH metric families at once: per-(qid,id) rows (qid, id,
-   * [s_hat_c], [s_hat_l], cush_0..cush_{n-1}) off one broadcast cross
-   * join — the cos and l2 reduced scores ride the same pass instead of
-   * one full N*Q pass per family (guide §2.3: the pass is the dominant
-   * scan; extra columns are near-free next to a second scan). The column
-   * trees are the ones [[RefineKernel.Scores]] evaluates in the block
-   * passes. vpre: (id, rvec, delta, nr2[, bb]); queries: (qid, qvec).
-   */
-  private def candidatesMixed(vpre: DataFrame, queries: DataFrame,
-                              ps: Seq[Params]): DataFrame = {
-    val hasCos = ps.exists(_.isCos)
-    val hasL2 = ps.exists(!_.isCos)
-    val q = broadcast(queries.select(col("qid"), col("qvec"),
-      norm2Sq(col("qvec")).as("nq2")))
-    val pairs = vpre.crossJoin(q)
-    val sHatC = dot(col("rvec"), col("qvec")) /
-      (fnorm(col("nr2")) * fnorm(col("nq2")))
-    val sHatL = l2DistSq(col("qvec"), col("rvec"))
-    val sCols = (if (hasCos) Seq(sHatC.as("s_hat_c")) else Nil) ++
-      (if (hasL2) Seq(sHatL.as("s_hat_l")) else Nil)
-    val cushions = ps.zipWithIndex.map { case (p, i) =>
-      cushionExpr(p, None, sHat = sHatL).as(s"cush_$i") }
-    pairs.select(Seq(col("qid"), col("id")) ++ sCols ++ cushions: _*)
-  }
-
-  /**
-   * Phase 2 seed selection: the top-K candidate ids per query by reduced
-   * score — (qid, id, s_hat, rn<=k). The rank filter makes Catalyst plan
-   * a map-side WindowGroupLimit (only ~k rows per (partition, qid) cross
-   * the exchange), so the N*Q candidate relation is never fully sorted —
-   * the argpartition analogue (`ANNCode.py:339`), and the reason this
-   * shape survives a 100x corpus where a full per-query ranking dies.
-   */
-  private[graft] def seedSelect(cand: DataFrame, k: Int, isCos: Boolean): DataFrame = {
-    val ord = if (isCos) Seq(col("s_hat").desc, col("id").asc)
-              else Seq(col("s_hat").asc, col("id").asc)
-    val w = Window.partitionBy(col("qid")).orderBy(ord: _*)
-    cand.select(col("qid"), col("id"), col("s_hat"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-  }
-
-  /** Full-precision score for rescoring (cos: unit-space ratio; l2: distance). */
-  private[graft] def fullScore(p: Params): Column =
-    if (p.isCos)
-      dot(col("vec"), col("qvec")) / (fnorm(norm2Sq(col("vec"))) * fnorm(col("nq2")))
-    else l2DistSq(col("qvec"), col("vec"))
 
   /**
    * Candidate rows after early rejection, rescored at full precision.
@@ -244,17 +173,15 @@ object Refine {
    *
    * Plan shape: the per-tier reduced columns (rvec_m, delta_m) are
    * derived once per row — at rest they are separate parquet columns
-   * of the disaggregated layout, so this SELECT is the union-of-tiers
-   * pruned scan, the column-pruning analogue of the filtered-multi
-   * rung's union-of-langs partition pruning. ONE candidate pass serves
-   * every tier: each qid's s_hat and Δ-cushion pick their tier's
-   * columns via a CASE over the broadcast relation; seeds (a
-   * group-limited window), tau0, survivor rejection, and the
-   * full-precision rescore follow [[fetchedSplit]]'s static-tau0
-   * semantics as relational joins. Zero-miss mode only (cos_l1:
-   * the cushion is a true error bound at ANY tier), so per-qid recall
-   * is provably 1.0 at every tier — what makes the per-tier `bytes`
-   * column a pure bandwidth trade, not a recall trade.
+   * of the disaggregated layout, so the cheap side is the
+   * union-of-tiers pruned scan, the column-pruning analogue of the
+   * filtered-multi rung's union-of-langs partition pruning. Each tier
+   * runs one [[fetchedSplit]] — its block passes over that tier's
+   * columns, for that tier's qids — and the ledger counts the union of
+   * the tiers' fetch sets. Zero-miss mode only (cos_l1: the cushion is
+   * a true error bound at ANY tier), so per-qid recall is provably 1.0
+   * at every tier — what makes the per-tier `bytes` column a pure
+   * bandwidth trade, not a recall trade.
    *
    * Accounting per qid (nq = 1 forms of [[metrics]]'s definitions):
    * bytes_total = b_red(tier)·N + b_full·fetched;
@@ -289,77 +216,26 @@ object Refine {
                               queries: DataFrame, p: Params, d: Int,
                               mkeeps: Seq[(Long, Int)],
                               groundTruth: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(p.mode == "cos_l1",
       "per-qid m_keep rides the zero-miss cos_l1 cushion")
     require(mkeeps.nonEmpty, "perQidMkeepMetrics: empty tier relation")
+    require(mkeeps.map(_._1).distinct.length == mkeeps.length,
+      "perQidMkeepMetrics: a qid is bound to more than one tier")
     val spark = cheap.sparkSession
     import spark.implicits._
-    val ms = mkeeps.map(_._2).distinct.sorted
     val bFull = 16.0 * d / 8.0
     // the tier relation with each tier's modeled reduced bytes/vec
     // (sign + kept exponent + kept mantissa bits, Params.bitsRed) —
     // bounded, broadcast
     val mkRel = broadcast(mkeeps.map { case (qid, m) =>
       (qid, m, (1 + p.keepE + m) * d / 8.0) }.toDF("qid", "m", "b_red"))
-    val vpre2 = cheap.select(
-      Seq(col("id")) ++ ms.flatMap(m =>
-        Seq(col(s"rvec_$m"), col(s"delta_$m"),
-          norm2Sq(col(s"rvec_$m")).as(s"nr2_$m"))): _*)
-    val qSel = broadcast(queries.select(col("qid"), col("qvec"),
-      norm2Sq(col("qvec")).as("nq2")))
-    val q = broadcast(qSel.join(mkRel.select(col("qid"), col("m")),
-      Seq("qid")))
-    def byTier(f: Int => Column): Column =
-      ms.foldRight(lit(null).cast("double")) { (m, rest) =>
-        when(col("m") === m, f(m)).otherwise(rest) }
-    // same expression trees as candidatesMixed/cushionExpr, with the
-    // tier's columns substituted — the oracle mirrors them per tier
-    val sHat = byTier(m => dot(col(s"rvec_$m"), col("qvec")) /
-      (fnorm(col(s"nr2_$m")) * fnorm(col("nq2"))))
-    val cush = byTier(m => lit(p.alpha) *
-      VecExprs.absDot(col("qvec"), col(s"delta_$m")) / fnorm(col("nq2")))
-    val cand = vpre2.crossJoin(q)
-      .select(col("qid"), col("id"), sHat.as("s_hat"), cush.as("cush"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val vSel = full.select(col("id"), col("vec"))
-    // eager Q*k barrier: the rescored seeds feed multiple branches —
-    // without materialization the concurrent consumers re-run the whole
-    // candidate pass per branch. One barrier suffices (r19): the seed-id
-    // window runs once inside the probe's broadcast build; tau0 and the
-    // exclusion read the persisted seeds (same (qid,id) set — cheap and
-    // full are column subsets of one table).
-    def eager(df: DataFrame): DataFrame = {
-      val mat = df.persist(StorageLevel.MEMORY_AND_DISK)
-      mat.count(); mat
-    }
-    val seeds = eager(
-      vSel.join(broadcast(seedSelect(cand, p.k, isCos = true)), Seq("id"))
-        .join(qSel, Seq("qid"))
-        .withColumn("s_full", fullScore(p))
-        .select(col("qid"), col("id"), col("s_full"), col("rn")))
-    val tau0 = broadcast(
-      seeds.groupBy(col("qid")).agg(min(col("s_full")).as("tau0")))
-    val survivorIds = cand
-      .join(broadcast(seeds.select(col("qid"), col("id"))),
-        Seq("qid", "id"), "left_anti")
-      .join(tau0, Seq("qid"))
-      .filter(col("s_hat") + col("cush") >= col("tau0"))
-      .select(col("qid"), col("id"))
-    // no broadcast hint on the survivor fetch (the fetchedSplit
-    // rationale): a coarse tier's cushion can swell survivors toward
-    // N·Q — AQE sizes the join at runtime
-    val survivors = vSel.join(survivorIds, Seq("id"))
-      .join(qSel, Seq("qid"))
-      .withColumn("s_full", fullScore(p))
-    val fetch = seeds.unionByName(
-        survivors.select(col("qid"), col("id"), col("s_full"),
-          lit(p.k + 1).as("rn")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    try {
-      fetch.count()
+    val (ledger, release) = Dedup.scopedRelease {
+      val fetch = mkeeps.groupBy(_._2).toSeq.sortBy(_._1).map { case (m, tier) =>
+        fetchedSplit(
+          cheap.select(col("id"), col(s"rvec_$m").as("rvec"),
+            col(s"delta_$m").as("delta"), norm2Sq(col(s"rvec_$m")).as("nr2")),
+          full, queries.filter(col("qid").isInCollection(tier.map(_._1))), p)
+      }.reduce(_ unionByName _)
       val fin = TopK.window(
         fetch.withColumnRenamed("s_full", "score"), p.k)
       val gt = groundTruth.getOrElse(exactTopK(full, queries, p))
@@ -380,13 +256,11 @@ object Refine {
           ((col("fetched") - lit(p.k.toLong)).cast("double") /
             lit(nV.toDouble)).as("fpr"))
         // the ledger is |mkeeps| rows — pin it so the caller's actions
-        // don't re-run the pipeline after the persists are released
+        // don't re-run the pipeline after the survivor sets are released
         .localCheckpoint(true)
-    } finally {
-      fetch.unpersist(blocking = false)
-      seeds.unpersist(blocking = false)
-      cand.unpersist(blocking = false)
     }
+    release()
+    ledger
   }
 
   /** [[fetched]] with the cheap pass and the full-precision fetch side as
@@ -516,216 +390,67 @@ object Refine {
   def metrics(vectors: DataFrame, queries: DataFrame, p: Params, d: Int,
               groundTruth: Option[DataFrame] = None,
               redBytesOverride: Option[Double] = None): DataFrame =
-    metricsFamily(vectors, queries, Seq(p), d, groundTruth, redBytesOverride)
-
-  /**
-   * [[metrics]] for several param sets of ONE metric family over the same
-   * vectors/queries (a mode sweep, or a Hoeffding delta grid). The reduced
-   * pass, the per-query window rank, the seed rescoring, and tau0 are all
-   * mode-invariant within a family, so they are computed ONCE and shared;
-   * only the per-param cushion filter, survivor fetch, and accounting
-   * differ. Row values are identical to per-param [[metrics]] calls (same
-   * expression trees); output rows follow `ps` order semantics (one row
-   * per param).
-   */
-  def metricsFamily(vectors: DataFrame, queries: DataFrame, ps: Seq[Params],
-                    d: Int, groundTruth: Option[DataFrame] = None,
-                    redBytesOverride: Option[Double] = None): DataFrame = {
-    val isCos = ps.head.isCos
-    require(ps.forall(p => p.isCos == isCos),
-      "metricsFamily params must share a metric family")
-    metricsModes(vectors, queries, ps, d,
-      groundTruth.map(g => Map(isCos -> g)).getOrElse(Map.empty),
+    metricsModes(vectors, queries, Seq(p), d,
+      groundTruth.map(g => Map(p.isCos -> g)).getOrElse(Map.empty),
       redBytesOverride)
-  }
 
   /**
-   * [[metricsFamily]] generalized over a MIXED param set (both metric
-   * families at once) with the whole accounting fan-out fused into a
-   * fixed number of Spark actions — the r18-verdict driver-bound fix:
-   * at bench SF the data is small and per-query cost is dominated by
-   * job count (planning + codegen + scheduling), so the former
-   * per-mode `f.count()` + `hits.count()` pairs (12 jobs for the
-   * six-mode sweep) collapse into ONE fetched aggregate and ONE
-   * ranked-hits aggregate, and the two families share a single reduced
-   * pass ([[candidatesMixed]]), a single seed probe of the full table,
-   * and a single survivor rescore stream. Every count and score is the
-   * identical expression tree / identical row set as the per-family
-   * form, so the output rows are value-identical (oracle-proven).
-   *
-   * Actions: seed probe (1), survivor superset (1), nQ + nV (2, tiny
-   * cached fixtures), fetched sums (1), seed counts (1), ranked hits
-   * (1) — 7 total, independent of |ps|, vs 8 + 2|ps| per family before.
+   * [[metrics]] for several param sets over the same vectors/queries — a
+   * mode sweep over both metric families, or a Hoeffding delta grid — in
+   * `ps` order, one row per param. Each param runs [[fetchedSplit]] (the
+   * block passes that serve queries) and the param-tagged fetch sets are
+   * counted by ONE aggregate: `fetched` is a param's row count, and
+   * `hits` counts its rows that rank within the top k of their
+   * (param, qid) — by s_full in the family's order, ties to the smaller
+   * id, as [[topk]] ranks — and are in the family's ground truth.
+   * `groundTruths` maps a family (isCos) to its exact top-K; a family
+   * without one gets [[exactTopK]]. The survivor sets live under an
+   * internal [[Dedup.scopedRelease]] that is released before the
+   * driver-built rows are returned.
    */
   def metricsModes(vectors: DataFrame, queries: DataFrame, ps: Seq[Params],
                    d: Int, groundTruths: Map[Boolean, DataFrame] = Map.empty,
                    redBytesOverride: Option[Double] = None): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val spark = vectors.sparkSession
+    import spark.implicits._
     val k = ps.head.k
     require(ps.forall(_.k == k), "metricsModes params must share k")
-    val fams = Seq(true, false).filter(f => ps.exists(_.isCos == f))
+    val gts = ps.map(_.isCos).distinct.map { f =>
+      groundTruths.getOrElse(f, exactTopK(vectors, queries, ps.find(_.isCos == f).get))
+        .select(lit(f).as("fam"), col("qid"), col("id"), lit(true).as("hit"))
+    }.reduce(_ unionByName _)
+    val nQ = queries.count()
+    val nV = vectors.count()
 
-    // cos_l2's cheap side carries the extra query-free `bb` stat; the
-    // extra column is inert for the other modes' expressions
-    val vpre = cheapSide(vectors, ps.find(_.mode == "cos_l2").getOrElse(ps.head))
-    // the candidate pass is a pure map-side projection off the (cached)
-    // fixture: the N*Q relation is never fully ranked, shuffled, or
-    // persisted (at 100 TB x Q it is not storable). Its two consumers
-    // (the seed windows, the survivor filter) each stream it map-side;
-    // recomputing the D-bounded folds twice is cheaper than
-    // materializing N*Q rows once (measured: see OPTIMIZATION_r19.md).
-    val cand = candidatesMixed(vpre, queries, ps)
-
-    val vSel = vectors.select(col("id"), col("vec"))
-    val qSel = broadcast(queries.select(col("qid"), col("qvec"),
-      norm2Sq(col("qvec")).as("nq2")))
-
-    def sHatOf(isCos: Boolean): Column =
-      if (isCos) col("s_hat_c") else col("s_hat_l")
-    // per-family seed ids off the shared candidate pass (two map-side
-    // group-limited windows over one pass instead of one window over
-    // each family's own full reduced pass)
-    def seedIdsOf(isCos: Boolean): DataFrame =
-      seedSelect(cand.select(col("qid"), col("id"),
-        sHatOf(isCos).as("s_hat")), k, isCos)
-    // ONE full-table probe rescores both families' seeds: a seed row
-    // carries its family tag and gets its family's exact full-precision
-    // score (same expression trees as the per-family fullScore forms)
-    val seedIdsTagged = fams.map(f => seedIdsOf(f)
-        .select(col("qid"), col("id"), lit(f).as("fam")))
-      .reduce(_ unionByName _)
-    val sFullC = dot(col("vec"), col("qvec")) /
-      (fnorm(norm2Sq(col("vec"))) * fnorm(col("nq2")))
-    val sFullL = l2DistSq(col("qvec"), col("vec"))
-    val seeds = vSel.join(broadcast(seedIdsTagged), Seq("id"))
-      .join(qSel, Seq("qid"))
-      .withColumn("s_full", when(col("fam"), sFullC).otherwise(sFullL))
-      .select(col("qid"), col("id"), col("fam"), col("s_full"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    def tau0Of(isCos: Boolean): DataFrame = broadcast(
-      seeds.filter(col("fam") === isCos).groupBy(col("qid")).agg(
-        (if (isCos) min(col("s_full")) else max(col("s_full")))
-          .as(s"tau0_$isCos")))
-
-    // survivor superset for ALL modes of BOTH families in one candidate
-    // scan: each param contributes a boolean column; a row rides along
-    // if any param keeps it. Seed exclusion is a per-family broadcast
-    // membership flag (the left_anti of the per-family form, expressed
-    // so both families share the scan), read off the PERSISTED seeds —
-    // same (qid,id) set as the seed-id window, without recomputing the
-    // window inside this branch's broadcast build.
-    val withSeedFlags = fams.foldLeft(cand) { (df, f) =>
-      df.join(broadcast(seeds.filter(col("fam") === f)
-        .select(col("qid"), col("id"), lit(true).as(s"is_seed_$f"))),
-        Seq("qid", "id"), "left")
+    val (counts, release) = Dedup.scopedRelease {
+      val fetched = ps.zipWithIndex.map { case (p, i) =>
+        fetchedSplit(cheapSide(vectors, p), vectors, queries, p)
+          .select(lit(i).as("mi"), lit(p.isCos).as("fam"), col("qid"),
+            col("id"), col("s_full"))
+      }.reduce(_ unionByName _)
+      // a (mi, qid) partition holds one family: the other family's key
+      // is null throughout it, so cos ranks by s_full desc, l2 asc
+      val w = Window.partitionBy(col("mi"), col("qid")).orderBy(
+        when(col("fam"), col("s_full")).desc,
+        when(!col("fam"), col("s_full")).asc, col("id").asc)
+      fetched.withColumn("rn", row_number().over(w))
+        .join(broadcast(gts), Seq("fam", "qid", "id"), "left")
+        .groupBy(col("mi"))
+        .agg(count(lit(1)),
+          sum(when(col("rn") <= k && col("hit"), 1L).otherwise(0L)))
+        .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
     }
-    val withTau = fams.foldLeft(withSeedFlags) { (df, f) =>
-      df.join(tau0Of(f), Seq("qid"))
-    }
-    val flags = ps.zipWithIndex.map { case (p, i) =>
-      val pass =
-        if (p.isCos) col("s_hat_c") + col(s"cush_$i") >= col("tau0_true")
-        else col(s"cush_$i") <= col("tau0_false")
-      (not(coalesce(col(s"is_seed_${p.isCos}"), lit(false))) && pass)
-        .as(s"f_$i")
-    }
-    val survivorIds = withTau
-      .select(col("qid") +: col("id") +: flags: _*)
-      .filter(ps.indices.map(i => col(s"f_$i")).reduce(_ || _))
-    // no broadcast hint: a lax Hoeffding delta in the param set can make
-    // the superset approach N*Q rows — AQE picks broadcast only when the
-    // runtime size allows it
-    val sFullCols = fams.map(f =>
-      (if (f) sFullC else sFullL).as(s"s_full_$f"))
-    val survivorsAll = vSel.join(survivorIds, Seq("id"))
-      .join(qSel, Seq("qid"))
-      .select(Seq(col("qid"), col("id")) ++ sFullCols ++
-        ps.indices.map(i => col(s"f_$i")): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    release()
 
-    // ground truths per needed family: provided (session-shared) or the
-    // per-family exact pass, persisted only when >1 param reuses it
-    val gtOwned = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val gts = fams.map { f =>
-      f -> groundTruths.getOrElse(f, {
-        val famPs = ps.filter(_.isCos == f)
-        val g = exactTopK(vectors, queries, famPs.head)
-        if (famPs.length > 1) {
-          val c = g.persist(StorageLevel.MEMORY_AND_DISK); c.count()
-          gtOwned += c; c
-        } else g
-      })
-    }.toMap
-
-    try {
-      // materialize the shared persisted relations BEFORE the accounting
-      // aggregates: seeds first (its probe job runs the candidate pass
-      // for the seed windows), then the survivor superset
-      seeds.count()
-      survivorsAll.count()
-
-      val nQ = queries.count()
-      val nV = vectors.count()
-
-      // fetched_i = |seeds of family_i| + |survivors flagged i| — the
-      // exact row count of the former per-mode union — via ONE seed
-      // count job and ONE flag-sum aggregate over the superset
-      val seedCounts = seeds.groupBy(col("fam")).count().collect()
-        .map(r => r.getBoolean(0) -> r.getLong(1)).toMap
-      val survRow = survivorsAll.agg(
-        count(lit(1)).as("n_all"),
-        ps.indices.map(i =>
-          sum(col(s"f_$i").cast("long")).as(s"n_$i")): _*).collect()(0)
-      val nSurv = ps.indices.map(i =>
-        if (survRow.isNullAt(i + 1)) 0L else survRow.getLong(i + 1))
-
-      // hits_i via ONE ranked aggregate: per-mode fetch sets are tagged
-      // (mi), ranked within (mi, qid) by the family's order — identical
-      // membership and tie-break to the former per-mode TopK.window —
-      // joined once against the per-family ground truths
-      val perMode = ps.zipWithIndex.map { case (p, i) =>
-        seeds.filter(col("fam") === p.isCos)
-          .select(lit(i).as("mi"), col("qid"), col("id"), col("s_full"))
-          .unionByName(survivorsAll.filter(col(s"f_$i"))
-            .select(lit(i).as("mi"), col("qid"), col("id"),
-              col(s"s_full_${p.isCos}").as("s_full")))
-      }
-      val u = perMode.reduce(_ unionByName _)
-      def ranked(isCos: Boolean): Option[DataFrame] = {
-        val mis = ps.zipWithIndex.filter(_._1.isCos == isCos).map(_._2)
-        if (mis.isEmpty) None else {
-          val ord = if (isCos) Seq(col("s_full").desc, col("id").asc)
-                    else Seq(col("s_full").asc, col("id").asc)
-          val w = Window.partitionBy(col("mi"), col("qid")).orderBy(ord: _*)
-          Some(u.filter(col("mi").isin(mis: _*))
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= k)
-            .join(gts(isCos).select(col("qid"), col("id")), Seq("qid", "id")))
-        }
-      }
-      val hitCounts = fams.flatMap(ranked).reduce(_ unionByName _)
-        .groupBy(col("mi")).count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-
-      val rows = ps.zipWithIndex.map { case (p, i) =>
-        val nFetched = seedCounts.getOrElse(p.isCos, 0L) + nSurv(i)
-        val hits = hitCounts.getOrElse(i, 0L)
-        val bFull = 16.0 * d / 8.0
-        val bRed  = redBytesOverride.getOrElse(p.bitsRed * d / 8.0)
-        val total = bRed * nV * nQ + bFull * nFetched
-        val save  = 1.0 - total / (bFull * nV * nQ)
-        val fpr   = (nFetched - k.toLong * nQ).toDouble / (nV.toDouble * nQ)
-        val recall = hits.toDouble / (k.toLong * nQ)
-        (p.mode, p.keepM, p.delta, recall, save, fpr)
-      }
-
-      import spark.implicits._
-      rows.toDF("mode", "m_keep", "delta", "recall", "save", "fpr")
-    } finally {
-      seeds.unpersist(blocking = false)
-      survivorsAll.unpersist(blocking = false)
-      gtOwned.foreach(_.unpersist(blocking = false))
-    }
+    ps.zipWithIndex.map { case (p, i) =>
+      val (nFetched, hits) = counts.getOrElse(i, (0L, 0L))
+      val bFull = 16.0 * d / 8.0
+      val bRed  = redBytesOverride.getOrElse(p.bitsRed * d / 8.0)
+      val total = bRed * nV * nQ + bFull * nFetched
+      val save  = 1.0 - total / (bFull * nV * nQ)
+      val fpr   = (nFetched - k.toLong * nQ).toDouble / (nV.toDouble * nQ)
+      val recall = hits.toDouble / (k.toLong * nQ)
+      (p.mode, p.keepM, p.delta, recall, save, fpr)
+    }.toDF("mode", "m_keep", "delta", "recall", "save", "fpr")
   }
 }

@@ -616,16 +616,6 @@ object RefineKernel {
       }
   }
 
-  /**
-   * One-query convenience wrapper over [[PartitionKernel]] — kept for
-   * callers outside the batched matrix path; the batched paths construct
-   * the kernel once and amortize the precompute across queries.
-   */
-  def localTopK(rows: Array[VecRow], qQid: Long, qv: Array[Float],
-                p: Refine.Params): Iterator[Cand] =
-    if (rows.isEmpty) Iterator.empty
-    else new PartitionKernel(rows, p).topKFor(qQid, qv)
-
   /** Final refined top-K via partial kernels + aggregator merge:
     * (qid, rank, id, score). */
   def topk(vectors: DataFrame, queries: DataFrame, p: Refine.Params): DataFrame =

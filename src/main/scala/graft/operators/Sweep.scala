@@ -39,15 +39,12 @@ object Sweep {
     import scala.collection.parallel.CollectionConverters._
     val spark = queries.sparkSession
     val callerPool = graft.Sched.currentPool(spark)
-    // group by (keepM, metric family): within a group metricsFamily
-    // shares the reduced pass / seed window / tau0 / full-table stream,
-    // so a Hoeffding delta grid costs one pipeline, not |deltas|
-    // (vectors is keyed by keepM: reduced copy + delta depend on it)
+    // one accounting call per (keepM, metric family) group: vectors is
+    // keyed by keepM (the reduced copy and delta depend on it)
     val groups = configs.groupBy(p => (p.keepM, p.isCos)).toSeq
     try
       groups.par.map { case ((km, isCos), ps) => graft.Sched.inPool(spark, callerPool) {
-        Refine.metricsFamily(vectors(km), queries, ps, d,
-          groundTruth = Some(gt(isCos)))
+        Refine.metricsModes(vectors(km), queries, ps, d, Map(isCos -> gt(isCos)))
       }}.toList.reduce(_ unionByName _)
     finally gt.values.foreach(_.unpersist(blocking = false))
   }

@@ -30,12 +30,12 @@ object Tune {
     val v = if (callerCached) vectors else vectors.cache()
     val gt = Refine.exactTopK(v, queries, p0).cache()
     gt.count()
-    // the grid points differ only in the Hoeffding constant, so the whole
-    // grid shares one reduced pass / window / seed set (metricsFamily)
+    // one accounting call over the whole grid: one row per grid point,
+    // in grid order, all counted against the one ground truth
     val rows =
       try
-        Refine.metricsFamily(v, queries, grid.map(dl => p0.copy(delta = dl)),
-          d, groundTruth = Some(gt)).collect().toList
+        Refine.metricsModes(v, queries, grid.map(dl => p0.copy(delta = dl)),
+          d, Map(p0.isCos -> gt)).collect().toList
       finally {
         gt.unpersist(blocking = false)
         if (!callerCached) v.unpersist(blocking = false)

@@ -82,8 +82,19 @@ class PlansArtifactSpec extends AnyFunSuite {
       // per-node details section would make the artifact ~500 KB of
       // noise around the ~5 lines per scan a reviewer actually audits
       val blocks = raw.split("\n\n")
-      val kept = blocks.head +: blocks.tail.filter(b =>
-        b.startsWith("(") && b.linesIterator.next().contains("Scan"))
+      // only the FINAL adaptive plan: AQE prints the initial plan after
+      // it, and whether an initial-plan node is the final plan's own
+      // instance (printed as a shared id) or a replanned copy (a fresh id
+      // that shifts every later one) depends on when AQE re-optimized;
+      // the root's id, numbered after the initial plan, goes with it
+      val tree = blocks.head.split("\n\\+- == Initial Plan ==")(0)
+        .replaceFirst("(?m)^AdaptiveSparkPlan \\(\\d+\\)$", "AdaptiveSparkPlan")
+      val ids = "\\((\\d+)\\)".r.findAllMatchIn(tree).map(_.group(1)).toSet
+      val kept = tree +: blocks.tail.filter { b =>
+        val head = b.linesIterator.next()
+        b.startsWith("(") && head.contains("Scan") &&
+          ids.contains(head.drop(1).takeWhile(_ != ')'))
+      }
       // scrub run-varying noise (expression ids, plan ids, tmp-dir
       // version stamps, runtime stage statistics) so the committed
       // artifact is stable across runs

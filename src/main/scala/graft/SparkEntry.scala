@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorOps._
 import graft.operators.{TopK, Refine, RefineKernel, Dedup, TextOps, Ann}
 import graft.oracle.{OracleGen, RefineOracle, DocOracle, EmbOracle, MiscOracle, IvfOracle, SearchOracle, PqOracle, LadderOracle}
+import graft.streaming.StreamOps.ServePhase
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -664,6 +665,29 @@ object SparkEntry {
       }
     }
 
+  /** The oracle of a mutating request stream
+    * ([[streamServeMutating]]): the UNION ALL of each plan phase's
+    * snapshot serve, recomputed from scratch and filtered to that
+    * phase's qids. */
+  private def streamPlanOracleSql(plan: Seq[ServePhase],
+                                  indexed: Boolean): String =
+    plan.map { p =>
+      val sql =
+        if (!indexed) SearchOracle.serveRequestsTieredSql(
+          EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
+          PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
+          Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
+          qrelPathForOracle(), negMod = p.negMod, delMod = p.delMod)
+        else SearchOracle.serveRequestsTieredIndexedSql(
+          EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
+          PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
+          Bm25K1, Bm25B, RrfPoolN, IvfCells, IvfProbe,
+          bm25MultiStatsForOracle(), qrelPathForOracle(),
+          negMod = p.negMod, delMod = p.delMod)
+      s"SELECT * FROM ($sql) WHERE qid IN " +
+        s"(${p.qids.toSeq.sorted.mkString(", ")})"
+    }.mkString("\nUNION ALL\n")
+
   /** The stored query-relation table's path for the ORACLE generators:
     * the oracle SQL reads the SAME parquet the engine bound from
     * (published right here if a dump path never ran a multi query).
@@ -1107,24 +1131,32 @@ object SparkEntry {
   final val ServeTierLayoutScales = Seq(4, 8, 11)
   final val ServeTierRel: Seq[(Long, Int)] = Seq(
     0L -> 4, 1L -> 11, 2L -> 4, 3L -> 11)
-  // online serve over a MUTATING index: requests 0-1 arrive before the
-  // update commit, 2-3 after it (each side spans both tiers, so the
-  // snapshot choice and the tier knob are both visible per side)
-  final val StreamMutatePreQids: Set[Long] = Set(0L, 1L)
-  // the MULTI-COMMIT mutating serve (q_stream_serve_requests_tiered_multi):
-  // C = 3 update commits interleaved with 4 request phases (one request
-  // per phase) — commit k updates the nested incremental prefix
-  // ids ≡ 0 mod 2^(3-k)·UpsertMod, so phase k's snapshot is the single
-  // modulus 2^(3-k)·UpsertMod (SQL-expressible per phase)
-  final val StreamMultiMutatePhases: Seq[Set[Long]] =
-    Seq(Set(0L), Set(1L), Set(2L), Set(3L))
-  // the MIXED-VERB mutating serve (q_stream_serve_requests_tiered_mixed):
-  // an UPSERT commit (ids ≡ 0 mod UpsertMod) between phases 0 and 1,
-  // then a DELETE commit (ids ≡ 0 mod DeleteMod) between phases 1 and
-  // 2 — phase 2 spans both precision tiers so the composed
+  // online serve over a MUTATING index, as phase plans: phase k's
+  // requests are served off the snapshot with ids ≡ 0 mod negMod
+  // upserted and ids ≡ 0 mod delMod deleted (0 = not applied), and the
+  // commit between two phases is derived from their two views
+  // (StreamOps.serveRequestsTieredMutatingOverStream). The engine and
+  // the oracle (streamPlanOracleSql) read the same plan.
+  // q_stream_serve_requests_tiered(_indexed)_mutating: requests 0-1
+  // arrive before one update commit (ids ≡ 0 mod 2·UpsertMod), 2-3
+  // after it (each side spans both tiers, so the snapshot choice and the
+  // tier knob are both visible per side)
+  final val StreamMutatingPlan: Seq[ServePhase] = Seq(
+    ServePhase(Set(0L, 1L), 0, 0), ServePhase(Set(2L, 3L), 2 * UpsertMod, 0))
+  // ..._multi: C = 3 update commits interleaved with 4 request phases
+  // (one request per phase) — commit k updates the nested incremental
+  // prefix ids ≡ 0 mod 2^(3-k)·UpsertMod, so phase k's snapshot is the
+  // single modulus 2^(3-k)·UpsertMod (SQL-expressible per phase)
+  final val StreamMultiPlan: Seq[ServePhase] = Seq(
+    ServePhase(Set(0L), 0, 0), ServePhase(Set(1L), 4 * UpsertMod, 0),
+    ServePhase(Set(2L), 2 * UpsertMod, 0), ServePhase(Set(3L), UpsertMod, 0))
+  // ..._mixed: an UPSERT commit (ids ≡ 0 mod UpsertMod) between phases
+  // 0 and 1, then a DELETE commit (ids ≡ 0 mod DeleteMod) between phases
+  // 1 and 2 — phase 2 spans both precision tiers so the composed
   // upserted+deleted snapshot is visible at both bandwidth points
-  final val StreamMixedMutatePhases: Seq[Set[Long]] =
-    Seq(Set(0L), Set(1L), Set(2L, 3L))
+  final val StreamMixedPlan: Seq[ServePhase] = Seq(
+    ServePhase(Set(0L), 0, 0), ServePhase(Set(1L), UpsertMod, 0),
+    ServePhase(Set(2L, 3L), UpsertMod, DeleteMod))
   // time travel on the tiered serve layout (q_serve_requests_tiered_asof):
   // the layout's versioned update log holds two commits (1: ids ≡ 0 mod
   // 2·UpsertMod, 2: the rest of mod UpsertMod); the declared snapshot
@@ -1747,6 +1779,18 @@ object SparkEntry {
   private type QFn = (SparkSession, String) => DataFrame
   private def q(f: QFn): QFn =
     (s, dir) => { lastSfDir.set(dir); f(s, dir) }
+
+  // one mutating request stream per (plan, layout kind); the oracle twin
+  // is streamPlanOracleSql
+  private def streamServeMutating(plan: Seq[ServePhase],
+                                  indexed: Boolean): QFn = q((s, dir) =>
+    graft.streaming.StreamOps.serveRequestsTieredMutatingOverStream(
+      s, dir, emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
+      filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
+      pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
+      ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
+      refineParams("cos_l1").alpha,
+      if (indexed) Some((IvfCells, EmbD, IvfProbe)) else None, plan))
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map[String, QFn](
@@ -3100,89 +3144,34 @@ object SparkEntry {
         ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
         refineParams("cos_l1").alpha)),
     // ... and the ONLINE TIERED SERVE OVER A MUTATING INDEX — the two
-    // streams composed: requests 0-1 served off the pristine tiered
-    // layout, an update commit lands (rewriting only its id buckets of
-    // the stream's own layout copy), requests 2-3 served off the
-    // then-current committed state; drained rows equal the
-    // per-snapshot batch serves (per-request independence)
-    "q_stream_serve_requests_tiered_mutating" -> q((s, dir) =>
-      graft.streaming.StreamOps.serveRequestsTieredMutatingOverStream(
-        s, dir, emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, UpsertMod, StreamMutatePreQids)),
-    // ... and the mutating serve GENERALIZED to C = 3 commits
-    // interleaved with 4 request phases — the long-running online shape:
-    // each commit rewrites only its incremental prefix's id buckets of
-    // the stream's own layout copy, applied exactly once before its
-    // phase's first batch; the drained union equals the 4 per-snapshot
-    // batch serves (the UNION oracle, one modulus per phase)
-    "q_stream_serve_requests_tiered_multi" -> q((s, dir) =>
-      graft.streaming.StreamOps.serveRequestsTieredMultiMutatingOverStream(
-        s, dir, emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, UpsertMod,
-        StreamMultiMutatePhases)),
-    // ... and with the lifecycle VERBS MIXED — an upsert commit, then a
-    // DELETE commit (tombstoned rows physically dropped from the
-    // stream's layout copy, only their buckets rewritten), each between
-    // request phases: phase 2 serves the upserted-then-deleted state
-    // (query vectors keep the upsert flips; deleted ids absent from
-    // every tier's cheap pass and the rescore) — drained union = the 3
-    // per-snapshot serves with negMod and delMod composed
-    "q_stream_serve_requests_tiered_mixed" -> q((s, dir) =>
-      graft.streaming.StreamOps.serveRequestsTieredMixedMutatingOverStream(
-        s, dir, emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, UpsertMod, DeleteMod,
-        StreamMixedMutatePhases)),
-    // ... and the same composition on the INDEXED layout — the commit
-    // MOVES ROWS ACROSS CELL PARTITIONS while requests arrive:
-    // pre-commit requests probe the pristine cells, post-commit
-    // requests probe the committed state with the commit view's query
-    // vectors; drained union = the per-snapshot indexed tiered serves
-    "q_stream_serve_requests_tiered_indexed_mutating" -> q((s, dir) =>
-      graft.streaming.StreamOps
-        .serveRequestsTieredIndexedMutatingOverStream(s, dir,
-          emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-          filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-          pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-          ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-          refineParams("cos_l1").alpha, IvfCells, EmbD, IvfProbe,
-          UpsertMod, StreamMutatePreQids)),
-    // ... and the INDEXED layout under C = 3 interleaved commits — each
-    // commit MOVES its incremental prefix's rows across cell partitions
-    // (old ∪ new cells rewritten, emptied cells swept) while requests
-    // arrive; phase k probes the layout with commits 1..k applied,
-    // drained union = the 4 per-snapshot indexed serves
-    "q_stream_serve_requests_tiered_indexed_multi" -> q((s, dir) =>
-      graft.streaming.StreamOps
-        .serveRequestsTieredIndexedMultiMutatingOverStream(s, dir,
-          emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-          filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-          pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-          ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-          refineParams("cos_l1").alpha, IvfCells, EmbD, IvfProbe,
-          UpsertMod, StreamMultiMutatePhases)),
-    // ... and the verbs MIXED on the INDEXED layout — the upsert commit
-    // MOVES rows across cells, the delete commit DROPS rows from their
-    // stored cells (survivors' cells stale — the Lucene contract), both
-    // between request phases on the stream's layout copy; drained union
-    // = the 3 per-snapshot indexed serves with negMod + delMod composed
-    "q_stream_serve_requests_tiered_indexed_mixed" -> q((s, dir) =>
-      graft.streaming.StreamOps
-        .serveRequestsTieredIndexedMixedMutatingOverStream(s, dir,
-          emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-          filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-          pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-          ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-          refineParams("cos_l1").alpha, IvfCells, EmbD, IvfProbe,
-          UpsertMod, DeleteMod, StreamMixedMutatePhases)),
+    // streams composed, six ways: {partitioned, indexed} layout ×
+    // {StreamMutatingPlan, StreamMultiPlan, StreamMixedPlan}. Each
+    // microbatch serves its arriving requests off the then-current
+    // state of the stream's own layout copy; each commit between two
+    // phases lands exactly once, before its phase's first batch,
+    // rewriting only its id buckets (partitioned) or moving its rows
+    // across cell partitions (indexed). Drained rows equal the
+    // per-phase batch serves (per-request independence).
+    //  - _mutating: requests 0-1 off the pristine layout, one update
+    //    commit, requests 2-3 off the committed state;
+    //  - _multi: C = 3 update commits interleaved with 4 request phases,
+    //    each commit the incremental prefix of a nested modulus;
+    //  - _mixed: an upsert commit, then a DELETE commit (tombstoned rows
+    //    physically dropped): phase 2 serves the upserted-then-deleted
+    //    state (query vectors keep the upsert flips; deleted ids absent
+    //    from every tier's cheap pass and the rescore)
+    "q_stream_serve_requests_tiered_mutating" ->
+      streamServeMutating(StreamMutatingPlan, indexed = false),
+    "q_stream_serve_requests_tiered_multi" ->
+      streamServeMutating(StreamMultiPlan, indexed = false),
+    "q_stream_serve_requests_tiered_mixed" ->
+      streamServeMutating(StreamMixedPlan, indexed = false),
+    "q_stream_serve_requests_tiered_indexed_mutating" ->
+      streamServeMutating(StreamMutatingPlan, indexed = true),
+    "q_stream_serve_requests_tiered_indexed_multi" ->
+      streamServeMutating(StreamMultiPlan, indexed = true),
+    "q_stream_serve_requests_tiered_indexed_mixed" ->
+      streamServeMutating(StreamMixedPlan, indexed = true),
     // ... and REQUESTS AS A STREAM — the online-serving shape: each
     // microbatch serves its arriving requests' full objects off the
     // static layouts; per-request independence (df per term, per-qid
@@ -4268,123 +4257,23 @@ object SparkEntry {
         PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
         Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
         qrelPathForOracle()),
-    // the mutating-index stream: per-request independence makes the
-    // drained union the pre-commit qids' rows from the PRISTINE tiered
-    // capstone plus the post-commit qids' rows from the capstone over
-    // the commit view (negated prefix quantized and rescored)
-    "q_stream_serve_requests_tiered_mutating" -> {
-      val pre = SearchOracle.serveRequestsTieredSql(
-        EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-        PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-        Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
-        qrelPathForOracle())
-      val post = SearchOracle.serveRequestsTieredSql(
-        EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-        PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-        Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
-        qrelPathForOracle(), negMod = 2 * UpsertMod)
-      val preIn = StreamMutatePreQids.toSeq.sorted.mkString(", ")
-      val postIn = PageKMultiRel.map(_._1)
-        .filterNot(StreamMutatePreQids).sorted.mkString(", ")
-      s"""SELECT * FROM ($pre) WHERE qid IN ($preIn)
-         |UNION ALL
-         |SELECT * FROM ($post) WHERE qid IN ($postIn)""".stripMargin
-    },
-    // the multi-commit stream: per-request independence makes the
-    // drained union the UNION of 4 per-snapshot tiered capstones, phase
-    // k's flip prefix the single modulus 2^(3-k)·UpsertMod (the nested
-    // incremental-commit convention)
-    "q_stream_serve_requests_tiered_multi" -> {
-      val nC = StreamMultiMutatePhases.size - 1
-      val parts = StreamMultiMutatePhases.zipWithIndex.map {
-        case (qs, k) =>
-          val sql = SearchOracle.serveRequestsTieredSql(
-            EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-            PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-            Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
-            qrelPathForOracle(),
-            negMod = if (k == 0) 0 else (1 << (nC - k)) * UpsertMod)
-          val in = qs.toSeq.sorted.mkString(", ")
-          s"SELECT * FROM ($sql) WHERE qid IN ($in)"
-      }
-      parts.mkString("\nUNION ALL\n")
-    },
-    // the mixed-verb stream: 3 per-snapshot capstones unioned — phase 1
-    // with the upsert view, phase 2 with the upsert AND delete views
-    // COMPOSED (the delete cuts candidate membership, the upsert
-    // transforms surviving values and the query vectors)
-    "q_stream_serve_requests_tiered_mixed" -> {
-      val parts = StreamMixedMutatePhases.zipWithIndex.map {
-        case (qs, k) =>
-          val sql = SearchOracle.serveRequestsTieredSql(
-            EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-            PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-            Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
-            qrelPathForOracle(),
-            negMod = if (k >= 1) UpsertMod else 0,
-            delMod = if (k >= 2) DeleteMod else 0)
-          val in = qs.toSeq.sorted.mkString(", ")
-          s"SELECT * FROM ($sql) WHERE qid IN ($in)"
-      }
-      parts.mkString("\nUNION ALL\n")
-    },
-    // the indexed mixed-verb stream: 3 per-snapshot INDEXED capstones
-    // unioned — phase 1 the upsert view (assignment/probes/codes all
-    // moved), phase 2 the upsert AND delete views composed
-    "q_stream_serve_requests_tiered_indexed_mixed" -> {
-      val parts = StreamMixedMutatePhases.zipWithIndex.map {
-        case (qs, k) =>
-          val sql = SearchOracle.serveRequestsTieredIndexedSql(
-            EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-            PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-            Bm25K1, Bm25B, RrfPoolN, IvfCells, IvfProbe,
-            bm25MultiStatsForOracle(), qrelPathForOracle(),
-            negMod = if (k >= 1) UpsertMod else 0,
-            delMod = if (k >= 2) DeleteMod else 0)
-          val in = qs.toSeq.sorted.mkString(", ")
-          s"SELECT * FROM ($sql) WHERE qid IN ($in)"
-      }
-      parts.mkString("\nUNION ALL\n")
-    },
-    // the indexed twin: per-snapshot INDEXED tiered serves unioned —
-    // the post side's assignment/probes/codes/rescore all off the
-    // commit view
-    "q_stream_serve_requests_tiered_indexed_mutating" -> {
-      val pre = SearchOracle.serveRequestsTieredIndexedSql(
-        EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-        PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-        Bm25K1, Bm25B, RrfPoolN, IvfCells, IvfProbe,
-        bm25MultiStatsForOracle(), qrelPathForOracle())
-      val post = SearchOracle.serveRequestsTieredIndexedSql(
-        EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-        PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-        Bm25K1, Bm25B, RrfPoolN, IvfCells, IvfProbe,
-        bm25MultiStatsForOracle(), qrelPathForOracle(),
-        negMod = 2 * UpsertMod)
-      val preIn = StreamMutatePreQids.toSeq.sorted.mkString(", ")
-      val postIn = PageKMultiRel.map(_._1)
-        .filterNot(StreamMutatePreQids).sorted.mkString(", ")
-      s"""SELECT * FROM ($pre) WHERE qid IN ($preIn)
-         |UNION ALL
-         |SELECT * FROM ($post) WHERE qid IN ($postIn)""".stripMargin
-    },
-    // the indexed multi-commit stream: 4 per-snapshot INDEXED capstones
-    // unioned, phase k's flip prefix the single modulus 2^(3-k)·UpsertMod
-    "q_stream_serve_requests_tiered_indexed_multi" -> {
-      val nC = StreamMultiMutatePhases.size - 1
-      val parts = StreamMultiMutatePhases.zipWithIndex.map {
-        case (qs, k) =>
-          val sql = SearchOracle.serveRequestsTieredIndexedSql(
-            EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-            PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-            Bm25K1, Bm25B, RrfPoolN, IvfCells, IvfProbe,
-            bm25MultiStatsForOracle(), qrelPathForOracle(),
-            negMod = if (k == 0) 0 else (1 << (nC - k)) * UpsertMod)
-          val in = qs.toSeq.sorted.mkString(", ")
-          s"SELECT * FROM ($sql) WHERE qid IN ($in)"
-      }
-      parts.mkString("\nUNION ALL\n")
-    },
+    // the six mutating-index streams: per-request independence makes
+    // each drained union the UNION ALL of its plan's per-phase snapshot
+    // capstones (upsert view negMod, delete view delMod, composed in
+    // one snapshot; indexed: assignment, probes, codes and rescore all
+    // re-derived per snapshot), each filtered to its phase's qids
+    "q_stream_serve_requests_tiered_mutating" ->
+      streamPlanOracleSql(StreamMutatingPlan, indexed = false),
+    "q_stream_serve_requests_tiered_multi" ->
+      streamPlanOracleSql(StreamMultiPlan, indexed = false),
+    "q_stream_serve_requests_tiered_mixed" ->
+      streamPlanOracleSql(StreamMixedPlan, indexed = false),
+    "q_stream_serve_requests_tiered_indexed_mutating" ->
+      streamPlanOracleSql(StreamMutatingPlan, indexed = true),
+    "q_stream_serve_requests_tiered_indexed_multi" ->
+      streamPlanOracleSql(StreamMultiPlan, indexed = true),
+    "q_stream_serve_requests_tiered_indexed_mixed" ->
+      streamPlanOracleSql(StreamMixedPlan, indexed = true),
     // per-request per-tier bytes off the same pipeline CTEs
     "q_serve_requests_tiered_metrics" ->
       SearchOracle.serveRequestsTieredMetricsSql(EmbD, Bm25MultiQueries,

@@ -1003,204 +1003,20 @@ object StreamOps {
       .select(col("qid"), col("rank"), col("id"), col("score"))
   }
 
-  /** Bump whenever [[graft.operators.Search.serveRequestsOffPostings]]
-    * (or anything upstream of the per-microbatch serve) changes
-    * semantics: the landing/result dirs below are content-keyed only
-    * over the BOUND RELATIONS, so without a code-version constant in
-    * the dir names a warm machine would silently replay stale
-    * pre-change rows while the batch rung recomputes fresh — a false
-    * stream/batch divergence. The PostingsUpsertLayoutVersion /
-    * TiersLayoutVersion discipline, applied to the cached drain. */
-  private val StreamServeLayoutVersion = 1
-
-  /**
-   * THE SERVE CAPSTONE WITH REQUESTS AS A STREAM — the online-serving
-   * shape for the FULL request object: request ids arrive as a real
-   * file stream (one landing shard per trigger), and each microbatch
-   * runs the complete fused serve ([[graft.operators.Search
-   * .serveRequestsOffPostings]]) for ITS arriving requests only —
-   * per-request term sets, lang filters, fusion weights, and page
-   * sizes sliced from the bound relations. Everything in the serve is
-   * per-request independent (df/idf are per-term counts off the same
-   * postings layout regardless of the batch's term union; min-max
-   * normalization is per-qid over its own pools — the soak's
-   * sampled-request parity proves this at 4M scale), so the drained
-   * union is ROW-IDENTICAL to the batch capstone and shares its
-   * oracle. Static index layouts (postings + corpus) never move;
-   * request batches pay only their own pruned scans.
-   */
-  def serveRequestsOverStream(spark: SparkSession, sfDir: String,
-                              emb: DataFrame, docMeta: DataFrame,
-                              queries: Seq[(Long, Seq[String])],
-                              filters: Seq[(Long, String)],
-                              weights: Seq[(Long, Double)],
-                              ks: Seq[(Long, Int)], k1: Double,
-                              b: Double, poolN: Int,
-                              nBuckets: Int): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import spark.implicits._
-    val root = graft.operators.Search.ensurePostingsLayout(spark, sfDir,
-      nBuckets)
-    val safe = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    // content key over every bound relation (the qrel digest
-    // discipline): a constant edit publishes fresh landing/result dirs
-    val reqKey = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(Seq(queries, filters, weights, ks, k1, b, poolN, nBuckets)
-        .mkString(";").getBytes("UTF-8"))
-      .take(8).map(x => f"$x%02x").mkString
-    val qids = ks.map(_._1).sorted
-    val landing = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_reqlanding_sv${StreamServeLayoutVersion}_${safe}_${reqKey}" +
-        s"_v${graft.Fixture.srcVersion(sfDir)}")
-    synchronized {
-      if (!Files.exists(landing.resolve("_SUCCESS"))) {
-        val tmp = Files.createTempDirectory(landing.getParent, "reqland-")
-        // one shard per request: the drain is a real multi-trigger
-        // stream, each trigger a distinct online request
-        qids.toDF("qid").repartition(qids.length, col("qid"))
-          .write.mode("overwrite").parquet(tmp.toString)
-        try Files.move(tmp, landing)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.sources.VecFiles.deleteRecursively(tmp) }
-        require(Files.exists(landing.resolve("_SUCCESS")),
-          s"request landing publish failed: $landing")
-      }
-    }
-    val outDir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_reqserve_sv${StreamServeLayoutVersion}_${safe}" +
-        s"_${reqKey}_v${graft.Fixture.srcVersion(sfDir)}")
-    synchronized {
-      if (!Files.exists(outDir.resolve("_DRAINED"))) {
-        val tmp = Files.createTempDirectory(outDir.getParent, "reqserve-")
-        val stream = spark.readStream
-          .schema(StructType(Seq(StructField("qid", LongType))))
-          .option("maxFilesPerTrigger", 1)
-          .parquet(landing.toString)
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val arrived = batch.select(col("qid")).collect()
-              .map(_.getLong(0)).toSet
-            if (arrived.nonEmpty) {
-              graft.operators.Search.serveRequestsOffPostings(spark,
-                  root, emb, docMeta, docMeta,
-                  queries.filter(kv => arrived(kv._1)),
-                  filters.filter(kv => arrived(kv._1)),
-                  weights.filter(kv => arrived(kv._1)),
-                  ks.filter(kv => arrived(kv._1)),
-                  k1, b, poolN, nBuckets)
-                .write.mode("append").parquet(tmp.toString)
-            }
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        Files.createFile(tmp.resolve("_DRAINED"))
-        try Files.move(tmp, outDir)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.sources.VecFiles.deleteRecursively(tmp) }
-        require(Files.exists(outDir.resolve("_DRAINED")),
-          s"stream request serve publish failed: $outDir")
-      }
-    }
-    spark.read.parquet(outDir.toString)
-      .select(col("qid"), col("rank"), col("doc_id"), col("fused"),
-        col("tnorm"), col("vnorm"))
-  }
-
-  /**
-   * [[serveRequestsOverStream]] at PER-REQUEST PRECISION — the title
-   * knob served ONLINE: request ids drain one shard per trigger and
-   * each microbatch runs the TIERED serve
-   * ([[graft.operators.Search.serveRequestsTiered]]) for its arriving
-   * requests only, every bound relation (terms, langs, α, k, AND the
-   * precision tier) sliced per batch. The tiered vector pipeline is
-   * per-request independent — each qid's tier CASE, seeds, tau0,
-   * survivor set, and min-max normalization are functions of its own
-   * rows over the static tiered layout — so the drained union is
-   * ROW-IDENTICAL to the batch tiered capstone and shares its oracle.
-   */
-  def serveRequestsTieredOverStream(spark: SparkSession, sfDir: String,
-                                    emb: DataFrame, docMeta: DataFrame,
-                                    queries: Seq[(Long, Seq[String])],
-                                    filters: Seq[(Long, String)],
-                                    weights: Seq[(Long, Double)],
-                                    ks: Seq[(Long, Int)],
-                                    tiers: Seq[(Long, Int)],
-                                    layoutScales: Seq[Int], k1: Double,
-                                    b: Double, poolN: Int,
-                                    nBuckets: Int,
-                                    alpha: Double): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import spark.implicits._
-    graft.operators.Search.ensurePostingsLayout(spark, sfDir, nBuckets)
-    graft.sources.Disaggregated.ensureTieredServeFixture(spark, sfDir,
-      layoutScales)
-    val safe = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val reqKey = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(Seq(queries, filters, weights, ks, tiers, layoutScales,
-          k1, b, poolN, nBuckets, alpha)
-        .mkString(";").getBytes("UTF-8"))
-      .take(8).map(x => f"$x%02x").mkString
-    val qids = ks.map(_._1).sorted
-    val landing = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_treqlanding_sv${StreamServeLayoutVersion}_${safe}_${reqKey}" +
-        s"_v${graft.Fixture.srcVersion(sfDir)}")
-    synchronized {
-      if (!Files.exists(landing.resolve("_SUCCESS"))) {
-        val tmp = Files.createTempDirectory(landing.getParent, "treqland-")
-        qids.toDF("qid").repartition(qids.length, col("qid"))
-          .write.mode("overwrite").parquet(tmp.toString)
-        try Files.move(tmp, landing)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.sources.VecFiles.deleteRecursively(tmp) }
-        require(Files.exists(landing.resolve("_SUCCESS")),
-          s"tiered request landing publish failed: $landing")
-      }
-    }
-    val outDir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_treqserve_sv${StreamServeLayoutVersion}_${safe}" +
-        s"_${reqKey}_v${graft.Fixture.srcVersion(sfDir)}")
-    synchronized {
-      if (!Files.exists(outDir.resolve("_DRAINED"))) {
-        val tmp = Files.createTempDirectory(outDir.getParent, "treqserve-")
-        val stream = spark.readStream
-          .schema(StructType(Seq(StructField("qid", LongType))))
-          .option("maxFilesPerTrigger", 1)
-          .parquet(landing.toString)
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val arrived = batch.select(col("qid")).collect()
-              .map(_.getLong(0)).toSet
-            if (arrived.nonEmpty) {
-              graft.operators.Search.serveRequestsTiered(spark, sfDir,
-                  emb, docMeta,
-                  queries.filter(kv => arrived(kv._1)),
-                  filters.filter(kv => arrived(kv._1)),
-                  weights.filter(kv => arrived(kv._1)),
-                  ks.filter(kv => arrived(kv._1)),
-                  tiers.filter(kv => arrived(kv._1)),
-                  layoutScales, k1, b, poolN, nBuckets, alpha)
-                .write.mode("append").parquet(tmp.toString)
-            }
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        Files.createFile(tmp.resolve("_DRAINED"))
-        try Files.move(tmp, outDir)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.sources.VecFiles.deleteRecursively(tmp) }
-        require(Files.exists(outDir.resolve("_DRAINED")),
-          s"stream tiered request serve publish failed: $outDir")
-      }
-    }
-    spark.read.parquet(outDir.toString)
-      .select(col("qid"), col("rank"), col("doc_id"), col("fused"),
-        col("tnorm"), col("vnorm"))
-  }
-
-  /** Bump when the mutating tiered-serve stream state layout changes. */
-  private val StreamMutatingServeLayoutVersion = 1
+  /** Bump whenever anything upstream of a request-stream drain changes
+    * semantics: the serves ([[graft.operators.Search
+    * .serveRequestsOffPostings]], [[graft.operators.Search
+    * .serveRequestsTieredOff]] and its indexed twin), the commit verbs,
+    * or the drain itself. The landing and drain dirs of all eight
+    * request streams ([[serveRequestsOverStream]],
+    * [[serveRequestsTieredOverStream]] and every plan of
+    * [[serveRequestsTieredMutatingOverStream]]) are content-keyed only
+    * over the BOUND RELATIONS and the plan, so without a code-version
+    * constant in the dir names a warm machine would silently replay
+    * stale pre-change rows while the batch rung recomputes fresh — a
+    * false stream/batch divergence. The PostingsUpsertLayoutVersion /
+    * TiersLayoutVersion discipline, applied to the cached drains. */
+  private val StreamRequestServeLayoutVersion = 2
 
   /** Milliseconds between consecutive landing shards' stamped mtimes —
     * comfortably past any filesystem timestamp granularity. */
@@ -1237,25 +1053,274 @@ object StreamOps {
     }
   }
 
+  /** Requests per landing shard, and so per trigger, of the two static
+    * request streams: the drain stays a real multi-trigger stream (the
+    * per-trigger serves must compose) for three or more requests, and
+    * pays half the per-trigger serves of one request per shard. */
+  private val StaticRequestsPerShard = 2
+
   /**
-   * ONLINE TIERED SERVE OVER A MUTATING INDEX — the two streams
-   * composed: requests arrive WHILE update commits land, and each
-   * microbatch serves its arriving requests off the THEN-CURRENT
-   * tiered layout. The landing encodes the interleaving (one file of
-   * pre-commit request qids, then one of post-commit qids — the
-   * [[ensureStreamKnnGraphUpsert]] sequential-append discipline); the
-   * stream maintains its OWN partitioned copy of the tiered layout and
-   * applies the update commit (ids ≡ 0 mod 2·`mod`, v' = −v — the
-   * versioned log's commit-1 prefix) via
-   * [[graft.sources.Disaggregated.commitServeTierUpserts]] when the
-   * first post-commit request batch arrives: only the touched id
-   * buckets rewrite. Pre-commit requests read the pre-commit state —
-   * asserted loudly (the commit flag must not predate them), never
-   * left to a silent hash mismatch. Per-request independence makes the
-   * drained union row-identical to the per-snapshot batch serves: the
-   * pristine tiered capstone for the pre-commit qids UNION the
-   * upserted-view capstone for the post-commit qids — exactly what the
-   * DuckDB oracle recomputes.
+   * The one landing + drain behind every request stream. Each of
+   * `shards` lands as one file with a stamped mtime (drain order ==
+   * shard order) and the stream drains one file per trigger: `serve(dir,
+   * k, arrived)` serves a batch whose qids all come from shard k, and
+   * its rows append to the drain. `commits` is empty (a static stream)
+   * or holds one commit per shard boundary: commit j (1-based) runs
+   * against the drain's scratch `dir` — seeded by `seed` — EXACTLY ONCE,
+   * before the first batch of shard j, and leaves a `_COMMITTED_j`
+   * marker. A batch that straddles shards, a shard that arrives after a
+   * later commit, or a drain that ends without every commit applied
+   * fails loudly. The landing and the drain are content-keyed on `key`
+   * and `shards`, and published atomically; a published drain is read, not
+   * recomputed. Returns the drained `(qid, rank, doc_id, fused, tnorm,
+   * vnorm)` rows.
+   */
+  private def drainRequestStream(spark: SparkSession, sfDir: String,
+      key: Seq[Any], shards: Seq[Seq[Long]],
+      seed: java.nio.file.Path => Unit = _ => (),
+      commits: Seq[java.nio.file.Path => Unit] = Nil)(
+      serve: (java.nio.file.Path, Int, Set[Long]) => DataFrame)
+      : DataFrame = {
+    import java.nio.file.{Files, Path, Paths}
+    require(commits.isEmpty || commits.size == shards.size - 1,
+      s"${commits.size} commits between ${shards.size} shards")
+    val safe = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
+    // content key over every bound relation and the landing's shards
+    // (the qrel digest discipline): a constant edit publishes fresh
+    // landing/result dirs
+    val reqKey = java.security.MessageDigest.getInstance("SHA-256")
+      .digest((key :+ shards).mkString(";").getBytes("UTF-8"))
+      .take(8).map(x => f"$x%02x").mkString
+    val name = s"sv${StreamRequestServeLayoutVersion}_${safe}_${reqKey}" +
+      s"_v${graft.Fixture.srcVersion(sfDir)}"
+    val tmpRoot = Paths.get(sys.props("java.io.tmpdir"))
+    def publish(tmp: Path, dest: Path, flag: String): Unit = {
+      try Files.move(tmp, dest)
+      catch { case _: java.nio.file.FileSystemException =>
+        graft.sources.VecFiles.deleteRecursively(tmp) }
+      require(Files.exists(dest.resolve(flag)),
+        s"request stream publish failed: $dest")
+    }
+    val landing = tmpRoot.resolve(s"graft_reqlanding_$name")
+    synchronized {
+      if (!Files.exists(landing.resolve("_SUCCESS"))) {
+        val tmp = Files.createTempDirectory(tmpRoot, "reqland-")
+        val stamp0 = System.currentTimeMillis()
+        shards.zipWithIndex.foreach { case (qs, i) =>
+          appendLandingShard(spark, qs.sorted, tmp,
+            stamp0 + i * LandingMtimeStepMs)
+        }
+        publish(tmp, landing, "_SUCCESS")
+      }
+    }
+    val outDir = tmpRoot.resolve(s"graft_stream_reqserve_$name")
+    synchronized {
+      if (!Files.exists(outDir.resolve("_DRAINED"))) {
+        val tmp = Files.createTempDirectory(tmpRoot, "reqserve-")
+        seed(tmp)
+        val resDir = tmp.resolve("results").toString
+        val shardOf: Map[Long, Int] = shards.zipWithIndex
+          .flatMap { case (qs, i) => qs.map(_ -> i) }.toMap
+        // commits applied so far = the marker count (exactly-once
+        // across batches of the same shard)
+        def applied: Int = (1 to commits.size)
+          .takeWhile(j => Files.exists(tmp.resolve(s"_COMMITTED_$j")))
+          .size
+        val stream = spark.readStream
+          .schema(StructType(Seq(StructField("qid", LongType))))
+          .option("maxFilesPerTrigger", 1)
+          .parquet(landing.toString)
+        val q = stream.writeStream
+          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+            val arrived = batch.select(col("qid")).collect()
+              .map(_.getLong(0)).toSet
+            if (arrived.nonEmpty) {
+              val arrivedShards = arrived.map(shardOf)
+              require(arrivedShards.size == 1,
+                s"request batch $arrived straddles a commit boundary")
+              val k = arrivedShards.head
+              require(applied <= k,
+                s"phase-$k requests arrived after commit $applied — " +
+                  "the landing's interleaving contract is broken")
+              ((applied + 1) to math.min(k, commits.size)).foreach { j =>
+                commits(j - 1)(tmp)
+                Files.createFile(tmp.resolve(s"_COMMITTED_$j"))
+              }
+              serve(tmp, k, arrived).write.mode("append").parquet(resDir)
+            }
+          }
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        require(applied == commits.size,
+          "drained without applying every commit")
+        Files.createFile(tmp.resolve("_DRAINED"))
+        publish(tmp, outDir, "_DRAINED")
+      }
+    }
+    spark.read.parquet(s"$outDir/results")
+      .select(col("qid"), col("rank"), col("doc_id"), col("fused"),
+        col("tnorm"), col("vnorm"))
+  }
+
+  /**
+   * THE SERVE CAPSTONE WITH REQUESTS AS A STREAM — the online-serving
+   * shape for the FULL request object: request ids arrive as a real
+   * file stream ([[StaticRequestsPerShard]] requests per landing shard,
+   * one shard per trigger), and each microbatch runs the complete fused
+   * serve ([[graft.operators.Search.serveRequestsOffPostings]]) for ITS
+   * arriving requests only — per-request term sets, lang filters,
+   * fusion weights, and page sizes sliced from the bound relations.
+   * Everything in the serve is per-request independent (df/idf are
+   * per-term counts off the same postings layout regardless of the
+   * batch's term union; min-max normalization is per-qid over its own
+   * pools — the soak's sampled-request parity proves this at 4M scale),
+   * so the drained union is ROW-IDENTICAL to the batch capstone and
+   * shares its oracle. Static index layouts (postings + corpus) never
+   * move; request batches pay only their own pruned scans.
+   */
+  def serveRequestsOverStream(spark: SparkSession, sfDir: String,
+                              emb: DataFrame, docMeta: DataFrame,
+                              queries: Seq[(Long, Seq[String])],
+                              filters: Seq[(Long, String)],
+                              weights: Seq[(Long, Double)],
+                              ks: Seq[(Long, Int)], k1: Double,
+                              b: Double, poolN: Int,
+                              nBuckets: Int): DataFrame = {
+    val root = graft.operators.Search.ensurePostingsLayout(spark, sfDir,
+      nBuckets)
+    drainRequestStream(spark, sfDir,
+      Seq("serve", queries, filters, weights, ks, k1, b, poolN, nBuckets),
+      ks.map(_._1).sorted.grouped(StaticRequestsPerShard).toSeq) {
+      (_, _, arrived) =>
+      graft.operators.Search.serveRequestsOffPostings(spark,
+        root, emb, docMeta, docMeta,
+        queries.filter(kv => arrived(kv._1)),
+        filters.filter(kv => arrived(kv._1)),
+        weights.filter(kv => arrived(kv._1)),
+        ks.filter(kv => arrived(kv._1)),
+        k1, b, poolN, nBuckets)
+    }
+  }
+
+  /**
+   * [[serveRequestsOverStream]] at PER-REQUEST PRECISION — the title
+   * knob served ONLINE: request ids drain one shard per trigger and
+   * each microbatch runs the TIERED serve
+   * ([[graft.operators.Search.serveRequestsTiered]]) for its arriving
+   * requests only, every bound relation (terms, langs, α, k, AND the
+   * precision tier) sliced per batch. The tiered vector pipeline is
+   * per-request independent — each qid's tier CASE, seeds, tau0,
+   * survivor set, and min-max normalization are functions of its own
+   * rows over the static tiered layout — so the drained union is
+   * ROW-IDENTICAL to the batch tiered capstone and shares its oracle.
+   */
+  def serveRequestsTieredOverStream(spark: SparkSession, sfDir: String,
+                                    emb: DataFrame, docMeta: DataFrame,
+                                    queries: Seq[(Long, Seq[String])],
+                                    filters: Seq[(Long, String)],
+                                    weights: Seq[(Long, Double)],
+                                    ks: Seq[(Long, Int)],
+                                    tiers: Seq[(Long, Int)],
+                                    layoutScales: Seq[Int], k1: Double,
+                                    b: Double, poolN: Int,
+                                    nBuckets: Int,
+                                    alpha: Double): DataFrame = {
+    graft.operators.Search.ensurePostingsLayout(spark, sfDir, nBuckets)
+    graft.sources.Disaggregated.ensureTieredServeFixture(spark, sfDir,
+      layoutScales)
+    drainRequestStream(spark, sfDir,
+      Seq("tiered", queries, filters, weights, ks, tiers, layoutScales,
+        k1, b, poolN, nBuckets, alpha),
+      ks.map(_._1).sorted.grouped(StaticRequestsPerShard).toSeq) {
+      (_, _, arrived) =>
+      graft.operators.Search.serveRequestsTiered(spark, sfDir,
+        emb, docMeta,
+        queries.filter(kv => arrived(kv._1)),
+        filters.filter(kv => arrived(kv._1)),
+        weights.filter(kv => arrived(kv._1)),
+        ks.filter(kv => arrived(kv._1)),
+        tiers.filter(kv => arrived(kv._1)),
+        layoutScales, k1, b, poolN, nBuckets, alpha)
+    }
+  }
+
+  /** One phase of a mutating request stream: `qids` are served off the
+    * snapshot whose upserted (v' = −v) ids are ≡ 0 mod `negMod` and
+    * whose deleted ids are ≡ 0 mod `delMod`, 0 meaning that verb is not
+    * applied yet — the snapshot vocabulary of
+    * [[graft.oracle.SearchOracle.serveRequestsTieredSql]]. */
+  final case class ServePhase(qids: Set[Long], negMod: Int, delMod: Int)
+
+  /** Every malformed-plan `require` of
+    * [[serveRequestsTieredMutatingOverStream]], run before anything is
+    * written. */
+  private def checkServePlan(plan: Seq[ServePhase],
+                             qids: Set[Long]): Unit = {
+    require(plan.size >= 2, "a mutating serve needs at least one commit")
+    require(plan.forall(_.qids.nonEmpty),
+      "every phase needs at least one request")
+    require(plan.flatMap(_.qids).toSet == qids &&
+        plan.map(_.qids.size).sum == qids.size,
+      "phases must partition the request qids")
+    require(plan.head.negMod == 0 && plan.head.delMod == 0,
+      s"the first phase serves the pristine layout: ${plan.head}")
+    plan.foreach { p =>
+      require(Seq(p.negMod, p.delMod).forall(m => m == 0 || m >= 2),
+        s"moduli must be >= 2 (or 0 = not applied): $p")
+      require(p.delMod == 0 || p.delMod != p.negMod,
+        s"the delete modulus must differ from the upsert modulus: $p")
+    }
+    plan.sliding(2).foreach { case Seq(prev, cur) =>
+      val upsert = cur.negMod != prev.negMod
+      val delete = cur.delMod != prev.delMod
+      require(upsert != delete,
+        s"$prev -> $cur must apply exactly one commit (one modulus " +
+          "changes)")
+      require(!upsert || (cur.negMod > 0 && prev.negMod % cur.negMod == 0),
+        s"$prev -> $cur un-flips an applied upsert: the new flip set " +
+          "must contain the old one")
+      require(!delete || prev.delMod == 0,
+        s"$prev -> $cur changes the delete modulus after it is set")
+    }
+  }
+
+  /**
+   * ONLINE TIERED SERVE OVER A MUTATING INDEX — requests arrive WHILE
+   * update and delete commits land, and each microbatch serves its
+   * arriving requests off the THEN-CURRENT tiered layout. The stream
+   * maintains its OWN copy of the layout, seeded pristine: partitioned
+   * by id bucket, or cell-partitioned when `indexed` =
+   * Some((nCells, d, nprobe)) — there an upsert MOVES its rows across
+   * cells (old ∪ new cells rewritten, emptied cells swept) and a delete
+   * drops rows from their stored cells (survivors' cells stale — the
+   * Lucene contract), and requests probe with the phase's query vectors.
+   *
+   * `plan` is a sequence of snapshots. Phase k's qids land as one file
+   * (stamped mtimes: drain order == phase order) and are served with
+   * query vectors flipped where vec_id ≡ 0 mod negMod_k. The commit from
+   * phase k−1 to phase k is derived from the two views and changes one
+   * modulus:
+   *  - UPSERT the ids ≡ 0 mod negMod_k, minus those ≡ 0 mod negMod_(k−1)
+   *    when negMod_(k−1) > 0 — the nested incremental prefix, so the
+   *    cumulative flip set is one modulus and each snapshot's serve
+   *    stays SQL-expressible for the oracle; only the touched id
+   *    buckets (cells) rewrite;
+   *  - DELETE the ids ≡ 0 mod delMod_k when delMod goes from 0 to a
+   *    value — rows physically dropped, while query vectors keep the
+   *    upsert flips (an index DELETE never rewrites external probes),
+   *    and an id in both sets is simply absent.
+   * The plan is checked before anything is written: moduli ≥ 2, at
+   * least one commit, no empty phase, phases that partition the request
+   * qids, a pristine first phase, no un-flip, no delMod change after it
+   * is set, no step that changes both moduli, and a delete modulus that
+   * differs from the upsert modulus in force. Each commit is applied
+   * EXACTLY ONCE, before its phase's first batch, and recorded by a
+   * `_COMMITTED_k` marker; a batch straddling phases, a phase arriving
+   * after a later commit, or a drain ending without every commit
+   * applied fails loudly. Per-request independence makes the drained
+   * union row-identical to the per-phase batch serves filtered to each
+   * phase's qids — the UNION oracle.
    */
   def serveRequestsTieredMutatingOverStream(
       spark: SparkSession, sfDir: String, emb: DataFrame,
@@ -1263,826 +1328,75 @@ object StreamOps {
       filters: Seq[(Long, String)], weights: Seq[(Long, Double)],
       ks: Seq[(Long, Int)], tiers: Seq[(Long, Int)],
       layoutScales: Seq[Int], k1: Double, b: Double, poolN: Int,
-      nBuckets: Int, alpha: Double, mod: Int,
-      preQids: Set[Long]): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import spark.implicits._
-    require(mod >= 2, s"mod=$mod")
+      nBuckets: Int, alpha: Double,
+      indexed: Option[(Int, Int, Int)],
+      plan: Seq[ServePhase]): DataFrame = {
+    import graft.sources.Disaggregated
+    checkServePlan(plan, ks.map(_._1).toSet)
     graft.operators.Search.ensurePostingsLayout(spark, sfDir, nBuckets)
-    val safe = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val reqKey = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(Seq(queries, filters, weights, ks, tiers, layoutScales,
-          k1, b, poolN, nBuckets, alpha, mod, preQids.toSeq.sorted)
-        .mkString(";").getBytes("UTF-8"))
-      .take(8).map(x => f"$x%02x").mkString
-    val qids = ks.map(_._1).sorted
-    val postQids = qids.filterNot(preQids).toSet
-    require(preQids.nonEmpty && postQids.nonEmpty,
-      "mutating serve needs requests on both sides of the commit")
-    val landing = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_mtreqlanding_sv${StreamMutatingServeLayoutVersion}_${safe}" +
-        s"_${reqKey}_v${graft.Fixture.srcVersion(sfDir)}")
-    synchronized {
-      if (!Files.exists(landing.resolve("_SUCCESS"))) {
-        val tmp = Files.createTempDirectory(landing.getParent, "mtreq-")
-        // one landing file per side of the commit — a real two-trigger
-        // stream with the commit between them; explicit increasing
-        // mtimes make drain order == write order (the boundary contract)
-        val stamp0 = System.currentTimeMillis()
-        appendLandingShard(spark, preQids.toSeq.sorted, tmp, stamp0)
-        appendLandingShard(spark, postQids.toSeq.sorted, tmp,
-          stamp0 + LandingMtimeStepMs)
-        try Files.move(tmp, landing)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.sources.VecFiles.deleteRecursively(tmp) }
-        require(Files.exists(landing.resolve("_SUCCESS")),
-          s"mutating request landing publish failed: $landing")
-      }
+    def layout(dir: java.nio.file.Path): String =
+      dir.resolve("tiers").toString
+    val ids = emb.select(col("vec_id").as("id"))
+    val seed = (dir: java.nio.file.Path) => indexed match {
+      case None => Disaggregated.writeServeTiersPartitioned(
+        emb.join(docMeta.select(col("doc_id").as("vec_id"),
+            col("lang")), Seq("vec_id"))
+          .select(col("vec_id").as("id"), col("lang"),
+            col("embedding").as("vec")),
+        layout(dir), layoutScales)
+      case Some((nCells, d, _)) => Disaggregated.writeServeTiersIndexed(
+        spark, sfDir, layout(dir), layoutScales, nCells, d)
     }
-    val outDir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_mtreqserve_sv${StreamMutatingServeLayoutVersion}" +
-        s"_${safe}_${reqKey}_v${graft.Fixture.srcVersion(sfDir)}")
-    synchronized {
-      if (!Files.exists(outDir.resolve("_DRAINED"))) {
-        val tmp = Files.createTempDirectory(outDir.getParent, "mtreqs-")
-        val layout = tmp.resolve("tiers").toString
-        val flag = tmp.resolve("_COMMITTED")
-        // the stream's OWN maintained layout copy, seeded pristine
-        graft.sources.Disaggregated.writeServeTiersPartitioned(
-          emb.join(docMeta.select(col("doc_id").as("vec_id"),
-              col("lang")), Seq("vec_id"))
-            .select(col("vec_id").as("id"), col("lang"),
-              col("embedding").as("vec")),
-          layout, layoutScales)
-        val resDir = tmp.resolve("results").toString
-        val stream = spark.readStream
-          .schema(StructType(Seq(StructField("qid", LongType))))
-          .option("maxFilesPerTrigger", 1)
-          .parquet(landing.toString)
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val arrived = batch.select(col("qid")).collect()
-              .map(_.getLong(0)).toSet
-            if (arrived.nonEmpty) {
-              val isPost = arrived.exists(postQids)
-              require(arrived.forall(postQids) || arrived.forall(preQids),
-                s"request batch $arrived straddles the commit boundary")
-              if (isPost && !Files.exists(flag)) {
-                // the update commit lands BEFORE its first post-commit
-                // request batch: only the touched buckets rewrite
-                graft.sources.Disaggregated.commitServeTierUpserts(
-                  spark, layout,
-                  emb.select(col("vec_id").as("id"))
-                    .filter(col("id") % (2L * mod) === 0),
-                  layoutScales)
-                Files.createFile(flag)
-              }
-              if (!isPost) require(!Files.exists(flag),
-                "pre-commit requests arrived after the commit — the " +
-                  "landing's interleaving contract is broken")
-              val embView =
-                if (!isPost) emb
-                else emb.select(col("vec_id"),
-                  when(col("vec_id") % (2L * mod) === 0,
-                    transform(col("embedding"), x => -x))
-                    .otherwise(col("embedding")).as("embedding"),
-                  col("label"))
-              graft.operators.Search.serveRequestsTieredOff(spark, sfDir,
-                  Some(layout), embView, docMeta,
-                  queries.filter(kv => arrived(kv._1)),
-                  filters.filter(kv => arrived(kv._1)),
-                  weights.filter(kv => arrived(kv._1)),
-                  ks.filter(kv => arrived(kv._1)),
-                  tiers.filter(kv => arrived(kv._1)),
-                  layoutScales, k1, b, poolN, nBuckets, alpha)
-                .write.mode("append").parquet(resDir)
-            }
+    val commits = plan.sliding(2).map { case Seq(prev, cur) =>
+      (dir: java.nio.file.Path) =>
+        if (cur.negMod != prev.negMod) {
+          val upd = ids.filter(
+            if (prev.negMod == 0) col("id") % cur.negMod === 0
+            else col("id") % cur.negMod === 0 &&
+              col("id") % prev.negMod =!= 0)
+          indexed match {
+            case None => Disaggregated.commitServeTierUpserts(spark,
+              layout(dir), upd, layoutScales)
+            case Some((nCells, d, _)) =>
+              Disaggregated.commitServeTierIndexedUpserts(spark,
+                layout(dir), upd, layoutScales, nCells, d)
           }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        Files.createFile(tmp.resolve("_DRAINED"))
-        try Files.move(tmp, outDir)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.sources.VecFiles.deleteRecursively(tmp) }
-        require(Files.exists(outDir.resolve("_DRAINED")),
-          s"mutating stream serve publish failed: $outDir")
-      }
-    }
-    spark.read.parquet(s"$outDir/results")
-      .select(col("qid"), col("rank"), col("doc_id"), col("fused"),
-        col("tnorm"), col("vnorm"))
-  }
-
-  /**
-   * [[serveRequestsTieredMutatingOverStream]] on the INDEXED tiered
-   * layout — the mutating-index case where the commit MOVES ROWS
-   * ACROSS PARTITIONS: the stream maintains its own cell-partitioned
-   * copy ([[graft.sources.Disaggregated.writeServeTiersIndexed]]) and
-   * the commit ([[graft.sources.Disaggregated
-   * .commitServeTierIndexedUpserts]]) rewrites old ∪ new cells while
-   * requests keep arriving. Pre-commit requests read the pre-commit
-   * cells (probes derived from the pristine query vectors), post-commit
-   * requests read the committed state with probes from the commit
-   * view's query vectors — the drained union row-identical to the
-   * per-snapshot indexed tiered batch serves.
-   */
-  def serveRequestsTieredIndexedMutatingOverStream(
-      spark: SparkSession, sfDir: String, emb: DataFrame,
-      docMeta: DataFrame, queries: Seq[(Long, Seq[String])],
-      filters: Seq[(Long, String)], weights: Seq[(Long, Double)],
-      ks: Seq[(Long, Int)], tiers: Seq[(Long, Int)],
-      layoutScales: Seq[Int], k1: Double, b: Double, poolN: Int,
-      nBuckets: Int, alpha: Double, nCells: Int, d: Int, nprobe: Int,
-      mod: Int, preQids: Set[Long]): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import spark.implicits._
-    require(mod >= 2, s"mod=$mod")
-    graft.operators.Search.ensurePostingsLayout(spark, sfDir, nBuckets)
-    val safe = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val reqKey = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(Seq(queries, filters, weights, ks, tiers, layoutScales,
-          k1, b, poolN, nBuckets, alpha, nCells, d, nprobe, mod,
-          preQids.toSeq.sorted)
-        .mkString(";").getBytes("UTF-8"))
-      .take(8).map(x => f"$x%02x").mkString
-    val qids = ks.map(_._1).sorted
-    val postQids = qids.filterNot(preQids).toSet
-    require(preQids.nonEmpty && postQids.nonEmpty,
-      "mutating indexed serve needs requests on both sides of the commit")
-    val landing = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_mtireqlanding_sv${StreamMutatingServeLayoutVersion}" +
-        s"_${safe}_${reqKey}_v${graft.Fixture.srcVersion(sfDir)}")
-    synchronized {
-      if (!Files.exists(landing.resolve("_SUCCESS"))) {
-        val tmp = Files.createTempDirectory(landing.getParent, "mtireq-")
-        // explicit increasing mtimes: drain order == write order
-        val stamp0 = System.currentTimeMillis()
-        appendLandingShard(spark, preQids.toSeq.sorted, tmp, stamp0)
-        appendLandingShard(spark, postQids.toSeq.sorted, tmp,
-          stamp0 + LandingMtimeStepMs)
-        try Files.move(tmp, landing)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.sources.VecFiles.deleteRecursively(tmp) }
-        require(Files.exists(landing.resolve("_SUCCESS")),
-          s"mutating indexed request landing publish failed: $landing")
-      }
-    }
-    val outDir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_mtireqserve_sv${StreamMutatingServeLayoutVersion}" +
-        s"_${safe}_${reqKey}_v${graft.Fixture.srcVersion(sfDir)}")
-    synchronized {
-      if (!Files.exists(outDir.resolve("_DRAINED"))) {
-        val tmp = Files.createTempDirectory(outDir.getParent, "mtireqs-")
-        val layout = tmp.resolve("tiers").toString
-        val flag = tmp.resolve("_COMMITTED")
-        graft.sources.Disaggregated.writeServeTiersIndexed(spark, sfDir,
-          layout, layoutScales, nCells, d)
-        val resDir = tmp.resolve("results").toString
-        val stream = spark.readStream
-          .schema(StructType(Seq(StructField("qid", LongType))))
-          .option("maxFilesPerTrigger", 1)
-          .parquet(landing.toString)
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val arrived = batch.select(col("qid")).collect()
-              .map(_.getLong(0)).toSet
-            if (arrived.nonEmpty) {
-              val isPost = arrived.exists(postQids)
-              require(arrived.forall(postQids) || arrived.forall(preQids),
-                s"request batch $arrived straddles the commit boundary")
-              if (isPost && !Files.exists(flag)) {
-                graft.sources.Disaggregated.commitServeTierIndexedUpserts(
-                  spark, layout,
-                  emb.select(col("vec_id").as("id"))
-                    .filter(col("id") % (2L * mod) === 0),
-                  layoutScales, nCells, d)
-                Files.createFile(flag)
-              }
-              if (!isPost) require(!Files.exists(flag),
-                "pre-commit requests arrived after the commit — the " +
-                  "landing's interleaving contract is broken")
-              val embView =
-                if (!isPost) emb
-                else emb.select(col("vec_id"),
-                  when(col("vec_id") % (2L * mod) === 0,
-                    transform(col("embedding"), x => -x))
-                    .otherwise(col("embedding")).as("embedding"),
-                  col("label"))
-              graft.operators.Search.serveRequestsTieredIndexedOff(spark,
-                  sfDir, Some(layout), embView, docMeta,
-                  queries.filter(kv => arrived(kv._1)),
-                  filters.filter(kv => arrived(kv._1)),
-                  weights.filter(kv => arrived(kv._1)),
-                  ks.filter(kv => arrived(kv._1)),
-                  tiers.filter(kv => arrived(kv._1)),
-                  layoutScales, k1, b, poolN, nBuckets, alpha, nCells,
-                  d, nprobe)
-                .write.mode("append").parquet(resDir)
-            }
+        } else {
+          val del = ids.filter(col("id") % cur.delMod === 0)
+          indexed match {
+            case None => Disaggregated.commitServeTierDeletes(spark,
+              layout(dir), del)
+            case Some(_) => Disaggregated.commitServeTierIndexedDeletes(
+              spark, layout(dir), del)
           }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        Files.createFile(tmp.resolve("_DRAINED"))
-        try Files.move(tmp, outDir)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.sources.VecFiles.deleteRecursively(tmp) }
-        require(Files.exists(outDir.resolve("_DRAINED")),
-          s"mutating indexed stream serve publish failed: $outDir")
-      }
-    }
-    spark.read.parquet(s"$outDir/results")
-      .select(col("qid"), col("rank"), col("doc_id"), col("fused"),
-        col("tnorm"), col("vnorm"))
-  }
-
-  /**
-   * [[serveRequestsTieredMutatingOverStream]] generalized from its one
-   * hard-coded commit to C = `phases.size - 1` UPDATE COMMITS
-   * interleaved with request batches — the long-running online-serving
-   * shape: requests of phase k are served off the layout with commits
-   * 1..k applied. Commit k updates the NESTED incremental prefix
-   * ids ≡ 0 mod 2^(C-k)·`mod` minus the previously applied ids (the
-   * [[graft.operators.Pq.ensureVersionedTombstones]] convention
-   * extended to C commits), so the CUMULATIVE view after k commits is
-   * the single modulus 2^(C-k)·mod — which is what makes every
-   * snapshot's serve SQL-expressible for the oracle. Each commit is
-   * applied EXACTLY ONCE, at the first batch of its phase (loud failure
-   * if a batch arrives after a LATER commit — the landing's stamped
-   * mtimes make that impossible by construction, and the require keeps
-   * it a contract rather than an accident). Per-request independence
-   * makes the drained union row-identical to the C+1 per-snapshot batch
-   * serves — the UNION oracle.
-   */
-  def serveRequestsTieredMultiMutatingOverStream(
-      spark: SparkSession, sfDir: String, emb: DataFrame,
-      docMeta: DataFrame, queries: Seq[(Long, Seq[String])],
-      filters: Seq[(Long, String)], weights: Seq[(Long, Double)],
-      ks: Seq[(Long, Int)], tiers: Seq[(Long, Int)],
-      layoutScales: Seq[Int], k1: Double, b: Double, poolN: Int,
-      nBuckets: Int, alpha: Double, mod: Int,
-      phases: Seq[Set[Long]]): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import spark.implicits._
-    require(mod >= 2, s"mod=$mod")
-    val nC = phases.size - 1
-    require(nC >= 1, "multi-mutating serve needs at least one commit")
-    require(phases.forall(_.nonEmpty),
-      "every phase needs at least one request")
-    val allQids = ks.map(_._1).toSet
-    require(phases.flatten.toSet == allQids &&
-        phases.map(_.size).sum == allQids.size,
-      "phases must partition the request qids")
-    graft.operators.Search.ensurePostingsLayout(spark, sfDir, nBuckets)
-    val safe = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val reqKey = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(Seq(queries, filters, weights, ks, tiers, layoutScales,
-          k1, b, poolN, nBuckets, alpha, mod,
-          phases.map(_.toSeq.sorted))
-        .mkString(";").getBytes("UTF-8"))
-      .take(8).map(x => f"$x%02x").mkString
-    // cumulative flip modulus after k commits (k >= 1)
-    def cumMod(k: Int): Long = (1L << (nC - k)) * mod
-    val landing = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_mmtreqlanding_sv${StreamMutatingServeLayoutVersion}" +
-        s"_${safe}_${reqKey}_v${graft.Fixture.srcVersion(sfDir)}")
-    synchronized {
-      if (!Files.exists(landing.resolve("_SUCCESS"))) {
-        val tmp = Files.createTempDirectory(landing.getParent, "mmtreq-")
-        // one landing file per phase, stamped mtimes: drain order ==
-        // phase order by construction
-        val stamp0 = System.currentTimeMillis()
-        phases.zipWithIndex.foreach { case (qs, i) =>
-          appendLandingShard(spark, qs.toSeq.sorted, tmp,
-            stamp0 + i * LandingMtimeStepMs)
         }
-        try Files.move(tmp, landing)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.sources.VecFiles.deleteRecursively(tmp) }
-        require(Files.exists(landing.resolve("_SUCCESS")),
-          s"multi-mutating request landing publish failed: $landing")
+    }.toSeq
+    drainRequestStream(spark, sfDir,
+      Seq("mutating", queries, filters, weights, ks, tiers, layoutScales,
+        k1, b, poolN, nBuckets, alpha, indexed,
+        plan.map(p => (p.qids.toSeq.sorted, p.negMod, p.delMod))),
+      plan.map(_.qids.toSeq), seed, commits) { (dir, k, arrived) =>
+      val negMod = plan(k).negMod
+      val embView =
+        if (negMod == 0) emb
+        else emb.select(col("vec_id"),
+          when(col("vec_id") % negMod === 0,
+            transform(col("embedding"), x => -x))
+            .otherwise(col("embedding")).as("embedding"),
+          col("label"))
+      def slice[V](rel: Seq[(Long, V)]) = rel.filter(kv => arrived(kv._1))
+      indexed match {
+        case None => graft.operators.Search.serveRequestsTieredOff(spark,
+          sfDir, Some(layout(dir)), embView, docMeta, slice(queries),
+          slice(filters), slice(weights), slice(ks), slice(tiers),
+          layoutScales, k1, b, poolN, nBuckets, alpha)
+        case Some((nCells, d, nprobe)) =>
+          graft.operators.Search.serveRequestsTieredIndexedOff(spark,
+            sfDir, Some(layout(dir)), embView, docMeta, slice(queries),
+            slice(filters), slice(weights), slice(ks), slice(tiers),
+            layoutScales, k1, b, poolN, nBuckets, alpha, nCells, d, nprobe)
       }
     }
-    val outDir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_mmtreqserve_sv${StreamMutatingServeLayoutVersion}" +
-        s"_${safe}_${reqKey}_v${graft.Fixture.srcVersion(sfDir)}")
-    synchronized {
-      if (!Files.exists(outDir.resolve("_DRAINED"))) {
-        val tmp = Files.createTempDirectory(outDir.getParent, "mmtreqs-")
-        val layout = tmp.resolve("tiers").toString
-        graft.sources.Disaggregated.writeServeTiersPartitioned(
-          emb.join(docMeta.select(col("doc_id").as("vec_id"),
-              col("lang")), Seq("vec_id"))
-            .select(col("vec_id").as("id"), col("lang"),
-              col("embedding").as("vec")),
-          layout, layoutScales)
-        val resDir = tmp.resolve("results").toString
-        val phaseOf: Map[Long, Int] = phases.zipWithIndex
-          .flatMap { case (qs, i) => qs.map(_ -> i) }.toMap
-        val stream = spark.readStream
-          .schema(StructType(Seq(StructField("qid", LongType))))
-          .option("maxFilesPerTrigger", 1)
-          .parquet(landing.toString)
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val arrived = batch.select(col("qid")).collect()
-              .map(_.getLong(0)).toSet
-            if (arrived.nonEmpty) {
-              val ph = arrived.map(phaseOf)
-              require(ph.size == 1,
-                s"request batch $arrived straddles a commit boundary")
-              val k = ph.head
-              // commits applied so far = the marker count (exactly-once
-              // across batches of the same phase)
-              def applied: Int = (1 to nC)
-                .takeWhile(j => Files.exists(tmp.resolve(s"_COMMITTED_$j")))
-                .size
-              require(applied <= k,
-                s"phase-$k requests arrived after commit ${applied} — " +
-                  "the landing's interleaving contract is broken")
-              // apply commits applied+1..k in order, each exactly once,
-              // each rewriting only its incremental prefix's id buckets
-              ((applied + 1) to k).foreach { j =>
-                val mj = cumMod(j)
-                val inc = emb.select(col("vec_id").as("id")).filter(
-                  if (j == 1) col("id") % mj === 0
-                  else col("id") % mj === 0 &&
-                    col("id") % (2L * mj) =!= 0)
-                graft.sources.Disaggregated.commitServeTierUpserts(
-                  spark, layout, inc, layoutScales)
-                Files.createFile(tmp.resolve(s"_COMMITTED_$j"))
-              }
-              val embView =
-                if (k == 0) emb
-                else emb.select(col("vec_id"),
-                  when(col("vec_id") % cumMod(k) === 0,
-                    transform(col("embedding"), x => -x))
-                    .otherwise(col("embedding")).as("embedding"),
-                  col("label"))
-              graft.operators.Search.serveRequestsTieredOff(spark, sfDir,
-                  Some(layout), embView, docMeta,
-                  queries.filter(kv => arrived(kv._1)),
-                  filters.filter(kv => arrived(kv._1)),
-                  weights.filter(kv => arrived(kv._1)),
-                  ks.filter(kv => arrived(kv._1)),
-                  tiers.filter(kv => arrived(kv._1)),
-                  layoutScales, k1, b, poolN, nBuckets, alpha)
-                .write.mode("append").parquet(resDir)
-            }
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        require((1 to nC).forall(j =>
-            Files.exists(tmp.resolve(s"_COMMITTED_$j"))),
-          "drained without applying every commit")
-        Files.createFile(tmp.resolve("_DRAINED"))
-        try Files.move(tmp, outDir)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.sources.VecFiles.deleteRecursively(tmp) }
-        require(Files.exists(outDir.resolve("_DRAINED")),
-          s"multi-mutating stream serve publish failed: $outDir")
-      }
-    }
-    spark.read.parquet(s"$outDir/results")
-      .select(col("qid"), col("rank"), col("doc_id"), col("fused"),
-        col("tnorm"), col("vnorm"))
-  }
-
-  /**
-   * [[serveRequestsTieredMultiMutatingOverStream]] on the INDEXED
-   * (cell-partitioned) tiered layout — C commits that each MOVE ROWS
-   * ACROSS CELL PARTITIONS while requests arrive: commit k re-assigns
-   * its incremental prefix's rows to the cells of their new vectors
-   * (old ∪ new cells rewritten, emptied cells swept —
-   * [[graft.sources.Disaggregated.commitServeTierIndexedUpserts]]),
-   * applied exactly once at its phase's first batch under the same
-   * marker + stamped-mtime discipline. Phase-k requests probe the
-   * layout with commits 1..k applied, query vectors off the cumulative
-   * commit view (the single modulus 2^(C-k)·`mod` — what keeps each
-   * snapshot's serve SQL-expressible). Drained union = the C+1
-   * per-snapshot INDEXED batch serves — the UNION oracle with
-   * assignment, probes, codes, and rescore all moving per snapshot.
-   */
-  def serveRequestsTieredIndexedMultiMutatingOverStream(
-      spark: SparkSession, sfDir: String, emb: DataFrame,
-      docMeta: DataFrame, queries: Seq[(Long, Seq[String])],
-      filters: Seq[(Long, String)], weights: Seq[(Long, Double)],
-      ks: Seq[(Long, Int)], tiers: Seq[(Long, Int)],
-      layoutScales: Seq[Int], k1: Double, b: Double, poolN: Int,
-      nBuckets: Int, alpha: Double, nCells: Int, d: Int, nprobe: Int,
-      mod: Int, phases: Seq[Set[Long]]): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    require(mod >= 2, s"mod=$mod")
-    val nC = phases.size - 1
-    require(nC >= 1, "multi-mutating indexed serve needs >= 1 commit")
-    require(phases.forall(_.nonEmpty),
-      "every phase needs at least one request")
-    val allQids = ks.map(_._1).toSet
-    require(phases.flatten.toSet == allQids &&
-        phases.map(_.size).sum == allQids.size,
-      "phases must partition the request qids")
-    graft.operators.Search.ensurePostingsLayout(spark, sfDir, nBuckets)
-    val safe = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val reqKey = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(Seq(queries, filters, weights, ks, tiers, layoutScales,
-          k1, b, poolN, nBuckets, alpha, nCells, d, nprobe, mod,
-          phases.map(_.toSeq.sorted))
-        .mkString(";").getBytes("UTF-8"))
-      .take(8).map(x => f"$x%02x").mkString
-    def cumMod(k: Int): Long = (1L << (nC - k)) * mod
-    val landing = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_mmtireqlanding_sv${StreamMutatingServeLayoutVersion}" +
-        s"_${safe}_${reqKey}_v${graft.Fixture.srcVersion(sfDir)}")
-    synchronized {
-      if (!Files.exists(landing.resolve("_SUCCESS"))) {
-        val tmp = Files.createTempDirectory(landing.getParent, "mmtireq-")
-        val stamp0 = System.currentTimeMillis()
-        phases.zipWithIndex.foreach { case (qs, i) =>
-          appendLandingShard(spark, qs.toSeq.sorted, tmp,
-            stamp0 + i * LandingMtimeStepMs)
-        }
-        try Files.move(tmp, landing)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.sources.VecFiles.deleteRecursively(tmp) }
-        require(Files.exists(landing.resolve("_SUCCESS")),
-          s"multi-mutating indexed landing publish failed: $landing")
-      }
-    }
-    val outDir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_mmtireqserve_sv${StreamMutatingServeLayoutVersion}" +
-        s"_${safe}_${reqKey}_v${graft.Fixture.srcVersion(sfDir)}")
-    synchronized {
-      if (!Files.exists(outDir.resolve("_DRAINED"))) {
-        val tmp = Files.createTempDirectory(outDir.getParent, "mmtireqs-")
-        val layout = tmp.resolve("tiers").toString
-        graft.sources.Disaggregated.writeServeTiersIndexed(spark, sfDir,
-          layout, layoutScales, nCells, d)
-        val resDir = tmp.resolve("results").toString
-        val phaseOf: Map[Long, Int] = phases.zipWithIndex
-          .flatMap { case (qs, i) => qs.map(_ -> i) }.toMap
-        val stream = spark.readStream
-          .schema(StructType(Seq(StructField("qid", LongType))))
-          .option("maxFilesPerTrigger", 1)
-          .parquet(landing.toString)
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val arrived = batch.select(col("qid")).collect()
-              .map(_.getLong(0)).toSet
-            if (arrived.nonEmpty) {
-              val ph = arrived.map(phaseOf)
-              require(ph.size == 1,
-                s"request batch $arrived straddles a commit boundary")
-              val k = ph.head
-              def applied: Int = (1 to nC)
-                .takeWhile(j => Files.exists(tmp.resolve(s"_COMMITTED_$j")))
-                .size
-              require(applied <= k,
-                s"phase-$k requests arrived after commit ${applied} — " +
-                  "the landing's interleaving contract is broken")
-              ((applied + 1) to k).foreach { j =>
-                val mj = cumMod(j)
-                val inc = emb.select(col("vec_id").as("id")).filter(
-                  if (j == 1) col("id") % mj === 0
-                  else col("id") % mj === 0 &&
-                    col("id") % (2L * mj) =!= 0)
-                graft.sources.Disaggregated.commitServeTierIndexedUpserts(
-                  spark, layout, inc, layoutScales, nCells, d)
-                Files.createFile(tmp.resolve(s"_COMMITTED_$j"))
-              }
-              val embView =
-                if (k == 0) emb
-                else emb.select(col("vec_id"),
-                  when(col("vec_id") % cumMod(k) === 0,
-                    transform(col("embedding"), x => -x))
-                    .otherwise(col("embedding")).as("embedding"),
-                  col("label"))
-              graft.operators.Search.serveRequestsTieredIndexedOff(spark,
-                  sfDir, Some(layout), embView, docMeta,
-                  queries.filter(kv => arrived(kv._1)),
-                  filters.filter(kv => arrived(kv._1)),
-                  weights.filter(kv => arrived(kv._1)),
-                  ks.filter(kv => arrived(kv._1)),
-                  tiers.filter(kv => arrived(kv._1)),
-                  layoutScales, k1, b, poolN, nBuckets, alpha, nCells,
-                  d, nprobe)
-                .write.mode("append").parquet(resDir)
-            }
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        require((1 to nC).forall(j =>
-            Files.exists(tmp.resolve(s"_COMMITTED_$j"))),
-          "drained without applying every commit")
-        Files.createFile(tmp.resolve("_DRAINED"))
-        try Files.move(tmp, outDir)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.sources.VecFiles.deleteRecursively(tmp) }
-        require(Files.exists(outDir.resolve("_DRAINED")),
-          s"multi-mutating indexed stream publish failed: $outDir")
-      }
-    }
-    spark.read.parquet(s"$outDir/results")
-      .select(col("qid"), col("rank"), col("doc_id"), col("fused"),
-        col("tnorm"), col("vnorm"))
-  }
-
-  /**
-   * [[serveRequestsTieredMixedMutatingOverStream]] on the INDEXED
-   * (cell-partitioned) layout — the verbs mixed where each one has a
-   * DIFFERENT partition story: the upsert commit MOVES its rows across
-   * cells (old ∪ new cells rewritten), the delete commit DROPS its rows
-   * from their stored cells (touched = the layout's own assignment of
-   * the tombstones, emptied cells swept, surviving rows' cells stale —
-   * the Lucene contract). Same marker + stamped-mtime exactly-once
-   * discipline; phase-2 requests probe the upserted-then-deleted state
-   * with the upsert view's query vectors. Drained union = the three
-   * per-snapshot indexed serves with negMod and delMod composed.
-   */
-  def serveRequestsTieredIndexedMixedMutatingOverStream(
-      spark: SparkSession, sfDir: String, emb: DataFrame,
-      docMeta: DataFrame, queries: Seq[(Long, Seq[String])],
-      filters: Seq[(Long, String)], weights: Seq[(Long, Double)],
-      ks: Seq[(Long, Int)], tiers: Seq[(Long, Int)],
-      layoutScales: Seq[Int], k1: Double, b: Double, poolN: Int,
-      nBuckets: Int, alpha: Double, nCells: Int, d: Int, nprobe: Int,
-      umod: Int, dmod: Int, phases: Seq[Set[Long]]): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    require(umod >= 2 && dmod >= 2 && umod != dmod,
-      s"umod=$umod dmod=$dmod must be distinct moduli >= 2")
-    require(phases.size == 3,
-      "mixed mutating indexed serve is 3 phases: pristine | upserted " +
-        "| upserted+deleted")
-    require(phases.forall(_.nonEmpty),
-      "every phase needs at least one request")
-    val allQids = ks.map(_._1).toSet
-    require(phases.flatten.toSet == allQids &&
-        phases.map(_.size).sum == allQids.size,
-      "phases must partition the request qids")
-    graft.operators.Search.ensurePostingsLayout(spark, sfDir, nBuckets)
-    val safe = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val reqKey = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(Seq(queries, filters, weights, ks, tiers, layoutScales,
-          k1, b, poolN, nBuckets, alpha, nCells, d, nprobe, umod, dmod,
-          phases.map(_.toSeq.sorted))
-        .mkString(";").getBytes("UTF-8"))
-      .take(8).map(x => f"$x%02x").mkString
-    val landing = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_mxtireqlanding_sv${StreamMutatingServeLayoutVersion}" +
-        s"_${safe}_${reqKey}_v${graft.Fixture.srcVersion(sfDir)}")
-    synchronized {
-      if (!Files.exists(landing.resolve("_SUCCESS"))) {
-        val tmp = Files.createTempDirectory(landing.getParent, "mxtireq-")
-        val stamp0 = System.currentTimeMillis()
-        phases.zipWithIndex.foreach { case (qs, i) =>
-          appendLandingShard(spark, qs.toSeq.sorted, tmp,
-            stamp0 + i * LandingMtimeStepMs)
-        }
-        try Files.move(tmp, landing)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.sources.VecFiles.deleteRecursively(tmp) }
-        require(Files.exists(landing.resolve("_SUCCESS")),
-          s"mixed-mutating indexed landing publish failed: $landing")
-      }
-    }
-    val outDir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_mxtireqserve_sv${StreamMutatingServeLayoutVersion}" +
-        s"_${safe}_${reqKey}_v${graft.Fixture.srcVersion(sfDir)}")
-    synchronized {
-      if (!Files.exists(outDir.resolve("_DRAINED"))) {
-        val tmp = Files.createTempDirectory(outDir.getParent, "mxtireqs-")
-        val layout = tmp.resolve("tiers").toString
-        graft.sources.Disaggregated.writeServeTiersIndexed(spark, sfDir,
-          layout, layoutScales, nCells, d)
-        val resDir = tmp.resolve("results").toString
-        val phaseOf: Map[Long, Int] = phases.zipWithIndex
-          .flatMap { case (qs, i) => qs.map(_ -> i) }.toMap
-        val stream = spark.readStream
-          .schema(StructType(Seq(StructField("qid", LongType))))
-          .option("maxFilesPerTrigger", 1)
-          .parquet(landing.toString)
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val arrived = batch.select(col("qid")).collect()
-              .map(_.getLong(0)).toSet
-            if (arrived.nonEmpty) {
-              val ph = arrived.map(phaseOf)
-              require(ph.size == 1,
-                s"request batch $arrived straddles a commit boundary")
-              val k = ph.head
-              def applied: Int = (1 to 2)
-                .takeWhile(j => Files.exists(tmp.resolve(s"_COMMITTED_$j")))
-                .size
-              require(applied <= k,
-                s"phase-$k requests arrived after commit ${applied} — " +
-                  "the landing's interleaving contract is broken")
-              ((applied + 1) to k).foreach { j =>
-                if (j == 1)
-                  graft.sources.Disaggregated.commitServeTierIndexedUpserts(
-                    spark, layout,
-                    emb.select(col("vec_id").as("id"))
-                      .filter(col("id") % umod === 0),
-                    layoutScales, nCells, d)
-                else
-                  graft.sources.Disaggregated.commitServeTierIndexedDeletes(
-                    spark, layout,
-                    emb.select(col("vec_id").as("id"))
-                      .filter(col("id") % dmod === 0))
-                Files.createFile(tmp.resolve(s"_COMMITTED_$j"))
-              }
-              val embView =
-                if (k == 0) emb
-                else emb.select(col("vec_id"),
-                  when(col("vec_id") % umod === 0,
-                    transform(col("embedding"), x => -x))
-                    .otherwise(col("embedding")).as("embedding"),
-                  col("label"))
-              graft.operators.Search.serveRequestsTieredIndexedOff(spark,
-                  sfDir, Some(layout), embView, docMeta,
-                  queries.filter(kv => arrived(kv._1)),
-                  filters.filter(kv => arrived(kv._1)),
-                  weights.filter(kv => arrived(kv._1)),
-                  ks.filter(kv => arrived(kv._1)),
-                  tiers.filter(kv => arrived(kv._1)),
-                  layoutScales, k1, b, poolN, nBuckets, alpha, nCells,
-                  d, nprobe)
-                .write.mode("append").parquet(resDir)
-            }
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        require((1 to 2).forall(j =>
-            Files.exists(tmp.resolve(s"_COMMITTED_$j"))),
-          "drained without applying both commits")
-        Files.createFile(tmp.resolve("_DRAINED"))
-        try Files.move(tmp, outDir)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.sources.VecFiles.deleteRecursively(tmp) }
-        require(Files.exists(outDir.resolve("_DRAINED")),
-          s"mixed-mutating indexed stream publish failed: $outDir")
-      }
-    }
-    spark.read.parquet(s"$outDir/results")
-      .select(col("qid"), col("rank"), col("doc_id"), col("fused"),
-        col("tnorm"), col("vnorm"))
-  }
-
-  /**
-   * The multi-commit mutating serve with the LIFECYCLE VERBS MIXED —
-   * the shape a real retention-compliant serving system runs: an
-   * UPDATE commit (ids ≡ 0 mod `umod`, v' = −v) lands between request
-   * phases 0 and 1, then a DELETE commit (ids ≡ 0 mod `dmod`,
-   * tombstoned rows physically dropped, only their id buckets
-   * rewritten, emptied buckets swept) lands between phases 1 and 2 —
-   * both against the stream's own layout copy, each applied exactly
-   * once at its phase's first batch with the
-   * [[serveRequestsTieredMultiMutatingOverStream]] exactly-once marker
-   * discipline and the stamped-mtime landing that makes drain order ==
-   * phase order by construction. Phase-2 requests are served off the
-   * upserted-then-deleted state: query vectors keep the upsert view's
-   * flips (the store serves what it was told to store; an index DELETE
-   * never rewrites external probes — the family-wide contract), while
-   * the tombstoned ids are absent from every tier's cheap pass and the
-   * rescore. Per-request independence makes the drained union
-   * row-identical to the three per-snapshot batch serves — the UNION
-   * oracle with the verbs composed (negMod + delMod in one snapshot
-   * view; an id in both sets is simply absent).
-   */
-  def serveRequestsTieredMixedMutatingOverStream(
-      spark: SparkSession, sfDir: String, emb: DataFrame,
-      docMeta: DataFrame, queries: Seq[(Long, Seq[String])],
-      filters: Seq[(Long, String)], weights: Seq[(Long, Double)],
-      ks: Seq[(Long, Int)], tiers: Seq[(Long, Int)],
-      layoutScales: Seq[Int], k1: Double, b: Double, poolN: Int,
-      nBuckets: Int, alpha: Double, umod: Int, dmod: Int,
-      phases: Seq[Set[Long]]): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    require(umod >= 2 && dmod >= 2 && umod != dmod,
-      s"umod=$umod dmod=$dmod must be distinct moduli >= 2")
-    require(phases.size == 3,
-      "mixed mutating serve is 3 phases: pristine | upserted | " +
-        "upserted+deleted")
-    require(phases.forall(_.nonEmpty),
-      "every phase needs at least one request")
-    val allQids = ks.map(_._1).toSet
-    require(phases.flatten.toSet == allQids &&
-        phases.map(_.size).sum == allQids.size,
-      "phases must partition the request qids")
-    graft.operators.Search.ensurePostingsLayout(spark, sfDir, nBuckets)
-    val safe = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val reqKey = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(Seq(queries, filters, weights, ks, tiers, layoutScales,
-          k1, b, poolN, nBuckets, alpha, umod, dmod,
-          phases.map(_.toSeq.sorted))
-        .mkString(";").getBytes("UTF-8"))
-      .take(8).map(x => f"$x%02x").mkString
-    val landing = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_mxtreqlanding_sv${StreamMutatingServeLayoutVersion}" +
-        s"_${safe}_${reqKey}_v${graft.Fixture.srcVersion(sfDir)}")
-    synchronized {
-      if (!Files.exists(landing.resolve("_SUCCESS"))) {
-        val tmp = Files.createTempDirectory(landing.getParent, "mxtreq-")
-        val stamp0 = System.currentTimeMillis()
-        phases.zipWithIndex.foreach { case (qs, i) =>
-          appendLandingShard(spark, qs.toSeq.sorted, tmp,
-            stamp0 + i * LandingMtimeStepMs)
-        }
-        try Files.move(tmp, landing)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.sources.VecFiles.deleteRecursively(tmp) }
-        require(Files.exists(landing.resolve("_SUCCESS")),
-          s"mixed-mutating request landing publish failed: $landing")
-      }
-    }
-    val outDir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_mxtreqserve_sv${StreamMutatingServeLayoutVersion}" +
-        s"_${safe}_${reqKey}_v${graft.Fixture.srcVersion(sfDir)}")
-    synchronized {
-      if (!Files.exists(outDir.resolve("_DRAINED"))) {
-        val tmp = Files.createTempDirectory(outDir.getParent, "mxtreqs-")
-        val layout = tmp.resolve("tiers").toString
-        graft.sources.Disaggregated.writeServeTiersPartitioned(
-          emb.join(docMeta.select(col("doc_id").as("vec_id"),
-              col("lang")), Seq("vec_id"))
-            .select(col("vec_id").as("id"), col("lang"),
-              col("embedding").as("vec")),
-          layout, layoutScales)
-        val resDir = tmp.resolve("results").toString
-        val phaseOf: Map[Long, Int] = phases.zipWithIndex
-          .flatMap { case (qs, i) => qs.map(_ -> i) }.toMap
-        val stream = spark.readStream
-          .schema(StructType(Seq(StructField("qid", LongType))))
-          .option("maxFilesPerTrigger", 1)
-          .parquet(landing.toString)
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val arrived = batch.select(col("qid")).collect()
-              .map(_.getLong(0)).toSet
-            if (arrived.nonEmpty) {
-              val ph = arrived.map(phaseOf)
-              require(ph.size == 1,
-                s"request batch $arrived straddles a commit boundary")
-              val k = ph.head
-              def applied: Int = (1 to 2)
-                .takeWhile(j => Files.exists(tmp.resolve(s"_COMMITTED_$j")))
-                .size
-              require(applied <= k,
-                s"phase-$k requests arrived after commit ${applied} — " +
-                  "the landing's interleaving contract is broken")
-              ((applied + 1) to k).foreach { j =>
-                if (j == 1)
-                  graft.sources.Disaggregated.commitServeTierUpserts(
-                    spark, layout,
-                    emb.select(col("vec_id").as("id"))
-                      .filter(col("id") % umod === 0),
-                    layoutScales)
-                else
-                  graft.sources.Disaggregated.commitServeTierDeletes(
-                    spark, layout,
-                    emb.select(col("vec_id").as("id"))
-                      .filter(col("id") % dmod === 0))
-                Files.createFile(tmp.resolve(s"_COMMITTED_$j"))
-              }
-              // query vectors follow the UPSERT view from phase 1 on;
-              // the delete commit never rewrites external probes
-              val embView =
-                if (k == 0) emb
-                else emb.select(col("vec_id"),
-                  when(col("vec_id") % umod === 0,
-                    transform(col("embedding"), x => -x))
-                    .otherwise(col("embedding")).as("embedding"),
-                  col("label"))
-              graft.operators.Search.serveRequestsTieredOff(spark, sfDir,
-                  Some(layout), embView, docMeta,
-                  queries.filter(kv => arrived(kv._1)),
-                  filters.filter(kv => arrived(kv._1)),
-                  weights.filter(kv => arrived(kv._1)),
-                  ks.filter(kv => arrived(kv._1)),
-                  tiers.filter(kv => arrived(kv._1)),
-                  layoutScales, k1, b, poolN, nBuckets, alpha)
-                .write.mode("append").parquet(resDir)
-            }
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        require((1 to 2).forall(j =>
-            Files.exists(tmp.resolve(s"_COMMITTED_$j"))),
-          "drained without applying both commits")
-        Files.createFile(tmp.resolve("_DRAINED"))
-        try Files.move(tmp, outDir)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.sources.VecFiles.deleteRecursively(tmp) }
-        require(Files.exists(outDir.resolve("_DRAINED")),
-          s"mixed-mutating stream serve publish failed: $outDir")
-      }
-    }
-    spark.read.parquet(s"$outDir/results")
-      .select(col("qid"), col("rank"), col("doc_id"), col("fused"),
-        col("tnorm"), col("vnorm"))
   }
 
   /** Multi-probe LSH over the STREAM-MAINTAINED layout — hash-equal to

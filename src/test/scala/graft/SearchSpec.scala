@@ -1,9 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Search, Ann}
+import graft.streaming.StreamOps
+import graft.streaming.StreamOps.ServePhase
 
 class SearchSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -861,6 +863,105 @@ class SearchSpec extends AnyFunSuite {
     // tiered serves compose exactly
     assert(streamed == batch && streamed.nonEmpty,
       "drained tiered request stream diverged from the batch tiered capstone")
+  }
+
+  // the drained union against the per-phase batch serves, each filtered
+  // to its phase's qids: row for row, exact doubles
+  private def assertDrainIsPhaseUnion(plan: Seq[ServePhase],
+                                      indexed: Option[(Int, Int, Int)])(
+                                      batch: Int => DataFrame): Unit = {
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
+      .sortBy(_.mkString(","))
+    import SparkEntry._
+    val drained = rows(StreamOps.serveRequestsTieredMutatingOverStream(
+      spark, dir, emb, docs, Bm25MultiQueries, FilterMultiRel,
+      FusionMultiRel, PageKMultiRel, ServeTierRel, ServeTierLayoutScales,
+      Bm25K1, Bm25B, RrfPoolN, PostBuckets, refineParams("cos_l1").alpha,
+      indexed, plan))
+    val want = plan.indices.flatMap { k =>
+      rows(batch(k).filter(col("qid").isin(plan(k).qids.toSeq: _*)))
+    }.sortBy(_.mkString(","))
+    assert(plan.forall(p => p.qids.forall(q => drained.exists(_.head == q))),
+      "every phase's requests must return rows")
+    assert(drained == want,
+      "drained mutating stream diverged from the per-phase batch serves")
+  }
+
+  test("mutating request stream, 3 nested upsert commits: drain equals the per-phase batch serves") {
+    import SparkEntry._
+    val alpha = refineParams("cos_l1").alpha
+    val plan = StreamMultiPlan
+    assertDrainIsPhaseUnion(plan, None) { k =>
+      if (k == 0) Search.serveRequestsTiered(spark, dir, emb, docs,
+        Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
+        ServeTierRel, ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN,
+        PostBuckets, alpha)
+      else Search.serveRequestsTieredUpserted(spark, dir, emb, docs,
+        Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
+        ServeTierRel, ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN,
+        PostBuckets, alpha, plan(k).negMod)
+    }
+  }
+
+  test("mutating request stream, upsert then delete: drain equals the per-snapshot mixed serves") {
+    import SparkEntry._
+    val alpha = refineParams("cos_l1").alpha
+    assertDrainIsPhaseUnion(StreamMixedPlan, None) { k =>
+      Search.serveRequestsTieredMixedAsOf(spark, dir, emb, docs,
+        Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
+        ServeTierRel, ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN,
+        PostBuckets, alpha, UpsertMod, DeleteMod, asOf = k)
+    }
+  }
+
+  test("mutating request stream on the indexed layout: rows moved across cells, drain equals the per-phase indexed serves") {
+    import SparkEntry._
+    val alpha = refineParams("cos_l1").alpha
+    val plan = StreamMultiPlan
+    assertDrainIsPhaseUnion(plan, Some((IvfCells, EmbD, IvfProbe))) { k =>
+      if (k == 0) Search.serveRequestsTieredIndexed(spark, dir, emb, docs,
+        Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
+        ServeTierRel, ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN,
+        PostBuckets, alpha, IvfCells, EmbD, IvfProbe)
+      else Search.serveRequestsTieredIndexedUpserted(spark, dir, emb, docs,
+        Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
+        ServeTierRel, ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN,
+        PostBuckets, alpha, IvfCells, EmbD, IvfProbe, plan(k).negMod)
+    }
+  }
+
+  test("mutating request stream rejects a malformed plan before anything is written") {
+    import SparkEntry.{UpsertMod => u, DeleteMod => dm}
+    def p(qids: Long*)(negMod: Int, delMod: Int) =
+      ServePhase(qids.toSet, negMod, delMod)
+    val bad = Seq(
+      "at least one commit" -> Seq(p(0, 1, 2, 3)(0, 0)),
+      "at least one request" ->
+        Seq(p(0, 1)(0, 0), p()(2 * u, 0), p(2, 3)(u, 0)),
+      "partition" -> Seq(p(0, 1)(0, 0), p(1, 2, 3)(u, 0)),
+      "partition" -> Seq(p(0)(0, 0), p(1, 2)(u, 0)),
+      "pristine" -> Seq(p(0, 1)(2 * u, 0), p(2, 3)(u, 0)),
+      ">= 2" -> Seq(p(0, 1)(0, 0), p(2, 3)(1, 0)),
+      "un-flips" -> Seq(p(0)(0, 0), p(1)(u, 0), p(2, 3)(2 * u, 0)),
+      "un-flips" -> Seq(p(0)(0, 0), p(1)(u, 0), p(2, 3)(0, 0)),
+      "after it is set" -> Seq(p(0)(0, 0), p(1)(0, dm), p(2, 3)(0, 2 * dm)),
+      "exactly one commit" -> Seq(p(0, 1)(0, 0), p(2, 3)(u, dm)),
+      "exactly one commit" -> Seq(p(0)(0, 0), p(1)(u, 0), p(2, 3)(u, 0)),
+      "must differ" -> Seq(p(0)(0, 0), p(1)(u, 0), p(2, 3)(u, u)))
+    // null frames and a missing corpus: any work ahead of the plan
+    // check would fail with something other than the plan's require
+    val missing = s"$dir/absent"
+    assert(!new java.io.File(missing).exists)
+    bad.foreach { case (why, plan) =>
+      import SparkEntry._
+      val e = intercept[IllegalArgumentException] {
+        StreamOps.serveRequestsTieredMutatingOverStream(spark, missing,
+          null, null, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
+          PageKMultiRel, ServeTierRel, ServeTierLayoutScales, Bm25K1,
+          Bm25B, RrfPoolN, PostBuckets, 0.5, None, plan)
+      }
+      assert(e.getMessage.contains(why), s"$plan: ${e.getMessage}")
+    }
   }
 
   test("indexed serve ledger: sum-of-parts, probe pruning strictly undercuts the brute ledger") {

@@ -362,13 +362,12 @@ object Bench {
         spark, sfDir).count()
       // round-18b layouts: the as-of compacted tiered layout and the
       // mixed-verb stream's drain
-      graft.operators.Search.ensureTieredServeAsOfCompacted(spark, sfDir,
-        SparkEntry.ServeTierLayoutScales, SparkEntry.UpsertMod,
-        SparkEntry.TieredAsOfSnapshot)
-      graft.operators.Search.ensureTieredServeIndexedAsOfCompacted(spark,
-        sfDir, SparkEntry.ServeTierLayoutScales, SparkEntry.IvfCells,
-        SparkEntry.EmbD, SparkEntry.UpsertMod,
-        SparkEntry.TieredAsOfSnapshot)
+      Seq(None, Some((SparkEntry.IvfCells, SparkEntry.EmbD,
+          SparkEntry.IvfProbe))).foreach { indexed =>
+        graft.operators.Search.ensureTieredServeCompacted(spark, sfDir,
+          SparkEntry.ServeTierLayoutScales, indexed, SparkEntry.UpsertMod,
+          SparkEntry.TieredAsOfSnapshot)
+      }
       SparkEntry.queries("q_stream_serve_requests_tiered_mixed")(
         spark, sfDir).count()
       SparkEntry.queries("q_stream_serve_requests_tiered_indexed_multi")(

@@ -7,6 +7,7 @@ import graft.functions.VectorOps._
 import graft.operators.{TopK, Refine, RefineKernel, Dedup, TextOps, Ann}
 import graft.oracle.{OracleGen, RefineOracle, DocOracle, EmbOracle, MiscOracle, IvfOracle, SearchOracle, PqOracle, LadderOracle}
 import graft.streaming.StreamOps.ServePhase
+import graft.operators.Search.TierSnapshot
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -672,21 +673,62 @@ object SparkEntry {
   private def streamPlanOracleSql(plan: Seq[ServePhase],
                                   indexed: Boolean): String =
     plan.map { p =>
-      val sql =
-        if (!indexed) SearchOracle.serveRequestsTieredSql(
-          EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-          PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-          Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
-          qrelPathForOracle(), negMod = p.negMod, delMod = p.delMod)
-        else SearchOracle.serveRequestsTieredIndexedSql(
-          EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-          PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-          Bm25K1, Bm25B, RrfPoolN, IvfCells, IvfProbe,
-          bm25MultiStatsForOracle(), qrelPathForOracle(),
-          negMod = p.negMod, delMod = p.delMod)
+      val sql = tieredOracleSql(indexed, ledger = false,
+        (p.negMod, p.delMod))
       s"SELECT * FROM ($sql) WHERE qid IN " +
         s"(${p.qids.toSeq.sorted.mkString(", ")})"
     }.mkString("\nUNION ALL\n")
+
+  /** The (negMod, delMod) corpus view of a tiered snapshot, in the
+    * oracle's vocabulary: ids ≡ 0 mod negMod upserted, ids ≡ 0 mod delMod
+    * deleted, 0 = verb not applied. A versioned log's commit 1 applies
+    * ids ≡ 0 mod 2·mod and commit 2 the rest of mod `mod`. */
+  private def snapshotMods(snap: TierSnapshot): (Int, Int) = {
+    import TierSnapshot._
+    def prefix(mod: Int, asOf: Int): Int =
+      if (asOf <= 0) 0 else if (asOf == 1) 2 * mod else mod
+    snap match {
+      case Pristine => (0, 0)
+      case Upserted(mod) => (mod, 0)
+      case Deleted(mod) => (0, mod)
+      case UpsertLog(mod, asOf, _) => (prefix(mod, asOf), 0)
+      case DeleteLog(mod, asOf) => (0, prefix(mod, asOf))
+      case MixedLog(umod, dmod, asOf) =>
+        (if (asOf >= 1) umod else 0, if (asOf >= 2) dmod else 0)
+      case At(path) => throw new IllegalArgumentException(
+        s"no corpus view for the maintained copy at $path")
+    }
+  }
+
+  /** The oracle of a tiered serve (or its ledger) over the (negMod,
+    * delMod) corpus view, recomputed from the raw floats. */
+  private def tieredOracleSql(indexed: Boolean, ledger: Boolean,
+                              mods: (Int, Int)): String = {
+    val (negMod, delMod) = mods
+    val alpha = refineParams("cos_l1").alpha
+    val st = bm25MultiStatsForOracle()
+    val rel = qrelPathForOracle()
+    val codeBytes = graft.sources.Disaggregated.serveTierCodeBytes _
+    (indexed, ledger) match {
+      case (false, false) => SearchOracle.serveRequestsTieredSql(EmbD,
+        Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
+        ServeTierRel, alpha, Bm25K1, Bm25B, RrfPoolN, st, rel, negMod,
+        delMod)
+      case (false, true) => SearchOracle.serveRequestsTieredMetricsSql(
+        EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
+        PageKMultiRel, ServeTierRel, codeBytes, alpha, Bm25K1, Bm25B,
+        RrfPoolN, st, rel, negMod, delMod)
+      case (true, false) => SearchOracle.serveRequestsTieredIndexedSql(
+        EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
+        PageKMultiRel, ServeTierRel, alpha, Bm25K1, Bm25B, RrfPoolN,
+        IvfCells, IvfProbe, st, rel, negMod, delMod)
+      case (true, true) =>
+        SearchOracle.serveRequestsTieredIndexedMetricsSql(EmbD,
+          Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
+          ServeTierRel, codeBytes, alpha, Bm25K1, Bm25B, RrfPoolN,
+          IvfCells, IvfProbe, st, rel, negMod, delMod)
+    }
+  }
 
   /** The stored query-relation table's path for the ORACLE generators:
     * the oracle SQL reads the SAME parquet the engine bound from
@@ -1780,6 +1822,9 @@ object SparkEntry {
   private def q(f: QFn): QFn =
     (s, dir) => { lastSfDir.set(dir); f(s, dir) }
 
+  private def tieredLayout(indexed: Boolean): Option[(Int, Int, Int)] =
+    if (indexed) Some((IvfCells, EmbD, IvfProbe)) else None
+
   // one mutating request stream per (plan, layout kind); the oracle twin
   // is streamPlanOracleSql
   private def streamServeMutating(plan: Seq[ServePhase],
@@ -1789,8 +1834,65 @@ object SparkEntry {
       filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
       pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
       ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-      refineParams("cos_l1").alpha,
-      if (indexed) Some((IvfCells, EmbD, IvfProbe)) else None, plan))
+      refineParams("cos_l1").alpha, tieredLayout(indexed), plan))
+
+  // The batch tiered serves at PER-REQUEST PRECISION, the title knob
+  // composed into serving: name -> (indexed layout, snapshot, ledger).
+  // The engine serves the spec (Search.serveRequestsTiered, or its byte
+  // ledger serveRequestsTieredMetrics; TierSnapshot states each case's
+  // semantics); the oracle recomputes the snapshot's (negMod, delMod)
+  // corpus view from scratch (snapshotMods, tieredOracleSql). The logs
+  // serve snapshot TieredAsOfSnapshot, between their two commits; the
+  // mixed log serves snapshot 2, upserted then deleted.
+  private val TieredServes: Seq[(String, (Boolean, TierSnapshot, Boolean))] = {
+    import TierSnapshot._
+    val (u, dm, v) = (UpsertMod, DeleteMod, TieredAsOfSnapshot)
+    val logCompacted = UpsertLog(u, v, compacted = true)
+    Seq(
+      "q_serve_requests_tiered" -> (false, Pristine, false),
+      "q_serve_requests_tiered_metrics" -> (false, Pristine, true),
+      "q_serve_requests_tiered_upsert" -> (false, Upserted(u), false),
+      "q_serve_requests_tiered_upsert_metrics" -> (false, Upserted(u), true),
+      "q_serve_requests_tiered_asof" -> (false, UpsertLog(u, v), false),
+      "q_serve_requests_tiered_asof_metrics" ->
+        (false, UpsertLog(u, v), true),
+      "q_serve_requests_tiered_asof_compact" -> (false, logCompacted, false),
+      "q_serve_requests_tiered_mixed_asof" ->
+        (false, MixedLog(u, dm, 2), false),
+      "q_serve_requests_tiered_delete" -> (false, Deleted(dm), false),
+      "q_serve_requests_tiered_delete_metrics" -> (false, Deleted(dm), true),
+      "q_serve_requests_tiered_delete_asof" ->
+        (false, DeleteLog(dm, v), false),
+      "q_serve_requests_tiered_delete_asof_metrics" ->
+        (false, DeleteLog(dm, v), true),
+      "q_serve_requests_tiered_indexed" -> (true, Pristine, false),
+      "q_serve_requests_tiered_indexed_metrics" -> (true, Pristine, true),
+      "q_serve_requests_tiered_indexed_upsert" -> (true, Upserted(u), false),
+      "q_serve_requests_tiered_indexed_upsert_metrics" ->
+        (true, Upserted(u), true),
+      "q_serve_requests_tiered_indexed_asof" ->
+        (true, UpsertLog(u, v), false),
+      "q_serve_requests_tiered_indexed_asof_compact" ->
+        (true, logCompacted, false),
+      "q_serve_requests_tiered_indexed_delete" -> (true, Deleted(dm), false),
+      "q_serve_requests_tiered_indexed_delete_metrics" ->
+        (true, Deleted(dm), true),
+      "q_serve_requests_tiered_indexed_delete_asof" ->
+        (true, DeleteLog(dm, v), false))
+  }
+
+  private def tieredServe(indexed: Boolean, snap: TierSnapshot,
+                          ledger: Boolean): QFn = q { (s, dir) =>
+    val req = graft.operators.Search.TieredRequests(
+      bm25MultiQueriesOf(s, dir), filterMultiRelOf(s, dir),
+      fusionMultiRelOf(s, dir), pageKMultiRelOf(s, dir),
+      serveTierRelOf(s, dir), ServeTierLayoutScales, Bm25K1, Bm25B,
+      RrfPoolN, PostBuckets, refineParams("cos_l1").alpha)
+    if (ledger) graft.operators.Search.serveRequestsTieredMetrics(s, dir,
+      emb(s, dir), docs(s, dir), req, tieredLayout(indexed), snap, EmbD)
+    else graft.operators.Search.serveRequestsTiered(s, dir, emb(s, dir),
+      docs(s, dir), req, tieredLayout(indexed), snap)
+  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map[String, QFn](
@@ -2871,265 +2973,6 @@ object SparkEntry {
         fusionMultiRelOf(s, dir), pageKMultiRelOf(s, dir), Bm25K1,
         Bm25B, RrfPoolN, PostBuckets, IvfCells, EmbD, IvfProbe,
         Bm25UpsertMod, PostingsUpsertToken, ServeAsOfSnapshot)),
-    // ... and the capstone at PER-REQUEST PRECISION — the title knob
-    // composed into serving: each request binds its own quantization
-    // tier from the stored relation, its cheap vector pass reads that
-    // tier's physical code column off the tiered at-rest serve layout
-    // (1 B vs 2 B per component — actual widths), survivors rescore at
-    // full precision, the pool feeds the shared fusion/cut
-    "q_serve_requests_tiered" -> q((s, dir) => graft.operators.Search
-      .serveRequestsTiered(s, dir, emb(s, dir), docs(s, dir),
-        bm25MultiQueriesOf(s, dir), filterMultiRelOf(s, dir),
-        fusionMultiRelOf(s, dir), pageKMultiRelOf(s, dir),
-        serveTierRelOf(s, dir), ServeTierLayoutScales, Bm25K1, Bm25B,
-        RrfPoolN, PostBuckets, refineParams("cos_l1").alpha)),
-    // ... and the tiered layout UNDER UPSERT — the at-rest tiers as a
-    // MAINTAINED index: an update commit rewrote only the touched id
-    // buckets (dynamic partition overwrite; new vector + every tier's
-    // codes recomputed for updated rows, untouched buckets
-    // byte-immutable), and the same serve runs unchanged over the
-    // committed layout — hash-equal to the tiered capstone over the
-    // updated corpus
-    "q_serve_requests_tiered_upsert" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredUpserted(s, dir,
-        emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, UpsertMod)),
-    // ... and ITS ledger — where the tier is VISIBLE: bytes_vec =
-    // 8·N + codeBytes(tier_q)·d·v_cands + 4d·fetched, so requests over
-    // the same lang slice at different tiers show different bytes
-    "q_serve_requests_tiered_metrics" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredMetrics(s, dir,
-        emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, EmbD)),
-    // ... and the upserted layout's LEDGER twin: fetched/bytes/save/fpr
-    // counted over the commit view (the commit moves scores, so seeds,
-    // survivors, and fusion overlap shift with it); v_cands stays the
-    // lang pre-filter count — updates change vectors, not metadata
-    "q_serve_requests_tiered_upsert_metrics" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredUpsertedMetrics(s, dir,
-        emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, EmbD, UpsertMod)),
-    // ... and TIME TRAVEL on the tiered layout — the last mutating
-    // layout without history: upsert commits recorded in the layout's
-    // own versioned log, snapshot 1 served MERGE-ON-READ (the applied
-    // prefix's vectors flipped and every tier's codes recomputed
-    // in-plan; base files byte-immutable per snapshot) — hash-equal to
-    // the tiered capstone rebuilt over the commit-prefix view
-    "q_serve_requests_tiered_asof" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredAsOf(s, dir,
-        emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, UpsertMod, TieredAsOfSnapshot)),
-    // ... and ITS ledger — per-request bytes reflecting the SNAPSHOT's
-    // tier codes: fetched counts the snapshot serve's seeds+survivors,
-    // v_cands stays the (snapshot-invariant) lang pre-filter count
-    "q_serve_requests_tiered_asof_metrics" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredAsOfMetrics(s, dir,
-        emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, EmbD, UpsertMod,
-        TieredAsOfSnapshot)),
-    // ... and TIME TRAVEL over a HETEROGENEOUS-VERB log — one history
-    // mixing verbs (commit 1 upserts, commit 2 DELETES), applied in
-    // commit order at snapshot 2: the upserted-then-deleted view, an
-    // id in both commits upserted at 1 and GONE at 2 — the batch twin
-    // of the mixed-verb mutating stream, negMod + delMod composed
-    "q_serve_requests_tiered_mixed_asof" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredMixedAsOf(s, dir,
-        emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, UpsertMod, DeleteMod, asOf = 2)),
-    // ... and the SNAPSHOT COMPACTED — the tiered update log's
-    // OPTIMIZE: the merge-on-read view (prefix join + in-plan code
-    // recompute) materialized once into a published id-bucketed layout
-    // derived from the LAYOUT + LOG (stored codes verbatim for
-    // non-updated rows, row count conserved), the post-compact serve's
-    // stored relation a plain scan — hash-equal to the merge-on-read
-    // serve, same oracle
-    "q_serve_requests_tiered_asof_compact" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredAsOfCompacted(s, dir,
-        emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, UpsertMod, TieredAsOfSnapshot)),
-    // ... and DELETE on the tiered layout — the missing lifecycle verb:
-    // tombstoned ids physically dropped, only their id buckets
-    // rewritten (untouched buckets byte-immutable, emptied buckets
-    // swept), the serve unchanged over the committed layout — deleted
-    // ids absent from every tier's cheap pass and the rescore; queries
-    // from the table, so only the vector candidate corpus shrinks
-    "q_serve_requests_tiered_delete" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredDeleted(s, dir,
-        emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, DeleteMod)),
-    // ... and ITS ledger — the retention ledger: v_cands and both byte
-    // denominators count what the layout HOLDS post-delete (id universe
-    // from the committed layout itself), so the tombstones are gone
-    // from the accounting exactly as they are from the serve
-    "q_serve_requests_tiered_delete_metrics" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredDeletedMetrics(s, dir,
-        emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, EmbD, DeleteMod)),
-    // ... and DELETE + TIME TRAVEL composed — the tiered layout's
-    // versioned DELETE log (a separate published dir from the update
-    // log: DeleteMod != UpsertMod) served at snapshot 1 merge-on-read:
-    // the applied tombstone prefix anti-joined out of the stored view,
-    // base buckets byte-immutable per snapshot, queries still from the
-    // table (the family-wide delete contract)
-    "q_serve_requests_tiered_delete_asof" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredDeletedAsOf(s, dir,
-        emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, DeleteMod, TieredAsOfSnapshot)),
-    // ... and the snapshot retention ledger: every count and byte term
-    // reflects the SNAPSHOT's surviving rows — the merge-on-read view
-    // is both the served relation and the ledger's id universe
-    "q_serve_requests_tiered_delete_asof_metrics" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredDeletedAsOfMetrics(s, dir,
-        emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, EmbD, DeleteMod,
-        TieredAsOfSnapshot)),
-    // ... and TIME TRAVEL on the INDEXED tiered layout — the as-of verb
-    // where the commit MOVES ROWS ACROSS CELLS: the snapshot view
-    // re-derives the prefix's rows from the layout itself (vector
-    // flipped, cell re-assigned, codes recomputed) merge-on-read, probes
-    // derive from the snapshot's query vectors, base cell files
-    // byte-immutable per snapshot — time travel completed across every
-    // tiered form
-    "q_serve_requests_tiered_indexed_asof" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredIndexedAsOf(s, dir,
-        emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, IvfCells, EmbD, IvfProbe,
-        UpsertMod, TieredAsOfSnapshot)),
-    // ... and ITS OPTIMIZE — the indexed log's snapshot compaction:
-    // the merge-on-read view (rows MOVED to their snapshot cells,
-    // codes recomputed for the prefix only) materialized once into a
-    // published cell-partitioned layout; the post-compact serve's
-    // stored relation is the pristine fixture's plain pruned scan —
-    // hash-equal to the merge-on-read serve, same oracle
-    "q_serve_requests_tiered_indexed_asof_compact" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredIndexedAsOfCompacted(s,
-        dir, emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, IvfCells, EmbD, IvfProbe,
-        UpsertMod, TieredAsOfSnapshot)),
-    // ... and the PROBE-AWARE retention ledger: pc_rows and v_cands
-    // derive from the deleted layout's own shrunk cell occupancies,
-    // the full-scan denominator counts survivors
-    "q_serve_requests_tiered_indexed_delete_metrics" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredIndexedDeletedMetrics(s,
-        dir, emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, IvfCells, EmbD, IvfProbe,
-        DeleteMod)),
-    // ... and DELETE + TIME TRAVEL composed on the INDEXED layout:
-    // snapshot 1 of the indexed layout's delete log served merge-on-
-    // read (survivors keep their stale cells — the Lucene contract;
-    // probes from the table; base cell files byte-immutable)
-    "q_serve_requests_tiered_indexed_delete_asof" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredIndexedDeletedAsOf(s,
-        dir, emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, IvfCells, EmbD, IvfProbe,
-        DeleteMod, TieredAsOfSnapshot)),
-    // ... and DELETE on the INDEXED tiered layout: the tombstoned ids'
-    // rows dropped from their stored cells (coarse quantizer STALE —
-    // the Lucene contract), only those cells rewritten, emptied cells
-    // swept; candidates = probed cells ∩ lang over survivors
-    "q_serve_requests_tiered_indexed_delete" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredIndexedDeleted(s, dir,
-        emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, IvfCells, EmbD, IvfProbe,
-        DeleteMod)),
-    // ... and the FULL COMPOSITION — tiers on the INDEXED capstone:
-    // probe cells a static partition filter on the cell-partitioned
-    // tiered layout, each request's tier its column pruning, the lang
-    // predicate pushed — which files, which chunks, which rows, all
-    // per request; vector candidates probed-cell-approximate as for
-    // every indexed serve
-    "q_serve_requests_tiered_indexed" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredIndexed(s, dir,
-        emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, IvfCells, EmbD, IvfProbe)),
-    // ... and ITS ledger — all three vector-side savings in one row:
-    // pc_rows*8 (partition pruning) + codeBytes(tier)*d*v_cands (tier
-    // column pruning) + 4d*fetched (rescue fetches)
-    "q_serve_requests_tiered_indexed_metrics" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredIndexedMetrics(s, dir,
-        emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, IvfCells, EmbD, IvfProbe)),
-    // ... and the INDEXED tiered layout under upsert — the hard
-    // maintenance case: an updated vector's coarse cell MOVES with it,
-    // so the commit rewrites old ∪ new cells (rows relocating across
-    // partitions, emptied cells swept) and the serve runs unchanged
-    // over the committed layout — hash-equal to the indexed tiered
-    // capstone over the updated corpus
-    "q_serve_requests_tiered_indexed_upsert" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredIndexedUpserted(s, dir,
-        emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, IvfCells, EmbD, IvfProbe,
-        UpsertMod)),
-    // ... and the INDEXED upsert's LEDGER twin — the interesting one:
-    // probes derive from the commit view, pc_rows/v_cands count the
-    // COMMITTED layout's cell occupancies (moved rows where they now
-    // live), so bytes differ from the pristine indexed ledger exactly
-    // through the moved rows' cells
-    "q_serve_requests_tiered_indexed_upsert_metrics" -> q((s, dir) =>
-      graft.operators.Search.serveRequestsTieredIndexedUpsertedMetrics(
-        s, dir, emb(s, dir), docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
-        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        refineParams("cos_l1").alpha, IvfCells, EmbD, IvfProbe,
-        UpsertMod)),
     // ... and the TIERED capstone served ONLINE — the title knob per
     // streamed request: each microbatch runs the tiered serve for its
     // arriving requests with every bound relation (terms, langs, α, k,
@@ -3524,7 +3367,8 @@ object SparkEntry {
       graft.operators.BitplaneCompress.measure(
         Fixture.fp16VectorsCached(s, dir, D, KeepM).select(col("id"), col("vec")),
         D, keepE = 5, keepM = KeepM)),
-  )
+  ) ++ TieredServes.map { case (name, (indexed, snap, ledger)) =>
+    name -> tieredServe(indexed, snap, ledger) }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
@@ -4081,182 +3925,10 @@ object SparkEntry {
         FilterMultiRel, FusionMultiRel, PageKMultiRel, Bm25K1, Bm25B,
         RrfPoolN, IvfCells, IvfProbe, bm25MultiStatsForOracle(),
         qrelPathForOracle()),
-    // the tiered capstone: the vector pool's whole two-phase
-    // per-request-precision pipeline recomputed from the raw floats
-    // (round-to-nearest dyadic quantization — exact on both engines)
-    "q_serve_requests_tiered" -> SearchOracle.serveRequestsTieredSql(
-      EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-      PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-      Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
-      qrelPathForOracle()),
-    // the tiered capstone over the upserted layout: the whole tiered
-    // pipeline recomputed over the commit view (negated prefix
-    // quantized and rescored — dyadic quantization of the flipped
-    // floats is exact on both engines)
-    "q_serve_requests_tiered_upsert" -> SearchOracle.serveRequestsTieredSql(
-      EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-      PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-      Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
-      qrelPathForOracle(), negMod = UpsertMod),
-    // the indexed-tiered capstone: probed-cell candidates through the
-    // tiered two-phase pipeline, recomputed from the raw floats
-    "q_serve_requests_tiered_indexed" ->
-      SearchOracle.serveRequestsTieredIndexedSql(EmbD, Bm25MultiQueries,
-        FilterMultiRel, FusionMultiRel, PageKMultiRel, ServeTierRel,
-        refineParams("cos_l1").alpha, Bm25K1, Bm25B, RrfPoolN, IvfCells,
-        IvfProbe, bm25MultiStatsForOracle(), qrelPathForOracle()),
-    // the upserted tiered ledger: the same metrics CTEs over the
-    // commit-view pool
-    "q_serve_requests_tiered_upsert_metrics" ->
-      SearchOracle.serveRequestsTieredMetricsSql(EmbD, Bm25MultiQueries,
-        FilterMultiRel, FusionMultiRel, PageKMultiRel, ServeTierRel,
-        graft.sources.Disaggregated.serveTierCodeBytes,
-        refineParams("cos_l1").alpha, Bm25K1, Bm25B, RrfPoolN,
-        bm25MultiStatsForOracle(), qrelPathForOracle(),
-        negMod = UpsertMod),
-    // the tiered layout AT SNAPSHOT 1 of its versioned update log: the
-    // applied prefix is ids ≡ 0 mod 2·UpsertMod, so the snapshot serve
-    // IS the tiered capstone rebuilt over that prefix view — the same
-    // CTEs at the prefix's mod
-    "q_serve_requests_tiered_asof" -> SearchOracle.serveRequestsTieredSql(
-      EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-      PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-      Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
-      qrelPathForOracle(), negMod = 2 * UpsertMod),
-    // the mixed log at snapshot 2: the upsert and delete views COMPOSED
-    // in one snapshot — vectors flipped where upserted, tombstones cut
-    // from the candidate corpus (an id in both sets simply absent)
-    "q_serve_requests_tiered_mixed_asof" ->
-      SearchOracle.serveRequestsTieredSql(
-        EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-        PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-        Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
-        qrelPathForOracle(), negMod = UpsertMod, delMod = DeleteMod),
-    // snapshot compaction folds the log, it never changes the snapshot
-    "q_serve_requests_tiered_asof_compact" ->
-      SearchOracle.serveRequestsTieredSql(
-        EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-        PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-        Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
-        qrelPathForOracle(), negMod = 2 * UpsertMod),
-    // its ledger over the same snapshot CTEs
-    "q_serve_requests_tiered_asof_metrics" ->
-      SearchOracle.serveRequestsTieredMetricsSql(EmbD, Bm25MultiQueries,
-        FilterMultiRel, FusionMultiRel, PageKMultiRel, ServeTierRel,
-        graft.sources.Disaggregated.serveTierCodeBytes,
-        refineParams("cos_l1").alpha, Bm25K1, Bm25B, RrfPoolN,
-        bm25MultiStatsForOracle(), qrelPathForOracle(),
-        negMod = 2 * UpsertMod),
-    // the indexed tiered capstone AT SNAPSHOT 1: the same CTEs at the
-    // prefix's mod — assignment, probes, codes, rescore all recomputed
-    // over the commit-prefix view (cells move and the oracle moves too)
-    "q_serve_requests_tiered_indexed_asof" ->
-      SearchOracle.serveRequestsTieredIndexedSql(EmbD, Bm25MultiQueries,
-        FilterMultiRel, FusionMultiRel, PageKMultiRel, ServeTierRel,
-        refineParams("cos_l1").alpha, Bm25K1, Bm25B, RrfPoolN, IvfCells,
-        IvfProbe, bm25MultiStatsForOracle(), qrelPathForOracle(),
-        negMod = 2 * UpsertMod),
-    // snapshot compaction folds the log, it never changes the snapshot
-    "q_serve_requests_tiered_indexed_asof_compact" ->
-      SearchOracle.serveRequestsTieredIndexedSql(EmbD, Bm25MultiQueries,
-        FilterMultiRel, FusionMultiRel, PageKMultiRel, ServeTierRel,
-        refineParams("cos_l1").alpha, Bm25K1, Bm25B, RrfPoolN, IvfCells,
-        IvfProbe, bm25MultiStatsForOracle(), qrelPathForOracle(),
-        negMod = 2 * UpsertMod),
-    // the tiered capstone over the delete view: tombstoned ids cut from
-    // the vector candidate corpus, queries from the table — the
-    // committed layout physically lacks the rows the predicate drops
-    "q_serve_requests_tiered_delete" -> SearchOracle.serveRequestsTieredSql(
-      EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-      PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-      Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
-      qrelPathForOracle(), delMod = DeleteMod),
-    // the tiered capstone AT SNAPSHOT 1 of the DELETE log: the applied
-    // tombstone prefix is ids ≡ 0 mod 2·DeleteMod, so the snapshot
-    // serve IS the tiered capstone over the delete view at the
-    // prefix's mod — the same CTEs, tombstones cut from the vector
-    // candidate corpus only
-    "q_serve_requests_tiered_delete_asof" ->
-      SearchOracle.serveRequestsTieredSql(
-        EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-        PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-        Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
-        qrelPathForOracle(), delMod = 2 * DeleteMod),
-    // the retention ledgers: v_cands and the byte denominators over the
-    // SURVIVING corpus (delete view / its snapshot prefix)
-    "q_serve_requests_tiered_delete_metrics" ->
-      SearchOracle.serveRequestsTieredMetricsSql(EmbD, Bm25MultiQueries,
-        FilterMultiRel, FusionMultiRel, PageKMultiRel, ServeTierRel,
-        graft.sources.Disaggregated.serveTierCodeBytes,
-        refineParams("cos_l1").alpha, Bm25K1, Bm25B, RrfPoolN,
-        bm25MultiStatsForOracle(), qrelPathForOracle(),
-        delMod = DeleteMod),
-    "q_serve_requests_tiered_delete_asof_metrics" ->
-      SearchOracle.serveRequestsTieredMetricsSql(EmbD, Bm25MultiQueries,
-        FilterMultiRel, FusionMultiRel, PageKMultiRel, ServeTierRel,
-        graft.sources.Disaggregated.serveTierCodeBytes,
-        refineParams("cos_l1").alpha, Bm25K1, Bm25B, RrfPoolN,
-        bm25MultiStatsForOracle(), qrelPathForOracle(),
-        delMod = 2 * DeleteMod),
-    // the indexed twin: the same cut on the probed-cell candidates
-    // (assignment/probes stale — the delete leaves the quantizer alone)
-    "q_serve_requests_tiered_indexed_delete" ->
-      SearchOracle.serveRequestsTieredIndexedSql(EmbD, Bm25MultiQueries,
-        FilterMultiRel, FusionMultiRel, PageKMultiRel, ServeTierRel,
-        refineParams("cos_l1").alpha, Bm25K1, Bm25B, RrfPoolN, IvfCells,
-        IvfProbe, bm25MultiStatsForOracle(), qrelPathForOracle(),
-        delMod = DeleteMod),
-    // the indexed capstone at snapshot 1 of the delete log: the same
-    // CTEs with the tombstone prefix cut from the probed-cell candidates
-    "q_serve_requests_tiered_indexed_delete_asof" ->
-      SearchOracle.serveRequestsTieredIndexedSql(EmbD, Bm25MultiQueries,
-        FilterMultiRel, FusionMultiRel, PageKMultiRel, ServeTierRel,
-        refineParams("cos_l1").alpha, Bm25K1, Bm25B, RrfPoolN, IvfCells,
-        IvfProbe, bm25MultiStatsForOracle(), qrelPathForOracle(),
-        delMod = 2 * DeleteMod),
-    // the indexed tiered capstone over the commit view: assignment,
-    // probes, codes, and rescore all recomputed from the negated
-    // prefix — cells move and the oracle moves with them
-    "q_serve_requests_tiered_indexed_upsert" ->
-      SearchOracle.serveRequestsTieredIndexedSql(EmbD, Bm25MultiQueries,
-        FilterMultiRel, FusionMultiRel, PageKMultiRel, ServeTierRel,
-        refineParams("cos_l1").alpha, Bm25K1, Bm25B, RrfPoolN, IvfCells,
-        IvfProbe, bm25MultiStatsForOracle(), qrelPathForOracle(),
-        negMod = UpsertMod),
-    // its ledger: probe-aware + tier-aware bytes off the same CTEs
-    "q_serve_requests_tiered_indexed_metrics" ->
-      SearchOracle.serveRequestsTieredIndexedMetricsSql(EmbD,
-        Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-        ServeTierRel, graft.sources.Disaggregated.serveTierCodeBytes,
-        refineParams("cos_l1").alpha, Bm25K1, Bm25B, RrfPoolN, IvfCells,
-        IvfProbe, bm25MultiStatsForOracle(), qrelPathForOracle()),
-    // the probe-aware retention ledger: occupancies and the full-scan
-    // denominator over the surviving corpus, assignment stale
-    "q_serve_requests_tiered_indexed_delete_metrics" ->
-      SearchOracle.serveRequestsTieredIndexedMetricsSql(EmbD,
-        Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-        ServeTierRel, graft.sources.Disaggregated.serveTierCodeBytes,
-        refineParams("cos_l1").alpha, Bm25K1, Bm25B, RrfPoolN, IvfCells,
-        IvfProbe, bm25MultiStatsForOracle(), qrelPathForOracle(),
-        delMod = DeleteMod),
-    // the committed-index ledger: the same metrics CTEs with the whole
-    // indexed chain (assignment, probes, occupancies, codes, rescore)
-    // re-derived over the commit view
-    "q_serve_requests_tiered_indexed_upsert_metrics" ->
-      SearchOracle.serveRequestsTieredIndexedMetricsSql(EmbD,
-        Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-        ServeTierRel, graft.sources.Disaggregated.serveTierCodeBytes,
-        refineParams("cos_l1").alpha, Bm25K1, Bm25B, RrfPoolN, IvfCells,
-        IvfProbe, bm25MultiStatsForOracle(), qrelPathForOracle(),
-        negMod = UpsertMod),
     // the drained tiered request stream equals the batch tiered
     // capstone -> same oracle
     "q_stream_serve_requests_tiered" ->
-      SearchOracle.serveRequestsTieredSql(
-        EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-        PageKMultiRel, ServeTierRel, refineParams("cos_l1").alpha,
-        Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
-        qrelPathForOracle()),
+      tieredOracleSql(indexed = false, ledger = false, (0, 0)),
     // the six mutating-index streams: per-request independence makes
     // each drained union the UNION ALL of its plan's per-phase snapshot
     // capstones (upsert view negMod, delete view delMod, composed in
@@ -4274,13 +3946,6 @@ object SparkEntry {
       streamPlanOracleSql(StreamMultiPlan, indexed = true),
     "q_stream_serve_requests_tiered_indexed_mixed" ->
       streamPlanOracleSql(StreamMixedPlan, indexed = true),
-    // per-request per-tier bytes off the same pipeline CTEs
-    "q_serve_requests_tiered_metrics" ->
-      SearchOracle.serveRequestsTieredMetricsSql(EmbD, Bm25MultiQueries,
-        FilterMultiRel, FusionMultiRel, PageKMultiRel, ServeTierRel,
-        graft.sources.Disaggregated.serveTierCodeBytes,
-        refineParams("cos_l1").alpha, Bm25K1, Bm25B, RrfPoolN,
-        bm25MultiStatsForOracle(), qrelPathForOracle()),
     // drained stream-maintained postings hold the batch layout's rows
     "q_stream_bm25" -> SearchOracle.bm25AtRestSql(Bm25Terms, Bm25K1,
       Bm25B, Bm25TopN, bm25StatsForOracle()),
@@ -4568,5 +4233,6 @@ object SparkEntry {
          |  CAST(SUM(p) AS BIGINT) AS psum, COUNT(*) AS n
          |FROM px GROUP BY 1, 2""".stripMargin
     },
-  )
+  ) ++ TieredServes.map { case (name, (indexed, snap, ledger)) =>
+    name -> tieredOracleSql(indexed, ledger, snapshotMods(snap)) }
 }

@@ -1913,75 +1913,347 @@ object Search {
             (col("t_cands") + col("v_cands")).cast("double")))
   }
 
-  /**
-   * The per-request PRECISION-TIER vector side of the serve capstone —
-   * the fetch set (qid, id, s_full) of a zero-miss-style two-phase
-   * refine where each request's CHEAP pass reads ITS OWN quantization
-   * tier's code column off the tiered serve layout
-   * ([[graft.sources.Disaggregated.ensureTieredServeFixture]]), the
-   * paper's precision-on-demand knob composed into the serving path:
-   * a bandwidth-tier tenant scans 1-byte codes, a recall-tier tenant
-   * 2-byte codes, off ONE layout in ONE plan, and every request's
-   * survivors are rescored at full precision. The per-request lang
-   * pre-filter applies BEFORE any distance arithmetic (the
-   * [[filteredTopKMulti]] contract), as a union-of-langs pushed
-   * predicate plus the per-qid equality. The cushion is the cos_l1
-   * half-step bound (|v − rv| ≤ 2^-(s+1) exactly, any corpus — the
-   * int8 rung's [[graft.sources.Disaggregated.refineInt8TopK]]
-   * algebra), so the DuckDB oracle recomputes the ENTIRE pipeline from
-   * the raw floats (round-to-nearest dyadic quantization is exact on
-   * both engines; a mantissa-truncation tier would not be
-   * SQL-mirrorable on this corpus — see the layout's scaladoc).
-   */
-  private def tieredServeFetch(spark: SparkSession, sfDir: String,
-                               emb: DataFrame,
-                               filters: Seq[(Long, String)],
-                               tiers: Seq[(Long, Int)],
-                               layoutScales: Seq[Int], poolN: Int,
-                               alpha: Double,
-                               layoutPath: Option[String] = None,
-                               storedView: Option[DataFrame] = None)
-      : DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.storage.StorageLevel
-    require(filters.nonEmpty, "tieredServeFetch: empty filter relation")
-    require(tiers.nonEmpty, "tieredServeFetch: empty tier relation")
-    val usedScales = tiers.map(_._2).distinct.sorted
+  // ---- the tiered serve: per-request precision over one snapshot -------
+
+  /** One batch of tiered serve requests, bound by qid: terms, lang
+    * filters, fusion weight, page size and precision tier (a scaleLog2
+    * the layout stores), plus the layout's stored tiers and the shared
+    * serve knobs. Construction checks the five relations agree: they
+    * name the same qids, and all but the filters bind exactly one row
+    * per qid (a qid with a page size but no tier would be paged from
+    * text alone and dropped from the ledger; a duplicated tier row
+    * would duplicate its candidates). */
+  final case class TieredRequests(queries: Seq[(Long, Seq[String])],
+                                  filters: Seq[(Long, String)],
+                                  weights: Seq[(Long, Double)],
+                                  ks: Seq[(Long, Int)],
+                                  tiers: Seq[(Long, Int)],
+                                  layoutScales: Seq[Int], k1: Double,
+                                  b: Double, poolN: Int, nBuckets: Int,
+                                  alpha: Double) {
+    require(filters.nonEmpty, "tiered requests: empty filter relation")
+    require(tiers.nonEmpty, "tiered requests: empty tier relation")
+    require(ks.nonEmpty, "tiered requests: empty page relation")
+    private val qidsOf = Seq("queries" -> queries.map(_._1),
+      "filters" -> filters.map(_._1), "weights" -> weights.map(_._1),
+      "ks" -> ks.map(_._1), "tiers" -> tiers.map(_._1))
+    private val allQids = qidsOf.flatMap(_._2).toSet
+    qidsOf.foreach { case (rel, qids) =>
+      val missing = (allQids -- qids).toSeq.sorted
+      require(missing.isEmpty,
+        s"tiered requests: $rel has no row for qid ${missing.mkString(", ")}")
+      val dup = qids.diff(qids.distinct).distinct.sorted
+      require(rel == "filters" || dup.isEmpty,
+        s"tiered requests: $rel has more than one row for qid " +
+          dup.mkString(", "))
+    }
+    val usedScales: Seq[Int] = tiers.map(_._2).distinct.sorted
     require(usedScales.toSet.subsetOf(layoutScales.toSet),
       s"tiers $usedScales not all stored in layout $layoutScales")
-    // layoutPath overrides the shared pristine fixture — the upserted
-    // serve reads its own committed layout (same columns plus the
-    // maintenance-only pb partition key, which no serve column touches).
-    // storedView overrides both: the as-of serve hands in the snapshot's
-    // MERGE-ON-READ relation over the immutable base files.
-    val stored = storedView.getOrElse {
-      val path = layoutPath.getOrElse(
-        graft.sources.Disaggregated.ensureTieredServeFixture(
-          spark, sfDir, layoutScales))
-      spark.read.parquet(path)
+    /** Query rows read off the query view: qids 0 until nq. */
+    def nq: Int = (filters.map(_._1).max + 1).toInt
+    /** The requests whose qid `keep` holds (a stream batch's arrivals). */
+    def slice(keep: Long => Boolean): TieredRequests = {
+      def f[V](rel: Seq[(Long, V)]) = rel.filter(kv => keep(kv._1))
+      copy(queries = f(queries), filters = f(filters),
+        weights = f(weights), ks = f(ks), tiers = f(tiers))
     }
-    val nq = (filters.map(_._1).max + 1).toInt
-    // cheap side: id + lang + the USED tiers' code columns ONLY (the
-    // stored-but-unused tier's chunks and `vec` are never read here —
+  }
+
+  /**
+   * The state of the tiered layout a serve reads. [[resolveTiered]] turns
+   * each case into three relations: the STORED relation the vector side
+   * scans; the QUERY VIEW, the embeddings with the applied upserts'
+   * vectors negated (the store serves what it was told to store; a
+   * delete never rewrites external probes); and the ledger's id
+   * UNIVERSE, the stored ids once a delete applies and the query view's
+   * ids otherwise. Upserts are v' = −v and deletes drop rows, each over
+   * the ids ≡ 0 mod a modulus; on the indexed layout an upserted row's
+   * cell moves with its vector and a delete leaves survivors in their
+   * stale cells. The cases:
+   *  - `Pristine`: the build-once fixture.
+   *  - `At(path)`: a maintained copy of the layout (the serve benchmark's
+   *    and the mutating request streams'); the caller's `emb` is its
+   *    query view as given.
+   *  - `Upserted(mod)` and `Deleted(mod)`: a copy physically COMMITTED
+   *    with the verb, only the touched id buckets (partitioned) or cells
+   *    (indexed) rewritten.
+   *  - `UpsertLog(mod, asOf, compacted)`: snapshot `asOf` of the layout's
+   *    versioned update log (commit 1 updates ids ≡ 0 mod 2·mod, commit
+   *    2 the rest of mod `mod`), served MERGE-ON-READ: the applied
+   *    prefix's rows are re-derived in-plan (vector negated, every tier's
+   *    codes recomputed; indexed: the cell re-assigned) and every other
+   *    row's stored bytes pass through. With `compacted`, the same
+   *    snapshot is read as a plain scan of its materialization
+   *    ([[ensureTieredServeCompacted]]).
+   *  - `DeleteLog(mod, asOf)`: the same log shape for deletes, the
+   *    applied tombstone prefix anti-joined out of the base.
+   *  - `MixedLog(umod, dmod, asOf)`: one log mixing verbs, applied in
+   *    commit order: commit 1 upserts ids ≡ 0 mod umod, commit 2 deletes
+   *    ids ≡ 0 mod dmod (an id in both is upserted at 1, gone at 2).
+   *
+   * Equivalences, row for row: every log's asOf 0 is `Pristine`;
+   * `UpsertLog` asOf 1 is `Upserted(2·mod)` and asOf 2 `Upserted(mod)`;
+   * `DeleteLog` likewise with `Deleted`; `MixedLog` asOf 1 is
+   * `Upserted(umod)`; a compacted snapshot equals its merge-on-read
+   * serve. Log snapshots never write the base files, and their
+   * corpus-fraction-sized prefix joins are AQE-sized, never
+   * broadcast-hinted.
+   */
+  sealed trait TierSnapshot
+  object TierSnapshot {
+    case object Pristine extends TierSnapshot
+    final case class At(path: String) extends TierSnapshot
+    final case class Upserted(mod: Int) extends TierSnapshot
+    final case class Deleted(mod: Int) extends TierSnapshot
+    final case class UpsertLog(mod: Int, asOf: Int,
+                               compacted: Boolean = false)
+        extends TierSnapshot
+    final case class DeleteLog(mod: Int, asOf: Int) extends TierSnapshot
+    final case class MixedLog(umod: Int, dmod: Int, asOf: Int)
+        extends TierSnapshot
+  }
+
+  /** A resolved [[TierSnapshot]]: the stored relation, the query view
+    * (vec_id, embedding, label) and the ledger's id universe (vec_id). */
+  private[graft] final case class TieredView(stored: DataFrame,
+                                             queries: DataFrame,
+                                             universe: DataFrame)
+
+  /** `emb` with the vectors of the rows `upserted` selects negated. */
+  private[graft] def negated(emb: DataFrame, upserted: Column): DataFrame =
+    emb.select(col("vec_id"),
+      when(upserted, transform(col("embedding"), x => -x))
+        .otherwise(col("embedding")).as("embedding"),
+      col("label"))
+
+  /** Tier `s`'s stored code of `vec`: round(v·2^s) at the tier's width. */
+  private def tierCode(vec: Column, s: Int): Column = {
+    val mul = math.pow(2.0, s)
+    val t = if (graft.sources.Disaggregated.serveTierCodeBytes(s) == 1)
+      "byte" else "short"
+    transform(vec, x => floor(x * mul + lit(0.5)).cast(t))
+  }
+
+  /** The pristine fixture of the layout kind: id-sorted files, or cell
+    * partitions of the (nCells, d) coarse quantizer. */
+  private def tieredFixture(spark: SparkSession, sfDir: String,
+                            layoutScales: Seq[Int],
+                            indexed: Option[(Int, Int, Int)]): String =
+    indexed match {
+      case None => graft.sources.Disaggregated.ensureTieredServeFixture(
+        spark, sfDir, layoutScales)
+      case Some((nCells, d, _)) => graft.sources.Disaggregated
+        .ensureTieredServeIndexedFixture(spark, sfDir, layoutScales,
+          nCells, d)
+    }
+
+  /** The ids the versioned log anchored on `fixture` applies by `asOf`. */
+  private def logIds(spark: SparkSession, fixture: String, mod: Int,
+                     asOf: Int): DataFrame =
+    spark.read.parquet(Pq.ensureVersionedTombstones(spark, fixture, mod,
+        idCol = "id"))
+      .filter(col("commit_v") <= asOf)
+      .select(col("id"))
+
+  /** `stored` with `updIds`' rows upserted in-plan: vector negated and
+    * every tier's codes recomputed from it (the trees the
+    * commitServeTier(Indexed)Upserts commits write); on the indexed
+    * layout the rows are re-assigned to their new cells. Every other
+    * row's stored bytes pass through verbatim. */
+  private def upsertedView(stored: DataFrame, updIds: DataFrame,
+                           layoutScales: Seq[Int],
+                           indexed: Option[(Int, Int, Int)]): DataFrame =
+    indexed match {
+      case None =>
+        val newVec = when(col("u") === 1,
+          transform(col("vec"), x => -x)).otherwise(col("vec"))
+        stored.join(updIds.withColumn("u", lit(1)), Seq("id"), "left")
+          .select(Seq(col("id"), col("lang"), newVec.as("vec")) ++
+            layoutScales.sorted.map(s => when(col("u") === 1,
+              tierCode(newVec, s)).otherwise(col(s"code_$s"))
+              .as(s"code_$s")): _*)
+      case Some((nCells, d, _)) =>
+        val updRows = stored.join(updIds, Seq("id"), "left_semi")
+          .select(col("id"), col("lang"),
+            transform(col("vec"), x => -x).as("vec"))
+        val newAsg = Ivf.assign(updRows.select(col("id").as("vec_id"),
+            col("vec").as("embedding")), nCells, d)
+          .select(col("id"), col("cell"))
+        val recomputed = updRows.join(newAsg, Seq("id"))
+          .select(Seq(col("id"), col("lang"), col("vec"), col("cell")) ++
+            layoutScales.sorted.map(s =>
+              tierCode(col("vec"), s).as(s"code_$s")): _*)
+        stored.join(updIds, Seq("id"), "left_anti")
+          .select(recomputed.columns.map(col): _*)
+          .unionByName(recomputed)
+    }
+
+  /** Resolve `snap` over the layout kind (see [[TierSnapshot]]). */
+  private[graft] def resolveTiered(spark: SparkSession, sfDir: String,
+                                   emb: DataFrame, layoutScales: Seq[Int],
+                                   indexed: Option[(Int, Int, Int)],
+                                   snap: TierSnapshot): TieredView = {
+    import TierSnapshot._
+    import graft.sources.Disaggregated
+    lazy val fixture = tieredFixture(spark, sfDir, layoutScales, indexed)
+    def negatedBy(updIds: DataFrame): DataFrame = negated(
+      emb.join(updIds.select(col("id").as("vec_id")).withColumn("upd",
+        lit(1)), Seq("vec_id"), "left"), col("upd") === 1)
+    val (stored, queries, deletes) = snap match {
+      case Pristine => (spark.read.parquet(fixture), emb, false)
+      case At(path) => (spark.read.parquet(path), emb, false)
+      case Upserted(mod) =>
+        val layout = indexed match {
+          case None => Disaggregated.ensureTieredServeUpserted(spark,
+            sfDir, layoutScales, mod)
+          case Some((nCells, d, _)) => Disaggregated
+            .ensureTieredServeIndexedUpserted(spark, sfDir, layoutScales,
+              nCells, d, mod)
+        }
+        (spark.read.parquet(layout),
+          negated(emb, col("vec_id") % mod === 0), false)
+      case Deleted(mod) =>
+        val layout = indexed match {
+          case None => Disaggregated.ensureTieredServeDeleted(spark, sfDir,
+            layoutScales, mod)
+          case Some((nCells, d, _)) => Disaggregated
+            .ensureTieredServeIndexedDeleted(spark, sfDir, layoutScales,
+              nCells, d, mod)
+        }
+        (spark.read.parquet(layout), emb, true)
+      case UpsertLog(mod, asOf, compacted) =>
+        val updIds = logIds(spark, fixture, mod, asOf)
+        val stored =
+          if (compacted) spark.read.parquet(ensureTieredServeCompacted(
+            spark, sfDir, layoutScales, indexed, mod, asOf) + "/tiers")
+          else upsertedView(spark.read.parquet(fixture), updIds,
+            layoutScales, indexed)
+        (stored, negatedBy(updIds), false)
+      case DeleteLog(mod, asOf) =>
+        (spark.read.parquet(fixture)
+          .join(logIds(spark, fixture, mod, asOf), Seq("id"), "left_anti"),
+          emb, true)
+      case MixedLog(umod, dmod, asOf) =>
+        val base = spark.read.parquet(fixture)
+        val log = spark.read.parquet(Pq.ensureVersionedMixedLog(spark,
+            fixture, base.select(col("id")), umod, dmod, idCol = "id"))
+          .filter(col("commit_v") <= asOf)
+        val updIds = log.filter(col("verb") === "U").select(col("id"))
+        val delIds = log.filter(col("verb") === "D").select(col("id"))
+        (upsertedView(base, updIds, layoutScales, indexed)
+          .join(delIds, Seq("id"), "left_anti"), negatedBy(updIds), true)
+    }
+    TieredView(stored, queries,
+      if (deletes) stored.select(col("id").as("vec_id"))
+      else queries.select(col("vec_id")))
+  }
+
+  /** Bump when the compacted snapshot layout changes. */
+  private val TieredAsOfCompactLayoutVersion = 1
+
+  /**
+   * SNAPSHOT COMPACTION of the tiered update log, the OPTIMIZE verb:
+   * snapshot `asOf` of `UpsertLog(mod, asOf)` is materialized ONCE into
+   * a published layout of the same kind (id buckets `pb` or cell
+   * partitions), so its serve reads a plain scan instead of paying the
+   * prefix join and the in-plan code recompute (and, indexed, the cell
+   * re-assignment) on every read. The bytes derive from the LAYOUT + LOG,
+   * never a corpus rebuild: non-updated rows' stored codes are copied
+   * verbatim. Row-count conservation is required at publish (an upsert
+   * changes values, never membership); the dir is atomic and
+   * version-keyed beside the fixture it derives from.
+   */
+  private[graft] def ensureTieredServeCompacted(
+      spark: SparkSession, sfDir: String, layoutScales: Seq[Int],
+      indexed: Option[(Int, Int, Int)], mod: Int, asOf: Int): String = {
+    import java.nio.file.{Files, Paths}
+    val base = tieredFixture(spark, sfDir, layoutScales, indexed)
+    val path = Paths.get(base +
+      s"_asofcmp_v${TieredAsOfCompactLayoutVersion}_m${mod}_a$asOf")
+    if (!Files.exists(path.resolve("_DONE"))) {
+      val tmp = Files.createTempDirectory(path.getParent, "servetasofcmp-")
+      val view = upsertedView(spark.read.parquet(base),
+        logIds(spark, base, mod, asOf), layoutScales, indexed)
+      val (keyed, key) = indexed match {
+        case None => (view.withColumn("pb", pmod(col("id"), lit(graft
+          .sources.Disaggregated.ServeTiersUpsertBuckets.toLong))
+          .cast("int")), "pb")
+        case Some(_) => (view, "cell")
+      }
+      keyed.repartition(col(key)).sortWithinPartitions(col("id"))
+        .write.mode("overwrite").option("compression", "zstd")
+        .partitionBy(key).parquet(tmp.resolve("tiers").toString)
+      val compactN = spark.read.parquet(tmp.resolve("tiers").toString)
+        .count()
+      val baseN = spark.read.parquet(base).count()
+      require(compactN == baseN,
+        s"as-of tiered compaction invariant broken: $compactN rows " +
+          s"after compact vs $baseN in the base layout")
+      Files.createFile(tmp.resolve("_DONE"))
+      try Files.move(tmp, path)
+      catch { case _: java.nio.file.FileSystemException =>
+        graft.sources.VecFiles.deleteRecursively(tmp) }
+      require(Files.exists(path.resolve("_DONE")),
+        s"compacted as-of tiered layout publish failed: $path")
+    }
+    path.toString
+  }
+
+  /**
+   * The vector side of the tiered serve: the fetch set (qid, id, s_full)
+   * of a zero-miss-style two-phase refine where each request's CHEAP pass
+   * reads ITS OWN tier's code column, the paper's precision-on-demand
+   * knob in the serving path: a bandwidth-tier request scans 1-byte
+   * codes and a recall-tier request 2-byte codes off one layout in one
+   * plan, and every request's survivors are rescored at full precision.
+   * Candidates are each qid's lang matches (the [[filteredTopKMulti]]
+   * pre-filter contract: a union-of-langs pushed predicate plus the
+   * per-qid equality, before any distance arithmetic); on the indexed
+   * layout only within its own probed cells (the
+   * [[filteredTopKIndexedMulti]] approximation), whose union is a static
+   * partition filter on both passes. The cushion is the cos_l1 half-step
+   * bound (|v − rv| ≤ 2^-(s+1) exactly, any corpus), so the DuckDB oracle
+   * recomputes the whole pipeline from the raw floats (round-to-nearest
+   * dyadic quantization is exact on both engines).
+   */
+  private def tieredFetch(spark: SparkSession, view: TieredView,
+                          req: TieredRequests,
+                          indexed: Option[(Int, Int, Int)]): DataFrame = {
+    import spark.implicits._
+    import org.apache.spark.storage.StorageLevel
+    val usedScales = req.usedScales
+    val qSel = broadcast(Ann.queriesOf(view.queries, req.nq)
+      .select(col("qid"), col("qvec"), col("qn2").as("nq2")))
+    // indexed: the union of all probed cells, a bounded collect (<=
+    // nCells ints) materialized as literals so BOTH passes prune at
+    // planning time
+    val (scan, cellCol, probeSet) = indexed match {
+      case None => (view.stored, Seq.empty[Column], None)
+      case Some((nCells, d, nprobe)) =>
+        val probeSet = Ivf.probeCells(qSel.select(col("qid"), col("qvec")),
+            nCells, d, nprobe)
+          .select(col("qid"), col("cell"))
+        val unionCells = probeSet.select(col("cell")).distinct()
+          .collect().map(_.getInt(0)).sorted
+        (view.stored.filter(col("cell").isin(unionCells.map(Int.box): _*)),
+          Seq(col("cell")), Some(probeSet))
+    }
+    // cheap side: id + lang (+ cell) + the USED tiers' code columns ONLY
+    // (a stored-but-unused tier's chunks and `vec` are never read here —
     // PlanSpec asserts); dequantized values and the constant half-step
     // bound are map-side derivations, never stored
-    val cheap = stored.select(
-      Seq(col("id"), col("lang")) ++ usedScales.flatMap { s =>
-        val mul = math.pow(2.0, s)
-        val rv = transform(col(s"code_$s"),
-          c => (c.cast("double") / mul).cast("float"))
-        Seq(rv.as(s"rvec_$s"))
-      }: _*)
-    val vpre = cheap.select(
-      Seq(col("id"), col("lang")) ++ usedScales.flatMap(s =>
-        Seq(col(s"rvec_$s"),
-          norm2Sq(col(s"rvec_$s")).as(s"nr2_$s"))): _*)
-    val unionLangs = filters.map(_._2).distinct
-    val qSel = broadcast(Ann.queriesOf(emb, nq)
-      .select(col("qid"), col("qvec"),
-        col("qn2").as("nq2")))
-    val trRel = broadcast(tiers.toDF("qid", "tier"))
-    val qf = broadcast(filters.toDF("qid", "qlang"))
+    val vpre = scan.select(Seq(col("id"), col("lang")) ++ cellCol ++
+        usedScales.map { s =>
+          val mul = math.pow(2.0, s)
+          transform(col(s"code_$s"),
+            c => (c.cast("double") / mul).cast("float")).as(s"rvec_$s")
+        }: _*)
+      .select(Seq(col("id"), col("lang")) ++ cellCol ++ usedScales.flatMap(
+        s => Seq(col(s"rvec_$s"), norm2Sq(col(s"rvec_$s")).as(s"nr2_$s"))
+      ): _*)
+    val trRel = broadcast(req.tiers.toDF("qid", "tier"))
+    val qf = broadcast(req.filters.toDF("qid", "qlang"))
     val q = broadcast(qSel.join(trRel, Seq("qid")).join(qf, Seq("qid")))
     def byTier(f: Int => Column): Column =
       usedScales.foldRight(lit(null).cast("double")) { (s, rest) =>
@@ -1992,17 +2264,25 @@ object Search {
     // delta array is a map-side constant, the fold the absDot tree
     val cush = byTier { s =>
       val half = (0.5 / math.pow(2.0, s)).toFloat
-      lit(alpha) * org.apache.spark.sql.graft.VecExprs.absDot(
+      lit(req.alpha) * org.apache.spark.sql.graft.VecExprs.absDot(
         col("qvec"),
         transform(col(s"rvec_$s"), _ => lit(half))) / fnorm(col("nq2"))
     }
-    val cand = vpre
-      .filter(col("lang").isin(unionLangs: _*))
-      .crossJoin(q)
+    val langRows = vpre.filter(col("lang").isin(req.filters.map(_._2)
+      .distinct: _*))
+    val pairs = probeSet match {
+      case None => langRows.crossJoin(q)
+      // each qid's own probed cells: the broadcast probe relation's
+      // equi-join on cell + qid
+      case Some(p) => langRows.join(broadcast(p), Seq("cell"))
+        .join(q, Seq("qid"))
+    }
+    val cand = pairs
       .filter(col("lang") === col("qlang"))
       .select(col("qid"), col("id"), sHat.as("s_hat"), cush.as("cush"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val vSel = stored.select(col("id"), col("vec"))
+    // the fetch side reads (id, vec) from the same (pruned) scan
+    val vSel = scan.select(col("id"), col("vec"))
     def eager(df: DataFrame): DataFrame = {
       val mat = df.persist(StorageLevel.MEMORY_AND_DISK)
       mat.count(); mat
@@ -2013,7 +2293,7 @@ object Search {
       .orderBy(col("s_hat").desc, col("id").asc)
     val seedIds = eager(cand.select(col("qid"), col("id"), col("s_hat"))
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= poolN))
+      .filter(col("rn") <= req.poolN))
     val seeds = eager(vSel.join(broadcast(seedIds), Seq("id"))
       .join(qSel, Seq("qid"))
       .withColumn("s_full", dot(col("vec"), col("qvec")) /
@@ -2047,35 +2327,56 @@ object Search {
     }
   }
 
+  /** The tiered serve up to the fused pool: (postings root, resolved
+    * snapshot, fetch set, fused pool). */
+  private def tieredPool(spark: SparkSession, sfDir: String,
+                         emb: DataFrame, docMeta: DataFrame,
+                         req: TieredRequests,
+                         indexed: Option[(Int, Int, Int)],
+                         snap: TierSnapshot)
+      : (String, TieredView, DataFrame, DataFrame) = {
+    val root = ensurePostingsLayout(spark, sfDir, req.nBuckets)
+    val view = resolveTiered(spark, sfDir, emb, req.layoutScales, indexed,
+      snap)
+    val fetch = tieredFetch(spark, view, req, indexed)
+    val vecPool = TopK.window(
+        fetch.withColumnRenamed("s_full", "score"), req.poolN)
+      .select(col("qid"), col("id").as("doc_id"),
+        col("score").as("vscore"))
+    (root, view, fetch, serveFusedWith(spark, root, docMeta, req.queries,
+      req.filters, req.weights, req.k1, req.b, req.poolN, req.nBuckets,
+      vecPool))
+  }
+
   /**
    * [[serveRequests]] with the vector side at a PER-REQUEST PRECISION
-   * TIER off the tiered at-rest serve layout — the capstone
-   * composition the title knob was built for: each request binds its
-   * own tier from the stored relation, its cheap pass reads that
-   * tier's physical code column (1 B or 2 B per component — actual
-   * column widths, not a model), survivors rescore at full precision,
-   * and the final pool feeds the shared fusion/cut path. Zero-miss in
-   * practice, so page rows match the brute capstone's; the TIER shows
-   * up in the ledger twin's bytes ([[serveRequestsTieredMetrics]]).
+   * TIER, over snapshot `snap` of the tiered layout — the capstone the
+   * title knob was built for. `indexed` = Some((nCells, d, nprobe))
+   * serves the cell-partitioned layout, where the requests' probed cells
+   * are a static partition filter, each request's tier is column pruning
+   * and its lang a pushed predicate (which files, which chunks, which
+   * rows, all per request); None serves the id-bucketed layout, every
+   * lang-matching row a candidate. The vector pool comes from
+   * [[tieredFetch]] over the snapshot's stored relation with queries off
+   * its query view; the lexical side, fusion and the per-request page
+   * cut are [[serveRequests]]'. Zero-miss in practice, so the partitioned
+   * pristine serve pages the brute capstone's rows; the tier shows up in
+   * the ledger ([[serveRequestsTieredMetrics]]). Every snapshot is the
+   * capstone rebuilt over its corpus view — the DuckDB oracle recomputes
+   * exactly that from the raw floats.
    */
   def serveRequestsTiered(spark: SparkSession, sfDir: String,
                           emb: DataFrame, docMeta: DataFrame,
-                          queries: Seq[(Long, Seq[String])],
-                          filters: Seq[(Long, String)],
-                          weights: Seq[(Long, Double)],
-                          ks: Seq[(Long, Int)],
-                          tiers: Seq[(Long, Int)],
-                          layoutScales: Seq[Int], k1: Double, b: Double,
-                          poolN: Int, nBuckets: Int,
-                          alpha: Double): DataFrame =
-    serveRequestsTieredOff(spark, sfDir, None, emb, docMeta, queries,
-      filters, weights, ks, tiers, layoutScales, k1, b, poolN, nBuckets,
-      alpha)
+                          req: TieredRequests,
+                          indexed: Option[(Int, Int, Int)],
+                          snap: TierSnapshot): DataFrame = {
+    val (_, _, _, fused) = tieredPool(spark, sfDir, emb, docMeta, req,
+      indexed, snap)
+    serveCut(spark, fused, req.ks)
+  }
 
-  /** [[serveRequestsTiered]] against an EXPLICIT tiered layout path
-    * (None = the shared pristine fixture) — the form the upserted
-    * serve and the mutating-index request stream drive, where the
-    * layout is a maintained copy rather than the build-once dir. */
+  /** [[serveRequestsTiered]] over the partitioned layout at `layoutPath`
+    * (None = the pristine fixture), `emb` its query view as given. */
   def serveRequestsTieredOff(spark: SparkSession, sfDir: String,
                              layoutPath: Option[String],
                              emb: DataFrame, docMeta: DataFrame,
@@ -2086,1269 +2387,91 @@ object Search {
                              tiers: Seq[(Long, Int)],
                              layoutScales: Seq[Int], k1: Double,
                              b: Double, poolN: Int, nBuckets: Int,
-                             alpha: Double): DataFrame = {
-    val root = ensurePostingsLayout(spark, sfDir, nBuckets)
-    val fetch = tieredServeFetch(spark, sfDir, emb, filters, tiers,
-      layoutScales, poolN, alpha, layoutPath)
-    val vecPool = TopK.window(
-        fetch.withColumnRenamed("s_full", "score"), poolN)
-      .select(col("qid"), col("id").as("doc_id"),
-        col("score").as("vscore"))
-    serveCut(spark,
-      serveFusedWith(spark, root, docMeta, queries, filters, weights,
-        k1, b, poolN, nBuckets, vecPool), ks)
-  }
+                             alpha: Double): DataFrame =
+    serveRequestsTiered(spark, sfDir, emb, docMeta,
+      TieredRequests(queries, filters, weights, ks, tiers, layoutScales,
+        k1, b, poolN, nBuckets, alpha), None,
+      layoutPath.fold[TierSnapshot](TierSnapshot.Pristine)(TierSnapshot.At))
 
   /**
-   * [[serveRequestsTiered]] over the UPSERTED tiered layout — the
-   * at-rest precision tiers as a MAINTAINED index: an update commit
-   * (ids ≡ 0 mod `mod`, v' = −v) rewrote only the touched id buckets
-   * of the layout ([[graft.sources.Disaggregated
-   * .ensureTieredServeUpserted]]: new vector + every tier's codes
-   * recomputed for updated rows, untouched buckets byte-immutable),
-   * and the serve runs UNCHANGED over it — same cheap-pass tier
-   * pruning, same cushion, survivors rescored against the layout's
-   * updated full-precision vectors. Queries derive from the updated
-   * embedding view (the store serves what it was told to store), so
-   * the result is provably the tiered capstone over the updated
-   * corpus — the DuckDB oracle recomputes exactly that.
-   */
-  def serveRequestsTieredUpserted(spark: SparkSession, sfDir: String,
-                                  emb: DataFrame, docMeta: DataFrame,
-                                  queries: Seq[(Long, Seq[String])],
-                                  filters: Seq[(Long, String)],
-                                  weights: Seq[(Long, Double)],
-                                  ks: Seq[(Long, Int)],
-                                  tiers: Seq[(Long, Int)],
-                                  layoutScales: Seq[Int], k1: Double,
-                                  b: Double, poolN: Int, nBuckets: Int,
-                                  alpha: Double, mod: Int): DataFrame = {
-    val layout = graft.sources.Disaggregated.ensureTieredServeUpserted(
-      spark, sfDir, layoutScales, mod)
-    val embUpd = emb.select(col("vec_id"),
-      when(col("vec_id") % mod === 0,
-        transform(col("embedding"), x => -x))
-        .otherwise(col("embedding")).as("embedding"),
-      col("label"))
-    serveRequestsTieredOff(spark, sfDir, Some(layout), embUpd, docMeta,
-      queries, filters, weights, ks, tiers, layoutScales, k1, b, poolN,
-      nBuckets, alpha)
-  }
-
-  /** [[serveRequestsTieredMetrics]] over the UPSERTED tiered layout —
-    * the committed index's ledger twin: `fetched` (and with it
-    * `bytes_vec`/`save`/`fpr`) counts what the serve over the commit
-    * view actually touches (the commit moves scores, so seeds,
-    * survivors, and fusion overlap all shift with it); `v_cands` stays
-    * the lang pre-filter count — updates change vectors, not metadata. */
-  def serveRequestsTieredUpsertedMetrics(spark: SparkSession,
-                                         sfDir: String, emb: DataFrame,
-                                         docMeta: DataFrame,
-                                         queries: Seq[(Long, Seq[String])],
-                                         filters: Seq[(Long, String)],
-                                         weights: Seq[(Long, Double)],
-                                         ks: Seq[(Long, Int)],
-                                         tiers: Seq[(Long, Int)],
-                                         layoutScales: Seq[Int],
-                                         k1: Double, b: Double,
-                                         poolN: Int, nBuckets: Int,
-                                         alpha: Double, d: Int,
-                                         mod: Int): DataFrame = {
-    val layout = graft.sources.Disaggregated.ensureTieredServeUpserted(
-      spark, sfDir, layoutScales, mod)
-    val embUpd = emb.select(col("vec_id"),
-      when(col("vec_id") % mod === 0,
-        transform(col("embedding"), x => -x))
-        .otherwise(col("embedding")).as("embedding"),
-      col("label"))
-    serveRequestsTieredMetrics(spark, sfDir, embUpd, docMeta, queries,
-      filters, weights, ks, tiers, layoutScales, k1, b, poolN, nBuckets,
-      alpha, d, Some(layout))
-  }
-
-  /**
-   * The TIERED layout's SNAPSHOT view — time travel on the precision-
-   * tiered serving store: upsert commits are recorded in the generic
-   * versioned log ([[graft.operators.Pq.ensureVersionedTombstonesOver]]
-   * anchored on the tiered layout; commit 1 updates ids ≡ 0 mod 2·`mod`,
-   * commit 2 the remaining ids ≡ 0 mod `mod`), and snapshot `asOf` is
-   * served MERGE-ON-READ: the applied prefix's rows get the flipped
-   * vector and EVERY tier's codes recomputed from it in-plan — the
-   * exact expression trees [[graft.sources.Disaggregated
-   * .commitServeTierUpserts]] materializes on a committed copy — while
-   * every other row's stored codes pass through verbatim. Base layout
-   * files are byte-immutable for every snapshot (spec-asserted by
-   * mtimes); the corpus-fraction-sized prefix join is AQE-sized, never
-   * broadcast-hinted. Returns (snapshot rows, applied update ids).
-   */
-  private[graft] def tieredServeAsOfView(spark: SparkSession,
-                                         sfDir: String,
-                                         layoutScales: Seq[Int],
-                                         mod: Int, asOf: Int)
-      : (DataFrame, DataFrame) = {
-    val path = graft.sources.Disaggregated.ensureTieredServeFixture(
-      spark, sfDir, layoutScales)
-    val updIds = spark.read.parquet(graft.operators.Pq
-        .ensureVersionedTombstones(spark, path, mod, idCol = "id"))
-      .filter(col("commit_v") <= asOf)
-      .select(col("id"))
-    val view = tieredUpsertedView(spark.read.parquet(path), updIds,
-      layoutScales)
-    (view, updIds)
-  }
-
-  /** The stored tiered relation with `updIds`' rows UPSERTED in-plan
-    * (v' = −v; every tier's codes recomputed from the new vector —
-    * [[graft.sources.Disaggregated.commitServeTierUpserts]]'s exact
-    * expression trees) and every other row's stored codes passed
-    * through verbatim. The merge-on-read building block the as-of and
-    * mixed-log views share. */
-  private def tieredUpsertedView(stored: DataFrame, updIds: DataFrame,
-                                 layoutScales: Seq[Int]): DataFrame = {
-    val flagged = stored
-      .join(updIds.withColumn("u", lit(1)), Seq("id"), "left")
-    val newVec = when(col("u") === 1,
-      transform(col("vec"), x => -x)).otherwise(col("vec"))
-    flagged.select(
-      Seq(col("id"), col("lang"), newVec.as("vec")) ++
-        layoutScales.sorted.map { s =>
-          val mul = math.pow(2.0, s)
-          val t = if (graft.sources.Disaggregated
-            .serveTierCodeBytes(s) == 1) "byte" else "short"
-          when(col("u") === 1,
-            transform(newVec, x => floor(x * mul + lit(0.5)).cast(t)))
-            .otherwise(col(s"code_$s")).as(s"code_$s")
-        }: _*)
-  }
-
-  /**
-   * TIME TRAVEL ON THE TIERED SERVE LAYOUT — the one mutating layout
-   * that still lacked history: the full request object (per-qid terms +
-   * langs + α + k + precision TIER) served at snapshot `asOf` of the
-   * tiered layout's own versioned update log. The vector side reads the
-   * [[tieredServeAsOfView]] snapshot — cheap pass at each request's
-   * tier over the snapshot's codes, survivors rescored against the
-   * snapshot's full-precision vectors — and the queries derive from the
-   * same snapshot (the store serves what it was told to store at v).
-   * The lexical side is untouched by the vector-layout log. Snapshot v
-   * is provably the tiered capstone REBUILT over the commit-prefix view
-   * (the DuckDB oracle recomputes exactly that; a spec asserts asOf-1
-   * row-equality against the upsert-committed layout's serve at the
-   * prefix's mod), with base bucket files byte-immutable per snapshot.
-   */
-  def serveRequestsTieredAsOf(spark: SparkSession, sfDir: String,
-                              emb: DataFrame, docMeta: DataFrame,
-                              queries: Seq[(Long, Seq[String])],
-                              filters: Seq[(Long, String)],
-                              weights: Seq[(Long, Double)],
-                              ks: Seq[(Long, Int)],
-                              tiers: Seq[(Long, Int)],
-                              layoutScales: Seq[Int], k1: Double,
-                              b: Double, poolN: Int, nBuckets: Int,
-                              alpha: Double, mod: Int,
-                              asOf: Int): DataFrame = {
-    val root = ensurePostingsLayout(spark, sfDir, nBuckets)
-    val (view, updIds) = tieredServeAsOfView(spark, sfDir, layoutScales,
-      mod, asOf)
-    val embAsOf = emb
-      .join(updIds.select(col("id").as("vec_id"))
-        .withColumn("upd", lit(1)), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        when(col("upd") === 1, transform(col("embedding"), x => -x))
-          .otherwise(col("embedding")).as("embedding"),
-        col("label"))
-    val fetch = tieredServeFetch(spark, sfDir, embAsOf, filters, tiers,
-      layoutScales, poolN, alpha, storedView = Some(view))
-    val vecPool = TopK.window(
-        fetch.withColumnRenamed("s_full", "score"), poolN)
-      .select(col("qid"), col("id").as("doc_id"),
-        col("score").as("vscore"))
-    serveCut(spark,
-      serveFusedWith(spark, root, docMeta, queries, filters, weights,
-        k1, b, poolN, nBuckets, vecPool), ks)
-  }
-
-  /** [[serveRequestsTieredMetrics]] at snapshot `asOf` — the tiered
-    * time-travel ledger: `fetched` (and with it `bytes_vec`/`save`/
-    * `fpr`) counts what the SNAPSHOT serve actually touches — the
-    * per-request tier's code bytes over the snapshot's candidates and
-    * the snapshot's rescue fetches — while `v_cands` stays the lang
-    * pre-filter count (updates change vectors, not metadata, so it is
-    * snapshot-invariant by design). */
-  def serveRequestsTieredAsOfMetrics(spark: SparkSession, sfDir: String,
-                                     emb: DataFrame, docMeta: DataFrame,
-                                     queries: Seq[(Long, Seq[String])],
-                                     filters: Seq[(Long, String)],
-                                     weights: Seq[(Long, Double)],
-                                     ks: Seq[(Long, Int)],
-                                     tiers: Seq[(Long, Int)],
-                                     layoutScales: Seq[Int], k1: Double,
-                                     b: Double, poolN: Int,
-                                     nBuckets: Int, alpha: Double,
-                                     d: Int, mod: Int,
-                                     asOf: Int): DataFrame = {
-    val (view, updIds) = tieredServeAsOfView(spark, sfDir, layoutScales,
-      mod, asOf)
-    val embAsOf = emb
-      .join(updIds.select(col("id").as("vec_id"))
-        .withColumn("upd", lit(1)), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        when(col("upd") === 1, transform(col("embedding"), x => -x))
-          .otherwise(col("embedding")).as("embedding"),
-        col("label"))
-    serveRequestsTieredMetrics(spark, sfDir, embAsOf, docMeta, queries,
-      filters, weights, ks, tiers, layoutScales, k1, b, poolN, nBuckets,
-      alpha, d, storedView = Some(view))
-  }
-
-  /** Bump when the compacted as-of tiered layout shape changes. */
-  private val TieredAsOfCompactLayoutVersion = 1
-
-  /**
-   * SNAPSHOT COMPACTION of the tiered layout's update log — the
-   * OPTIMIZE verb the graph's batch as-of log got ([[graft.operators
-   * .Ivf.ensureKnnGraphUpsertAsOfCompacted]]), carried to the serve
-   * capstone: [[serveRequestsTieredAsOf]] pays the merge-on-read
-   * prefix join and the in-plan code recompute on EVERY read; this
-   * materializes snapshot `asOf`'s [[tieredServeAsOfView]] ONCE into a
-   * published id-bucketed layout. Crucially the compacted bytes derive
-   * from the LAYOUT + LOG, never a corpus rebuild: non-updated rows'
-   * stored codes pass through VERBATIM (a byte copy), only the
-   * prefix's rows carry the flipped vector and recomputed tier codes —
-   * exactly what a physically committed layout holds. Row-count
-   * conservation is required at publish (an upsert changes values,
-   * never membership) and the dir is atomic and version-keyed. The
-   * post-compact serve's stored relation is a plain pruned scan — no
-   * log join or code recompute left in the plan (PlanSpec asserts).
-   */
-  def ensureTieredServeAsOfCompacted(spark: SparkSession, sfDir: String,
-                                     layoutScales: Seq[Int], mod: Int,
-                                     asOf: Int): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.sources.Disaggregated.ensureTieredServeFixture(
-      spark, sfDir, layoutScales)
-    val path = Paths.get(base +
-      s"_asofcmp_v${TieredAsOfCompactLayoutVersion}_m${mod}_a$asOf")
-    if (!Files.exists(path.resolve("_DONE"))) {
-      val tmp = Files.createTempDirectory(path.getParent,
-        "servetasofcmp-")
-      val (view, _) = tieredServeAsOfView(spark, sfDir, layoutScales,
-        mod, asOf)
-      val nB = graft.sources.Disaggregated.ServeTiersUpsertBuckets
-      view
-        .withColumn("pb", pmod(col("id"), lit(nB.toLong)).cast("int"))
-        .repartition(col("pb")).sortWithinPartitions(col("id"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .partitionBy("pb").parquet(tmp.resolve("tiers").toString)
-      val compactN = spark.read.parquet(tmp.resolve("tiers").toString)
-        .count()
-      val baseN = spark.read.parquet(base).count()
-      require(compactN == baseN,
-        s"as-of tiered compaction invariant broken: $compactN rows " +
-          s"after compact vs $baseN in the base layout")
-      Files.createFile(tmp.resolve("_DONE"))
-      try Files.move(tmp, path)
-      catch { case _: java.nio.file.FileSystemException =>
-        graft.sources.VecFiles.deleteRecursively(tmp) }
-      require(Files.exists(path.resolve("_DONE")),
-        s"compacted as-of tiered layout publish failed: $path")
-    }
-    path.toString
-  }
-
-  /** The tiered snapshot served AFTER as-of compaction: the
-    * [[serveRequestsTieredOff]] path over the compacted base — queries
-    * still derive from the snapshot's embedding view (the store serves
-    * what it was told to store at v), the stored relation a plain
-    * scan. Hash-equal to [[serveRequestsTieredAsOf]]'s merge-on-read
-    * serve, same oracle. */
-  def serveRequestsTieredAsOfCompacted(spark: SparkSession,
-                                       sfDir: String, emb: DataFrame,
-                                       docMeta: DataFrame,
-                                       queries: Seq[(Long, Seq[String])],
-                                       filters: Seq[(Long, String)],
-                                       weights: Seq[(Long, Double)],
-                                       ks: Seq[(Long, Int)],
-                                       tiers: Seq[(Long, Int)],
-                                       layoutScales: Seq[Int],
-                                       k1: Double, b: Double, poolN: Int,
-                                       nBuckets: Int, alpha: Double,
-                                       mod: Int, asOf: Int): DataFrame = {
-    val compacted = ensureTieredServeAsOfCompacted(spark, sfDir,
-      layoutScales, mod, asOf) + "/tiers"
-    val basePath = graft.sources.Disaggregated.ensureTieredServeFixture(
-      spark, sfDir, layoutScales)
-    val updIds = spark.read.parquet(graft.operators.Pq
-        .ensureVersionedTombstones(spark, basePath, mod, idCol = "id"))
-      .filter(col("commit_v") <= asOf)
-      .select(col("id"))
-    val embAsOf = emb
-      .join(updIds.select(col("id").as("vec_id"))
-        .withColumn("upd", lit(1)), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        when(col("upd") === 1, transform(col("embedding"), x => -x))
-          .otherwise(col("embedding")).as("embedding"),
-        col("label"))
-    serveRequestsTieredOff(spark, sfDir, Some(compacted), embAsOf,
-      docMeta, queries, filters, weights, ks, tiers, layoutScales, k1,
-      b, poolN, nBuckets, alpha)
-  }
-
-  /**
-   * [[serveRequestsTiered]] over the DELETED tiered layout — the
-   * missing lifecycle verb on the precision store: a delete commit
-   * (ids ≡ 0 mod `mod`) physically dropped the tombstoned rows,
-   * rewriting only their id buckets ([[graft.sources.Disaggregated
-   * .commitServeTierDeletes]]; untouched buckets byte-immutable,
-   * emptied buckets swept), and the serve runs UNCHANGED over it — the
-   * deleted ids are absent from every tier's cheap pass AND the
-   * full-precision rescore because they are absent from the layout.
-   * Queries still come from the embeddings TABLE (external probes are
-   * unaffected by index deletes — the family-wide delete contract);
-   * only the vector-side candidate corpus shrinks, so a deleted doc can
-   * still surface through the lexical pool with vnorm 0, exactly as
-   * the oracle recomputes.
-   */
-  def serveRequestsTieredDeleted(spark: SparkSession, sfDir: String,
-                                 emb: DataFrame, docMeta: DataFrame,
-                                 queries: Seq[(Long, Seq[String])],
-                                 filters: Seq[(Long, String)],
-                                 weights: Seq[(Long, Double)],
-                                 ks: Seq[(Long, Int)],
-                                 tiers: Seq[(Long, Int)],
-                                 layoutScales: Seq[Int], k1: Double,
-                                 b: Double, poolN: Int, nBuckets: Int,
-                                 alpha: Double, mod: Int): DataFrame = {
-    val layout = graft.sources.Disaggregated.ensureTieredServeDeleted(
-      spark, sfDir, layoutScales, mod)
-    serveRequestsTieredOff(spark, sfDir, Some(layout), emb, docMeta,
-      queries, filters, weights, ks, tiers, layoutScales, k1, b, poolN,
-      nBuckets, alpha)
-  }
-
-  /**
-   * DELETE + TIME TRAVEL on the tiered serve layout — the two
-   * lifecycle verbs COMPOSED, completing the family contract
-   * (PQ/LSH/spherical/graph all have their delete-as-of; the
-   * production precision store now does too): delete commits are
-   * recorded in the layout's own versioned log ([[graft.operators.Pq
-   * .ensureVersionedTombstones]] — commit 1 tombstones ids ≡ 0 mod
-   * 2·`mod`, commit 2 the rest of mod `mod`; DeleteMod ≠ UpsertMod
-   * keeps this log a separate published dir from the update log), and
-   * snapshot `asOf` is served MERGE-ON-READ off the PRISTINE base
-   * layout: the applied prefix's rows are anti-joined out of the
-   * stored view, so they are absent from every tier's cheap pass AND
-   * the full-precision rescore — exactly the rows a layout physically
-   * committed at the prefix's mod lacks (a spec asserts asOf-2
-   * row-equality against [[serveRequestsTieredDeleted]] over the full
-   * delete set; asOf-0 reproduces the pristine capstone) — while base
-   * bucket files stay byte-immutable per snapshot. Queries still come
-   * from the embeddings TABLE (the family-wide delete contract: an
-   * index delete never rewrites external probes) and the lexical side
-   * is untouched by the vector-layout log, so a tombstoned doc can
-   * still surface through the lexical pool with vnorm 0, exactly as
-   * the oracle's snapshot CTEs recompute. The corpus-fraction-sized
-   * tombstone prefix is AQE-sized, never broadcast-hinted.
-   */
-  def serveRequestsTieredDeletedAsOf(spark: SparkSession, sfDir: String,
-                                     emb: DataFrame, docMeta: DataFrame,
-                                     queries: Seq[(Long, Seq[String])],
-                                     filters: Seq[(Long, String)],
-                                     weights: Seq[(Long, Double)],
-                                     ks: Seq[(Long, Int)],
-                                     tiers: Seq[(Long, Int)],
-                                     layoutScales: Seq[Int], k1: Double,
-                                     b: Double, poolN: Int,
-                                     nBuckets: Int, alpha: Double,
-                                     mod: Int, asOf: Int): DataFrame = {
-    val root = ensurePostingsLayout(spark, sfDir, nBuckets)
-    val path = graft.sources.Disaggregated.ensureTieredServeFixture(
-      spark, sfDir, layoutScales)
-    val delIds = spark.read.parquet(graft.operators.Pq
-        .ensureVersionedTombstones(spark, path, mod, idCol = "id"))
-      .filter(col("commit_v") <= asOf)
-      .select(col("id"))
-    // merge-on-read snapshot: base minus the applied tombstone prefix
-    // (corpus-fraction-sized — AQE sizes the anti-join, no hint)
-    val view = spark.read.parquet(path)
-      .join(delIds, Seq("id"), "left_anti")
-    val fetch = tieredServeFetch(spark, sfDir, emb, filters, tiers,
-      layoutScales, poolN, alpha, storedView = Some(view))
-    val vecPool = TopK.window(
-        fetch.withColumnRenamed("s_full", "score"), poolN)
-      .select(col("qid"), col("id").as("doc_id"),
-        col("score").as("vscore"))
-    serveCut(spark,
-      serveFusedWith(spark, root, docMeta, queries, filters, weights,
-        k1, b, poolN, nBuckets, vecPool), ks)
-  }
-
-  /**
-   * TIME TRAVEL OVER A HETEROGENEOUS-VERB LOG — the history shape real
-   * table formats keep, where one log mixes verbs: commit 1 UPSERTS
-   * ids ≡ 0 mod `umod` (vectors flipped, every tier's codes recomputed
-   * in-plan), commit 2 DELETES ids ≡ 0 mod `dmod` (rows anti-joined
-   * out), both recorded in the layout's one versioned mixed log
-   * ([[graft.operators.Pq.ensureVersionedMixedLog]]) and applied IN
-   * COMMIT ORDER at snapshot `asOf`: snapshot 0 is pristine, snapshot
-   * 1 the upserted view, snapshot 2 the upserted-then-deleted view —
-   * an id in both commits is upserted at 1 and GONE at 2 (the later
-   * verb wins by construction). Query vectors follow the upsert view
-   * from snapshot 1 on (the store serves what it was told to store)
-   * and are never rewritten by the delete (the family-wide contract);
-   * base bucket files stay byte-immutable for every snapshot; both
-   * prefix joins are AQE-sized. The oracle composes `negMod` and
-   * `delMod` in one snapshot view — the batch twin of the mixed-verb
-   * mutating stream, hash-equal by per-request independence.
-   */
-  def serveRequestsTieredMixedAsOf(spark: SparkSession, sfDir: String,
-                                   emb: DataFrame, docMeta: DataFrame,
-                                   queries: Seq[(Long, Seq[String])],
-                                   filters: Seq[(Long, String)],
-                                   weights: Seq[(Long, Double)],
-                                   ks: Seq[(Long, Int)],
-                                   tiers: Seq[(Long, Int)],
-                                   layoutScales: Seq[Int], k1: Double,
-                                   b: Double, poolN: Int,
-                                   nBuckets: Int, alpha: Double,
-                                   umod: Int, dmod: Int,
-                                   asOf: Int): DataFrame = {
-    val root = ensurePostingsLayout(spark, sfDir, nBuckets)
-    val path = graft.sources.Disaggregated.ensureTieredServeFixture(
-      spark, sfDir, layoutScales)
-    val stored = spark.read.parquet(path)
-    val log = spark.read.parquet(graft.operators.Pq
-      .ensureVersionedMixedLog(spark, path,
-        stored.select(col("id")), umod, dmod, idCol = "id"))
-      .filter(col("commit_v") <= asOf)
-    val updIds = log.filter(col("verb") === "U").select(col("id"))
-    val delIds = log.filter(col("verb") === "D").select(col("id"))
-    val view = tieredUpsertedView(stored, updIds, layoutScales)
-      .join(delIds, Seq("id"), "left_anti")
-    val embAsOf = emb
-      .join(updIds.select(col("id").as("vec_id"))
-        .withColumn("upd", lit(1)), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        when(col("upd") === 1, transform(col("embedding"), x => -x))
-          .otherwise(col("embedding")).as("embedding"),
-        col("label"))
-    val fetch = tieredServeFetch(spark, sfDir, embAsOf, filters, tiers,
-      layoutScales, poolN, alpha, storedView = Some(view))
-    val vecPool = TopK.window(
-        fetch.withColumnRenamed("s_full", "score"), poolN)
-      .select(col("qid"), col("id").as("doc_id"),
-        col("score").as("vscore"))
-    serveCut(spark,
-      serveFusedWith(spark, root, docMeta, queries, filters, weights,
-        k1, b, poolN, nBuckets, vecPool), ks)
-  }
-
-  /** [[serveRequestsTieredMetrics]] over the DELETED tiered layout —
-    * the retention ledger: `v_cands`, `bytes_vec`'s lang-column and
-    * code terms, AND the full-scan denominator all count what the
-    * layout HOLDS (the tombstoned rows are gone from the cheap pass,
-    * the rescore, and the accounting alike), with the id universe
-    * derived from the committed layout itself, never re-derived from
-    * the predicate. Queries still come from the table — so `save` is
-    * the bandwidth saving of the serve the user actually gets over the
-    * post-delete corpus. */
-  def serveRequestsTieredDeletedMetrics(spark: SparkSession,
-                                        sfDir: String, emb: DataFrame,
-                                        docMeta: DataFrame,
-                                        queries: Seq[(Long, Seq[String])],
-                                        filters: Seq[(Long, String)],
-                                        weights: Seq[(Long, Double)],
-                                        ks: Seq[(Long, Int)],
-                                        tiers: Seq[(Long, Int)],
-                                        layoutScales: Seq[Int],
-                                        k1: Double, b: Double,
-                                        poolN: Int, nBuckets: Int,
-                                        alpha: Double, d: Int,
-                                        mod: Int): DataFrame = {
-    val layout = graft.sources.Disaggregated.ensureTieredServeDeleted(
-      spark, sfDir, layoutScales, mod)
-    val candIds = spark.read.parquet(layout)
-      .select(col("id").as("vec_id"))
-    serveRequestsTieredMetrics(spark, sfDir, emb, docMeta, queries,
-      filters, weights, ks, tiers, layoutScales, k1, b, poolN, nBuckets,
-      alpha, d, layoutPath = Some(layout), candIds = Some(candIds))
-  }
-
-  /** [[serveRequestsTieredDeletedMetrics]] at snapshot `asOf` of the
-    * delete log — the time-travel retention ledger: every count and
-    * byte term reflects the SNAPSHOT's surviving rows (the merge-on-
-    * read anti-join view is both the served relation and the ledger's
-    * id universe). */
-  def serveRequestsTieredDeletedAsOfMetrics(spark: SparkSession,
-                                            sfDir: String,
-                                            emb: DataFrame,
-                                            docMeta: DataFrame,
-                                            queries: Seq[(Long, Seq[String])],
-                                            filters: Seq[(Long, String)],
-                                            weights: Seq[(Long, Double)],
-                                            ks: Seq[(Long, Int)],
-                                            tiers: Seq[(Long, Int)],
-                                            layoutScales: Seq[Int],
-                                            k1: Double, b: Double,
-                                            poolN: Int, nBuckets: Int,
-                                            alpha: Double, d: Int,
-                                            mod: Int,
-                                            asOf: Int): DataFrame = {
-    val path = graft.sources.Disaggregated.ensureTieredServeFixture(
-      spark, sfDir, layoutScales)
-    val delIds = spark.read.parquet(graft.operators.Pq
-        .ensureVersionedTombstones(spark, path, mod, idCol = "id"))
-      .filter(col("commit_v") <= asOf)
-      .select(col("id"))
-    val view = spark.read.parquet(path)
-      .join(delIds, Seq("id"), "left_anti")
-    serveRequestsTieredMetrics(spark, sfDir, emb, docMeta, queries,
-      filters, weights, ks, tiers, layoutScales, k1, b, poolN, nBuckets,
-      alpha, d, storedView = Some(view),
-      candIds = Some(view.select(col("id").as("vec_id"))))
-  }
-
-  /**
-   * [[serveRequestsTiered]]'s per-request byte ledger — where the tier
-   * becomes VISIBLE: `bytes_vec` = 8·N (the lang pre-filter column) +
-   * codeBytes(tier_q)·d·v_cands (the request's OWN tier's code chunks,
-   * read only for its lang-matching rows) + 4d·fetched (full-precision
-   * rescue fetches), so two requests over the same lang slice with
-   * different tiers show different bytes — per-request bandwidth made
-   * auditable, the [[serveRequestsMetrics]] discipline otherwise
-   * (universe LEFT joins, explicit all-zero rows, qid = -1 aggregate
-   * with tier = -1, sum-of-parts = whole).
+   * [[serveRequestsTiered]]'s per-request byte ledger, where the tier
+   * becomes VISIBLE: `bytes_vec` = the lang column's bytes +
+   * codeBytes(tier_q)·d·`v_cands` (the request's OWN tier's code chunks,
+   * read only for its candidate rows) + 4d·`fetched` (full-precision
+   * rescue fetches), against the unfiltered full scan N·(8 + 4d). On the
+   * partitioned layout the lang column costs 8·N and `v_cands` counts
+   * the universe's lang matches; on the indexed layout it costs
+   * `pc_rows`·8, the stored rows of the qid's probed cells (partition
+   * pruning), and `v_cands` counts their lang matches, both off the
+   * snapshot's stored cell occupancies (rows an upsert moved are counted
+   * where they now live). N is the snapshot's id universe, so a delete
+   * leaves the accounting exactly as it leaves the serve. The
+   * [[serveRequestsMetrics]] discipline otherwise: universe LEFT joins,
+   * explicit all-zero rows, a qid = -1 total with tier = -1,
+   * sum-of-parts = whole.
    */
   def serveRequestsTieredMetrics(spark: SparkSession, sfDir: String,
                                  emb: DataFrame, docMeta: DataFrame,
-                                 queries: Seq[(Long, Seq[String])],
-                                 filters: Seq[(Long, String)],
-                                 weights: Seq[(Long, Double)],
-                                 ks: Seq[(Long, Int)],
-                                 tiers: Seq[(Long, Int)],
-                                 layoutScales: Seq[Int], k1: Double,
-                                 b: Double, poolN: Int, nBuckets: Int,
-                                 alpha: Double, d: Int,
-                                 layoutPath: Option[String] = None,
-                                 storedView: Option[DataFrame] = None,
-                                 candIds: Option[DataFrame] = None)
-      : DataFrame = {
-    require(ks.nonEmpty, "serveRequestsTieredMetrics: empty page relation")
-    require(filters.nonEmpty,
-      "serveRequestsTieredMetrics: empty filter relation")
+                                 req: TieredRequests,
+                                 indexed: Option[(Int, Int, Int)],
+                                 snap: TierSnapshot, d: Int): DataFrame = {
     import spark.implicits._
-    val root = ensurePostingsLayout(spark, sfDir, nBuckets)
-    val fetch = tieredServeFetch(spark, sfDir, emb, filters, tiers,
-      layoutScales, poolN, alpha, layoutPath, storedView)
-    val vecPool = TopK.window(
-        fetch.withColumnRenamed("s_full", "score"), poolN)
-      .select(col("qid"), col("id").as("doc_id"),
-        col("score").as("vscore"))
-    val fused = serveFusedWith(spark, root, docMeta, queries, filters,
-      weights, k1, b, poolN, nBuckets, vecPool)
-    val tAgg = servePostingBytes(spark, root, queries, nBuckets)
-    val meta = docMeta.select(col("doc_id").as("id"), col("lang"))
-    val qf = broadcast(filters.toDF("qid", "lang"))
-    // candIds overrides the candidate-corpus id universe for v_cands
-    // and the byte denominators: a DELETE shrinks the layout, and the
-    // honest ledger counts what the layout HOLDS (queries still come
-    // from the full table — the delete contract)
-    val candIdsDf = candIds.getOrElse(emb.select(col("vec_id")))
-    val vAgg = candIdsDf.select(col("vec_id").as("id")).join(meta, Seq("id"))
-      .join(qf, Seq("lang"))
-      .groupBy(col("qid")).agg(count(lit(1)).as("v_cands"))
+    indexed.foreach { case (_, di, _) => require(di == d,
+      s"ledger d=$d differs from the indexed layout's d=$di") }
+    val (root, view, fetch, fused) = tieredPool(spark, sfDir, emb, docMeta,
+      req, indexed, snap)
+    val tAgg = servePostingBytes(spark, root, req.queries, req.nBuckets)
+    val qf = broadcast(req.filters.toDF("qid", "lang"))
+    val nV = view.universe.count() // one bounded scalar (a model)
+    // the lang column's bytes and the candidate counts per layout kind
+    val (occAggs, occCols, langBytes) = indexed match {
+      case None =>
+        val meta = docMeta.select(col("doc_id").as("id"), col("lang"))
+        val vAgg = view.universe.select(col("vec_id").as("id"))
+          .join(meta, Seq("id")).join(qf, Seq("lang"))
+          .groupBy(col("qid")).agg(count(lit(1)).as("v_cands"))
+        (Seq(vAgg), Seq("v_cands"), lit(8L * nV))
+      case Some((nCells, _, nprobe)) =>
+        val probeSet = Ivf.probeCells(Ann.queriesOf(view.queries, req.nq)
+            .select(col("qid"), col("qvec")), nCells, d, nprobe)
+          .select(col("qid"), col("cell"))
+        val occ = view.stored.groupBy(col("cell"))
+          .agg(count(lit(1)).as("occ"))
+        val pcAgg = probeSet.join(occ, Seq("cell"))
+          .groupBy(col("qid")).agg(sum(col("occ")).as("pc_rows"))
+        val langOcc = view.stored.groupBy(col("cell"), col("lang"))
+          .agg(count(lit(1)).as("n"))
+        val vcAgg = probeSet.join(langOcc, Seq("cell"))
+          .join(qf, Seq("qid", "lang"))
+          .groupBy(col("qid")).agg(sum(col("n")).as("v_cands"))
+        (Seq(pcAgg, vcAgg), Seq("pc_rows", "v_cands"),
+          coalesce(col("pc_rows"), lit(0L)) * lit(8L))
+    }
     val fetchAgg = fetch.groupBy(col("qid"))
       .agg(count(lit(1)).as("fetched"))
     val fAgg = fused.groupBy(col("qid")).agg(count(lit(1)).as("fused"))
-    val nV = candIdsDf.count() // one bounded scalar (a model)
-    val trRel = broadcast(tiers.map { case (qid, s) =>
+    val trRel = broadcast(req.tiers.map { case (qid, s) =>
       (qid, s, graft.sources.Disaggregated.serveTierCodeBytes(s)
         .toLong * d) }.toDF("qid", "tier", "b_red"))
-    val qkRel = broadcast(ks.toDF("qid", "kq"))
-    val perQid = qkRel
-      .join(trRel, Seq("qid"))
-      .join(tAgg, Seq("qid"), "left")
-      .join(vAgg, Seq("qid"), "left")
-      .join(fetchAgg, Seq("qid"), "left")
-      .join(fAgg, Seq("qid"), "left")
-      .select(col("qid"), col("tier"),
-        coalesce(col("t_cands"), lit(0L)).as("t_cands"),
-        coalesce(col("v_cands"), lit(0L)).as("v_cands"),
-        coalesce(col("fetched"), lit(0L)).as("fetched"),
-        coalesce(col("fused"), lit(0L)).as("fused"),
+    val qkRel = broadcast(req.ks.toDF("qid", "kq"))
+    val perQid = (tAgg +: occAggs :+ fetchAgg :+ fAgg)
+      .foldLeft(qkRel.join(trRel, Seq("qid")))(_.join(_, Seq("qid"), "left"))
+      .select(Seq(col("qid"), col("tier")) ++
+        (("t_cands" +: occCols) ++ Seq("fetched", "fused")).map(c =>
+          coalesce(col(c), lit(0L)).as(c)) ++ Seq(
         least(col("kq").cast("long"),
           coalesce(col("fused"), lit(0L))).as("page"),
         coalesce(col("bytes_text"), lit(0L)).as("bytes_text"),
-        (lit(8L * nV) +
+        (langBytes +
           col("b_red") * coalesce(col("v_cands"), lit(0L)) +
           lit(4L * d) * coalesce(col("fetched"), lit(0L)))
           .as("bytes_vec"),
-        lit((8L + 4L * d) * nV).as("bytes_vec_full"))
-    val total = perQid.agg(
-      sum(col("t_cands")).as("t_cands"),
-      sum(col("v_cands")).as("v_cands"),
-      sum(col("fetched")).as("fetched"),
-      sum(col("fused")).as("fused"),
-      sum(col("page")).as("page"),
-      sum(col("bytes_text")).as("bytes_text"),
-      sum(col("bytes_vec")).as("bytes_vec"),
-      sum(col("bytes_vec_full")).as("bytes_vec_full"))
-      .select(lit(-1L).as("qid") +: lit(-1).as("tier") +:
-        perQid.columns.filterNot(Set("qid", "tier"))
-          .map(col).toSeq: _*)
-    perQid.unionByName(total)
-      .withColumn("save", lit(1.0) -
-        (col("bytes_text") + col("bytes_vec")).cast("double") /
-          (col("bytes_text") + col("bytes_vec_full")).cast("double"))
-      .withColumn("fpr",
-        when(col("t_cands") + col("v_cands") === 0L, lit(0.0))
-          .otherwise((col("fused") - col("page")).cast("double") /
-            (col("t_cands") + col("v_cands")).cast("double")))
-  }
-
-  /**
-   * [[tieredServeFetch]] composed with the AT-REST INDEX — every
-   * pruning axis of the engine in ONE vector-side scan: the requests'
-   * probed cells are a STATIC PARTITION FILTER on the cell-partitioned
-   * tiered layout ([[graft.sources.Disaggregated
-   * .ensureTieredServeIndexedFixture]]), each request's precision tier
-   * is COLUMN PRUNING over the per-tier code chunks, and the lang
-   * pre-filter is a pushed predicate — which files, which column
-   * chunks, which rows, all chosen per request. Candidates are each
-   * qid's own probed cells ∩ its lang (the [[filteredTopKIndexedMulti]]
-   * approximation contract), the two-phase tier pipeline runs WITHIN
-   * that candidate set, and survivors rescore at full precision from
-   * the same pruned cells.
-   */
-  private def tieredServeIndexedFetch(spark: SparkSession, sfDir: String,
-                                      emb: DataFrame,
-                                      filters: Seq[(Long, String)],
-                                      tiers: Seq[(Long, Int)],
-                                      layoutScales: Seq[Int],
-                                      poolN: Int, alpha: Double,
-                                      nCells: Int, d: Int,
-                                      nprobe: Int,
-                                      layoutPath: Option[String] = None,
-                                      storedView: Option[DataFrame] = None)
-      : DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.storage.StorageLevel
-    require(filters.nonEmpty,
-      "tieredServeIndexedFetch: empty filter relation")
-    require(tiers.nonEmpty, "tieredServeIndexedFetch: empty tier relation")
-    val usedScales = tiers.map(_._2).distinct.sorted
-    require(usedScales.toSet.subsetOf(layoutScales.toSet),
-      s"tiers $usedScales not all stored in layout $layoutScales")
-    // storedView: the as-of serve's merge-on-read snapshot relation
-    // (base minus prefix ∪ the prefix's rows re-derived with moved
-    // cells) over the immutable base files
-    val stored = storedView.getOrElse {
-      val path = layoutPath.getOrElse(
-        graft.sources.Disaggregated.ensureTieredServeIndexedFixture(
-          spark, sfDir, layoutScales, nCells, d))
-      spark.read.parquet(path)
-    }
-    val nq = (filters.map(_._1).max + 1).toInt
-    val qSel = broadcast(Ann.queriesOf(emb, nq)
-      .select(col("qid"), col("qvec"), col("qn2").as("nq2")))
-    val probeSet = Ivf.probeCells(
-        qSel.select(col("qid"), col("qvec")), nCells, d, nprobe)
-      .select(col("qid"), col("cell"))
-    // the union of all probed cells — a bounded collect (<= nCells
-    // ints, a model) materialized as literals so BOTH passes prune at
-    // planning time
-    val unionCells = probeSet.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val unionLangs = filters.map(_._2).distinct
-    val cheap = stored
-      .filter(col("cell").isin(unionCells.map(Int.box): _*))
-      .select(Seq(col("id"), col("lang"), col("cell")) ++
-        usedScales.map { s =>
-          val mul = math.pow(2.0, s)
-          transform(col(s"code_$s"),
-            c => (c.cast("double") / mul).cast("float")).as(s"rvec_$s")
-        }: _*)
-    val vpre = cheap.select(
-      Seq(col("id"), col("lang"), col("cell")) ++ usedScales.flatMap(s =>
-        Seq(col(s"rvec_$s"),
-          norm2Sq(col(s"rvec_$s")).as(s"nr2_$s"))): _*)
-    val trRel = broadcast(tiers.toDF("qid", "tier"))
-    val qf = broadcast(filters.toDF("qid", "qlang"))
-    val q = broadcast(qSel.join(trRel, Seq("qid")).join(qf, Seq("qid")))
-    def byTier(f: Int => Column): Column =
-      usedScales.foldRight(lit(null).cast("double")) { (s, rest) =>
-        when(col("tier") === s, f(s)).otherwise(rest) }
-    val sHat = byTier(s => dot(col(s"rvec_$s"), col("qvec")) /
-      (fnorm(col(s"nr2_$s")) * fnorm(col("nq2"))))
-    val cush = byTier { s =>
-      val half = (0.5 / math.pow(2.0, s)).toFloat
-      lit(alpha) * org.apache.spark.sql.graft.VecExprs.absDot(
-        col("qvec"),
-        transform(col(s"rvec_$s"), _ => lit(half))) / fnorm(col("nq2"))
-    }
-    // each qid's candidates: ITS probed cells (the broadcast probe
-    // relation's equi-join on cell + qid) ∩ ITS lang
-    val cand = vpre
-      .filter(col("lang").isin(unionLangs: _*))
-      .join(broadcast(probeSet), Seq("cell"))
-      .join(q, Seq("qid"))
-      .filter(col("lang") === col("qlang"))
-      .select(col("qid"), col("id"), sHat.as("s_hat"), cush.as("cush"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the fetch side reads (id, vec) from the SAME pruned cells only
-    val vSel = stored
-      .filter(col("cell").isin(unionCells.map(Int.box): _*))
-      .select(col("id"), col("vec"))
-    def eager(df: DataFrame): DataFrame = {
-      val mat = df.persist(StorageLevel.MEMORY_AND_DISK)
-      mat.count(); mat
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("s_hat").desc, col("id").asc)
-    val seedIds = eager(cand.select(col("qid"), col("id"), col("s_hat"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= poolN))
-    val seeds = eager(vSel.join(broadcast(seedIds), Seq("id"))
-      .join(qSel, Seq("qid"))
-      .withColumn("s_full", dot(col("vec"), col("qvec")) /
-        (fnorm(norm2Sq(col("vec"))) * fnorm(col("nq2"))))
-      .select(col("qid"), col("id"), col("s_full")))
-    try {
-      val tau0 = broadcast(
-        seeds.groupBy(col("qid")).agg(min(col("s_full")).as("tau0")))
-      val survivorIds = cand
-        .join(broadcast(seedIds.select(col("qid"), col("id"))),
-          Seq("qid", "id"), "left_anti")
-        .join(tau0, Seq("qid"))
-        .filter(col("s_hat") + col("cush") >= col("tau0"))
-        .select(col("qid"), col("id"))
-      val survivors = vSel.join(survivorIds, Seq("id"))
-        .join(qSel, Seq("qid"))
-        .withColumn("s_full", dot(col("vec"), col("qvec")) /
-          (fnorm(norm2Sq(col("vec"))) * fnorm(col("nq2"))))
-        .select(col("qid"), col("id"), col("s_full"))
-      seeds.unionByName(survivors).localCheckpoint(true)
-    } finally {
-      seeds.unpersist(blocking = false)
-      seedIds.unpersist(blocking = false)
-      cand.unpersist(blocking = false)
-    }
-  }
-
-  /** [[serveRequestsTiered]] with the vector side off the INDEXED
-    * tiered layout — the full composition: term-bucket pruning on the
-    * text side; probe-cell partition pruning, per-request tier column
-    * pruning, and the pushed lang predicate on the vector side; per
-    * request k/α from the stored relation. Vector candidates are
-    * probed-cell-approximate, as for every indexed serve. */
-  def serveRequestsTieredIndexed(spark: SparkSession, sfDir: String,
-                                 emb: DataFrame, docMeta: DataFrame,
-                                 queries: Seq[(Long, Seq[String])],
-                                 filters: Seq[(Long, String)],
-                                 weights: Seq[(Long, Double)],
-                                 ks: Seq[(Long, Int)],
-                                 tiers: Seq[(Long, Int)],
-                                 layoutScales: Seq[Int], k1: Double,
-                                 b: Double, poolN: Int, nBuckets: Int,
-                                 alpha: Double, nCells: Int, d: Int,
-                                 nprobe: Int): DataFrame = {
-    val root = ensurePostingsLayout(spark, sfDir, nBuckets)
-    val fetch = tieredServeIndexedFetch(spark, sfDir, emb, filters,
-      tiers, layoutScales, poolN, alpha, nCells, d, nprobe)
-    val vecPool = TopK.window(
-        fetch.withColumnRenamed("s_full", "score"), poolN)
-      .select(col("qid"), col("id").as("doc_id"),
-        col("score").as("vscore"))
-    serveCut(spark,
-      serveFusedWith(spark, root, docMeta, queries, filters, weights,
-        k1, b, poolN, nBuckets, vecPool), ks)
-  }
-
-  /**
-   * [[serveRequestsTieredIndexed]] over the UPSERTED indexed tiered
-   * layout — the maintenance case the flat tiered upsert does not
-   * face: an updated vector's coarse cell MOVES with it, so the commit
-   * ([[graft.sources.Disaggregated.ensureTieredServeIndexedUpserted]])
-   * rewrote the old ∪ new cells' partitions (rows relocating across
-   * partitions, emptied cells swept) and everything else is
-   * byte-immutable. The serve runs unchanged: probes derive from the
-   * updated query vectors, the probed cells' partition filter hits the
-   * committed layout, each request's tier column prunes as before, and
-   * survivors rescore against the layout's updated full-precision
-   * vectors — provably the indexed tiered capstone over the updated
-   * corpus (the oracle recomputes assignment, probes, codes, and
-   * rescore from the commit view).
-   */
-  /** [[serveRequestsTieredIndexed]] against an EXPLICIT layout path
-    * (None = the shared pristine fixture) — the form the mutating-
-    * index request stream drives with its own maintained copy. */
-  def serveRequestsTieredIndexedOff(spark: SparkSession, sfDir: String,
-                                    layoutPath: Option[String],
-                                    emb: DataFrame, docMeta: DataFrame,
-                                    queries: Seq[(Long, Seq[String])],
-                                    filters: Seq[(Long, String)],
-                                    weights: Seq[(Long, Double)],
-                                    ks: Seq[(Long, Int)],
-                                    tiers: Seq[(Long, Int)],
-                                    layoutScales: Seq[Int], k1: Double,
-                                    b: Double, poolN: Int, nBuckets: Int,
-                                    alpha: Double, nCells: Int, d: Int,
-                                    nprobe: Int): DataFrame = {
-    val root = ensurePostingsLayout(spark, sfDir, nBuckets)
-    val fetch = tieredServeIndexedFetch(spark, sfDir, emb, filters,
-      tiers, layoutScales, poolN, alpha, nCells, d, nprobe, layoutPath)
-    val vecPool = TopK.window(
-        fetch.withColumnRenamed("s_full", "score"), poolN)
-      .select(col("qid"), col("id").as("doc_id"),
-        col("score").as("vscore"))
-    serveCut(spark,
-      serveFusedWith(spark, root, docMeta, queries, filters, weights,
-        k1, b, poolN, nBuckets, vecPool), ks)
-  }
-
-  def serveRequestsTieredIndexedUpserted(spark: SparkSession,
-                                         sfDir: String, emb: DataFrame,
-                                         docMeta: DataFrame,
-                                         queries: Seq[(Long, Seq[String])],
-                                         filters: Seq[(Long, String)],
-                                         weights: Seq[(Long, Double)],
-                                         ks: Seq[(Long, Int)],
-                                         tiers: Seq[(Long, Int)],
-                                         layoutScales: Seq[Int],
-                                         k1: Double, b: Double,
-                                         poolN: Int, nBuckets: Int,
-                                         alpha: Double, nCells: Int,
-                                         d: Int, nprobe: Int,
-                                         mod: Int): DataFrame = {
-    val layout = graft.sources.Disaggregated
-      .ensureTieredServeIndexedUpserted(spark, sfDir, layoutScales,
-        nCells, d, mod)
-    val embUpd = emb.select(col("vec_id"),
-      when(col("vec_id") % mod === 0,
-        transform(col("embedding"), x => -x))
-        .otherwise(col("embedding")).as("embedding"),
-      col("label"))
-    serveRequestsTieredIndexedOff(spark, sfDir, Some(layout), embUpd,
-      docMeta, queries, filters, weights, ks, tiers, layoutScales, k1,
-      b, poolN, nBuckets, alpha, nCells, d, nprobe)
-  }
-
-  /** [[serveRequestsTieredIndexedMetrics]] over the UPSERTED indexed
-    * layout — the committed index's ledger where the commit is visible
-    * in EVERY vector-side column: probes derive from the commit view's
-    * query vectors, `pc_rows`/`v_cands` count the COMMITTED layout's
-    * cell occupancies (rows that MOVED cells with the commit are
-    * counted where they now live), and `fetched` reflects the
-    * commit-view seeds/survivors — so bytes differ from the pristine
-    * indexed ledger exactly through the moved rows' cells. */
-  def serveRequestsTieredIndexedUpsertedMetrics(
-      spark: SparkSession, sfDir: String, emb: DataFrame,
-      docMeta: DataFrame, queries: Seq[(Long, Seq[String])],
-      filters: Seq[(Long, String)], weights: Seq[(Long, Double)],
-      ks: Seq[(Long, Int)], tiers: Seq[(Long, Int)],
-      layoutScales: Seq[Int], k1: Double, b: Double, poolN: Int,
-      nBuckets: Int, alpha: Double, nCells: Int, d: Int, nprobe: Int,
-      mod: Int): DataFrame = {
-    val layout = graft.sources.Disaggregated
-      .ensureTieredServeIndexedUpserted(spark, sfDir, layoutScales,
-        nCells, d, mod)
-    val embUpd = emb.select(col("vec_id"),
-      when(col("vec_id") % mod === 0,
-        transform(col("embedding"), x => -x))
-        .otherwise(col("embedding")).as("embedding"),
-      col("label"))
-    serveRequestsTieredIndexedMetrics(spark, sfDir, embUpd, docMeta,
-      queries, filters, weights, ks, tiers, layoutScales, k1, b, poolN,
-      nBuckets, alpha, nCells, d, nprobe, Some(layout))
-  }
-
-  /** [[serveRequestsTieredIndexed]] over the DELETED indexed layout —
-    * the delete verb on the fully-composed store: the tombstoned ids'
-    * rows dropped from their stored cells ([[graft.sources
-    * .Disaggregated.commitServeTierIndexedDeletes]]; only those cells
-    * rewritten, emptied cells swept), the coarse quantizer left STALE
-    * (surviving rows keep their cells — the Lucene contract), queries
-    * from the embeddings table, probes unchanged. Candidates = each
-    * qid's probed cells ∩ lang over the surviving rows. */
-  def serveRequestsTieredIndexedDeleted(spark: SparkSession,
-                                        sfDir: String, emb: DataFrame,
-                                        docMeta: DataFrame,
-                                        queries: Seq[(Long, Seq[String])],
-                                        filters: Seq[(Long, String)],
-                                        weights: Seq[(Long, Double)],
-                                        ks: Seq[(Long, Int)],
-                                        tiers: Seq[(Long, Int)],
-                                        layoutScales: Seq[Int],
-                                        k1: Double, b: Double,
-                                        poolN: Int, nBuckets: Int,
-                                        alpha: Double, nCells: Int,
-                                        d: Int, nprobe: Int,
-                                        mod: Int): DataFrame = {
-    val layout = graft.sources.Disaggregated
-      .ensureTieredServeIndexedDeleted(spark, sfDir, layoutScales,
-        nCells, d, mod)
-    serveRequestsTieredIndexedOff(spark, sfDir, Some(layout), emb,
-      docMeta, queries, filters, weights, ks, tiers, layoutScales, k1,
-      b, poolN, nBuckets, alpha, nCells, d, nprobe)
-  }
-
-  /**
-   * DELETE + TIME TRAVEL on the INDEXED tiered layout — the verb pair
-   * composed on the cell-partitioned store: delete commits recorded in
-   * the layout's versioned log, snapshot `asOf` served merge-on-read
-   * off the PRISTINE indexed base with the applied tombstone prefix
-   * anti-joined out. Cell assignment of the SURVIVORS stays stale (a
-   * delete never moves rows — the Lucene contract the physically
-   * deleted layout also keeps), probes derive from the table's query
-   * vectors (deletes never rewrite external probes), and base cell
-   * files are byte-immutable per snapshot. The prefix anti-join is
-   * AQE-sized, never broadcast-hinted.
-   */
-  def serveRequestsTieredIndexedDeletedAsOf(spark: SparkSession,
-                                            sfDir: String,
-                                            emb: DataFrame,
-                                            docMeta: DataFrame,
-                                            queries: Seq[(Long, Seq[String])],
-                                            filters: Seq[(Long, String)],
-                                            weights: Seq[(Long, Double)],
-                                            ks: Seq[(Long, Int)],
-                                            tiers: Seq[(Long, Int)],
-                                            layoutScales: Seq[Int],
-                                            k1: Double, b: Double,
-                                            poolN: Int, nBuckets: Int,
-                                            alpha: Double, nCells: Int,
-                                            d: Int, nprobe: Int,
-                                            mod: Int,
-                                            asOf: Int): DataFrame = {
-    val root = ensurePostingsLayout(spark, sfDir, nBuckets)
-    val path = graft.sources.Disaggregated
-      .ensureTieredServeIndexedFixture(spark, sfDir, layoutScales,
-        nCells, d)
-    val delIds = spark.read.parquet(graft.operators.Pq
-        .ensureVersionedTombstones(spark, path, mod, idCol = "id"))
-      .filter(col("commit_v") <= asOf)
-      .select(col("id"))
-    val view = spark.read.parquet(path)
-      .join(delIds, Seq("id"), "left_anti")
-    val fetch = tieredServeIndexedFetch(spark, sfDir, emb, filters,
-      tiers, layoutScales, poolN, alpha, nCells, d, nprobe,
-      storedView = Some(view))
-    val vecPool = TopK.window(
-        fetch.withColumnRenamed("s_full", "score"), poolN)
-      .select(col("qid"), col("id").as("doc_id"),
-        col("score").as("vscore"))
-    serveCut(spark,
-      serveFusedWith(spark, root, docMeta, queries, filters, weights,
-        k1, b, poolN, nBuckets, vecPool), ks)
-  }
-
-  /**
-   * The INDEXED tiered layout's SNAPSHOT view — time travel where the
-   * commit MOVES ROWS ACROSS CELLS: the applied prefix's rows are
-   * re-derived FROM THE LAYOUT ITSELF (vector flipped, cell re-assigned
-   * from the new value, every tier's codes recomputed — the exact
-   * expression trees [[graft.sources.Disaggregated
-   * .commitServeTierIndexedUpserts]] materializes on a committed copy)
-   * and merged on read with the base minus the prefix. Base cell files
-   * are byte-immutable for every snapshot; the prefix joins are
-   * AQE-sized. Returns (snapshot rows, applied update ids).
-   */
-  private[graft] def tieredServeIndexedAsOfView(spark: SparkSession,
-                                                sfDir: String,
-                                                layoutScales: Seq[Int],
-                                                nCells: Int, d: Int,
-                                                mod: Int, asOf: Int)
-      : (DataFrame, DataFrame) = {
-    val path = graft.sources.Disaggregated
-      .ensureTieredServeIndexedFixture(spark, sfDir, layoutScales,
-        nCells, d)
-    val updIds = spark.read.parquet(graft.operators.Pq
-        .ensureVersionedTombstones(spark, path, mod, idCol = "id"))
-      .filter(col("commit_v") <= asOf)
-      .select(col("id"))
-    val stored = spark.read.parquet(path)
-    val base = stored.join(updIds, Seq("id"), "left_anti")
-    val updRows = stored.join(updIds, Seq("id"), "left_semi")
-      .select(col("id"), col("lang"),
-        transform(col("vec"), x => -x).as("vec"))
-    val newAsg = Ivf.assign(
-        updRows.select(col("id").as("vec_id"),
-          col("vec").as("embedding")), nCells, d)
-      .select(col("id"), col("cell"))
-    val recomputed = updRows.join(newAsg, Seq("id"))
-      .select(Seq(col("id"), col("lang"), col("vec"), col("cell")) ++
-        layoutScales.sorted.map { s =>
-          val mul = math.pow(2.0, s)
-          val t = if (graft.sources.Disaggregated
-            .serveTierCodeBytes(s) == 1) "byte" else "short"
-          transform(col("vec"),
-            x => floor(x * mul + lit(0.5)).cast(t)).as(s"code_$s")
-        }: _*)
-    val view = base.select(recomputed.columns.map(col): _*)
-      .unionByName(recomputed)
-    (view, updIds)
-  }
-
-  /** [[serveRequestsTieredIndexed]] at a SNAPSHOT — the as-of verb on
-    * the fully-composed store, completing time travel across every
-    * tiered form: probes derive from the snapshot's query vectors, the
-    * vector side reads the [[tieredServeIndexedAsOfView]] merge-on-read
-    * snapshot (moved rows in their snapshot cells), survivors rescore
-    * against the snapshot's full-precision vectors; base index files
-    * byte-immutable per snapshot. Hash-equal to the indexed tiered
-    * capstone rebuilt over the commit-prefix view — the oracle
-    * recomputes assignment, probes, codes, and rescore from it. */
-  def serveRequestsTieredIndexedAsOf(spark: SparkSession, sfDir: String,
-                                     emb: DataFrame, docMeta: DataFrame,
-                                     queries: Seq[(Long, Seq[String])],
-                                     filters: Seq[(Long, String)],
-                                     weights: Seq[(Long, Double)],
-                                     ks: Seq[(Long, Int)],
-                                     tiers: Seq[(Long, Int)],
-                                     layoutScales: Seq[Int], k1: Double,
-                                     b: Double, poolN: Int,
-                                     nBuckets: Int, alpha: Double,
-                                     nCells: Int, d: Int, nprobe: Int,
-                                     mod: Int, asOf: Int): DataFrame = {
-    val root = ensurePostingsLayout(spark, sfDir, nBuckets)
-    val (view, updIds) = tieredServeIndexedAsOfView(spark, sfDir,
-      layoutScales, nCells, d, mod, asOf)
-    val embAsOf = emb
-      .join(updIds.select(col("id").as("vec_id"))
-        .withColumn("upd", lit(1)), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        when(col("upd") === 1, transform(col("embedding"), x => -x))
-          .otherwise(col("embedding")).as("embedding"),
-        col("label"))
-    val fetch = tieredServeIndexedFetch(spark, sfDir, embAsOf, filters,
-      tiers, layoutScales, poolN, alpha, nCells, d, nprobe,
-      storedView = Some(view))
-    val vecPool = TopK.window(
-        fetch.withColumnRenamed("s_full", "score"), poolN)
-      .select(col("qid"), col("id").as("doc_id"),
-        col("score").as("vscore"))
-    serveCut(spark,
-      serveFusedWith(spark, root, docMeta, queries, filters, weights,
-        k1, b, poolN, nBuckets, vecPool), ks)
-  }
-
-  /** [[serveRequestsTieredIndexedMetrics]] over the DELETED indexed
-    * layout — the PROBE-AWARE retention ledger: `pc_rows` and
-    * `v_cands` derive from the committed layout's own (shrunk) cell
-    * occupancies, and the full-scan denominator counts the surviving
-    * corpus; queries from the table (the delete contract). */
-  def serveRequestsTieredIndexedDeletedMetrics(
-      spark: SparkSession, sfDir: String, emb: DataFrame,
-      docMeta: DataFrame, queries: Seq[(Long, Seq[String])],
-      filters: Seq[(Long, String)], weights: Seq[(Long, Double)],
-      ks: Seq[(Long, Int)], tiers: Seq[(Long, Int)],
-      layoutScales: Seq[Int], k1: Double, b: Double, poolN: Int,
-      nBuckets: Int, alpha: Double, nCells: Int, d: Int, nprobe: Int,
-      mod: Int): DataFrame = {
-    val layout = graft.sources.Disaggregated
-      .ensureTieredServeIndexedDeleted(spark, sfDir, layoutScales,
-        nCells, d, mod)
-    val candIds = spark.read.parquet(layout)
-      .select(col("id").as("vec_id"))
-    serveRequestsTieredIndexedMetrics(spark, sfDir, emb, docMeta,
-      queries, filters, weights, ks, tiers, layoutScales, k1, b, poolN,
-      nBuckets, alpha, nCells, d, nprobe, layoutPath = Some(layout),
-      candIds = Some(candIds))
-  }
-
-  /** Bump when the compacted as-of indexed tiered layout changes. */
-  private val TieredIndexedAsOfCompactLayoutVersion = 1
-
-  /**
-   * SNAPSHOT COMPACTION of the INDEXED tiered layout's update log —
-   * [[ensureTieredServeAsOfCompacted]] where the fold has to MOVE ROWS
-   * ACROSS CELL PARTITIONS: the merge-on-read snapshot view (prefix
-   * rows with flipped vectors, re-assigned cells, recomputed codes;
-   * everything else verbatim from the base) is materialized ONCE into
-   * a published cell-partitioned layout, so the post-compact serve's
-   * stored relation is the plain pruned scan the pristine fixture
-   * gets — probe cells as partition filters, no log join, no in-plan
-   * assignment or code recompute. Row-count conservation at publish;
-   * atomic version-keyed dir anchored on the indexed fixture.
-   */
-  def ensureTieredServeIndexedAsOfCompacted(spark: SparkSession,
-                                            sfDir: String,
-                                            layoutScales: Seq[Int],
-                                            nCells: Int, d: Int,
-                                            mod: Int,
-                                            asOf: Int): String = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.sources.Disaggregated
-      .ensureTieredServeIndexedFixture(spark, sfDir, layoutScales,
-        nCells, d)
-    val path = Paths.get(base +
-      s"_asofcmp_v${TieredIndexedAsOfCompactLayoutVersion}_m${mod}_a$asOf")
-    if (!Files.exists(path.resolve("_DONE"))) {
-      val tmp = Files.createTempDirectory(path.getParent,
-        "servetiasofcmp-")
-      val (view, _) = tieredServeIndexedAsOfView(spark, sfDir,
-        layoutScales, nCells, d, mod, asOf)
-      view
-        .repartition(col("cell")).sortWithinPartitions(col("id"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .partitionBy("cell").parquet(tmp.resolve("tiers").toString)
-      val compactN = spark.read.parquet(tmp.resolve("tiers").toString)
-        .count()
-      val baseN = spark.read.parquet(base).count()
-      require(compactN == baseN,
-        s"as-of indexed tiered compaction invariant broken: $compactN " +
-          s"rows after compact vs $baseN in the base layout")
-      Files.createFile(tmp.resolve("_DONE"))
-      try Files.move(tmp, path)
-      catch { case _: java.nio.file.FileSystemException =>
-        graft.sources.VecFiles.deleteRecursively(tmp) }
-      require(Files.exists(path.resolve("_DONE")),
-        s"compacted as-of indexed layout publish failed: $path")
-    }
-    path.toString
-  }
-
-  /** The INDEXED tiered snapshot served AFTER as-of compaction: the
-    * [[serveRequestsTieredIndexedOff]] path over the compacted
-    * cell-partitioned base — probes from the snapshot's query vectors,
-    * the stored relation a plain pruned scan. Hash-equal to
-    * [[serveRequestsTieredIndexedAsOf]], same oracle. */
-  def serveRequestsTieredIndexedAsOfCompacted(
-      spark: SparkSession, sfDir: String, emb: DataFrame,
-      docMeta: DataFrame, queries: Seq[(Long, Seq[String])],
-      filters: Seq[(Long, String)], weights: Seq[(Long, Double)],
-      ks: Seq[(Long, Int)], tiers: Seq[(Long, Int)],
-      layoutScales: Seq[Int], k1: Double, b: Double, poolN: Int,
-      nBuckets: Int, alpha: Double, nCells: Int, d: Int, nprobe: Int,
-      mod: Int, asOf: Int): DataFrame = {
-    val compacted = ensureTieredServeIndexedAsOfCompacted(spark, sfDir,
-      layoutScales, nCells, d, mod, asOf) + "/tiers"
-    val basePath = graft.sources.Disaggregated
-      .ensureTieredServeIndexedFixture(spark, sfDir, layoutScales,
-        nCells, d)
-    val updIds = spark.read.parquet(graft.operators.Pq
-        .ensureVersionedTombstones(spark, basePath, mod, idCol = "id"))
-      .filter(col("commit_v") <= asOf)
-      .select(col("id"))
-    val embAsOf = emb
-      .join(updIds.select(col("id").as("vec_id"))
-        .withColumn("upd", lit(1)), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        when(col("upd") === 1, transform(col("embedding"), x => -x))
-          .otherwise(col("embedding")).as("embedding"),
-        col("label"))
-    serveRequestsTieredIndexedOff(spark, sfDir, Some(compacted),
-      embAsOf, docMeta, queries, filters, weights, ks, tiers,
-      layoutScales, k1, b, poolN, nBuckets, alpha, nCells, d, nprobe)
-  }
-
-  /**
-   * [[serveRequestsTieredIndexed]]'s ledger — per-request bytes where
-   * ALL THREE vector-side savings are visible at once: `pc_rows`·8
-   * (the lang column read only for the qid's probed cells' rows —
-   * partition pruning), codeBytes(tier_q)·d·`v_cands` (the request's
-   * own tier's chunks, only for probed ∩ lang rows — column pruning at
-   * its tier width), 4d·`fetched` (full-precision rescue fetches),
-   * against the unfiltered-full-scan baseline N·(8+4d). The
-   * [[serveRequestsIndexedMetrics]] + [[serveRequestsTieredMetrics]]
-   * disciplines composed.
-   */
-  def serveRequestsTieredIndexedMetrics(spark: SparkSession,
-                                        sfDir: String, emb: DataFrame,
-                                        docMeta: DataFrame,
-                                        queries: Seq[(Long, Seq[String])],
-                                        filters: Seq[(Long, String)],
-                                        weights: Seq[(Long, Double)],
-                                        ks: Seq[(Long, Int)],
-                                        tiers: Seq[(Long, Int)],
-                                        layoutScales: Seq[Int],
-                                        k1: Double, b: Double,
-                                        poolN: Int, nBuckets: Int,
-                                        alpha: Double, nCells: Int,
-                                        d: Int, nprobe: Int,
-                                        layoutPath: Option[String] = None,
-                                        candIds: Option[DataFrame] = None)
-      : DataFrame = {
-    require(ks.nonEmpty,
-      "serveRequestsTieredIndexedMetrics: empty page relation")
-    require(filters.nonEmpty,
-      "serveRequestsTieredIndexedMetrics: empty filter relation")
-    import spark.implicits._
-    val root = ensurePostingsLayout(spark, sfDir, nBuckets)
-    val fetch = tieredServeIndexedFetch(spark, sfDir, emb, filters,
-      tiers, layoutScales, poolN, alpha, nCells, d, nprobe, layoutPath)
-    val vecPool = TopK.window(
-        fetch.withColumnRenamed("s_full", "score"), poolN)
-      .select(col("qid"), col("id").as("doc_id"),
-        col("score").as("vscore"))
-    val fused = serveFusedWith(spark, root, docMeta, queries, filters,
-      weights, k1, b, poolN, nBuckets, vecPool)
-    val tAgg = servePostingBytes(spark, root, queries, nBuckets)
-    // the occupancy ledgers count the SERVED layout's cells — for the
-    // committed (upserted) serve that is the committed copy, where the
-    // moved rows sit in their new cells
-    val stored = spark.read.parquet(layoutPath.getOrElse(
-      graft.sources.Disaggregated.ensureTieredServeIndexedFixture(
-        spark, sfDir, layoutScales, nCells, d)))
-    val nq = (filters.map(_._1).max + 1).toInt
-    val q = Ann.queriesOf(emb, nq).select(col("qid"), col("qvec"))
-    val probeSet = Ivf.probeCells(q, nCells, d, nprobe)
-      .select(col("qid"), col("cell"))
-    val occ = stored.groupBy(col("cell")).agg(count(lit(1)).as("occ"))
-    val pcAgg = probeSet.join(occ, Seq("cell"))
-      .groupBy(col("qid")).agg(sum(col("occ")).as("pc_rows"))
-    val qf = broadcast(filters.toDF("qid", "lang"))
-    val langOcc = stored.groupBy(col("cell"), col("lang"))
-      .agg(count(lit(1)).as("n"))
-    val vcAgg = probeSet.join(langOcc, Seq("cell"))
-      .join(qf, Seq("qid", "lang"))
-      .groupBy(col("qid")).agg(sum(col("n")).as("v_cands"))
-    val fetchAgg = fetch.groupBy(col("qid"))
-      .agg(count(lit(1)).as("fetched"))
-    val fAgg = fused.groupBy(col("qid")).agg(count(lit(1)).as("fused"))
-    // candIds overrides the full-scan denominator's id universe — the
-    // retention ledger counts the surviving corpus (the occupancy
-    // ledgers already derive from the served layout itself)
-    val nV = candIds.getOrElse(emb.select(col("vec_id"))).count()
-    val trRel = broadcast(tiers.map { case (qid, s) =>
-      (qid, s, graft.sources.Disaggregated.serveTierCodeBytes(s)
-        .toLong * d) }.toDF("qid", "tier", "b_red"))
-    val qkRel = broadcast(ks.toDF("qid", "kq"))
-    val perQid = qkRel
-      .join(trRel, Seq("qid"))
-      .join(tAgg, Seq("qid"), "left")
-      .join(pcAgg, Seq("qid"), "left")
-      .join(vcAgg, Seq("qid"), "left")
-      .join(fetchAgg, Seq("qid"), "left")
-      .join(fAgg, Seq("qid"), "left")
-      .select(col("qid"), col("tier"),
-        coalesce(col("t_cands"), lit(0L)).as("t_cands"),
-        coalesce(col("pc_rows"), lit(0L)).as("pc_rows"),
-        coalesce(col("v_cands"), lit(0L)).as("v_cands"),
-        coalesce(col("fetched"), lit(0L)).as("fetched"),
-        coalesce(col("fused"), lit(0L)).as("fused"),
-        least(col("kq").cast("long"),
-          coalesce(col("fused"), lit(0L))).as("page"),
-        coalesce(col("bytes_text"), lit(0L)).as("bytes_text"),
-        (coalesce(col("pc_rows"), lit(0L)) * lit(8L) +
-          col("b_red") * coalesce(col("v_cands"), lit(0L)) +
-          lit(4L * d) * coalesce(col("fetched"), lit(0L)))
-          .as("bytes_vec"),
-        lit((8L + 4L * d) * nV).as("bytes_vec_full"))
-    val total = perQid.agg(
-      sum(col("t_cands")).as("t_cands"),
-      sum(col("pc_rows")).as("pc_rows"),
-      sum(col("v_cands")).as("v_cands"),
-      sum(col("fetched")).as("fetched"),
-      sum(col("fused")).as("fused"),
-      sum(col("page")).as("page"),
-      sum(col("bytes_text")).as("bytes_text"),
-      sum(col("bytes_vec")).as("bytes_vec"),
-      sum(col("bytes_vec_full")).as("bytes_vec_full"))
-      .select(lit(-1L).as("qid") +: lit(-1).as("tier") +:
-        perQid.columns.filterNot(Set("qid", "tier"))
-          .map(col).toSeq: _*)
+        lit((8L + 4L * d) * nV).as("bytes_vec_full")): _*)
+    val parts = perQid.columns.filterNot(Set("qid", "tier"))
+    val total = perQid.agg(sum(col(parts.head)).as(parts.head),
+        parts.tail.map(c => sum(col(c)).as(c)): _*)
+      .select(lit(-1L).as("qid") +: lit(-1).as("tier") +: parts.map(col)
+        .toSeq: _*)
     perQid.unionByName(total)
       .withColumn("save", lit(1.0) -
         (col("bytes_text") + col("bytes_vec")).cast("double") /

@@ -17,7 +17,7 @@ import graft.functions.VectorOps
  */
 object Disaggregated {
 
-  /** Materialize (id, vec, rvec, rword, delta, bb) as one Parquet table,
+  /** Materialize (id, vec, rvec, delta, bb) as one Parquet table,
     * sorted by id within files so id-equi-joins benefit from row-group
     * min/max skipping on the rescore fetch. The reduction keeps the full
     * exponent (reference refinement semantics: keep_e is an accounting
@@ -29,7 +29,6 @@ object Disaggregated {
         col("id"),
         col("vec"),
         VectorOps.reduceVec(col("vec"), 5, keepM).as("rvec"),
-        VectorOps.reduceVecWords(col("vec"), 5, keepM).as("rword"),
         VectorOps.deltaVec(col("vec"), keepM).as("delta"))
       .withColumn("bb",
         graft.operators.Refine.cosL2Stat(col("vec"), col("rvec")))
@@ -56,7 +55,7 @@ object Disaggregated {
   /** Bump when [[write]]'s layout or the fixture synthesis changes: the
     * version is part of the cache path, so stale tables from an older
     * code revision can never be silently reused. */
-  private val LayoutVersion = 2
+  private val LayoutVersion = 3
 
   def ensureFixture(spark: SparkSession, sfDir: String, d: Int,
                     keepM: Int): String = {

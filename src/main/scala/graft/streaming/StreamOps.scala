@@ -1006,7 +1006,7 @@ object StreamOps {
   /** Bump whenever anything upstream of a request-stream drain changes
     * semantics: the serves ([[graft.operators.Search
     * .serveRequestsOffPostings]], [[graft.operators.Search
-    * .serveRequestsTieredOff]] and its indexed twin), the commit verbs,
+    * .serveRequestsTiered]]), the commit verbs,
     * or the drain itself. The landing and drain dirs of all eight
     * request streams ([[serveRequestsOverStream]],
     * [[serveRequestsTieredOverStream]] and every plan of
@@ -1226,7 +1226,10 @@ object StreamOps {
                                     b: Double, poolN: Int,
                                     nBuckets: Int,
                                     alpha: Double): DataFrame = {
-    graft.operators.Search.ensurePostingsLayout(spark, sfDir, nBuckets)
+    import graft.operators.Search
+    val req = Search.TieredRequests(queries, filters, weights, ks, tiers,
+      layoutScales, k1, b, poolN, nBuckets, alpha)
+    Search.ensurePostingsLayout(spark, sfDir, nBuckets)
     graft.sources.Disaggregated.ensureTieredServeFixture(spark, sfDir,
       layoutScales)
     drainRequestStream(spark, sfDir,
@@ -1234,14 +1237,8 @@ object StreamOps {
         k1, b, poolN, nBuckets, alpha),
       ks.map(_._1).sorted.grouped(StaticRequestsPerShard).toSeq) {
       (_, _, arrived) =>
-      graft.operators.Search.serveRequestsTiered(spark, sfDir,
-        emb, docMeta,
-        queries.filter(kv => arrived(kv._1)),
-        filters.filter(kv => arrived(kv._1)),
-        weights.filter(kv => arrived(kv._1)),
-        ks.filter(kv => arrived(kv._1)),
-        tiers.filter(kv => arrived(kv._1)),
-        layoutScales, k1, b, poolN, nBuckets, alpha)
+      Search.serveRequestsTiered(spark, sfDir, emb, docMeta,
+        req.slice(arrived), None, Search.TierSnapshot.Pristine)
     }
   }
 
@@ -1332,8 +1329,11 @@ object StreamOps {
       indexed: Option[(Int, Int, Int)],
       plan: Seq[ServePhase]): DataFrame = {
     import graft.sources.Disaggregated
+    import graft.operators.Search
     checkServePlan(plan, ks.map(_._1).toSet)
-    graft.operators.Search.ensurePostingsLayout(spark, sfDir, nBuckets)
+    val req = Search.TieredRequests(queries, filters, weights, ks, tiers,
+      layoutScales, k1, b, poolN, nBuckets, alpha)
+    Search.ensurePostingsLayout(spark, sfDir, nBuckets)
     def layout(dir: java.nio.file.Path): String =
       dir.resolve("tiers").toString
     val ids = emb.select(col("vec_id").as("id"))
@@ -1379,23 +1379,9 @@ object StreamOps {
       val negMod = plan(k).negMod
       val embView =
         if (negMod == 0) emb
-        else emb.select(col("vec_id"),
-          when(col("vec_id") % negMod === 0,
-            transform(col("embedding"), x => -x))
-            .otherwise(col("embedding")).as("embedding"),
-          col("label"))
-      def slice[V](rel: Seq[(Long, V)]) = rel.filter(kv => arrived(kv._1))
-      indexed match {
-        case None => graft.operators.Search.serveRequestsTieredOff(spark,
-          sfDir, Some(layout(dir)), embView, docMeta, slice(queries),
-          slice(filters), slice(weights), slice(ks), slice(tiers),
-          layoutScales, k1, b, poolN, nBuckets, alpha)
-        case Some((nCells, d, nprobe)) =>
-          graft.operators.Search.serveRequestsTieredIndexedOff(spark,
-            sfDir, Some(layout(dir)), embView, docMeta, slice(queries),
-            slice(filters), slice(weights), slice(ks), slice(tiers),
-            layoutScales, k1, b, poolN, nBuckets, alpha, nCells, d, nprobe)
-      }
+        else Search.negated(emb, col("vec_id") % negMod === 0)
+      Search.serveRequestsTiered(spark, sfDir, embView, docMeta,
+        req.slice(arrived), indexed, Search.TierSnapshot.At(layout(dir)))
     }
   }
 

@@ -1173,163 +1173,147 @@ class PlanSpec extends AnyFunSuite {
         "tombstoned id")
   }
 
-  test("tiered as-of serve: base files byte-immutable across snapshots, snapshot 1 == committed-layout serve") {
-    import org.apache.spark.sql.functions.col
-    import SparkEntry.{ServeTierLayoutScales, UpsertMod}
-    import graft.sources.Disaggregated
-    val base = Disaggregated.ensureTieredServeFixture(spark, dir,
-      ServeTierLayoutScales)
-    def files(): Map[String, (Long, Long)] = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(java.nio.file.Paths.get(base))
-        .iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(f => f.getFileName.toString ->
-          (java.nio.file.Files.size(f),
-            java.nio.file.Files.getLastModifiedTime(f).toMillis))
-        .toMap
-    }
-    val before = files()
-    // snapshot 0 (no commit applied) serves the pristine capstone...
-    val asof0 = graft.operators.Search.serveRequestsTieredAsOf(spark,
-      dir, Tables.embeddings(spark, dir), Tables.documents(spark, dir),
-      SparkEntry.Bm25MultiQueries, SparkEntry.FilterMultiRel,
-      SparkEntry.FusionMultiRel, SparkEntry.PageKMultiRel,
-      SparkEntry.ServeTierRel, ServeTierLayoutScales, SparkEntry.Bm25K1,
-      SparkEntry.Bm25B, SparkEntry.RrfPoolN, SparkEntry.PostBuckets,
-      SparkEntry.refineParams("cos_l1").alpha, UpsertMod, asOf = 0)
+  // ---- tiered snapshots, on each layout kind ---------------------------
+  // The partitioned test keeps its name; the indexed one appends the
+  // kind. Both run the same body over Search.serveRequestsTiered.
+
+  private val TieredKinds: Seq[(String, Option[(Int, Int, Int)])] = Seq(
+    "" -> None,
+    " [indexed]" ->
+      Some((SparkEntry.IvfCells, SparkEntry.EmbD, SparkEntry.IvfProbe)))
+
+  private def tieredRows(indexed: Option[(Int, Int, Int)],
+                         snap: graft.operators.Search.TierSnapshot)
+      : Set[Seq[Any]] = {
+    import SparkEntry._
+    graft.operators.Search.serveRequestsTiered(spark, dir,
+      Tables.embeddings(spark, dir), Tables.documents(spark, dir),
+      graft.operators.Search.TieredRequests(Bm25MultiQueries,
+        FilterMultiRel, FusionMultiRel, PageKMultiRel, ServeTierRel,
+        ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
+        refineParams("cos_l1").alpha), indexed, snap)
       .collect().map(_.toSeq).toSet
-    val pristine = SparkEntry.queries("q_serve_requests_tiered")(
-      spark, dir).collect().map(_.toSeq).toSet
-    assert(asof0 == pristine && asof0.nonEmpty,
-      "tiered asOf 0 diverged from the pristine tiered capstone")
-    // ...snapshot 1 IS the tiered capstone over a layout physically
-    // COMMITTED at the prefix's mod (ids ≡ 0 mod 2·UpsertMod) — the
-    // merge-on-read view equals the rebuilt/committed layout's serve
-    val asof1 = SparkEntry.queries("q_serve_requests_tiered_asof")(
-      spark, dir).collect().map(_.toSeq).toSet
-    val committed = graft.operators.Search.serveRequestsTieredUpserted(
-      spark, dir, Tables.embeddings(spark, dir),
-      Tables.documents(spark, dir), SparkEntry.Bm25MultiQueries,
-      SparkEntry.FilterMultiRel, SparkEntry.FusionMultiRel,
-      SparkEntry.PageKMultiRel, SparkEntry.ServeTierRel,
-      ServeTierLayoutScales, SparkEntry.Bm25K1, SparkEntry.Bm25B,
-      SparkEntry.RrfPoolN, SparkEntry.PostBuckets,
-      SparkEntry.refineParams("cos_l1").alpha, 2 * UpsertMod)
-      .collect().map(_.toSeq).toSet
-    assert(asof1 == committed && asof1.nonEmpty,
-      "tiered asOf 1 != the serve over the layout committed at the " +
-        "prefix's mod")
-    // merge-on-read served both snapshots off byte-immutable base files
-    assert(files() == before,
-      "serving tiered snapshots mutated the base layout's files")
   }
 
-  test("tiered as-of compaction: stored side recomputes no codes (no floor in-plan), snapshot unchanged") {
-    import SparkEntry.{ServeTierLayoutScales, UpsertMod, TieredAsOfSnapshot}
-    val compactDf = graft.operators.Search.serveRequestsTieredAsOfCompacted(
-      spark, dir, Tables.embeddings(spark, dir),
-      Tables.documents(spark, dir), SparkEntry.Bm25MultiQueries,
-      SparkEntry.FilterMultiRel, SparkEntry.FusionMultiRel,
-      SparkEntry.PageKMultiRel, SparkEntry.ServeTierRel,
-      ServeTierLayoutScales, SparkEntry.Bm25K1, SparkEntry.Bm25B,
-      SparkEntry.RrfPoolN, SparkEntry.PostBuckets,
-      SparkEntry.refineParams("cos_l1").alpha, UpsertMod,
-      TieredAsOfSnapshot)
-    // the snapshot-OPTIMIZE contract, asserted on the STORED RELATIONS
-    // (the serve pipeline ends in a localCheckpoint, so its plan text
-    // is lineage-truncated): the merge-on-read snapshot view joins the
-    // update log and rebuilds every tier's codes in-plan (floor over
-    // the prefix join); the compacted layout's relation is a plain
-    // scan — no join, no code recompute, the snapshot's bytes AT REST
-    val (view, _) = graft.operators.Search.tieredServeAsOfView(spark,
-      dir, ServeTierLayoutScales, UpsertMod, TieredAsOfSnapshot)
-    val viewPlan = view.queryExecution.analyzed.toString
-    assert(viewPlan.toLowerCase.contains("floor(") &&
-        viewPlan.contains("Join"),
-      s"merge-on-read snapshot view no longer joins the log and " +
-        s"recomputes codes — the compaction discriminator is vacuous:\n" +
-        viewPlan)
-    val compactedRoot = graft.operators.Search
-      .ensureTieredServeAsOfCompacted(spark, dir, ServeTierLayoutScales,
-        UpsertMod, TieredAsOfSnapshot) + "/tiers"
-    val storedRel = spark.read.parquet(compactedRoot)
-    val storedPlan = storedRel.queryExecution.analyzed.toString
-    assert(!storedPlan.toLowerCase.contains("floor(") &&
-        !storedPlan.contains("Join"),
-      s"compacted as-of relation is not a plain scan:\n$storedPlan")
-    // the compacted bytes ARE the snapshot: row-identical to the
-    // merge-on-read view (stored codes verbatim, prefix recomputed)
-    val viewRows = view.collect().map(_.toSeq).toSet
-    val storedRows = storedRel.select(view.columns.map(
-        org.apache.spark.sql.functions.col): _*)
-      .collect().map(_.toSeq).toSet
-    assert(storedRows == viewRows && viewRows.nonEmpty,
-      "compacted as-of layout rows != the merge-on-read snapshot view")
-    // and compaction never changes the snapshot
-    val a = compactDf.collect().map(_.toSeq).toSet
-    val b = SparkEntry.queries("q_serve_requests_tiered_asof")(
-      spark, dir).collect().map(_.toSeq).toSet
-    assert(a == b && a.nonEmpty,
-      "as-of compacted tiered serve != the merge-on-read snapshot")
+  /** (size, mtime) of every parquet file under the kind's pristine
+    * fixture, partition subdirectories included. */
+  private def tieredBaseFiles(indexed: Option[(Int, Int, Int)])
+      : Map[String, (Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    import graft.sources.Disaggregated
+    val base = java.nio.file.Paths.get(indexed match {
+      case None => Disaggregated.ensureTieredServeFixture(spark, dir,
+        SparkEntry.ServeTierLayoutScales)
+      case Some((nCells, d, _)) => Disaggregated
+        .ensureTieredServeIndexedFixture(spark, dir,
+          SparkEntry.ServeTierLayoutScales, nCells, d)
+    })
+    val files = java.nio.file.Files.walk(base).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(f => base.relativize(f).toString ->
+        (java.nio.file.Files.size(f),
+          java.nio.file.Files.getLastModifiedTime(f).toMillis))
+      .toMap
+    assert(files.nonEmpty, s"no parquet files under $base")
+    files
   }
 
-  test("tiered delete-as-of: asOf 0 == pristine capstone, asOf 2 == physically deleted layout's serve, base byte-immutable") {
-    import SparkEntry.{ServeTierLayoutScales, DeleteMod}
-    import graft.sources.Disaggregated
-    val base = Disaggregated.ensureTieredServeFixture(spark, dir,
-      ServeTierLayoutScales)
-    def files(): Map[String, (Long, Long)] = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(java.nio.file.Paths.get(base))
-        .iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(f => f.getFileName.toString ->
-          (java.nio.file.Files.size(f),
-            java.nio.file.Files.getLastModifiedTime(f).toMillis))
-        .toMap
+  TieredKinds.foreach { case (kind, indexed) =>
+    test("tiered as-of serve: base files byte-immutable across snapshots, snapshot 1 == committed-layout serve" + kind) {
+      import SparkEntry.UpsertMod
+      import graft.operators.Search.TierSnapshot._
+      val before = tieredBaseFiles(indexed)
+      // snapshot 0 (no commit applied) serves the pristine capstone...
+      val pristine = tieredRows(indexed, Pristine)
+      assert(tieredRows(indexed, UpsertLog(UpsertMod, 0)) == pristine &&
+          pristine.nonEmpty,
+        "tiered asOf 0 diverged from the pristine tiered capstone")
+      // ...snapshot 1 IS the tiered capstone over a layout physically
+      // COMMITTED at the prefix's mod (ids ≡ 0 mod 2·UpsertMod) — the
+      // merge-on-read view equals the committed layout's serve
+      val asof1 = tieredRows(indexed, UpsertLog(UpsertMod, 1))
+      assert(asof1 == tieredRows(indexed, Upserted(2 * UpsertMod)) &&
+          asof1.nonEmpty,
+        "tiered asOf 1 != the serve over the layout committed at the " +
+          "prefix's mod")
+      // merge-on-read served both snapshots off byte-immutable base files
+      assert(tieredBaseFiles(indexed) == before,
+        "serving tiered snapshots mutated the base layout's files")
     }
-    val before = files()
-    def asOf(v: Int): Set[Seq[Any]] =
-      graft.operators.Search.serveRequestsTieredDeletedAsOf(spark, dir,
-        Tables.embeddings(spark, dir), Tables.documents(spark, dir),
-        SparkEntry.Bm25MultiQueries, SparkEntry.FilterMultiRel,
-        SparkEntry.FusionMultiRel, SparkEntry.PageKMultiRel,
-        SparkEntry.ServeTierRel, ServeTierLayoutScales,
-        SparkEntry.Bm25K1, SparkEntry.Bm25B, SparkEntry.RrfPoolN,
-        SparkEntry.PostBuckets, SparkEntry.refineParams("cos_l1").alpha,
-        DeleteMod, asOf = v).collect().map(_.toSeq).toSet
-    // snapshot 0: no tombstone applied — the pristine capstone through
-    // the delete-as-of path
-    val pristine = SparkEntry.queries("q_serve_requests_tiered")(
-      spark, dir).collect().map(_.toSeq).toSet
-    assert(asOf(0) == pristine && pristine.nonEmpty,
-      "tiered delete asOf 0 diverged from the pristine tiered capstone")
-    // snapshot 2 (the full delete set applied) row-equals the serve
-    // over the layout PHYSICALLY committed with the delete — the
-    // merge-on-read anti-join view == the rewritten-bucket layout
-    val committed = SparkEntry.queries("q_serve_requests_tiered_delete")(
-      spark, dir).collect().map(_.toSeq).toSet
-    assert(asOf(2) == committed && committed.nonEmpty,
-      "tiered delete asOf 2 != the physically deleted layout's serve")
-    // and the snapshots differ (the tombstones actually bite somewhere)
-    assert(asOf(2) != pristine,
-      "tiered delete snapshots indistinguishable — vacuous fixture")
-    assert(files() == before,
-      "serving tiered delete snapshots mutated the base layout's files")
+
+    test("tiered as-of compaction: stored side recomputes no codes (no floor in-plan), snapshot unchanged" + kind) {
+      import SparkEntry.{ServeTierLayoutScales, UpsertMod, TieredAsOfSnapshot}
+      import graft.operators.Search
+      import graft.operators.Search.TierSnapshot.UpsertLog
+      val compactRows = tieredRows(indexed,
+        UpsertLog(UpsertMod, TieredAsOfSnapshot, compacted = true))
+      // the snapshot-OPTIMIZE contract, asserted on the STORED RELATIONS
+      // (the serve pipeline ends in a localCheckpoint, so its plan text
+      // is lineage-truncated): the merge-on-read snapshot view joins the
+      // update log and rebuilds every tier's codes in-plan (floor over
+      // the prefix join); the compacted layout's relation is a plain
+      // scan — no join, no code recompute, the snapshot's bytes AT REST
+      val view = Search.resolveTiered(spark, dir,
+        Tables.embeddings(spark, dir), ServeTierLayoutScales, indexed,
+        UpsertLog(UpsertMod, TieredAsOfSnapshot)).stored
+      val viewPlan = view.queryExecution.analyzed.toString
+      assert(viewPlan.toLowerCase.contains("floor(") &&
+          viewPlan.contains("Join"),
+        s"merge-on-read snapshot view no longer joins the log and " +
+          s"recomputes codes — the compaction discriminator is vacuous:\n" +
+          viewPlan)
+      val storedRel = spark.read.parquet(Search.ensureTieredServeCompacted(
+        spark, dir, ServeTierLayoutScales, indexed, UpsertMod,
+        TieredAsOfSnapshot) + "/tiers")
+      val storedPlan = storedRel.queryExecution.analyzed.toString
+      assert(!storedPlan.toLowerCase.contains("floor(") &&
+          !storedPlan.contains("Join"),
+        s"compacted as-of relation is not a plain scan:\n$storedPlan")
+      // the compacted bytes ARE the snapshot: row-identical to the
+      // merge-on-read view (stored codes verbatim, prefix recomputed)
+      val viewRows = view.collect().map(_.toSeq).toSet
+      val storedRows = storedRel.select(view.columns.map(
+          org.apache.spark.sql.functions.col): _*)
+        .collect().map(_.toSeq).toSet
+      assert(storedRows == viewRows && viewRows.nonEmpty,
+        "compacted as-of layout rows != the merge-on-read snapshot view")
+      // and compaction never changes the snapshot
+      assert(compactRows ==
+          tieredRows(indexed, UpsertLog(UpsertMod, TieredAsOfSnapshot)) &&
+          compactRows.nonEmpty,
+        "as-of compacted tiered serve != the merge-on-read snapshot")
+    }
+
+    test("tiered delete-as-of: asOf 0 == pristine capstone, asOf 2 == physically deleted layout's serve, base byte-immutable" + kind) {
+      import SparkEntry.DeleteMod
+      import graft.operators.Search.TierSnapshot._
+      val before = tieredBaseFiles(indexed)
+      // snapshot 0: no tombstone applied — the pristine capstone through
+      // the delete-as-of path
+      val pristine = tieredRows(indexed, Pristine)
+      assert(tieredRows(indexed, DeleteLog(DeleteMod, 0)) == pristine &&
+          pristine.nonEmpty,
+        "tiered delete asOf 0 diverged from the pristine tiered capstone")
+      // snapshot 2 (the full delete set applied) row-equals the serve
+      // over the layout PHYSICALLY committed with the delete — the
+      // merge-on-read anti-join view == the rewritten layout
+      val asof2 = tieredRows(indexed, DeleteLog(DeleteMod, 2))
+      assert(asof2 == tieredRows(indexed, Deleted(DeleteMod)) &&
+          asof2.nonEmpty,
+        "tiered delete asOf 2 != the physically deleted layout's serve")
+      // and the snapshots differ (the tombstones actually bite somewhere)
+      assert(asof2 != pristine,
+        "tiered delete snapshots indistinguishable — vacuous fixture")
+      assert(tieredBaseFiles(indexed) == before,
+        "serving tiered delete snapshots mutated the base layout's files")
+    }
   }
 
   test("mixed-verb log endpoints: asOf 0 == pristine, asOf 1 == upsert-committed serve, asOf 2 drops the tombstones") {
-    import SparkEntry.{ServeTierLayoutScales, UpsertMod, DeleteMod}
+    import SparkEntry.{UpsertMod, DeleteMod}
+    import graft.operators.Search.TierSnapshot._
     def asOf(v: Int): Set[Seq[Any]] =
-      graft.operators.Search.serveRequestsTieredMixedAsOf(spark, dir,
-        Tables.embeddings(spark, dir), Tables.documents(spark, dir),
-        SparkEntry.Bm25MultiQueries, SparkEntry.FilterMultiRel,
-        SparkEntry.FusionMultiRel, SparkEntry.PageKMultiRel,
-        SparkEntry.ServeTierRel, ServeTierLayoutScales,
-        SparkEntry.Bm25K1, SparkEntry.Bm25B, SparkEntry.RrfPoolN,
-        SparkEntry.PostBuckets, SparkEntry.refineParams("cos_l1").alpha,
-        UpsertMod, DeleteMod, asOf = v).collect().map(_.toSeq).toSet
+      tieredRows(None, MixedLog(UpsertMod, DeleteMod, asOf = v))
     // snapshot 0: no commit applied — pristine through the mixed path
     val pristine = SparkEntry.queries("q_serve_requests_tiered")(
       spark, dir).collect().map(_.toSeq).toSet

@@ -18,6 +18,16 @@ class SearchSpec extends AnyFunSuite {
   private def emb = Tables.embeddings(spark, dir)
   private def docs = Tables.documents(spark, dir)
 
+  // the tiered serve's request bundle as SparkEntry binds it
+  private def tieredReq: Search.TieredRequests = {
+    import SparkEntry._
+    Search.TieredRequests(Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
+      PageKMultiRel, ServeTierRel, ServeTierLayoutScales, Bm25K1, Bm25B,
+      RrfPoolN, PostBuckets, refineParams("cos_l1").alpha)
+  }
+  private val indexedKind =
+    Some((SparkEntry.IvfCells, SparkEntry.EmbD, SparkEntry.IvfProbe))
+
   test("filteredTopK returns only candidates passing the metadata predicate") {
     val langs = Seq("fr", "de")
     val r = Search.filteredTopK(emb, docs, nq = 5, k = 10, langs).collect()
@@ -853,10 +863,8 @@ class SearchSpec extends AnyFunSuite {
         Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
         ServeTierRel, ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN,
         PostBuckets, alpha).collect().map(_.toSeq).toSet
-    val batch = Search.serveRequestsTiered(spark, dir, emb, docs,
-      Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-      ServeTierRel, ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN,
-      PostBuckets, alpha).collect().map(_.toSeq).toSet
+    val batch = Search.serveRequestsTiered(spark, dir, emb, docs, tieredReq,
+      None, Search.TierSnapshot.Pristine).collect().map(_.toSeq).toSet
     // the tiered vector pipeline is per-request independent (each
     // qid's tier CASE, seeds, tau0, survivors, min-max are functions
     // of its own rows over the static layout) — so the per-trigger
@@ -889,44 +897,30 @@ class SearchSpec extends AnyFunSuite {
 
   test("mutating request stream, 3 nested upsert commits: drain equals the per-phase batch serves") {
     import SparkEntry._
-    val alpha = refineParams("cos_l1").alpha
     val plan = StreamMultiPlan
     assertDrainIsPhaseUnion(plan, None) { k =>
-      if (k == 0) Search.serveRequestsTiered(spark, dir, emb, docs,
-        Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-        ServeTierRel, ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN,
-        PostBuckets, alpha)
-      else Search.serveRequestsTieredUpserted(spark, dir, emb, docs,
-        Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-        ServeTierRel, ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN,
-        PostBuckets, alpha, plan(k).negMod)
+      Search.serveRequestsTiered(spark, dir, emb, docs, tieredReq, None,
+        if (k == 0) Search.TierSnapshot.Pristine
+        else Search.TierSnapshot.Upserted(plan(k).negMod))
     }
   }
 
   test("mutating request stream, upsert then delete: drain equals the per-snapshot mixed serves") {
     import SparkEntry._
-    val alpha = refineParams("cos_l1").alpha
     assertDrainIsPhaseUnion(StreamMixedPlan, None) { k =>
-      Search.serveRequestsTieredMixedAsOf(spark, dir, emb, docs,
-        Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-        ServeTierRel, ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN,
-        PostBuckets, alpha, UpsertMod, DeleteMod, asOf = k)
+      Search.serveRequestsTiered(spark, dir, emb, docs, tieredReq, None,
+        Search.TierSnapshot.MixedLog(UpsertMod, DeleteMod, asOf = k))
     }
   }
 
   test("mutating request stream on the indexed layout: rows moved across cells, drain equals the per-phase indexed serves") {
     import SparkEntry._
-    val alpha = refineParams("cos_l1").alpha
     val plan = StreamMultiPlan
-    assertDrainIsPhaseUnion(plan, Some((IvfCells, EmbD, IvfProbe))) { k =>
-      if (k == 0) Search.serveRequestsTieredIndexed(spark, dir, emb, docs,
-        Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-        ServeTierRel, ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN,
-        PostBuckets, alpha, IvfCells, EmbD, IvfProbe)
-      else Search.serveRequestsTieredIndexedUpserted(spark, dir, emb, docs,
-        Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-        ServeTierRel, ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN,
-        PostBuckets, alpha, IvfCells, EmbD, IvfProbe, plan(k).negMod)
+    assertDrainIsPhaseUnion(plan, indexedKind) { k =>
+      Search.serveRequestsTiered(spark, dir, emb, docs, tieredReq,
+        indexedKind,
+        if (k == 0) Search.TierSnapshot.Pristine
+        else Search.TierSnapshot.Upserted(plan(k).negMod))
     }
   }
 
@@ -962,6 +956,91 @@ class SearchSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains(why), s"$plan: ${e.getMessage}")
     }
+  }
+
+  test("tiered request bundle rejects mismatched relations") {
+    import SparkEntry.{Bm25MultiQueries => qs, FilterMultiRel => fs,
+      FusionMultiRel => ws, PageKMultiRel => ks, ServeTierRel => ts}
+    def req(queries: Seq[(Long, Seq[String])] = qs,
+            filters: Seq[(Long, String)] = fs,
+            weights: Seq[(Long, Double)] = ws,
+            pageKs: Seq[(Long, Int)] = ks,
+            tiers: Seq[(Long, Int)] = ts) =
+      Search.TieredRequests(queries, filters, weights, pageKs, tiers,
+        SparkEntry.ServeTierLayoutScales, 1.2, 0.75, 10, 4, 0.5)
+    req() // the fixture's relations agree
+    req(filters = fs :+ (1L -> "fr")) // filters may repeat a qid
+    val bad = Seq[(String, () => Search.TieredRequests)](
+      "tiers has no row for qid 3" -> (() => req(tiers = ts.init)),
+      "ks has no row for qid 3" -> (() => req(pageKs = ks.init)),
+      "queries has no row for qid 2" ->
+        (() => req(queries = qs.filter(_._1 != 2L))),
+      "filters has no row for qid 1" ->
+        (() => req(filters = fs.filter(_._1 != 1L))),
+      "weights has no row for qid 4" ->
+        (() => req(queries = qs :+ (4L -> Seq("dup")),
+          filters = fs :+ (4L -> "en"), pageKs = ks :+ (4L -> 3),
+          tiers = ts :+ (4L -> 4))),
+      "tiers has more than one row for qid 1" ->
+        (() => req(tiers = ts :+ (1L -> 4))),
+      "ks has more than one row for qid 0" ->
+        (() => req(pageKs = ks :+ (0L -> 5))),
+      "weights has more than one row for qid 2" ->
+        (() => req(weights = ws :+ (2L -> 0.1))),
+      "queries has more than one row for qid 3" ->
+        (() => req(queries = qs :+ (3L -> Seq("merge")))),
+      "empty tier relation" -> (() => req(tiers = Nil)),
+      "not all stored in layout" ->
+        (() => req(tiers = ts.map { case (q, _) => q -> 6 })))
+    bad.foreach { case (why, build) =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains(why), s"$why: ${e.getMessage}")
+    }
+  }
+
+  /** Spark jobs `f` starts, counted by a listener on a job group. */
+  private def jobsOf(f: => Unit): Int = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"serve-job-budget-${System.nanoTime}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == tag)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(tag, "serve job budget")
+      try f finally sc.clearJobGroup()
+      org.apache.spark.sql.graft.ListenerDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get > 0, "listener saw no jobs")
+    jobs.get
+  }
+
+  /** Spark jobs of one warm tiered serve over a maintained partitioned
+    * copy, the call the serve_mutating benchmark times: the parquet
+    * schema read, the fetch's seed, rescore and checkpoint passes, and
+    * the lexical side, fusion and page cut with their broadcasts. */
+  private val TieredServeJobBudget = 42
+
+  test("tiered serve over a maintained copy stays within its Spark job budget") {
+    import SparkEntry._
+    val layout = graft.sources.Disaggregated.ensureTieredServeUpserted(
+      spark, dir, ServeTierLayoutScales, UpsertMod)
+    def call(): Unit = Search.serveRequestsTieredOff(spark, dir,
+      Some(layout), emb, docs, Bm25MultiQueries, FilterMultiRel,
+      FusionMultiRel, PageKMultiRel, ServeTierRel, ServeTierLayoutScales,
+      Bm25K1, Bm25B, RrfPoolN, PostBuckets, refineParams("cos_l1").alpha)
+      .collect()
+    call() // builds the postings and the copy outside the count
+    val jobs = jobsOf(call())
+    info(s"tiered serve over a maintained copy: $jobs jobs")
+    assert(jobs <= TieredServeJobBudget,
+      s"tiered serve over a maintained copy ran $jobs Spark jobs")
   }
 
   test("indexed serve ledger: sum-of-parts, probe pruning strictly undercuts the brute ledger") {

@@ -312,16 +312,12 @@ object Refine {
 
     // 1. seeds: each partition's k best per query, merged on the driver
     val seedIds = RefineKernel.mergeSeeds(
-      KernelPlan.blockPass(cheap, SeedPass(p, qs)).as[Cand].collect().toSeq, p)
+      KernelPlan.blockPass(cheap, SeedPass(p, qs)).as[Cand].collect().toSeq,
+      p.k, p.isCos)
 
     // 2. tau0: the seeds' full-precision scores, read through id IN (seeds)
     val rescore = RescorePass(p, qs)
-    val seedVecs: Map[Long, Array[Float]] =
-      if (seedIds.isEmpty) Map.empty
-      else vSel.filter(col("id").isInCollection(seedIds.map(_._2).distinct))
-        .as[(Long, Array[Float])].collect().toMap
-    val seeds = seedIds.flatMap { case (qid, id, rn) =>
-      seedVecs.get(id).map(v => (qid, id, rescore.score(qid, v), rn)) }
+    val seeds = rescoreSeeds(vSel, seedIds, rescore)
     val byQid = seeds.groupBy(_._1)
     val live = qs.filter(q => byQid.contains(q.qid))
 
@@ -341,6 +337,23 @@ object Refine {
         vSel.join(build, Seq("id")), rescore, "s_full")
       .withColumn("rn", lit(p.k + 1))   // any value > k: "not a seed"
     seeds.toDF("qid", "id", "s_full", "rn").unionByName(fetchedSurvivors)
+  }
+
+  /** The seeds (qid, id, rn) rescored at full precision, their vectors
+    * read off `full` (id, vec) through an `id IN (seeds)` filter — one
+    * bounded collect: (qid, id, s_full, rn). */
+  private[graft] def rescoreSeeds(full: DataFrame,
+                                  seedIds: Seq[(Long, Long, Int)],
+                                  rescore: RefineKernel.RescorePass)
+      : Seq[(Long, Long, Double, Int)] = {
+    val spark = full.sparkSession
+    import spark.implicits._
+    val seedVecs: Map[Long, Array[Float]] =
+      if (seedIds.isEmpty) Map.empty
+      else full.filter(col("id").isInCollection(seedIds.map(_._2).distinct))
+        .as[(Long, Array[Float])].collect().toMap
+    seedIds.flatMap { case (qid, id, rn) =>
+      seedVecs.get(id).map(v => (qid, id, rescore.score(qid, v), rn)) }
   }
 
   /** Final refined top-K: (qid, rank, id, score). Equals exact top-K for

@@ -35,7 +35,11 @@ import org.apache.spark.sql.functions.col
  *
  * The static-tau0 operator ([[Refine.fetchedSplit]]) runs here too, as
  * block passes ([[SeedPass]], [[SurvivorPass]], [[RescorePass]]) planned
- * by `KernelPlan`; both forms score through [[Scores]].
+ * by `KernelPlan`; so does the tiered serve's fetch (`Search`), whose
+ * passes ([[TierSeedPass]], [[TierSurvivorPass]]) read the layout's
+ * stored tier codes and score each row only against the requests that
+ * admit it (lang, and on the indexed layout the probed cell), each at its
+ * own tier. Every form scores through [[Scores]].
  */
 object RefineKernel {
 
@@ -51,7 +55,7 @@ object RefineKernel {
     * comfortably in driver memory; larger query sets go in batches. */
   final val MaxQueryRows: Int = 1 << 16
 
-  private def requireCapped(rows: Int): Unit =
+  private[graft] def requireCapped(rows: Int): Unit =
     require(rows <= MaxQueryRows,
       s"refine query side exceeds MaxQueryRows=$MaxQueryRows rows; " +
         "split the query relation into batches")
@@ -70,7 +74,8 @@ object RefineKernel {
   /**
    * Per-mode score and cushion arithmetic: the one Scala copy, shared by
    * the sequential walk ([[PartitionKernel]]) and the block passes
-   * ([[SeedPass]], [[SurvivorPass]]). Every fold accumulates in double,
+   * ([[SeedPass]], [[SurvivorPass]], [[TierSeedPass]],
+   * [[TierSurvivorPass]]). Every fold accumulates in double,
    * in array order, with the per-element expression tree of the matching
    * codegen'd fold in `VecExprs`, and every ratio keeps the operation
    * order of [[Refine]]'s column expressions — so a score here is
@@ -159,6 +164,18 @@ object RefineKernel {
           s += t * t; j += 1
         }
         sHat - 2.0 * p.hoeffConst * math.sqrt(s)
+    }
+
+    /** The tiered serve's cos_l1 cushion: with codes round(v·2^s), every
+      * |v − rv| ≤ 2^-(s+1), so Δ is that constant and the cushion depends
+      * on the query alone — alpha · Σ|q_j|·2^-(s+1) / qn, folded as
+      * `VecExprs.AbsDot` folds (q, Δ). */
+    def halfStepCushion(alpha: Double, q: Array[Float], s: Int,
+                        qn: Double): Double = {
+      val half = (0.5 / math.pow(2.0, s)).toFloat.toDouble
+      var acc = 0.0; var j = 0
+      while (j < q.length) { acc += math.abs(q(j).toDouble) * half; j += 1 }
+      alpha * acc / qn
     }
   }
 
@@ -403,22 +420,28 @@ object RefineKernel {
   final class CheapRow(val id: Long, val rvec: Array[Float],
                        val delta: Array[Float], val rn: Double, val bb: Double)
 
-  /** A pass of [[Refine.fetchedSplit]] over one partition: the physical
-    * operator (`KernelPlan.RefinePassExec`) decodes the child's `columns`
-    * and emits `(qid, id[, score])` rows. */
+  /** A block pass over one partition: the physical operator
+    * (`KernelPlan.RefinePassExec`) decodes the child's `columns` and emits
+    * `(qid, id[, score])` rows. */
   sealed trait BlockPass extends Serializable {
     def name: String
-    def p: Refine.Params
-    def queries: Array[PassQuery]
     def columns: Seq[String]
     /** Whether emitted rows carry the score column. */
     def emitsScore: Boolean
+    /** The pass's arguments as EXPLAIN shows them. */
+    def describe: String
+  }
+
+  /** A pass of [[Refine.fetchedSplit]]: one param set, one query matrix. */
+  sealed trait RefinePass extends BlockPass {
+    def p: Refine.Params
+    def queries: Array[PassQuery]
     def describe: String = s"${p.mode} k=${p.k} queries=${queries.length}"
   }
 
   /** A block pass over the cheap relation: each row is read once and
     * scored against the whole query matrix. */
-  sealed trait CheapPass extends BlockPass {
+  sealed trait CheapPass extends RefinePass {
     def run(rows: Iterator[CheapRow]): Iterator[Cand]
   }
 
@@ -490,12 +513,13 @@ object RefineKernel {
     }
   }
 
-  /** The global seeds from the seed pass's per-partition candidates: per
+  /** The global seeds from a seed pass's per-partition candidates: per
     * qid the k best under [[ranksBefore]], as (qid, id, rn) with rn 1..k. */
-  def mergeSeeds(cands: Seq[Cand], p: Refine.Params): Seq[(Long, Long, Int)] =
+  def mergeSeeds(cands: Seq[Cand], k: Int,
+                 isCos: Boolean): Seq[(Long, Long, Int)] =
     cands.groupBy(_.qid).toSeq.flatMap { case (qid, cs) =>
-      cs.sortWith((a, b) => ranksBefore(p.isCos, a.score, a.id, b.score, b.id))
-        .take(p.k).zipWithIndex.map { case (c, i) => (qid, c.id, i + 1) }
+      cs.sortWith((a, b) => ranksBefore(isCos, a.score, a.id, b.score, b.id))
+        .take(k).zipWithIndex.map { case (c, i) => (qid, c.id, i + 1) }
     }
 
   /** Survivor pass: `(qid, id)` of every non-seed row whose cushioned
@@ -532,7 +556,7 @@ object RefineKernel {
   /** Fetch pass: the full-precision score of each fetched `(qid, id, vec)`
     * row against its query, as `(qid, id, s_full)`. */
   final case class RescorePass(p: Refine.Params, queries: Array[PassQuery])
-      extends BlockPass {
+      extends RefinePass {
     def name: String = "RefineRescorePass"
     def columns: Seq[String] = Seq("qid", "id", "vec")
     def emitsScore: Boolean = true
@@ -543,6 +567,95 @@ object RefineKernel {
       Scores.full(p.isCos, q.qvec, vec,
         if (p.isCos) Scores.fnorm(Scores.dot(vec, vec)) else 0.0, q.qn)
     }
+  }
+
+  // ---- the tiered serve's passes (`Search`'s tiered fetch) --------------
+
+  /** One request of the tiered serve's passes. It admits a row whose lang
+    * is in `langs` and, on the indexed layout, whose cell is in the sorted
+    * `cells` (null on the partitioned layout: every cell). It scores the
+    * row with the codes of tier `tier`, an index into the pass's
+    * `scales`; `cush` is its [[Scores.halfStepCushion]]. */
+  final case class TierQuery(q: PassQuery, langs: Set[String],
+                             cells: Array[Int], tier: Int, cush: Double) {
+    def admitsCell(c: Int): Boolean =
+      cells == null || java.util.Arrays.binarySearch(cells, c) >= 0
+  }
+
+  /** One decoded row of the tiered layout: per used tier t, `rvecs(t)` the
+    * dequantized codes and `rns(t)` fnorm of their squared norm. `cell`
+    * is -1 on the partitioned layout. */
+  final class TierRow(val id: Long, val lang: String, val cell: Int,
+                      val rvecs: Array[Array[Float]], val rns: Array[Double])
+
+  /** A block pass over the tiered layout: `(id, lang[, cell])` and the
+    * code columns of the used tiers `scales` — never `vec`, never an
+    * unused tier. Each row is scored only against the queries that admit
+    * it, each with its own tier's codes. */
+  sealed trait TierPass extends BlockPass {
+    def scales: Seq[Int]
+    /** Whether the layout is cell-partitioned (rows carry `cell`). */
+    def indexed: Boolean
+    def queries: Array[TierQuery]
+    def run(rows: Iterator[TierRow]): Iterator[Cand]
+    def columns: Seq[String] = Seq("id", "lang") ++
+      (if (indexed) Seq("cell") else Nil) ++ scales.map(s => s"code_$s")
+    def describe: String =
+      s"tiers=${scales.mkString(",")} queries=${queries.length}"
+
+    @transient private lazy val byLang: Map[String, Array[Int]] =
+      queries.indices.flatMap(j => queries(j).langs.toSeq.map(_ -> j))
+        .groupBy(_._1).map { case (l, js) => l -> js.map(_._2).toArray }
+
+    /** The indices of the queries admitting `r`. */
+    protected def admitting(r: TierRow): Iterator[Int] =
+      byLang.get(r.lang) match {
+        case Some(js) => js.iterator.filter(j => queries(j).admitsCell(r.cell))
+        case None => Iterator.empty
+      }
+
+    /** Query j's reduced score of `r`, over its own tier's codes. */
+    protected def sHat(r: TierRow, j: Int): Double = {
+      val q = queries(j)
+      Scores.sHat(true, q.q.qvec, r.rvecs(q.tier), r.rns(q.tier), q.q.qn)
+    }
+  }
+
+  /** Seed pass of the tiered serve: per query, the partition's `poolN`
+    * best admitted rows by reduced score, as `(qid, id, s_hat)`;
+    * [[mergeSeeds]] picks the global seeds. */
+  final case class TierSeedPass(scales: Seq[Int], indexed: Boolean,
+                                queries: Array[TierQuery], poolN: Int)
+      extends TierPass {
+    def name: String = "TieredSeedPass"
+    def emitsScore: Boolean = true
+    override def describe: String = s"${super.describe} pool=$poolN"
+
+    def run(rows: Iterator[TierRow]): Iterator[Cand] = {
+      val heaps = Array.fill(queries.length)(new BestK(poolN, isCos = true))
+      rows.foreach(r => admitting(r).foreach(j => heaps(j).offer(sHat(r, j), r.id)))
+      queries.indices.iterator.flatMap(j => heaps(j).emit(queries(j).q.qid))
+    }
+  }
+
+  /** Survivor pass of the tiered serve: `(qid, id)` of every admitted
+    * non-seed row with s_hat + cush >= tau0, compared as Spark compares
+    * doubles. `queries` holds only the queries with seeds; `tau0` and the
+    * sorted `seeds` ids align with it. */
+  final case class TierSurvivorPass(scales: Seq[Int], indexed: Boolean,
+                                    queries: Array[TierQuery],
+                                    tau0: Array[Double],
+                                    seeds: Array[Array[Long]])
+      extends TierPass {
+    def name: String = "TieredSurvivorPass"
+    def emitsScore: Boolean = false
+
+    def run(rows: Iterator[TierRow]): Iterator[Cand] =
+      rows.flatMap(r => admitting(r)
+        .filter(j => java.util.Arrays.binarySearch(seeds(j), r.id) < 0 &&
+          SQLOrderingUtil.compareDoubles(sHat(r, j) + queries(j).cush,
+            tau0(j)) >= 0)
+        .map(j => Cand(queries(j).q.qid, r.id, 0.0)))
   }
 
   /** Candidate rows surviving the sequential kernel, ready for global top-K merge. */

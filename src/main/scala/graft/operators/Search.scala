@@ -1922,7 +1922,8 @@ object Search {
     * name the same qids, and all but the filters bind exactly one row
     * per qid (a qid with a page size but no tier would be paged from
     * text alone and dropped from the ledger; a duplicated tier row
-    * would duplicate its candidates). */
+    * would duplicate its candidates). A qid may filter on several langs,
+    * each once: its filter is a lang set. */
   final case class TieredRequests(queries: Seq[(Long, Seq[String])],
                                   filters: Seq[(Long, String)],
                                   weights: Seq[(Long, Double)],
@@ -1947,6 +1948,10 @@ object Search {
         s"tiered requests: $rel has more than one row for qid " +
           dup.mkString(", "))
     }
+    private val dupFilters = filters.diff(filters.distinct).distinct.sorted
+    require(dupFilters.isEmpty,
+      s"tiered requests: filters repeat (qid, lang) " +
+        dupFilters.mkString(", "))
     val usedScales: Seq[Int] = tiers.map(_._2).distinct.sorted
     require(usedScales.toSet.subsetOf(layoutScales.toSet),
       s"tiers $usedScales not all stored in layout $layoutScales")
@@ -2207,124 +2212,100 @@ object Search {
    * knob in the serving path: a bandwidth-tier request scans 1-byte
    * codes and a recall-tier request 2-byte codes off one layout in one
    * plan, and every request's survivors are rescored at full precision.
-   * Candidates are each qid's lang matches (the [[filteredTopKMulti]]
+   * A request admits its lang matches (the [[filteredTopKMulti]]
    * pre-filter contract: a union-of-langs pushed predicate plus the
-   * per-qid equality, before any distance arithmetic); on the indexed
+   * per-qid lang set, before any distance arithmetic); on the indexed
    * layout only within its own probed cells (the
    * [[filteredTopKIndexedMulti]] approximation), whose union is a static
-   * partition filter on both passes. The cushion is the cos_l1 half-step
+   * partition filter on every scan. The cushion is the cos_l1 half-step
    * bound (|v − rv| ≤ 2^-(s+1) exactly, any corpus), so the DuckDB oracle
    * recomputes the whole pipeline from the raw floats (round-to-nearest
    * dyadic quantization is exact on both engines).
+   *
+   * It runs as [[Refine.fetchedSplit]] does, as block passes over the
+   * stored codes ([[RefineKernel.TierSeedPass]],
+   * [[RefineKernel.TierSurvivorPass]]): one seed pass for all tiers keeps
+   * each request's `poolN` best admitted rows per partition, merged on
+   * the driver; the seeds are rescored through an `id IN (seeds)` read of
+   * `(id, vec)`, and tau0 is each request's worst rescored seed; one
+   * survivor pass emits the admitted non-seed pairs whose cushioned
+   * reduced score reaches tau0, and they are joined to `(id, vec)` and
+   * rescored. Only the query collect (with the probed cells on the
+   * indexed layout), the seed pass and the seed rescore run here; the
+   * survivor pass and the fetch join run inside the caller's query, the
+   * join sized by AQE, and nothing is persisted. The passes read `id`,
+   * `lang`, `cell` and the used tiers' codes, never `vec` or an unused
+   * tier; the fetch reads `(id, vec)` only.
    */
-  private def tieredFetch(spark: SparkSession, view: TieredView,
-                          req: TieredRequests,
-                          indexed: Option[(Int, Int, Int)]): DataFrame = {
+  private[graft] def tieredFetch(spark: SparkSession, view: TieredView,
+                                 req: TieredRequests,
+                                 indexed: Option[(Int, Int, Int)])
+      : DataFrame = {
     import spark.implicits._
-    import org.apache.spark.storage.StorageLevel
-    val usedScales = req.usedScales
-    val qSel = broadcast(Ann.queriesOf(view.queries, req.nq)
-      .select(col("qid"), col("qvec"), col("qn2").as("nq2")))
-    // indexed: the union of all probed cells, a bounded collect (<=
-    // nCells ints) materialized as literals so BOTH passes prune at
-    // planning time
-    val (scan, cellCol, probeSet) = indexed match {
-      case None => (view.stored, Seq.empty[Column], None)
+    import RefineKernel.{Cand, PassQuery, Scores, TierQuery}
+    import org.apache.spark.sql.graft.KernelPlan
+    val scales = req.usedScales
+    RefineKernel.requireCapped(req.nq)
+    val qSel = Ann.queriesOf(view.queries, req.nq)
+      .select(col("qid"), col("qvec"))
+    // the query rows, with each one's probed cells on the indexed layout
+    // (a bounded collect, <= nq·nprobe rows)
+    val (qRows, cellsOf) = indexed match {
+      case None =>
+        (qSel.as[(Long, Array[Float])].collect().toSeq,
+          Map.empty[Long, Array[Int]])
       case Some((nCells, d, nprobe)) =>
-        val probeSet = Ivf.probeCells(qSel.select(col("qid"), col("qvec")),
-            nCells, d, nprobe)
-          .select(col("qid"), col("cell"))
-        val unionCells = probeSet.select(col("cell")).distinct()
-          .collect().map(_.getInt(0)).sorted
-        (view.stored.filter(col("cell").isin(unionCells.map(Int.box): _*)),
-          Seq(col("cell")), Some(probeSet))
+        val probed = Ivf.probeCells(qSel, nCells, d, nprobe)
+          .select(col("qid"), col("qvec"), col("cell"))
+          .as[(Long, Array[Float], Int)].collect().toSeq
+        (probed.map(r => (r._1, r._2)).distinctBy(_._1),
+          probed.groupBy(_._1).map { case (q, rs) =>
+            q -> rs.map(_._3).distinct.sorted.toArray })
     }
-    // cheap side: id + lang (+ cell) + the USED tiers' code columns ONLY
-    // (a stored-but-unused tier's chunks and `vec` are never read here —
-    // PlanSpec asserts); dequantized values and the constant half-step
-    // bound are map-side derivations, never stored
-    val vpre = scan.select(Seq(col("id"), col("lang")) ++ cellCol ++
-        usedScales.map { s =>
-          val mul = math.pow(2.0, s)
-          transform(col(s"code_$s"),
-            c => (c.cast("double") / mul).cast("float")).as(s"rvec_$s")
-        }: _*)
-      .select(Seq(col("id"), col("lang")) ++ cellCol ++ usedScales.flatMap(
-        s => Seq(col(s"rvec_$s"), norm2Sq(col(s"rvec_$s")).as(s"nr2_$s"))
-      ): _*)
-    val trRel = broadcast(req.tiers.toDF("qid", "tier"))
-    val qf = broadcast(req.filters.toDF("qid", "qlang"))
-    val q = broadcast(qSel.join(trRel, Seq("qid")).join(qf, Seq("qid")))
-    def byTier(f: Int => Column): Column =
-      usedScales.foldRight(lit(null).cast("double")) { (s, rest) =>
-        when(col("tier") === s, f(s)).otherwise(rest) }
-    val sHat = byTier(s => dot(col(s"rvec_$s"), col("qvec")) /
-      (fnorm(col(s"nr2_$s")) * fnorm(col("nq2"))))
-    // cos_l1 cushion with the constant per-tier half-step bound: the
-    // delta array is a map-side constant, the fold the absDot tree
-    val cush = byTier { s =>
-      val half = (0.5 / math.pow(2.0, s)).toFloat
-      lit(req.alpha) * org.apache.spark.sql.graft.VecExprs.absDot(
-        col("qvec"),
-        transform(col(s"rvec_$s"), _ => lit(half))) / fnorm(col("nq2"))
+    val langsOf = req.filters.groupBy(_._1).map { case (q, fs) =>
+      q -> fs.map(_._2).toSet }
+    val tierOf = req.tiers.toMap
+    val qs = qRows.filter(q => langsOf.contains(q._1)).map { case (qid, qv) =>
+      val pq = PassQuery(qid, qv, Scores.fnorm(Scores.dot(qv, qv)), 0.0)
+      val t = scales.indexOf(tierOf(qid))
+      TierQuery(pq, langsOf(qid),
+        if (indexed.isEmpty) null else cellsOf.getOrElse(qid, Array.empty[Int]),
+        t, Scores.halfStepCushion(req.alpha, qv, scales(t), pq.qn))
+    }.toArray
+    // the union of the probed cells is a static partition filter on every
+    // scan; the union of the langs a pushed predicate on the passes' input
+    val scan = indexed match {
+      case None => view.stored
+      case Some(_) => view.stored.filter(col("cell").isin(
+        cellsOf.values.flatten.toSeq.distinct.sorted.map(Int.box): _*))
     }
-    val langRows = vpre.filter(col("lang").isin(req.filters.map(_._2)
+    val admitted = scan.filter(col("lang").isin(req.filters.map(_._2)
       .distinct: _*))
-    val pairs = probeSet match {
-      case None => langRows.crossJoin(q)
-      // each qid's own probed cells: the broadcast probe relation's
-      // equi-join on cell + qid
-      case Some(p) => langRows.join(broadcast(p), Seq("cell"))
-        .join(q, Seq("qid"))
-    }
-    val cand = pairs
-      .filter(col("lang") === col("qlang"))
-      .select(col("qid"), col("id"), sHat.as("s_hat"), cush.as("cush"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the fetch side reads (id, vec) from the same (pruned) scan
     val vSel = scan.select(col("id"), col("vec"))
-    def eager(df: DataFrame): DataFrame = {
-      val mat = df.persist(StorageLevel.MEMORY_AND_DISK)
-      mat.count(); mat
-    }
-    // seeds: per-qid top-poolN by s_hat (map-side WindowGroupLimit)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("s_hat").desc, col("id").asc)
-    val seedIds = eager(cand.select(col("qid"), col("id"), col("s_hat"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= req.poolN))
-    val seeds = eager(vSel.join(broadcast(seedIds), Seq("id"))
-      .join(qSel, Seq("qid"))
-      .withColumn("s_full", dot(col("vec"), col("qvec")) /
-        (fnorm(norm2Sq(col("vec"))) * fnorm(col("nq2"))))
-      .select(col("qid"), col("id"), col("s_full")))
-    try {
-      val tau0 = broadcast(
-        seeds.groupBy(col("qid")).agg(min(col("s_full")).as("tau0")))
-      val survivorIds = cand
-        .join(broadcast(seedIds.select(col("qid"), col("id"))),
-          Seq("qid", "id"), "left_anti")
-        .join(tau0, Seq("qid"))
-        .filter(col("s_hat") + col("cush") >= col("tau0"))
-        .select(col("qid"), col("id"))
-      // no broadcast hint on the survivor fetch: a coarse tier's
-      // cushion can swell survivors toward N·Q — AQE sizes the join
-      val survivors = vSel.join(survivorIds, Seq("id"))
-        .join(qSel, Seq("qid"))
-        .withColumn("s_full", dot(col("vec"), col("qvec")) /
-          (fnorm(norm2Sq(col("vec"))) * fnorm(col("nq2"))))
-        .select(col("qid"), col("id"), col("s_full"))
-      // the fetch set is a bounded per-qid relation — pin it so the
-      // serve and its ledger don't re-run the pipeline per consumer;
-      // the pin materializes HERE, so every intermediate persist is
-      // released before returning (no CacheManager leak for callers)
-      seeds.unionByName(survivors).localCheckpoint(true)
-    } finally {
-      seeds.unpersist(blocking = false)
-      seedIds.unpersist(blocking = false)
-      cand.unpersist(blocking = false)
-    }
+    val rescore = RefineKernel.RescorePass(
+      Refine.Params("cos_l1", k = req.poolN, alpha = req.alpha), qs.map(_.q))
+
+    // 1. seeds: each partition's poolN best per request, merged on the driver
+    val seedIds = RefineKernel.mergeSeeds(KernelPlan.blockPass(admitted,
+        RefineKernel.TierSeedPass(scales, indexed.nonEmpty, qs, req.poolN))
+      .as[Cand].collect().toSeq, req.poolN, isCos = true)
+
+    // 2. tau0: the seeds' full-precision scores, read through id IN (seeds)
+    val seeds = Refine.rescoreSeeds(vSel, seedIds, rescore)
+    val byQid = seeds.groupBy(_._1)
+    val live = qs.filter(q => byQid.contains(q.q.qid))
+
+    // 3. survivors and 4. their fetch, both inside the caller's query:
+    // the survivors may be broadcast, the full-precision side never
+    val survivors = KernelPlan.blockPass(admitted,
+      RefineKernel.TierSurvivorPass(scales, indexed.nonEmpty, live,
+        live.map(q => RefineKernel.tau0(isCos = true,
+          byQid(q.q.qid).map(_._3))),
+        live.map(q => byQid(q.q.qid).map(_._2).sorted.toArray)))
+    seeds.map { case (qid, id, s, _) => (qid, id, s) }
+      .toDF("qid", "id", "s_full")
+      .unionByName(KernelPlan.blockPass(KernelPlan.neverBroadcast(vSel)
+        .join(survivors, Seq("id")), rescore, "s_full"))
   }
 
   /** The tiered serve up to the fused pool: (postings root, resolved

@@ -1301,9 +1301,9 @@ object SearchOracle {
        |FROM allrows""".stripMargin
   }
 
-  /** [[graft.operators.Search.serveRequestsTieredIndexed]]: the serve
-    * chain with the vector pool swapped for the probed-cell tiered
-    * pipeline. */
+  /** [[graft.operators.Search.serveRequestsTiered]] with
+    * `indexed = Some((nCells, d, nprobe))`: the serve chain with the
+    * vector pool swapped for the probed-cell tiered pipeline. */
   def serveRequestsTieredIndexedSql(d: Int,
                                     queries: Seq[(Long, Seq[String])],
                                     filters: Seq[(Long, String)],
@@ -1331,10 +1331,11 @@ object SearchOracle {
        |WHERE r.rnk <= qk3.kq""".stripMargin
   }
 
-  /** [[graft.operators.Search.serveRequestsTieredIndexedMetrics]]:
-    * per-request bytes with all three vector-side savings — pc_rows·8
-    * (partition pruning) + codeBytes(tier)·d·v_cands (tier column
-    * pruning over probed ∩ lang rows) + 4d·fetched. */
+  /** [[graft.operators.Search.serveRequestsTieredMetrics]] with
+    * `indexed = Some((nCells, d, nprobe))`: per-request bytes with all
+    * three vector-side savings — pc_rows·8 (partition pruning) +
+    * codeBytes(tier)·d·v_cands (tier column pruning over probed ∩ lang
+    * rows) + 4d·fetched. */
   def serveRequestsTieredIndexedMetricsSql(d: Int,
       queries: Seq[(Long, Seq[String])], filters: Seq[(Long, String)],
       weights: Seq[(Long, Double)], ks: Seq[(Long, Int)],

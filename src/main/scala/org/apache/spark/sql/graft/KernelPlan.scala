@@ -6,13 +6,15 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, LogicalPlan, NO_BROADCAST_HASH, ResolvedHint, UnaryNode}
 import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, ShortType, StructField, StructType}
 
 import graft.operators.{Refine, RefineKernel, TopK}
+import graft.operators.RefineKernel.Scores
 
 /**
  * Whole-operator integration of the refinement kernels into Catalyst:
@@ -27,10 +29,14 @@ import graft.operators.{Refine, RefineKernel, TopK}
  *    global partial-merge on top.
  *  - `RefinePassExec`: the per-partition block passes of the static-tau0
  *    operator ([[graft.operators.Refine.fetchedSplit]]) — the seed pass,
- *    the survivor pass and the full-precision rescore of fetched rows.
+ *    the survivor pass and the full-precision rescore of fetched rows —
+ *    and the tiered serve's seed and survivor passes, which decode each
+ *    used tier's stored codes (byte or short) to their float values in
+ *    the pass, so the plan carries the codes, never a dequantized copy.
  *
  * EXPLAIN shows each as a first-class operator (`RefineKernel`,
- * `RefineSeedPass`, `RefineSurvivorPass`, `RefineRescorePass`).
+ * `RefineSeedPass`, `RefineSurvivorPass`, `RefineRescorePass`,
+ * `TieredSeedPass`, `TieredSurvivorPass`).
  */
 object KernelPlan {
 
@@ -151,6 +157,19 @@ object KernelPlan {
       def idx(c: String): Int = names.indexOf(c)
       val (idI, rvecI, deltaI, nr2I, bbI, qidI, vecI) = (idx("id"),
         idx("rvec"), idx("delta"), idx("nr2"), idx("bb"), idx("qid"), idx("vec"))
+      val (langI, cellI) = (idx("lang"), idx("cell"))
+      // a tier pass's code columns: (index, 2-byte codes?, 2^s)
+      val tiers = pass match {
+        case t: RefineKernel.TierPass => t.scales.map { s =>
+          val i = idx(s"code_$s")
+          val wide = child.output(i).dataType match {
+            case ArrayType(ShortType, _) => true
+            case _ => false
+          }
+          (i, wide, math.pow(2.0, s))
+        }.toArray
+        case _ => Array.empty[(Int, Boolean, Double)]
+      }
       // the query matrix (and the survivor pass's tau0 + seed ids) ship
       // once per job, not inside every task closure
       val bp = sparkContext.broadcast(pass)
@@ -166,6 +185,16 @@ object KernelPlan {
           proj(row)
         }
         bp.value match {
+          case t: RefineKernel.TierPass =>
+            t.run(it.map { x =>
+              val rvecs = tiers.map { case (i, wide, mul) =>
+                dequantize(x.getArray(i), wide, mul) }
+              val lang = x.getUTF8String(langI)
+              new RefineKernel.TierRow(x.getLong(idI),
+                if (lang == null) null else lang.toString,
+                if (cellI >= 0) x.getInt(cellI) else -1, rvecs,
+                rvecs.map(v => Scores.fnorm(Scores.dot(v, v))))
+            }).map(emit)
           case r: RefineKernel.RescorePass =>
             it.map { x =>
               val qid = x.getLong(qidI)
@@ -181,6 +210,21 @@ object KernelPlan {
         }
       }
     }
+  }
+
+  /** A tier's stored codes (byte, or short when `wide`) as their values
+    * c / 2^s rounded to float, bit for bit the relational
+    * `(c.cast(double) / 2^s).cast(float)`; `mul` is 2^s. */
+  private def dequantize(codes: ArrayData, wide: Boolean,
+                         mul: Double): Array[Float] = {
+    val out = new Array[Float](codes.numElements())
+    var j = 0
+    while (j < out.length) {
+      val c = if (wide) codes.getShort(j) else codes.getByte(j)
+      out(j) = (c.toDouble / mul).toFloat
+      j += 1
+    }
+    out
   }
 
   /** Planner strategy turning the logical nodes into their execs. */
@@ -221,6 +265,14 @@ object KernelPlan {
     Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       RefinePassNode(input.select(cols: _*).queryExecution.analyzed, pass, out))
   }
+
+  /** `df` barred from the build side of a broadcast hash join: a join may
+    * still broadcast its other side, or shuffle both, as the planner and
+    * AQE size them. Keeps a full-precision table from being broadcast
+    * when its size estimate happens to fit the threshold. */
+  def neverBroadcast(df: DataFrame): DataFrame =
+    Dataset.ofRows(df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      ResolvedHint(df.queryExecution.analyzed, HintInfo(Some(NO_BROADCAST_HASH))))
 
   /** Whether `rows` (qid, id) rows fit Spark's broadcast threshold, sized
     * as Spark estimates a relation from its row count (8 + 8 per long). */

@@ -2,6 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /**
  * Plan-shape regression tests: the scale properties we rely on must be
@@ -873,46 +878,103 @@ class PlanSpec extends AnyFunSuite {
       "tiered at-rest ledger diverged from the in-memory rung")
   }
 
+  /** Every physical plan `f` executes, captured by a query listener. */
+  private def executedPlans(f: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(fn: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      org.apache.spark.sql.graft.ListenerDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
+
+  /** `p` and every node below it, descending into AQE wrappers (their
+    * initial and final plans: AQE drops a subtree whose stage came back
+    * empty), query stages, reused exchanges and cached relations, but not
+    * into a node `skip` holds. */
+  private def planNodes(p: SparkPlan,
+                        skip: SparkPlan => Boolean = _ => false)
+      : Seq[SparkPlan] = p match {
+    case x if skip(x) => Nil
+    case a: AdaptiveSparkPlanExec =>
+      planNodes(a.inputPlan, skip) ++ planNodes(a.executedPlan, skip)
+    case q: QueryStageExec => q +: planNodes(q.plan, skip)
+    case r: ReusedExchangeExec => r +: planNodes(r.child, skip)
+    case i: InMemoryTableScanExec =>
+      i +: planNodes(i.relation.cachedPlan, skip)
+    case other => other +: other.children.flatMap(planNodes(_, skip))
+  }
+
+  private def scansBelow(p: SparkPlan,
+                         skip: SparkPlan => Boolean = _ => false)
+      : Seq[FileSourceScanExec] =
+    planNodes(p, skip).collect { case f: FileSourceScanExec => f }.distinct
+
+  /** The tiered serve's seed-pass, survivor-pass and fetch scans among
+    * `plans`: the fetch scans are those below a rescore that are not
+    * below the survivor pass. */
+  private def tieredServeScans(plans: Seq[SparkPlan])
+      : (Seq[FileSourceScanExec], Seq[FileSourceScanExec],
+         Seq[FileSourceScanExec]) = {
+    val nodes = plans.flatMap(planNodes(_))
+    def below(name: String) = nodes.filter(_.nodeName == name)
+      .flatMap(scansBelow(_)).distinct
+    (below("TieredSeedPass"), below("TieredSurvivorPass"),
+      nodes.filter(_.nodeName == "RefineRescorePass").flatMap(scansBelow(_,
+        _.nodeName == "TieredSurvivorPass")).distinct)
+  }
+
   test("tiered serve layout: cheap scan reads only the USED tiers' code chunks, never vec or the unused tier") {
     // the serve capstone's per-request precision: the layout stores
     // three quantization tiers (2^4, 2^8, 2^11); the request relation
-    // binds only {4, 11} — the cheap pass must read exactly (id, lang,
-    // code_4, code_11), with the full-precision vec and the
-    // stored-but-unused 2^8 tier's chunks never touched. The operator
-    // pins its fetch set via localCheckpoint, so assert the pruning on
-    // the exact projections the operator consumes (its only reads of
-    // the layout), plus ledger sanity: same-lang requests at different
-    // tiers pay different bytes.
-    import org.apache.spark.sql.functions.{col, element_at}
+    // binds only {4, 11} — the serve's own seed and survivor passes must
+    // read exactly (id, lang, code_4, code_11), with the full-precision
+    // vec and the stored-but-unused 2^8 tier's chunks never touched, and
+    // its fetch must read no code chunk. Assert on the plans the ledger
+    // query executes, plus ledger sanity: same-lang requests at
+    // different tiers pay different bytes.
     import SparkEntry.{ServeTierScales, ServeTierLayoutScales}
-    val path = graft.sources.Disaggregated.ensureTieredServeFixture(
-      spark, dir, ServeTierLayoutScales)
-    val stored = spark.read.parquet(path)
     val used = ServeTierScales.map(s => s"code_$s")
-    val cheap = stored.select(col("id") +: col("lang") +:
-      used.map(c => element_at(col(c), 1).cast("double").as(s"x_$c")): _*)
-    cheap.collect()
     val unused = (ServeTierLayoutScales.toSet -- ServeTierScales.toSet)
       .map(s => s"code_$s")
-    val scans = graft.sources.Disaggregated.scanSchemas(cheap)
-    assert(scans.nonEmpty, "no parquet scan in cheap-pass plan")
-    assert(scans.forall(s => !s.contains("vec") &&
-        unused.forall(c => !s.contains(c))),
-      s"cheap scan read vec or an unused tier ($unused): $scans")
-    assert(scans.exists(s => used.toSet.subsetOf(s)),
-      s"cheap scan missing a used tier column ($used): $scans")
+    var led: Array[org.apache.spark.sql.Row] = null
+    val plans = executedPlans {
+      led = SparkEntry.queries("q_serve_requests_tiered_metrics")(
+        spark, dir).collect()
+    }
+    val (seedScans, survivorScans, fetchScans) = tieredServeScans(plans)
+    for ((pass, scans) <- Seq("seed" -> seedScans,
+        "survivor" -> survivorScans)) {
+      val read = scans.map(_.requiredSchema.fieldNames.toSet)
+      assert(read.nonEmpty, s"no parquet scan below the serve's $pass pass")
+      assert(read.forall(s => !s.contains("vec") &&
+          unused.forall(c => !s.contains(c))),
+        s"$pass pass read vec or an unused tier ($unused): $read")
+      assert(read.forall(s => used.toSet.subsetOf(s)),
+        s"$pass pass missing a used tier column ($used): $read")
+    }
     // fetch side reads only (id, vec) — no code chunks
-    val fetch = stored.select(col("id"), element_at(col("vec"), 1).as("v0"))
-    fetch.collect()
-    val fscans = graft.sources.Disaggregated.scanSchemas(fetch)
-    assert(fscans.nonEmpty && fscans.forall(s =>
+    val fread = fetchScans.map(_.requiredSchema.fieldNames.toSet)
+    assert(fread.nonEmpty && fread.forall(s => s.contains("vec") &&
         !s.exists(_.startsWith("code_"))),
-      s"fetch scan read code columns: $fscans")
+      s"fetch scan read code columns: $fread")
+    // the survivors are the fetch join's build side; the full-precision
+    // side is never broadcast
+    val bcastVec = plans.flatMap(planNodes(_)).collect {
+      case b: BroadcastExchangeExec if b.output.exists(_.name == "vec") => b
+    }
+    assert(bcastVec.isEmpty, s"full-precision side broadcast: $bcastVec")
     // ledger sanity: qid 0 (tier 4, same lang slice cardinality rules
     // aside) pays FEWER cheap bytes per candidate than qid 1 (tier 11):
     // the 1 B vs 2 B width is physical, and bytes_vec reflects it
-    val led = SparkEntry.queries("q_serve_requests_tiered_metrics")(
-      spark, dir).collect()
     val byQid = led.filter(_.getAs[Long]("qid") >= 0)
       .map(r => r.getAs[Long]("qid") ->
         (r.getAs[Int]("tier"), r.getAs[Long]("bytes_vec"))).toMap
@@ -923,6 +985,25 @@ class PlanSpec extends AnyFunSuite {
       agg(0).getAs[Long]("bytes_vec") ==
         byQid.values.map(_._2).sum,
       "qid=-1 aggregate is not the sum of the per-request bytes")
+  }
+
+  test("indexed tiered serve: the probed cells are a static partition filter on every scan of the layout") {
+    val plans = executedPlans {
+      SparkEntry.queries("q_serve_requests_tiered_indexed")(spark, dir)
+        .collect()
+    }
+    val (seedScans, survivorScans, fetchScans) = tieredServeScans(plans)
+    // every scan of the tiered layout: the passes, the seed rescore's
+    // id IN (seeds) read and the fetch
+    val layoutScans = plans.flatMap(p => scansBelow(p)).distinct
+      .filter(_.requiredSchema.fieldNames.exists(c =>
+        c == "vec" || c.startsWith("code_")))
+    assert(seedScans.nonEmpty && survivorScans.nonEmpty &&
+      fetchScans.nonEmpty, "a pass or the fetch read no parquet scan")
+    assert(layoutScans.forall(_.partitionFilters.exists(_.references
+        .exists(_.name == "cell"))),
+      "a scan of the indexed layout has no cell partition filter: " +
+        layoutScans.map(_.simpleString(200)).mkString("\n"))
   }
 
   test("upserted tiered layout: a commit rewrites only the touched id buckets; the serve still prunes unused tiers") {

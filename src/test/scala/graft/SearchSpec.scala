@@ -989,6 +989,8 @@ class SearchSpec extends AnyFunSuite {
         (() => req(weights = ws :+ (2L -> 0.1))),
       "queries has more than one row for qid 3" ->
         (() => req(queries = qs :+ (3L -> Seq("merge")))),
+      "filters repeat (qid, lang) (1,en)" ->
+        (() => req(filters = fs :+ (1L -> "en"))),
       "empty tier relation" -> (() => req(tiers = Nil)),
       "not all stored in layout" ->
         (() => req(tiers = ts.map { case (q, _) => q -> 6 })))
@@ -1021,26 +1023,55 @@ class SearchSpec extends AnyFunSuite {
     jobs.get
   }
 
-  /** Spark jobs of one warm tiered serve over a maintained partitioned
-    * copy, the call the serve_mutating benchmark times: the parquet
-    * schema read, the fetch's seed, rescore and checkpoint passes, and
-    * the lexical side, fusion and page cut with their broadcasts. */
-  private val TieredServeJobBudget = 42
+  /** Spark jobs of one warm tiered serve over a maintained copy, the
+    * call the serve_mutating benchmark times (partitioned), and of its
+    * indexed twin: the parquet schema read, the fetch's query collect
+    * (with the probed cells on the indexed layout), seed pass and seed
+    * rescore, and the lexical side, fusion, page cut, survivor pass and
+    * fetch join with their broadcasts and shuffles. The relational fetch
+    * ran 42 (partitioned) and 44 (indexed). */
+  private val TieredServeJobBudget = 26
 
   test("tiered serve over a maintained copy stays within its Spark job budget") {
     import SparkEntry._
-    val layout = graft.sources.Disaggregated.ensureTieredServeUpserted(
+    import graft.sources.Disaggregated
+    val partitioned = Disaggregated.ensureTieredServeUpserted(
       spark, dir, ServeTierLayoutScales, UpsertMod)
-    def call(): Unit = Search.serveRequestsTieredOff(spark, dir,
-      Some(layout), emb, docs, Bm25MultiQueries, FilterMultiRel,
-      FusionMultiRel, PageKMultiRel, ServeTierRel, ServeTierLayoutScales,
-      Bm25K1, Bm25B, RrfPoolN, PostBuckets, refineParams("cos_l1").alpha)
-      .collect()
-    call() // builds the postings and the copy outside the count
-    val jobs = jobsOf(call())
-    info(s"tiered serve over a maintained copy: $jobs jobs")
-    assert(jobs <= TieredServeJobBudget,
-      s"tiered serve over a maintained copy ran $jobs Spark jobs")
+    val indexed = Disaggregated.ensureTieredServeIndexedUpserted(
+      spark, dir, ServeTierLayoutScales, IvfCells, EmbD, UpsertMod)
+    val calls = Seq[(String, () => Unit)](
+      "partitioned" -> (() => Search.serveRequestsTieredOff(spark, dir,
+        Some(partitioned), emb, docs, Bm25MultiQueries, FilterMultiRel,
+        FusionMultiRel, PageKMultiRel, ServeTierRel, ServeTierLayoutScales,
+        Bm25K1, Bm25B, RrfPoolN, PostBuckets, refineParams("cos_l1").alpha)
+        .collect()),
+      "indexed" -> (() => Search.serveRequestsTiered(spark, dir, emb, docs,
+        tieredReq, indexedKind, Search.TierSnapshot.At(indexed)).collect()))
+    for ((kind, call) <- calls) {
+      call() // builds the postings and the copy outside the count
+      val jobs = jobsOf(call())
+      info(s"$kind tiered serve over a maintained copy: $jobs jobs")
+      assert(jobs <= TieredServeJobBudget,
+        s"$kind tiered serve over a maintained copy ran $jobs Spark jobs")
+    }
+  }
+
+  test("a bare tiered serve leaves no persisted RDD and no tracked persist") {
+    import graft.operators.Dedup
+    val tracked0 = Dedup.trackedCount
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def leftover = spark.sparkContext.getPersistentRDDs.keySet -- before
+    for (kind <- Seq(None, indexedKind))
+      assert(Search.serveRequestsTiered(spark, dir, emb, docs, tieredReq,
+        kind, Search.TierSnapshot.Pristine).collect().nonEmpty)
+    // unpersists are asynchronous: give them time to land
+    val deadline = System.currentTimeMillis + 15000
+    while (System.currentTimeMillis < deadline && leftover.nonEmpty)
+      Thread.sleep(100)
+    assert(leftover.isEmpty,
+      s"a bare tiered serve left ${leftover.size} persisted RDDs")
+    assert(Dedup.trackedCount == tracked0,
+      "a bare tiered serve registered persists in the global tracker")
   }
 
   test("indexed serve ledger: sum-of-parts, probe pruning strictly undercuts the brute ledger") {

@@ -1056,6 +1056,21 @@ class SearchSpec extends AnyFunSuite {
     }
   }
 
+  test("tiered fetch equals the relational reference on the stored fixture layouts") {
+    def rows(df: DataFrame) = df.select("qid", "id", "s_full").collect()
+      .map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSeq.sorted
+    for (kind <- Seq(None, indexedKind)) {
+      val v = Search.resolveTiered(spark, dir, emb,
+        SparkEntry.ServeTierLayoutScales, kind, Search.TierSnapshot.Pristine)
+      val got = rows(Search.tieredFetch(spark, v, tieredReq, kind))
+      val want = rows(TieredFetchReference.tieredFetch(spark, v, tieredReq,
+        kind))
+      assert(got.nonEmpty && got == want, s"indexed=$kind: block-pass " +
+        s"fetch diverged\n  got  ${got.take(12)}\n  want ${want.take(12)}")
+    }
+  }
+
   test("a bare tiered serve leaves no persisted RDD and no tracked persist") {
     import graft.operators.Dedup
     val tracked0 = Dedup.trackedCount

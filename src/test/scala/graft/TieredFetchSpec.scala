@@ -4,15 +4,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Search
-import graft.operators.Search.{TierSnapshot, TieredRequests, TieredView}
+import graft.operators.Search.{TieredRequests, TieredView}
 import graft.sources.Disaggregated
 
 /**
  * The tiered serve's block-pass fetch (`Search.tieredFetch`) against the
  * relational form ([[TieredFetchReference]]) on both layout kinds:
  * the same (qid, id) set with `s_full` equal as a bit pattern, on mixed
- * tiers, multi-lang and unmatched filters, degenerate inputs and the
- * stored fixture layouts.
+ * tiers, multi-lang and unmatched filters and degenerate inputs
+ * (`SearchSpec` runs the same comparison on the stored fixture layouts).
  */
 class TieredFetchSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -130,20 +130,6 @@ class TieredFetchSpec extends AnyFunSuite {
       // 60 partitions for 31 rows: most are empty, none holds poolN rows
       assertSame(s"degenerate, $slices partitions",
         view(corpus, slices, kind.nonEmpty, qvecs), r, kind)
-    }
-  }
-
-  test("tiered fetch equals the relational reference on the stored fixture layouts") {
-    import SparkEntry._
-    val dir = "/root/testdata/sf0.001"
-    val emb = Tables.embeddings(spark, dir)
-    val r = TieredRequests(Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-      PageKMultiRel, ServeTierRel, ServeTierLayoutScales, Bm25K1, Bm25B,
-      RrfPoolN, PostBuckets, refineParams("cos_l1").alpha)
-    for (kind <- Seq(Partitioned, Some((IvfCells, EmbD, IvfProbe)))) {
-      val v = Search.resolveTiered(spark, dir, emb, ServeTierLayoutScales,
-        kind, TierSnapshot.Pristine)
-      assert(assertSame("fixture", v, r, kind).nonEmpty)
     }
   }
 }

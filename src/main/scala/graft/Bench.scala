@@ -268,11 +268,9 @@ object Bench {
         SparkEntry.IvfProbe)
       graft.operators.Ivf.ensureKnnGraphProbes(spark, sfDir,
         SparkEntry.IvfCells, SparkEntry.EmbD, SparkEntry.IvfProbe)
-      graft.sources.Disaggregated.ensureTieredServeFixture(spark, sfDir,
-        SparkEntry.ServeTierLayoutScales)
-      graft.sources.Disaggregated.ensureTieredServeIndexedFixture(spark,
-        sfDir, SparkEntry.ServeTierLayoutScales, SparkEntry.IvfCells,
-        SparkEntry.EmbD)
+      val tierKinds = Seq(None, Some((SparkEntry.IvfCells, SparkEntry.EmbD)))
+      val tieredPristine = tierKinds.map(graft.sources.Disaggregated
+        .ensureTieredServe(spark, sfDir, SparkEntry.ServeTierLayoutScales, _))
       graft.operators.Search.compactPostingsUpsert(spark, sfDir,
         postingsRoot, SparkEntry.Bm25UpsertMod, SparkEntry.PostBuckets,
         SparkEntry.PostingsUpsertToken)
@@ -306,11 +304,10 @@ object Bench {
         graft.Tables.documents(spark, sfDir).select(
           org.apache.spark.sql.functions.col("doc_id")),
         SparkEntry.Bm25UpsertMod, idCol = "doc_id", tag = "_docs")
-      graft.sources.Disaggregated.ensureTieredServeUpserted(spark, sfDir,
-        SparkEntry.ServeTierLayoutScales, SparkEntry.UpsertMod)
-      graft.sources.Disaggregated.ensureTieredServeIndexedUpserted(spark,
-        sfDir, SparkEntry.ServeTierLayoutScales, SparkEntry.IvfCells,
-        SparkEntry.EmbD, SparkEntry.UpsertMod)
+      tierKinds.foreach(graft.sources.Disaggregated
+        .ensureTieredServeCommitted(spark, sfDir,
+          SparkEntry.ServeTierLayoutScales, _, upsert = true,
+          SparkEntry.UpsertMod))
       // the serve-capstone stream drains are content-keyed one-time
       // materializations like every stream drain above — run each query
       // once so its timed row measures the steady-state drained read,
@@ -325,27 +322,16 @@ object Bench {
       // round-18 layouts: the tiered layouts' delete commits, the tiered
       // update log (the as-of serve's anchor), the as-of graph
       // compaction, and the multi-commit mutating stream's drain
-      graft.sources.Disaggregated.ensureTieredServeDeleted(spark, sfDir,
-        SparkEntry.ServeTierLayoutScales, SparkEntry.DeleteMod)
-      graft.sources.Disaggregated.ensureTieredServeIndexedDeleted(spark,
-        sfDir, SparkEntry.ServeTierLayoutScales, SparkEntry.IvfCells,
-        SparkEntry.EmbD, SparkEntry.DeleteMod)
-      graft.operators.Pq.ensureVersionedTombstones(spark,
-        graft.sources.Disaggregated.ensureTieredServeFixture(spark,
-          sfDir, SparkEntry.ServeTierLayoutScales),
+      tierKinds.foreach(graft.sources.Disaggregated
+        .ensureTieredServeCommitted(spark, sfDir,
+          SparkEntry.ServeTierLayoutScales, _, upsert = false,
+          SparkEntry.DeleteMod))
+      graft.operators.Pq.ensureVersionedTombstones(spark, tieredPristine(0),
         SparkEntry.UpsertMod, idCol = "id")
-      graft.operators.Pq.ensureVersionedTombstones(spark,
-        graft.sources.Disaggregated.ensureTieredServeFixture(spark,
-          sfDir, SparkEntry.ServeTierLayoutScales),
-        SparkEntry.DeleteMod, idCol = "id")
-      graft.operators.Pq.ensureVersionedTombstones(spark,
-        graft.sources.Disaggregated.ensureTieredServeIndexedFixture(
-          spark, sfDir, SparkEntry.ServeTierLayoutScales,
-          SparkEntry.IvfCells, SparkEntry.EmbD),
-        SparkEntry.DeleteMod, idCol = "id")
+      tieredPristine.foreach(graft.operators.Pq.ensureVersionedTombstones(
+        spark, _, SparkEntry.DeleteMod, idCol = "id"))
       locally {
-        val tpath = graft.sources.Disaggregated.ensureTieredServeFixture(
-          spark, sfDir, SparkEntry.ServeTierLayoutScales)
+        val tpath = tieredPristine(0)
         graft.operators.Pq.ensureVersionedMixedLog(spark, tpath,
           spark.read.parquet(tpath).select(
             org.apache.spark.sql.functions.col("id")),

@@ -759,16 +759,8 @@ object Soak {
         val layoutDir = scratch.resolve("tiers").toString
         // overflow guard: the raw N(0,1) draws are unnormalized, so the
         // fixture's code-width require rides along (one bounded scan)
-        val maxAbs = embSoak
-          .select(max(aggregate(col("embedding"), lit(0.0d),
-            (a, x) => greatest(a, abs(x.cast("double"))))))
-          .collect()(0).getDouble(0)
-        tScales.foreach { s =>
-          val lim = if (graft.sources.Disaggregated
-            .serveTierCodeBytes(s) == 1) 127.0 else 32767.0
-          require(maxAbs * math.pow(2.0, s) + 0.5 < lim,
-            s"soak tier 2^$s overflows its code width at |v|max=$maxAbs")
-        }
+        graft.sources.Disaggregated.requireTierCodesFit(embSoak, "embedding",
+          tScales)
         val vecs = embSoak.select(col("vec_id").as("id"),
           concat(lit("l"), pmod(col("vec_id"), lit(4L))).as("lang"),
           col("embedding").as("vec"))

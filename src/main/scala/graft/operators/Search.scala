@@ -2032,27 +2032,6 @@ object Search {
         .otherwise(col("embedding")).as("embedding"),
       col("label"))
 
-  /** Tier `s`'s stored code of `vec`: round(v·2^s) at the tier's width. */
-  private def tierCode(vec: Column, s: Int): Column = {
-    val mul = math.pow(2.0, s)
-    val t = if (graft.sources.Disaggregated.serveTierCodeBytes(s) == 1)
-      "byte" else "short"
-    transform(vec, x => floor(x * mul + lit(0.5)).cast(t))
-  }
-
-  /** The pristine fixture of the layout kind: id-sorted files, or cell
-    * partitions of the (nCells, d) coarse quantizer. */
-  private def tieredFixture(spark: SparkSession, sfDir: String,
-                            layoutScales: Seq[Int],
-                            indexed: Option[(Int, Int, Int)]): String =
-    indexed match {
-      case None => graft.sources.Disaggregated.ensureTieredServeFixture(
-        spark, sfDir, layoutScales)
-      case Some((nCells, d, _)) => graft.sources.Disaggregated
-        .ensureTieredServeIndexedFixture(spark, sfDir, layoutScales,
-          nCells, d)
-    }
-
   /** The ids the versioned log anchored on `fixture` applies by `asOf`. */
   private def logIds(spark: SparkSession, fixture: String, mod: Int,
                      asOf: Int): DataFrame =
@@ -2061,38 +2040,12 @@ object Search {
       .filter(col("commit_v") <= asOf)
       .select(col("id"))
 
-  /** `stored` with `updIds`' rows upserted in-plan: vector negated and
-    * every tier's codes recomputed from it (the trees the
-    * commitServeTier(Indexed)Upserts commits write); on the indexed
-    * layout the rows are re-assigned to their new cells. Every other
-    * row's stored bytes pass through verbatim. */
-  private def upsertedView(stored: DataFrame, updIds: DataFrame,
-                           layoutScales: Seq[Int],
-                           indexed: Option[(Int, Int, Int)]): DataFrame =
-    indexed match {
-      case None =>
-        val newVec = when(col("u") === 1,
-          transform(col("vec"), x => -x)).otherwise(col("vec"))
-        stored.join(updIds.withColumn("u", lit(1)), Seq("id"), "left")
-          .select(Seq(col("id"), col("lang"), newVec.as("vec")) ++
-            layoutScales.sorted.map(s => when(col("u") === 1,
-              tierCode(newVec, s)).otherwise(col(s"code_$s"))
-              .as(s"code_$s")): _*)
-      case Some((nCells, d, _)) =>
-        val updRows = stored.join(updIds, Seq("id"), "left_semi")
-          .select(col("id"), col("lang"),
-            transform(col("vec"), x => -x).as("vec"))
-        val newAsg = Ivf.assign(updRows.select(col("id").as("vec_id"),
-            col("vec").as("embedding")), nCells, d)
-          .select(col("id"), col("cell"))
-        val recomputed = updRows.join(newAsg, Seq("id"))
-          .select(Seq(col("id"), col("lang"), col("vec"), col("cell")) ++
-            layoutScales.sorted.map(s =>
-              tierCode(col("vec"), s).as(s"code_$s")): _*)
-        stored.join(updIds, Seq("id"), "left_anti")
-          .select(recomputed.columns.map(col): _*)
-          .unionByName(recomputed)
-    }
+  /** The tiered layout kind of a serve's `indexed` parameter: the
+    * (nCells, d) cells of the indexed layout, None for the bucketed one
+    * (the probe depth is a serve knob, not a layout one). */
+  private[graft] def tierCells(indexed: Option[(Int, Int, Int)])
+      : Option[(Int, Int)] =
+    indexed.map { case (nCells, d, _) => (nCells, d) }
 
   /** Resolve `snap` over the layout kind (see [[TierSnapshot]]). */
   private[graft] def resolveTiered(spark: SparkSession, sfDir: String,
@@ -2100,8 +2053,10 @@ object Search {
                                    indexed: Option[(Int, Int, Int)],
                                    snap: TierSnapshot): TieredView = {
     import TierSnapshot._
-    import graft.sources.Disaggregated
-    lazy val fixture = tieredFixture(spark, sfDir, layoutScales, indexed)
+    import graft.sources.Disaggregated.{ensureTieredServe,
+      ensureTieredServeCommitted, upsertedServeTiers}
+    val cells = tierCells(indexed)
+    lazy val fixture = ensureTieredServe(spark, sfDir, layoutScales, cells)
     def negatedBy(updIds: DataFrame): DataFrame = negated(
       emb.join(updIds.select(col("id").as("vec_id")).withColumn("upd",
         lit(1)), Seq("vec_id"), "left"), col("upd") === 1)
@@ -2109,31 +2064,19 @@ object Search {
       case Pristine => (spark.read.parquet(fixture), emb, false)
       case At(path) => (spark.read.parquet(path), emb, false)
       case Upserted(mod) =>
-        val layout = indexed match {
-          case None => Disaggregated.ensureTieredServeUpserted(spark,
-            sfDir, layoutScales, mod)
-          case Some((nCells, d, _)) => Disaggregated
-            .ensureTieredServeIndexedUpserted(spark, sfDir, layoutScales,
-              nCells, d, mod)
-        }
-        (spark.read.parquet(layout),
+        (spark.read.parquet(ensureTieredServeCommitted(spark, sfDir,
+          layoutScales, cells, upsert = true, mod)),
           negated(emb, col("vec_id") % mod === 0), false)
       case Deleted(mod) =>
-        val layout = indexed match {
-          case None => Disaggregated.ensureTieredServeDeleted(spark, sfDir,
-            layoutScales, mod)
-          case Some((nCells, d, _)) => Disaggregated
-            .ensureTieredServeIndexedDeleted(spark, sfDir, layoutScales,
-              nCells, d, mod)
-        }
-        (spark.read.parquet(layout), emb, true)
+        (spark.read.parquet(ensureTieredServeCommitted(spark, sfDir,
+          layoutScales, cells, upsert = false, mod)), emb, true)
       case UpsertLog(mod, asOf, compacted) =>
         val updIds = logIds(spark, fixture, mod, asOf)
         val stored =
           if (compacted) spark.read.parquet(ensureTieredServeCompacted(
             spark, sfDir, layoutScales, indexed, mod, asOf) + "/tiers")
-          else upsertedView(spark.read.parquet(fixture), updIds,
-            layoutScales, indexed)
+          else upsertedServeTiers(spark.read.parquet(fixture), updIds,
+            layoutScales, cells)
         (stored, negatedBy(updIds), false)
       case DeleteLog(mod, asOf) =>
         (spark.read.parquet(fixture)
@@ -2146,16 +2089,13 @@ object Search {
           .filter(col("commit_v") <= asOf)
         val updIds = log.filter(col("verb") === "U").select(col("id"))
         val delIds = log.filter(col("verb") === "D").select(col("id"))
-        (upsertedView(base, updIds, layoutScales, indexed)
+        (upsertedServeTiers(base, updIds, layoutScales, cells)
           .join(delIds, Seq("id"), "left_anti"), negatedBy(updIds), true)
     }
     TieredView(stored, queries,
       if (deletes) stored.select(col("id").as("vec_id"))
       else queries.select(col("vec_id")))
   }
-
-  /** Bump when the compacted snapshot layout changes. */
-  private val TieredAsOfCompactLayoutVersion = 1
 
   /**
    * SNAPSHOT COMPACTION of the tiered update log, the OPTIMIZE verb:
@@ -2166,29 +2106,24 @@ object Search {
    * re-assignment) on every read. The bytes derive from the LAYOUT + LOG,
    * never a corpus rebuild: non-updated rows' stored codes are copied
    * verbatim. Row-count conservation is required at publish (an upsert
-   * changes values, never membership); the dir is atomic and
-   * version-keyed beside the fixture it derives from.
+   * changes values, never membership); the dir is atomic and keyed
+   * beside the pristine layout it derives from (so by its version).
    */
   private[graft] def ensureTieredServeCompacted(
       spark: SparkSession, sfDir: String, layoutScales: Seq[Int],
       indexed: Option[(Int, Int, Int)], mod: Int, asOf: Int): String = {
     import java.nio.file.{Files, Paths}
-    val base = tieredFixture(spark, sfDir, layoutScales, indexed)
-    val path = Paths.get(base +
-      s"_asofcmp_v${TieredAsOfCompactLayoutVersion}_m${mod}_a$asOf")
+    import graft.sources.Disaggregated
+    val cells = tierCells(indexed)
+    val base = Disaggregated.ensureTieredServe(spark, sfDir, layoutScales,
+      cells)
+    val path = Paths.get(base + s"_asofcmp_m${mod}_a$asOf")
     if (!Files.exists(path.resolve("_DONE"))) {
       val tmp = Files.createTempDirectory(path.getParent, "servetasofcmp-")
-      val view = upsertedView(spark.read.parquet(base),
-        logIds(spark, base, mod, asOf), layoutScales, indexed)
-      val (keyed, key) = indexed match {
-        case None => (view.withColumn("pb", pmod(col("id"), lit(graft
-          .sources.Disaggregated.ServeTiersUpsertBuckets.toLong))
-          .cast("int")), "pb")
-        case Some(_) => (view, "cell")
-      }
-      keyed.repartition(col(key)).sortWithinPartitions(col("id"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .partitionBy(key).parquet(tmp.resolve("tiers").toString)
+      Disaggregated.writeServeTierFiles(Disaggregated.upsertedServeTiers(
+          spark.read.parquet(base), logIds(spark, base, mod, asOf),
+          layoutScales, cells),
+        tmp.resolve("tiers").toString, cells)
       val compactN = spark.read.parquet(tmp.resolve("tiers").toString)
         .count()
       val baseN = spark.read.parquet(base).count()

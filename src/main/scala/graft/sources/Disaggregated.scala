@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 
@@ -160,9 +160,18 @@ object Disaggregated {
   }
 
   // --- tiered SERVE layout (per-request precision on the doc corpus) ---
+  //
+  // One layout in two kinds, `cells` = None or Some((nCells, d)):
+  //  - BUCKETED: partitioned by the id bucket `pb = pmod(id, 16)`;
+  //  - INDEXED: partitioned by `cell`, the (nCells, d) coarse quantizer's
+  //    assignment of the row's vector.
+  // Both hold (id, lang, vec, code_s per tier) and are maintained by the
+  // same upsert and delete commit.
 
-  /** Bump when [[writeServeTiers]]'s layout changes. */
-  private val ServeTiersLayoutVersion = 1
+  /** Bump when the tiered serve layout changes: the pristine layout, its
+    * committed copies and (through the pristine path) the compacted
+    * snapshots all key on it. */
+  private val ServeTiersLayoutVersion = 2
 
   /** Smallest honest storage width for a quantization tier: codes are
     * |k| <= max|v|·2^s + 0.5, so tiers up to 2^6 fit TINYINT on the
@@ -171,615 +180,275 @@ object Disaggregated {
     * width, not a model. */
   def serveTierCodeBytes(scaleLog2: Int): Int = if (scaleLog2 <= 6) 1 else 2
 
-  /**
-   * PRECISION TIERS AT REST ON THE SERVING CORPUS: one
-   * scalar-quantization code column PER TIER (`code_s` =
-   * round(v·2^s)/2^-s codes at physical width
-   * [[serveTierCodeBytes]]) beside the full-precision vector AND the
-   * request pre-filter metadata (`lang`, denormalized at build time so
-   * the serve's cheap pass needs no metadata join) — the
-   * [[writeTiers]] story carried onto the document corpus, where the
-   * per-request knob must be recomputable by the DuckDB oracle from
-   * the raw floats (mantissa truncation is a bit-level op SQL cannot
-   * mirror; round-to-nearest dyadic quantization is exact on both
-   * engines — the [[graft.oracle.RefineOracle.quantRvDv]] discipline).
-   * A request batch using tiers {4, 11} physically reads neither `vec`
-   * nor the stored 8-bit tier's chunks (PlanSpec asserts). Sorted by
-   * id within files for row-group skipping on the rescore fetch.
-   */
-  def writeServeTiers(vectors: DataFrame, path: String,
-                      scales: Seq[Int]): Unit = {
-    val cols = Seq(col("id"), col("lang"), col("vec")) ++
-      scales.sorted.map { s =>
-        val mul = math.pow(2.0, s)
-        val t = if (serveTierCodeBytes(s) == 1) "byte" else "short"
-        transform(col("vec"),
-          x => floor(x * mul + lit(0.5)).cast(t)).as(s"code_$s")
-      }
-    vectors.select(cols: _*)
-      .sortWithinPartitions(col("id"))
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      .parquet(path)
+  /** Tier `s`'s stored code of `vec`: round(v·2^s) at the tier's width.
+    * Round-to-nearest dyadic quantization is exact on Spark and DuckDB
+    * alike, so the oracle recomputes the codes from the raw floats. */
+  def tierCode(vec: Column, s: Int): Column = {
+    val mul = math.pow(2.0, s)
+    val t = if (serveTierCodeBytes(s) == 1) "byte" else "short"
+    transform(vec, x => floor(x * mul + lit(0.5)).cast(t))
   }
 
-  /** Materialize the tiered SERVE fixture once per machine over the
-    * embeddings corpus + document langs (immutable version-named dir,
-    * atomic scratch publish — the [[ensureFixture]] discipline). Codes
-    * must fit their declared width (publish-time guard, not a silent
-    * wrap). */
-  def ensureTieredServeFixture(spark: SparkSession, sfDir: String,
-                               scales: Seq[Int]): String = {
-    import java.nio.file.{Files, Paths}
-    val safe = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = scales.sorted.mkString("-")
-    val path = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_servetiers_v${ServeTiersLayoutVersion}_${safe}_s${key}" +
-        s"_v${graft.Fixture.srcVersion(sfDir)}")
-    if (!Files.exists(path.resolve("_SUCCESS"))) {
-      val tmp = Files.createTempDirectory(path.getParent, "servet-")
-      val emb = graft.Tables.embeddings(spark, sfDir)
-      val docs = graft.Tables.documents(spark, sfDir)
-      val maxAbs = emb
-        .select(org.apache.spark.sql.functions.max(org.apache.spark.sql
-          .functions.aggregate(col("embedding"), lit(0.0d),
-            (a, x) => org.apache.spark.sql.functions.greatest(a,
-              org.apache.spark.sql.functions.abs(x.cast("double"))))))
-        .collect()(0).getDouble(0)
-      scales.foreach { s =>
-        val lim = if (serveTierCodeBytes(s) == 1) 127.0 else 32767.0
-        require(maxAbs * math.pow(2.0, s) + 0.5 < lim,
-          s"tier 2^$s codes overflow their ${serveTierCodeBytes(s)}-byte " +
-            s"width at max|v| = $maxAbs")
-      }
-      writeServeTiers(
-        emb.join(docs.select(col("doc_id").as("vec_id"), col("lang")),
-            Seq("vec_id"))
-          .select(col("vec_id").as("id"), col("lang"),
-            col("embedding").as("vec")),
-        tmp.toString, scales)
-      try Files.move(tmp, path)
-      catch { case _: java.nio.file.FileSystemException =>
-        VecFiles.deleteRecursively(tmp) }
-      require(Files.exists(path.resolve("_SUCCESS")),
-        s"tiered serve fixture publish failed: $path")
+  /** Refuse vectors (array column `vec`) whose codes at some tier would
+    * overflow the tier's width — a publish-time guard, not a silent
+    * wrap. One bounded scan. */
+  def requireTierCodesFit(vectors: DataFrame, vec: String,
+                          scales: Seq[Int]): Unit = {
+    val top = vectors.select(max(aggregate(col(vec), lit(0.0d),
+      (a, x) => greatest(a, abs(x.cast("double")))))).collect()(0)
+    val maxAbs = if (top.isNullAt(0)) 0.0 else top.getDouble(0)
+    scales.foreach { s =>
+      val lim = if (serveTierCodeBytes(s) == 1) 127.0 else 32767.0
+      require(maxAbs * math.pow(2.0, s) + 0.5 < lim,
+        s"tier 2^$s codes overflow their ${serveTierCodeBytes(s)}-byte " +
+          s"width at max|v| = $maxAbs")
     }
-    path.toString
   }
 
-  /** Bump when the upsertable tiered layout shape changes. */
-  private val ServeTiersUpsertLayoutVersion = 1
+  /** id-bucket count of the bucketed kind: rows land in
+    * `pb = pmod(id, ServeTierBuckets)` — a layout constant, not a corpus
+    * function. */
+  val ServeTierBuckets = 16
 
-  /** id-bucket partition count of the UPSERTABLE tiered layout: rows
-    * land in `pb = pmod(id, ServeTiersUpsertBuckets)`, so an update
-    * commit rewrites only its ids' buckets (dynamic partition
-    * overwrite) — a layout constant, not a corpus function. */
-  val ServeTiersUpsertBuckets = 16
+  /** The kind's partition column: `pb` (bucketed) or `cell` (indexed). */
+  def serveTierKey(cells: Option[(Int, Int)]): String =
+    if (cells.isEmpty) "pb" else "cell"
 
-  /** The tiered serve rows written PARTITIONED by the id bucket —
-    * [[writeServeTiers]]' columns plus `pb`, id-sorted within buckets.
-    * The partitioning exists for MAINTENANCE, not queries: the serve
-    * reads every bucket (no partition predicate), but an update commit
-    * overwrites only the touched buckets' files. */
-  def writeServeTiersPartitioned(vectors: DataFrame, path: String,
-                                 scales: Seq[Int]): Unit = {
-    val cols = Seq(col("id"), col("lang"), col("vec")) ++
-      scales.sorted.map { s =>
-        val mul = math.pow(2.0, s)
-        val t = if (serveTierCodeBytes(s) == 1) "byte" else "short"
-        transform(col("vec"),
-          x => floor(x * mul + lit(0.5)).cast(t)).as(s"code_$s")
-      } :+ pmod(col("id"), lit(ServeTiersUpsertBuckets.toLong))
-        .cast("int").as("pb")
-    vectors.select(cols: _*)
-      .repartition(col("pb"))
-      .sortWithinPartitions(col("id"))
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      .partitionBy("pb")
-      .parquet(path)
-  }
-
-  /**
-   * An UPDATE COMMIT on the tiered serve layout — the verb that makes
-   * the at-rest precision tiers a maintained index rather than a
-   * build-once artifact: the updated ids' rows get their new vector
-   * and ALL tier code columns recomputed from it (v' = −v, the
-   * fixture's float-exact transform), and ONLY the touched id buckets
-   * are rewritten via dynamic partition overwrite (the
-   * [[graft.operators.Ivf.commitProberUpdates]] discipline) — every
-   * untouched bucket's files are byte-immutable (spec-asserted by
-   * mtimes). Within a touched bucket, non-updated rows keep their
-   * STORED codes verbatim (no recompute — the rewrite is a row copy
-   * for them). Unlike the prober sidecar, a row's bucket never moves
-   * (pb is a pure function of the immutable id), so a touched bucket
-   * always receives back exactly its row count — no empty-partition
-   * sweep needed. Commit I/O ∝ touched-bucket occupancy, never the
-   * corpus.
-   */
-  def commitServeTierUpserts(spark: SparkSession, layoutDir: String,
-                             updIds: DataFrame,
-                             scales: Seq[Int]): Unit = {
-    val nB = ServeTiersUpsertBuckets
-    // the touched buckets — a bounded model (≤ nB ints), literalized so
-    // both the read and the overwrite prune at planning time
-    val touched = updIds
-      .select(pmod(col("id"), lit(nB.toLong)).cast("int").as("pb"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val base = spark.read.parquet(layoutDir)
-      .filter(col("pb").isin(touched.map(Int.box): _*))
-    val flagged = base
-      .join(updIds.select(col("id")).withColumn("u", lit(1)),
-        Seq("id"), "left")
-    val newVec = when(col("u") === 1,
-      transform(col("vec"), x => -x)).otherwise(col("vec"))
-    val cols = Seq(col("id"), col("lang"), newVec.as("vec")) ++
-      scales.sorted.map { s =>
-        val mul = math.pow(2.0, s)
-        val t = if (serveTierCodeBytes(s) == 1) "byte" else "short"
-        when(col("u") === 1,
-          transform(newVec, x => floor(x * mul + lit(0.5)).cast(t)))
-          .otherwise(col(s"code_$s")).as(s"code_$s")
-      } :+ col("pb")
-    val rewritten = flagged.select(cols: _*)
-    // stage first: Spark (rightly) refuses to overwrite a path that is
-    // also a read source of the same plan
-    val staging = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(layoutDir).getParent, "servet-commit-")
-    try {
-      rewritten.write.mode("overwrite").parquet(staging.toString)
-      spark.read.parquet(staging.toString)
-        .repartition(col("pb"))
-        .sortWithinPartitions(col("id"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pb")
-        .parquet(layoutDir)
-    } finally VecFiles.deleteRecursively(staging)
-  }
-
-  /** The tiered serve layout AFTER an upsert commit (ids ≡ 0 mod
-    * `mod`, v' = −v), built once per (sf, scales, mod): seed the
-    * id-bucketed layout from the pristine corpus, then apply the
-    * commit — [[commitServeTierUpserts]] rewrites only the touched
-    * buckets. Published atomically as its own version-keyed dir; the
-    * shared [[ensureTieredServeFixture]] layout is never mutated. */
-  def ensureTieredServeUpserted(spark: SparkSession, sfDir: String,
-                                scales: Seq[Int], mod: Int): String = {
-    import java.nio.file.{Files, Paths}
-    require(mod >= 2, s"mod=$mod")
-    val safe = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = scales.sorted.mkString("-")
-    val path = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_servetiers_ups_v${ServeTiersUpsertLayoutVersion}_${safe}" +
-        s"_s${key}_m${mod}_v${graft.Fixture.srcVersion(sfDir)}")
-    if (!Files.exists(path.resolve("_DONE"))) {
-      val tmp = Files.createTempDirectory(path.getParent, "servetups-")
-      val emb = graft.Tables.embeddings(spark, sfDir)
-      val docs = graft.Tables.documents(spark, sfDir)
-      writeServeTiersPartitioned(
-        emb.join(docs.select(col("doc_id").as("vec_id"), col("lang")),
-            Seq("vec_id"))
-          .select(col("vec_id").as("id"), col("lang"),
-            col("embedding").as("vec")),
-        tmp.toString, scales)
-      commitServeTierUpserts(spark, tmp.toString,
-        emb.select(col("vec_id").as("id"))
-          .filter(col("id") % mod === 0), scales)
-      Files.createFile(tmp.resolve("_DONE"))
-      try Files.move(tmp, path)
-      catch { case _: java.nio.file.FileSystemException =>
-        VecFiles.deleteRecursively(tmp) }
-      require(Files.exists(path.resolve("_DONE")),
-        s"upserted tiered layout publish failed: $path")
-    }
-    path.toString
-  }
-
-  /**
-   * An UPDATE COMMIT on the cell-partitioned INDEXED tiered layout —
-   * the hard maintenance case [[commitServeTierUpserts]] does not
-   * face: an updated vector's coarse-quantizer CELL MOVES with it
-   * (assignment of −v is not assignment of v), so a row changes
-   * partition. Touched partitions = the updated ids' OLD cells (their
-   * stale rows drop) ∪ NEW cells (their recomputed rows land) — both
-   * bounded models (≤ nCells ints) literalized so read and overwrite
-   * prune at planning time. Updated rows get the new vector, the new
-   * cell, and every tier's codes recomputed; non-updated rows in a
-   * touched cell are copied verbatim. Because rows MOVE, a touched old
-   * cell can be left empty — dynamic overwrite only replaces
-   * partitions that receive rows, so emptied cells are swept
-   * explicitly (the [[graft.operators.Ivf.commitProberUpdates]]
-   * discipline). Commit I/O ∝ touched-cell occupancy, never the
-   * corpus.
-   */
-  def commitServeTierIndexedUpserts(spark: SparkSession,
-                                    layoutDir: String,
-                                    updIds: DataFrame, scales: Seq[Int],
-                                    nCells: Int, d: Int): Unit = {
-    val emb = spark.read.parquet(layoutDir)
-    // old cells from the LAYOUT's own stored assignment of the updated
-    // ids (never a corpus re-assign); new cells from assigning the
-    // updated vectors' new values — both bounded collects
-    val updRows = emb.join(updIds.select(col("id")), Seq("id"),
-      "left_semi")
-    val oldCells = updRows.select(col("cell")).distinct()
-      .collect().map(_.getInt(0))
-    val updNew = updRows.select(col("id"), col("lang"),
-      transform(col("vec"), x => -x).as("vec"))
-    val newAsg = graft.operators.Ivf.assign(
-        updNew.select(col("id").as("vec_id"),
-          col("vec").as("embedding")), nCells, d)
-      .select(col("id"), col("cell"))
-    val newCells = newAsg.select(col("cell")).distinct()
-      .collect().map(_.getInt(0))
-    val touched = (oldCells ++ newCells).distinct.sorted
-    val keep = spark.read.parquet(layoutDir)
-      .filter(col("cell").isin(touched.map(Int.box): _*))
-      .join(updIds.select(col("id")), Seq("id"), "left_anti")
-    val recomputed = updNew.join(newAsg, Seq("id"))
-      .select(Seq(col("id"), col("lang"), col("vec"), col("cell")) ++
-        scales.sorted.map { s =>
-          val mul = math.pow(2.0, s)
-          val t = if (serveTierCodeBytes(s) == 1) "byte" else "short"
-          transform(col("vec"),
-            x => floor(x * mul + lit(0.5)).cast(t)).as(s"code_$s")
-        }: _*)
-    val rewritten = keep.select(recomputed.columns.map(col): _*)
-      .unionByName(recomputed)
-    // CRASH DISCIPLINE: the dynamic overwrite and the emptied-cell sweep
-    // are two filesystem steps, and a crash between them would leave the
-    // moved ids' stale rows in their old cells with nothing flagging the
-    // half-applied state. The commit is therefore bracketed by a PENDING
-    // marker inside the layout: a marker found at entry means a prior
-    // commit died mid-flight and the layout must be rebuilt from its
-    // seed (every mutable copy in-tree lives in a scratch dir that is
-    // discarded wholesale when its publish marker is absent — this
-    // require turns that convention into a loud contract).
-    val pending = java.nio.file.Paths.get(layoutDir, "_COMMIT_PENDING")
-    require(!java.nio.file.Files.exists(pending),
-      s"indexed tiered layout $layoutDir has a half-applied commit " +
-        "(_COMMIT_PENDING present) — discard and rebuild from the seed")
-    val staging = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(layoutDir).getParent, "servetidx-commit-")
-    try {
-      rewritten.write.mode("overwrite").parquet(staging.toString)
-      val staged = spark.read.parquet(staging.toString)
-      java.nio.file.Files.createFile(pending)
-      staged
-        .repartition(col("cell"))
-        .sortWithinPartitions(col("id"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(layoutDir)
-      // dynamic overwrite only replaces partitions that RECEIVE rows:
-      // a touched cell emptied by the move must be swept or its stale
-      // rows would survive — the sweep runs BEFORE the commit is
-      // declared complete (the pending marker comes off last)
-      val nonEmpty = staged.select(col("cell")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      touched.filterNot(nonEmpty).foreach { c =>
-        val p = java.nio.file.Paths.get(layoutDir, s"cell=$c")
-        if (java.nio.file.Files.exists(p))
-          VecFiles.deleteRecursively(p)
-      }
-      java.nio.file.Files.delete(pending)
-    } finally VecFiles.deleteRecursively(staging)
-  }
-
-  /** The cell-partitioned indexed tiered rows over the corpus VIEW
-    * (negMod > 0 = the commit view: the prefix's vectors flipped
-    * BEFORE assignment, so cells move with the update) written into
-    * `path` — shared by the upserted ensure's seed and the spec's
-    * fresh-build comparator, so "commit ≡ rebuild over the view" is
-    * checked against the same builder. */
-  def writeServeTiersIndexed(spark: SparkSession, sfDir: String,
-                             path: String, scales: Seq[Int],
-                             nCells: Int, d: Int,
-                             negMod: Int = 0): Unit = {
-    val emb0 = graft.Tables.embeddings(spark, sfDir)
-    val emb =
-      if (negMod <= 0) emb0
-      else emb0.select(col("vec_id"),
-        when(col("vec_id") % negMod === 0,
-          transform(col("embedding"), x => -x))
-          .otherwise(col("embedding")).as("embedding"),
-        col("label"))
-    val docs = graft.Tables.documents(spark, sfDir)
-    val src = graft.operators.Ivf.assign(emb, nCells, d)
-      .select(col("id").as("vec_id"), col("cell"))
-      .join(emb, Seq("vec_id"))
-      .join(docs.select(col("doc_id").as("vec_id"), col("lang")),
+  /** The serve corpus as tiered layout rows (id, lang, vec): the
+    * embeddings with their documents' `lang`, denormalized at build time
+    * so the serve's cheap pass needs no metadata join. */
+  def serveTierRows(emb: DataFrame, docs: DataFrame): DataFrame =
+    emb.join(docs.select(col("doc_id").as("vec_id"), col("lang")),
         Seq("vec_id"))
-      .select(col("vec_id").as("id"), col("cell"), col("lang"),
-        col("embedding").as("vec"))
-    val cols = Seq(col("id"), col("lang"), col("vec"), col("cell")) ++
-      scales.sorted.map { s =>
-        val mul = math.pow(2.0, s)
-        val t = if (serveTierCodeBytes(s) == 1) "byte" else "short"
-        transform(col("vec"),
-          x => floor(x * mul + lit(0.5)).cast(t)).as(s"code_$s")
-      }
-    src.select(cols: _*)
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("id"))
+      .select(col("vec_id").as("id"), col("lang"), col("embedding").as("vec"))
+
+  /** Write complete layout rows (every column, the key included) under
+    * `path`: one file per key, id-sorted for row-group skipping
+    * on the rescore fetch, zstd pages. With `dynamic`, only the keys the
+    * rows carry are replaced. */
+  private[graft] def writeServeTierFiles(rows: DataFrame, path: String,
+                                         cells: Option[(Int, Int)],
+                                         dynamic: Boolean = false): Unit = {
+    val key = serveTierKey(cells)
+    val w = rows.repartition(col(key)).sortWithinPartitions(col("id"))
       .write.mode("overwrite").option("compression", "zstd")
-      .partitionBy("cell")
-      .parquet(path)
+    (if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
+      .partitionBy(key).parquet(path)
   }
-
-  /** The INDEXED tiered layout AFTER an upsert commit (ids ≡ 0 mod
-    * `mod`, v' = −v): seed the cell-partitioned layout from the
-    * pristine corpus, then apply the commit —
-    * [[commitServeTierIndexedUpserts]] rewrites only the old ∪ new
-    * cells. Own version-keyed dir; the shared
-    * [[ensureTieredServeIndexedFixture]] is never mutated. */
-  def ensureTieredServeIndexedUpserted(spark: SparkSession,
-                                       sfDir: String, scales: Seq[Int],
-                                       nCells: Int, d: Int,
-                                       mod: Int): String = {
-    import java.nio.file.{Files, Paths}
-    require(mod >= 2, s"mod=$mod")
-    val safe = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = scales.sorted.mkString("-")
-    val path = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_servetiersidx_ups_v${ServeTiersUpsertLayoutVersion}" +
-        s"_${safe}_s${key}_c${nCells}_d${d}_m${mod}" +
-        s"_v${graft.Fixture.srcVersion(sfDir)}")
-    if (!Files.exists(path.resolve("_DONE"))) {
-      val tmp = Files.createTempDirectory(path.getParent, "servetiups-")
-      writeServeTiersIndexed(spark, sfDir, tmp.toString, scales,
-        nCells, d)
-      commitServeTierIndexedUpserts(spark, tmp.toString,
-        graft.Tables.embeddings(spark, sfDir)
-          .select(col("vec_id").as("id"))
-          .filter(col("id") % mod === 0), scales, nCells, d)
-      Files.createFile(tmp.resolve("_DONE"))
-      try Files.move(tmp, path)
-      catch { case _: java.nio.file.FileSystemException =>
-        VecFiles.deleteRecursively(tmp) }
-      require(Files.exists(path.resolve("_DONE")),
-        s"upserted indexed tiered layout publish failed: $path")
-    }
-    path.toString
-  }
-
-  // --- tiered layout DELETEs --------------------------------------------
-
-  /** Bump when the deleted tiered layout shape changes. */
-  private val ServeTiersDeleteLayoutVersion = 1
 
   /**
-   * A DELETE COMMIT on the id-bucketed tiered serve layout — the missing
-   * lifecycle verb: tombstoned ids DROP from every tier's cheap pass and
-   * the full-precision rescore by physically leaving the layout, and
-   * ONLY the deleted ids' buckets are rewritten (dynamic partition
-   * overwrite; untouched buckets byte-immutable, spec-asserted by
-   * mtimes). Rows never move buckets, but a delete can EMPTY one —
-   * dynamic overwrite only replaces partitions that receive rows, so
-   * emptied buckets are swept explicitly under the same _COMMIT_PENDING
-   * crash bracket as the indexed commits. Commit I/O ∝ touched-bucket
-   * occupancy, never the corpus.
+   * PRECISION TIERS AT REST ON THE SERVING CORPUS: write the rows
+   * (id, lang, vec) as the tiered serve layout of kind `cells` — one
+   * scalar-quantization code column `code_s` PER TIER ([[tierCode]], at
+   * physical width [[serveTierCodeBytes]]) beside the full-precision
+   * vector and the request pre-filter `lang`, partitioned by the kind's
+   * key (the bucket is computed from the id, the cell assigned from the
+   * vector). A request batch using tiers {4, 11} physically reads
+   * neither `vec` nor the stored 8-bit tier's chunks, and on the indexed
+   * kind its probed cells are a static partition filter (PlanSpec
+   * asserts both). The partitioning also bounds MAINTENANCE: a commit
+   * ([[commitServeTiers]]) rewrites only the partitions it touches.
    */
-  def commitServeTierDeletes(spark: SparkSession, layoutDir: String,
-                             delIds: DataFrame): Unit = {
-    val nB = ServeTiersUpsertBuckets
-    val touched = delIds
-      .select(pmod(col("id"), lit(nB.toLong)).cast("int").as("pb"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    // the deleted ids are corpus-fraction-sized: no broadcast hint on
-    // the anti-join, AQE sizes it
-    val kept = spark.read.parquet(layoutDir)
-      .filter(col("pb").isin(touched.map(Int.box): _*))
-      .join(delIds.select(col("id")), Seq("id"), "left_anti")
-    val pending = java.nio.file.Paths.get(layoutDir, "_COMMIT_PENDING")
-    require(!java.nio.file.Files.exists(pending),
+  def writeServeTiersPartitioned(vectors: DataFrame, path: String,
+                                 scales: Seq[Int],
+                                 cells: Option[(Int, Int)] = None): Unit = {
+    val keyed = cells match {
+      case None => vectors.withColumn("pb",
+        pmod(col("id"), lit(ServeTierBuckets.toLong)).cast("int"))
+      case Some((nCells, d)) => vectors.join(graft.operators.Ivf.assign(
+          vectors.select(col("id").as("vec_id"), col("vec").as("embedding")),
+          nCells, d).select(col("id"), col("cell")), Seq("id"))
+    }
+    writeServeTierFiles(keyed.select(
+      Seq(col("id"), col("lang"), col("vec")) ++
+        scales.sorted.map(s => tierCode(col("vec"), s).as(s"code_$s")) :+
+        col(serveTierKey(cells)): _*), path, cells)
+  }
+
+  /**
+   * `stored` (layout rows of kind `cells`) with the rows of `updIds`
+   * UPSERTED: v' = −v (the fixture's float-exact transform), every
+   * tier's code recomputed from it, and on the indexed kind the row
+   * re-assigned to the cell of −v (a row's bucket never moves: it is a
+   * function of the id). Every other row's stored bytes pass through
+   * verbatim. The commit, the merge-on-read snapshots and the compaction
+   * all derive upserted rows here.
+   */
+  def upsertedServeTiers(stored: DataFrame, updIds: DataFrame,
+                         scales: Seq[Int],
+                         cells: Option[(Int, Int)]): DataFrame = {
+    val ids = updIds.select(col("id"))
+    val neg = (v: Column) => transform(v, x => -x)
+    // the update flag, and on the indexed kind each updated row's new cell
+    val upd = cells match {
+      case None => ids.withColumn("u", lit(1))
+      case Some((nCells, d)) => graft.operators.Ivf.assign(
+          stored.join(ids, Seq("id"), "left_semi")
+            .select(col("id").as("vec_id"), neg(col("vec")).as("embedding")),
+          nCells, d)
+        .select(col("id"), lit(1).as("u"), col("cell").as("new_cell"))
+    }
+    val hit = col("u") === 1
+    val vec = when(hit, neg(col("vec"))).otherwise(col("vec"))
+    val key = cells.fold(col("pb"))(_ =>
+      when(hit, col("new_cell")).otherwise(col("cell")))
+    stored.join(upd, Seq("id"), "left")
+      .select(Seq(col("id"), col("lang"), vec.as("vec")) ++
+        scales.sorted.map(s => when(hit, tierCode(vec, s))
+          .otherwise(col(s"code_$s")).as(s"code_$s")) :+
+        key.as(serveTierKey(cells)): _*)
+  }
+
+  /**
+   * A COMMIT on the tiered serve layout at `layoutDir`, the verb that
+   * makes the at-rest precision tiers a maintained index rather than a
+   * build-once artifact: `upsert` rewrites the rows of `ids` through
+   * [[upsertedServeTiers]], otherwise they are DELETED (they leave every
+   * tier's cheap pass and the rescore by physically leaving the layout;
+   * on the indexed kind the quantizer stays stale, survivors keep their
+   * cells — the Lucene delete contract). Only the TOUCHED partitions are
+   * rewritten, so every other partition's files stay byte-immutable and
+   * commit I/O is proportional to touched-partition occupancy, never the
+   * corpus:
+   *  - bucketed: the ids' buckets, computed from the ids alone (no
+   *    layout scan);
+   *  - indexed: the cells the layout STORES the ids in (never a corpus
+   *    re-assign), plus on an upsert the cells their new vectors assign
+   *    to, since a cell moves with its vector.
+   * Both sets are bounded models (≤ 16 buckets, ≤ nCells cells)
+   * literalized so the read and the overwrite prune at planning time;
+   * inside a touched partition, rows that are not the ids' are copied
+   * verbatim.
+   *
+   * Write sequence: refuse a layout holding `_COMMIT_PENDING`; stage the
+   * rewritten rows (Spark refuses to overwrite a path that is also a
+   * read source of its plan); set the marker; overwrite the staged
+   * partitions dynamically; SWEEP the touched partitions the staged rows
+   * left empty (a delete can empty one, and so can an upsert that moves
+   * rows out of a cell: dynamic overwrite only replaces partitions that
+   * receive rows, so without the sweep their stale rows would survive);
+   * clear the marker; drop the staging copy. A replaced partition's files
+   * all get new names, so the partitions to sweep are the touched ones
+   * whose file names the overwrite left unchanged: a listing, no Spark
+   * job. A crash between the overwrite and the sweep leaves the marker
+   * behind: that layout must be rebuilt from its seed, and the next
+   * commit on it fails loudly.
+   */
+  def commitServeTiers(spark: SparkSession, layoutDir: String,
+                       ids: DataFrame, scales: Seq[Int],
+                       cells: Option[(Int, Int)], upsert: Boolean): Unit = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val pending = Paths.get(layoutDir, "_COMMIT_PENDING")
+    require(!Files.exists(pending),
       s"tiered layout $layoutDir has a half-applied commit " +
         "(_COMMIT_PENDING present) — discard and rebuild from the seed")
-    val staging = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(layoutDir).getParent, "servet-del-")
-    try {
-      kept.write.mode("overwrite").parquet(staging.toString)
-      val staged = spark.read.parquet(staging.toString)
-      java.nio.file.Files.createFile(pending)
-      staged
-        .repartition(col("pb"))
-        .sortWithinPartitions(col("id"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pb")
-        .parquet(layoutDir)
-      val nonEmpty = staged.select(col("pb")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      touched.filterNot(nonEmpty).foreach { b =>
-        val p = java.nio.file.Paths.get(layoutDir, s"pb=$b")
-        if (java.nio.file.Files.exists(p))
-          VecFiles.deleteRecursively(p)
-      }
-      java.nio.file.Files.delete(pending)
-    } finally VecFiles.deleteRecursively(staging)
-  }
-
-  /** The tiered serve layout AFTER a delete commit (ids ≡ 0 mod `mod`
-    * dropped): seed the id-bucketed layout from the pristine corpus,
-    * then apply [[commitServeTierDeletes]] — only the deleted ids'
-    * buckets rewrite. Own version-keyed dir; shared fixtures are never
-    * mutated. */
-  def ensureTieredServeDeleted(spark: SparkSession, sfDir: String,
-                               scales: Seq[Int], mod: Int): String = {
-    import java.nio.file.{Files, Paths}
-    require(mod >= 2, s"mod=$mod")
-    val safe = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = scales.sorted.mkString("-")
-    val path = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_servetiers_del_v${ServeTiersDeleteLayoutVersion}_${safe}" +
-        s"_s${key}_m${mod}_v${graft.Fixture.srcVersion(sfDir)}")
-    if (!Files.exists(path.resolve("_DONE"))) {
-      val tmp = Files.createTempDirectory(path.getParent, "servetdel-")
-      val emb = graft.Tables.embeddings(spark, sfDir)
-      val docs = graft.Tables.documents(spark, sfDir)
-      writeServeTiersPartitioned(
-        emb.join(docs.select(col("doc_id").as("vec_id"), col("lang")),
-            Seq("vec_id"))
-          .select(col("vec_id").as("id"), col("lang"),
-            col("embedding").as("vec")),
-        tmp.toString, scales)
-      commitServeTierDeletes(spark, tmp.toString,
-        emb.select(col("vec_id").as("id"))
-          .filter(col("id") % mod === 0))
-      Files.createFile(tmp.resolve("_DONE"))
-      try Files.move(tmp, path)
-      catch { case _: java.nio.file.FileSystemException =>
-        VecFiles.deleteRecursively(tmp) }
-      require(Files.exists(path.resolve("_DONE")),
-        s"deleted tiered layout publish failed: $path")
+    val key = serveTierKey(cells)
+    val keyIds = ids.select(col("id"))
+    val stored = spark.read.parquet(layoutDir)
+    val touchedKeys = cells match {
+      case None => keyIds.select(
+        pmod(col("id"), lit(ServeTierBuckets.toLong)).cast("int"))
+      case Some(_) =>
+        val hit = stored.join(keyIds, Seq("id"), "left_semi")
+        if (!upsert) hit.select(col(key))
+        else hit.select(col(key)).union(
+          upsertedServeTiers(hit, keyIds, scales, cells).select(col(key)))
     }
-    path.toString
-  }
-
-  /**
-   * A DELETE COMMIT on the cell-partitioned INDEXED tiered layout: the
-   * deleted ids' rows drop from their stored cells — the touched set is
-   * the LAYOUT's own assignment of the deleted ids (never a corpus
-   * re-assign), rewritten via dynamic partition overwrite with the
-   * emptied-cell sweep (a delete can empty a whole cell). The coarse
-   * quantizer stays STALE (cells of surviving rows unchanged) — the
-   * Lucene delete contract carried onto the vector index, exactly as
-   * the PQ/LSH/spherical families serve it. Commit I/O ∝ touched-cell
-   * occupancy, never the corpus.
-   */
-  def commitServeTierIndexedDeletes(spark: SparkSession,
-                                    layoutDir: String,
-                                    delIds: DataFrame): Unit = {
-    val base = spark.read.parquet(layoutDir)
-    val touched = base.join(delIds.select(col("id")), Seq("id"),
-        "left_semi")
-      .select(col("cell")).distinct().collect().map(_.getInt(0)).sorted
-    val kept = spark.read.parquet(layoutDir)
-      .filter(col("cell").isin(touched.map(Int.box): _*))
-      .join(delIds.select(col("id")), Seq("id"), "left_anti")
-    val pending = java.nio.file.Paths.get(layoutDir, "_COMMIT_PENDING")
-    require(!java.nio.file.Files.exists(pending),
-      s"indexed tiered layout $layoutDir has a half-applied commit " +
-        "(_COMMIT_PENDING present) — discard and rebuild from the seed")
-    val staging = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(layoutDir).getParent, "servetidx-del-")
-    try {
-      kept.write.mode("overwrite").parquet(staging.toString)
-      val staged = spark.read.parquet(staging.toString)
-      java.nio.file.Files.createFile(pending)
-      staged
-        .repartition(col("cell"))
-        .sortWithinPartitions(col("id"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(layoutDir)
-      val nonEmpty = staged.select(col("cell")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      touched.filterNot(nonEmpty).foreach { c =>
-        val p = java.nio.file.Paths.get(layoutDir, s"cell=$c")
-        if (java.nio.file.Files.exists(p))
-          VecFiles.deleteRecursively(p)
+    val touched = touchedKeys.distinct().collect().map(_.getInt(0)).sorted
+    val base = stored.filter(col(key).isin(touched.map(Int.box): _*))
+    val rewritten =
+      if (upsert) upsertedServeTiers(base, keyIds, scales, cells)
+      else base.join(keyIds, Seq("id"), "left_anti")
+    def files(k: Int): Set[String] = {
+      val p = Paths.get(layoutDir, s"$key=$k")
+      if (!Files.isDirectory(p)) Set.empty
+      else {
+        val ls = Files.list(p)
+        try ls.iterator().asScala.map(_.getFileName.toString).toSet
+        finally ls.close()
       }
-      java.nio.file.Files.delete(pending)
+    }
+    val staging = Files.createTempDirectory(
+      Paths.get(layoutDir).getParent, "servet-commit-")
+    try {
+      rewritten.write.mode("overwrite").parquet(staging.toString)
+      val before = touched.map(k => k -> files(k)).toMap
+      Files.createFile(pending)
+      writeServeTierFiles(spark.read.parquet(staging.toString), layoutDir,
+        cells, dynamic = true)
+      touched.filter(k => files(k) == before(k)).foreach(k =>
+        VecFiles.deleteRecursively(Paths.get(layoutDir, s"$key=$k")))
+      Files.delete(pending)
     } finally VecFiles.deleteRecursively(staging)
   }
 
-  /** The INDEXED tiered layout AFTER a delete commit (ids ≡ 0 mod
-    * `mod` dropped): seed the cell-partitioned layout, then apply
-    * [[commitServeTierIndexedDeletes]] — only the deleted ids' stored
-    * cells rewrite. Own version-keyed dir. */
-  def ensureTieredServeIndexedDeleted(spark: SparkSession, sfDir: String,
-                                      scales: Seq[Int], nCells: Int,
-                                      d: Int, mod: Int): String = {
+  /** [[commitServeTiers]]: an upsert on the bucketed layout. */
+  def commitServeTierUpserts(spark: SparkSession, layoutDir: String,
+                             updIds: DataFrame, scales: Seq[Int]): Unit =
+    commitServeTiers(spark, layoutDir, updIds, scales, None, upsert = true)
+
+  /** [[commitServeTiers]]: a delete on the bucketed layout. */
+  def commitServeTierDeletes(spark: SparkSession, layoutDir: String,
+                             delIds: DataFrame): Unit =
+    commitServeTiers(spark, layoutDir, delIds, Nil, None, upsert = false)
+
+  /** Build the tiered serve layout of kind `cells` over the corpus of
+    * `sfDir` once per machine, `commit` applied to it after the guarded
+    * seed write: an immutable version-named dir (`tag` names the
+    * commit), published by an atomic move of its scratch copy with
+    * `_DONE` as the done marker. */
+  private def ensureServeTiers(spark: SparkSession, sfDir: String,
+                               scales: Seq[Int], cells: Option[(Int, Int)],
+                               tag: String)
+                              (commit: (DataFrame, String) => Unit): String = {
     import java.nio.file.{Files, Paths}
-    require(mod >= 2, s"mod=$mod")
     val safe = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = scales.sorted.mkString("-")
+    val kind = cells.fold("") { case (nCells, d) => s"_c${nCells}_d$d" }
     val path = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_servetiersidx_del_v${ServeTiersDeleteLayoutVersion}" +
-        s"_${safe}_s${key}_c${nCells}_d${d}_m${mod}" +
+      s"graft_servetiers_v${ServeTiersLayoutVersion}_${safe}" +
+        s"_s${scales.sorted.mkString("-")}$kind$tag" +
         s"_v${graft.Fixture.srcVersion(sfDir)}")
     if (!Files.exists(path.resolve("_DONE"))) {
-      val tmp = Files.createTempDirectory(path.getParent, "servetidel-")
-      writeServeTiersIndexed(spark, sfDir, tmp.toString, scales,
-        nCells, d)
-      commitServeTierIndexedDeletes(spark, tmp.toString,
-        graft.Tables.embeddings(spark, sfDir)
-          .select(col("vec_id").as("id"))
-          .filter(col("id") % mod === 0))
+      val tmp = Files.createTempDirectory(path.getParent, "servet-")
+      val emb = graft.Tables.embeddings(spark, sfDir)
+      requireTierCodesFit(emb, "embedding", scales)
+      writeServeTiersPartitioned(
+        serveTierRows(emb, graft.Tables.documents(spark, sfDir)),
+        tmp.toString, scales, cells)
+      commit(emb, tmp.toString)
       Files.createFile(tmp.resolve("_DONE"))
       try Files.move(tmp, path)
       catch { case _: java.nio.file.FileSystemException =>
         VecFiles.deleteRecursively(tmp) }
       require(Files.exists(path.resolve("_DONE")),
-        s"deleted indexed tiered layout publish failed: $path")
+        s"tiered serve layout publish failed: $path")
     }
     path.toString
   }
 
-  /** [[ensureTieredServeFixture]] CELL-PARTITIONED — the INDEXED form:
-    * the same (id, lang, vec, code_s per tier) rows written
-    * `partitionBy(cell)` under the coarse quantizer's assignment, so a
-    * serve composes EVERY pruning axis in one scan — probe cells as a
-    * static partition filter, the request's tier as column pruning,
-    * the lang pre-filter as a pushed predicate. The complete
-    * bandwidth story per request: which FILES (cells), which COLUMN
-    * CHUNKS (tier), which ROWS (lang). */
-  def ensureTieredServeIndexedFixture(spark: SparkSession, sfDir: String,
-                                      scales: Seq[Int], nCells: Int,
-                                      d: Int): String = {
-    import java.nio.file.{Files, Paths}
-    val safe = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = scales.sorted.mkString("-")
-    val path = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_servetiersidx_v${ServeTiersLayoutVersion}_${safe}_s${key}" +
-        s"_c${nCells}_d${d}_v${graft.Fixture.srcVersion(sfDir)}")
-    if (!Files.exists(path.resolve("_SUCCESS"))) {
-      val tmp = Files.createTempDirectory(path.getParent, "servetidx-")
-      val emb = graft.Tables.embeddings(spark, sfDir)
-      val docs = graft.Tables.documents(spark, sfDir)
-      val maxAbs = emb
-        .select(org.apache.spark.sql.functions.max(org.apache.spark.sql
-          .functions.aggregate(col("embedding"), lit(0.0d),
-            (a, x) => org.apache.spark.sql.functions.greatest(a,
-              org.apache.spark.sql.functions.abs(x.cast("double"))))))
-        .collect()(0).getDouble(0)
-      scales.foreach { s =>
-        val lim = if (serveTierCodeBytes(s) == 1) 127.0 else 32767.0
-        require(maxAbs * math.pow(2.0, s) + 0.5 < lim,
-          s"tier 2^$s codes overflow their ${serveTierCodeBytes(s)}-byte " +
-            s"width at max|v| = $maxAbs")
-      }
-      val src = graft.operators.Ivf.assign(emb, nCells, d)
-        .select(col("id").as("vec_id"), col("cell"))
-        .join(emb, Seq("vec_id"))
-        .join(docs.select(col("doc_id").as("vec_id"), col("lang")),
-          Seq("vec_id"))
-        .select(col("vec_id").as("id"), col("cell"), col("lang"),
-          col("embedding").as("vec"))
-      val cols = Seq(col("id"), col("lang"), col("vec"), col("cell")) ++
-        scales.sorted.map { s =>
-          val mul = math.pow(2.0, s)
-          val t = if (serveTierCodeBytes(s) == 1) "byte" else "short"
-          transform(col("vec"),
-            x => floor(x * mul + lit(0.5)).cast(t)).as(s"code_$s")
-        }
-      src.select(cols: _*)
-        .repartition(col("cell"))
-        .sortWithinPartitions(col("id"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .partitionBy("cell")
-        .parquet(tmp.toString)
-      try Files.move(tmp, path)
-      catch { case _: java.nio.file.FileSystemException =>
-        VecFiles.deleteRecursively(tmp) }
-      require(Files.exists(path.resolve("_SUCCESS")),
-        s"tiered indexed serve fixture publish failed: $path")
+  /** The pristine tiered serve layout of kind `cells`. */
+  def ensureTieredServe(spark: SparkSession, sfDir: String,
+                        scales: Seq[Int],
+                        cells: Option[(Int, Int)]): String =
+    ensureServeTiers(spark, sfDir, scales, cells, "")((_, _) => ())
+
+  /** The tiered serve layout of kind `cells` AFTER one commit of the ids
+    * ≡ 0 mod `mod` (an upsert, v' = −v, or a delete): the pristine seed
+    * with [[commitServeTiers]] applied, so only the touched partitions
+    * were rewritten. A copy of its own; the pristine layout is never
+    * mutated. */
+  def ensureTieredServeCommitted(spark: SparkSession, sfDir: String,
+                                 scales: Seq[Int],
+                                 cells: Option[(Int, Int)],
+                                 upsert: Boolean, mod: Int): String = {
+    require(mod >= 2, s"mod=$mod")
+    ensureServeTiers(spark, sfDir, scales, cells,
+      s"_${if (upsert) "ups" else "del"}_m$mod") { (emb, dir) =>
+      commitServeTiers(spark, dir,
+        emb.select(col("vec_id").as("id")).filter(col("id") % mod === 0),
+        scales, cells, upsert)
     }
-    path.toString
   }
 
   // --- int8 at-rest layout --------------------------------------------

@@ -1230,8 +1230,8 @@ object StreamOps {
     val req = Search.TieredRequests(queries, filters, weights, ks, tiers,
       layoutScales, k1, b, poolN, nBuckets, alpha)
     Search.ensurePostingsLayout(spark, sfDir, nBuckets)
-    graft.sources.Disaggregated.ensureTieredServeFixture(spark, sfDir,
-      layoutScales)
+    graft.sources.Disaggregated.ensureTieredServe(spark, sfDir,
+      layoutScales, None)
     drainRequestStream(spark, sfDir,
       Seq("tiered", queries, filters, weights, ks, tiers, layoutScales,
         k1, b, poolN, nBuckets, alpha),
@@ -1337,39 +1337,19 @@ object StreamOps {
     def layout(dir: java.nio.file.Path): String =
       dir.resolve("tiers").toString
     val ids = emb.select(col("vec_id").as("id"))
-    val seed = (dir: java.nio.file.Path) => indexed match {
-      case None => Disaggregated.writeServeTiersPartitioned(
-        emb.join(docMeta.select(col("doc_id").as("vec_id"),
-            col("lang")), Seq("vec_id"))
-          .select(col("vec_id").as("id"), col("lang"),
-            col("embedding").as("vec")),
-        layout(dir), layoutScales)
-      case Some((nCells, d, _)) => Disaggregated.writeServeTiersIndexed(
-        spark, sfDir, layout(dir), layoutScales, nCells, d)
-    }
+    val cells = Search.tierCells(indexed)
+    val seed = (dir: java.nio.file.Path) =>
+      Disaggregated.writeServeTiersPartitioned(
+        Disaggregated.serveTierRows(emb, docMeta), layout(dir), layoutScales,
+        cells)
     val commits = plan.sliding(2).map { case Seq(prev, cur) =>
-      (dir: java.nio.file.Path) =>
-        if (cur.negMod != prev.negMod) {
-          val upd = ids.filter(
-            if (prev.negMod == 0) col("id") % cur.negMod === 0
-            else col("id") % cur.negMod === 0 &&
-              col("id") % prev.negMod =!= 0)
-          indexed match {
-            case None => Disaggregated.commitServeTierUpserts(spark,
-              layout(dir), upd, layoutScales)
-            case Some((nCells, d, _)) =>
-              Disaggregated.commitServeTierIndexedUpserts(spark,
-                layout(dir), upd, layoutScales, nCells, d)
-          }
-        } else {
-          val del = ids.filter(col("id") % cur.delMod === 0)
-          indexed match {
-            case None => Disaggregated.commitServeTierDeletes(spark,
-              layout(dir), del)
-            case Some(_) => Disaggregated.commitServeTierIndexedDeletes(
-              spark, layout(dir), del)
-          }
-        }
+      val upsert = cur.negMod != prev.negMod
+      val commitIds = ids.filter(
+        if (!upsert) col("id") % cur.delMod === 0
+        else if (prev.negMod == 0) col("id") % cur.negMod === 0
+        else col("id") % cur.negMod === 0 && col("id") % prev.negMod =!= 0)
+      (dir: java.nio.file.Path) => Disaggregated.commitServeTiers(spark,
+        layout(dir), commitIds, layoutScales, cells, upsert)
     }.toSeq
     drainRequestStream(spark, sfDir,
       Seq("mutating", queries, filters, weights, ks, tiers, layoutScales,

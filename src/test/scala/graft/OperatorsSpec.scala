@@ -1253,6 +1253,22 @@ class OperatorsSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getDouble(1), r.getLong(2)))
       .sortBy(_._1)
     assert(again.toSeq == rows.toSeq)
+    // iters = 0 is the init model's ledger row alone
+    val init = Ivf.kmeansConverge(emb, IvfCells, EmbD, 0).collect()
+      .map(r => (r.getInt(0), r.getDouble(1), r.getLong(2)))
+    assert(init.toSeq == rows.take(1).toSeq)
+  }
+
+  test("kmeans convergence ledger refuses an empty embedding relation") {
+    import graft.operators.Ivf
+    import SparkEntry.{IvfCells, EmbD}
+    val empty = Tables.embeddings(spark, dir).limit(0)
+    for (iters <- Seq(0, 2)) {
+      val e = intercept[IllegalArgumentException](
+        Ivf.kmeansConverge(empty, IvfCells, EmbD, iters))
+      assert(e.getMessage.contains("the embedding relation is empty"),
+        s"iters=$iters: ${e.getMessage}")
+    }
   }
 
   test("stream-maintained layered upper matches the batch layers row-for-row") {

@@ -1006,252 +1006,186 @@ class PlanSpec extends AnyFunSuite {
         layoutScans.map(_.simpleString(200)).mkString("\n"))
   }
 
-  test("upserted tiered layout: a commit rewrites only the touched id buckets; the serve still prunes unused tiers") {
-    import org.apache.spark.sql.functions.{col, element_at}
-    import SparkEntry.{ServeTierScales, ServeTierLayoutScales}
-    import graft.sources.Disaggregated
-    // a PRIVATE partitioned layout seeded from the fixture corpus —
-    // the commit below mutates this copy, never a shared ensure dir
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft-test-servetups-")
-    try {
-      val layout = scratch.resolve("tiers").toString
-      val emb = Tables.embeddings(spark, dir)
-      val docsT = Tables.documents(spark, dir)
-      Disaggregated.writeServeTiersPartitioned(
-        emb.join(docsT.select(col("doc_id").as("vec_id"), col("lang")),
-            Seq("vec_id"))
-          .select(col("vec_id").as("id"), col("lang"),
-            col("embedding").as("vec")),
-        layout, ServeTierLayoutScales)
-      def partFiles(): Map[String, Seq[(String, Long, Long)]] = {
-        val root = java.nio.file.Paths.get(layout)
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.list(root).iterator().asScala
-          .filter(p => p.getFileName.toString.startsWith("pb="))
-          .map { p =>
-            val fs = java.nio.file.Files.list(p).iterator().asScala
-              .filter(_.getFileName.toString.endsWith(".parquet"))
-              .map(f => (f.getFileName.toString,
-                java.nio.file.Files.size(f),
-                java.nio.file.Files.getLastModifiedTime(f).toMillis))
-              .toSeq.sortBy(_._1)
-            p.getFileName.toString -> fs
-          }.toMap
-      }
-      val before = partFiles()
-      Thread.sleep(1100) // beat filesystem mtime granularity
-      // SPARSE commit (the mod=211 regime of the sidecar tests):
-      // production commits touch a few of the 16 buckets — that is the
-      // write-amplification bound this layout exists to deliver
-      val updIds = emb.select(col("vec_id").as("id"))
-        .filter(col("id") % 211 === 0)
-      Disaggregated.commitServeTierUpserts(spark, layout, updIds,
-        ServeTierLayoutScales)
-      val after = partFiles()
-      val touched = updIds
-        .select(org.apache.spark.sql.functions.pmod(col("id"),
-          org.apache.spark.sql.functions.lit(
-            Disaggregated.ServeTiersUpsertBuckets.toLong))
-          .cast("int")).distinct().collect().map(_.getInt(0))
-        .map(b => s"pb=$b").toSet
-      assert(touched.size < Disaggregated.ServeTiersUpsertBuckets,
-        "updated ids cover every bucket — immutability check vacuous")
-      before.keys.filterNot(touched).foreach { pb =>
-        assert(after(pb) == before(pb),
-          s"untouched bucket $pb was rewritten by the commit")
-      }
-      touched.foreach { pb =>
-        assert(after(pb) != before(pb),
-          s"touched bucket $pb was NOT rewritten by the commit")
-      }
-      // the commit is a row replacement, never an add/drop
-      assert(spark.read.parquet(layout).count() == emb.count(),
-        "upsert commit changed the layout's row count")
-      // updated rows carry the flipped vector; untouched rows verbatim
-      val v0 = spark.read.parquet(layout)
-        .filter(col("id") === 0)
-        .select(element_at(col("vec"), 1)).collect()(0).getFloat(0)
-      val e0 = emb.filter(col("vec_id") === 0)
-        .select(element_at(col("embedding"), 1)).collect()(0).getFloat(0)
-      assert(v0 == -e0, "updated row's vector was not flipped")
-    } finally graft.sources.VecFiles.deleteRecursively(scratch)
-    // serve-side pruning on the PUBLISHED upserted layout (the one the
-    // declared query reads): the cheap pass still reads only the used
-    // tiers' code chunks, never vec or the stored-but-unused tier —
-    // the maintenance partition key costs the serve nothing
-    val upsPath = Disaggregated.ensureTieredServeUpserted(spark, dir,
-      ServeTierLayoutScales, SparkEntry.UpsertMod)
-    val stored = spark.read.parquet(upsPath)
-    val used = ServeTierScales.map(s => s"code_$s")
-    val cheap = stored.select(col("id") +: col("lang") +:
-      used.map(c => element_at(col(c), 1).cast("double").as(s"x_$c")): _*)
-    cheap.collect()
-    val unused = (ServeTierLayoutScales.toSet -- ServeTierScales.toSet)
-      .map(s => s"code_$s")
-    val scans = Disaggregated.scanSchemas(cheap)
-    assert(scans.nonEmpty, "no parquet scan in upserted cheap-pass plan")
-    assert(scans.forall(s => !s.contains("vec") &&
-        unused.forall(c => !s.contains(c))),
-      s"upserted cheap scan read vec or an unused tier ($unused): $scans")
+  // ---- tiered layout commits, on each layout kind and verb -------------
+  // One body over bucketed/indexed × upsert/delete (the TieredKinds
+  // pattern below): each case builds a private layout, commits a sparse
+  // id set (ids ≡ 0 mod 211, a strict subset of the partitions) and
+  // checks the commit against a fresh build over the commit view. A
+  // delete also removes every row of one partition, so the emptied-
+  // partition sweep is exercised. The budget is the commit's Spark jobs
+  // on these ids; the four commit bodies this one replaced ran 8, 16, 10
+  // and 12.
+
+  private val TieredCommits: Seq[(String, Option[(Int, Int)], Boolean, Int)] =
+    Seq(
+      ("upserted tiered layout: a commit rewrites only the touched id buckets; the serve still prunes unused tiers",
+        None, true, 8),
+      ("upserted INDEXED tiered layout: cells move with the commit, untouched cells byte-immutable, commit == rebuild",
+        Some((SparkEntry.IvfCells, SparkEntry.EmbD)), true, 11),
+      ("tiered layout DELETE commit: tombstoned ids gone, untouched buckets byte-immutable",
+        None, false, 8),
+      ("tiered layout DELETE commit: tombstoned ids gone, untouched buckets byte-immutable [indexed]",
+        Some((SparkEntry.IvfCells, SparkEntry.EmbD)), false, 9))
+
+  /** The tiered layout rows at `path` as (id, key, lang, hashes of the
+    * vector and of every tier's codes). */
+  private def tieredLayoutRows(path: String, key: String): Set[Seq[Any]] = {
+    import org.apache.spark.sql.functions.{col, hash}
+    spark.read.parquet(path).select(Seq(col("id"), col(key), col("lang"),
+        hash(col("vec"))) ++ SparkEntry.ServeTierLayoutScales.map(s =>
+        hash(col(s"code_$s"))): _*)
+      .collect().map(_.toSeq).toSet
   }
 
-  test("upserted INDEXED tiered layout: cells move with the commit, untouched cells byte-immutable, commit == rebuild") {
-    import org.apache.spark.sql.functions.{col, pmod, lit}
-    import SparkEntry.{ServeTierLayoutScales, IvfCells, EmbD}
-    import graft.sources.Disaggregated
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft-test-servetiups-")
-    try {
-      val layout = scratch.resolve("tiers").toString
-      Disaggregated.writeServeTiersIndexed(spark, dir, layout,
-        ServeTierLayoutScales, IvfCells, EmbD)
-      def partFiles(): Map[String, Seq[(String, Long, Long)]] = {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.list(java.nio.file.Paths.get(layout))
-          .iterator().asScala
-          .filter(p => p.getFileName.toString.startsWith("cell="))
-          .map { p =>
-            val fs = java.nio.file.Files.list(p).iterator().asScala
-              .filter(_.getFileName.toString.endsWith(".parquet"))
-              .map(f => (f.getFileName.toString,
-                java.nio.file.Files.size(f),
-                java.nio.file.Files.getLastModifiedTime(f).toMillis))
-              .toSeq.sortBy(_._1)
-            p.getFileName.toString -> fs
-          }.toMap
-      }
-      val before = partFiles()
-      Thread.sleep(1100) // beat filesystem mtime granularity
-      val emb = Tables.embeddings(spark, dir)
-      // the sparse-commit regime again: a few updated ids, so old ∪ new
-      // cells is a strict subset of the 8 and immutability is testable
-      val mod = 211
-      val updIds = emb.select(col("vec_id").as("id"))
-        .filter(col("id") % mod === 0)
-      // touched = the LAYOUT's stored cells of the updated ids ∪ the
-      // cells their negated vectors assign to
-      val oldCells = spark.read.parquet(layout)
-        .join(updIds, Seq("id"), "left_semi")
-        .select(col("cell")).distinct().collect().map(_.getInt(0))
-      val newCells = graft.operators.Ivf.assign(
-          emb.join(updIds.withColumnRenamed("id", "vec_id"),
-            Seq("vec_id"), "left_semi")
-            .select(col("vec_id"), org.apache.spark.sql.functions
-              .transform(col("embedding"), x => -x).as("embedding")),
-          IvfCells, EmbD)
-        .select(col("cell")).distinct().collect().map(_.getInt(0))
-      val touched = (oldCells ++ newCells).distinct.map(c => s"cell=$c")
-        .toSet
-      assert(touched.size < IvfCells,
-        "commit touches every cell — immutability check vacuous")
-      Disaggregated.commitServeTierIndexedUpserts(spark, layout, updIds,
-        ServeTierLayoutScales, IvfCells, EmbD)
-      val after = partFiles()
-      before.keys.filterNot(touched).foreach { c =>
-        assert(after(c) == before(c),
-          s"untouched cell $c was rewritten by the commit")
-      }
-      // commit ≡ rebuild over the commit view: the committed layout's
-      // rows equal a fresh build with the prefix flipped BEFORE
-      // assignment — a stale row, a missed move, or an unswept cell
-      // all break this equality
-      val expectedDir = scratch.resolve("expected").toString
-      Disaggregated.writeServeTiersIndexed(spark, dir, expectedDir,
-        ServeTierLayoutScales, IvfCells, EmbD, negMod = mod)
-      def rowsOf(p: String) = spark.read.parquet(p)
-        .select(col("id"), col("cell"), col("lang"),
-          org.apache.spark.sql.functions.hash(col("vec")).as("hv"),
-          org.apache.spark.sql.functions.hash(col("code_4")).as("h4"),
-          org.apache.spark.sql.functions.hash(col("code_11")).as("h11"))
-        .collect().map(_.toSeq).toSet
-      assert(rowsOf(layout) == rowsOf(expectedDir),
-        "committed indexed tiered layout != fresh build over the " +
-          "commit view")
-    } finally graft.sources.VecFiles.deleteRecursively(scratch)
-  }
-
-  test("tiered layout DELETE commit: tombstoned ids gone, untouched buckets byte-immutable") {
-    import org.apache.spark.sql.functions.{col, pmod, lit}
-    import SparkEntry.ServeTierLayoutScales
-    import graft.sources.Disaggregated
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft-test-servetdel-")
-    try {
-      val layout = scratch.resolve("tiers").toString
+  TieredCommits.foreach { case (name, cells, upsert, jobBudget) =>
+    test(name) {
+      import java.nio.file.{Files, Paths}
+      import org.apache.spark.sql.functions.{col, element_at}
+      import SparkEntry.{ServeTierScales, ServeTierLayoutScales}
+      import graft.sources.Disaggregated
+      val key = Disaggregated.serveTierKey(cells)
       val emb = Tables.embeddings(spark, dir)
       val docsT = Tables.documents(spark, dir)
-      Disaggregated.writeServeTiersPartitioned(
-        emb.join(docsT.select(col("doc_id").as("vec_id"), col("lang")),
-            Seq("vec_id"))
-          .select(col("vec_id").as("id"), col("lang"),
-            col("embedding").as("vec")),
-        layout, ServeTierLayoutScales)
-      def partFiles(): Map[String, Seq[(String, Long, Long)]] = {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.list(java.nio.file.Paths.get(layout))
-          .iterator().asScala
-          .filter(p => p.getFileName.toString.startsWith("pb="))
-          .map { p =>
-            val fs = java.nio.file.Files.list(p).iterator().asScala
-              .filter(_.getFileName.toString.endsWith(".parquet"))
-              .map(f => (f.getFileName.toString,
-                java.nio.file.Files.size(f),
-                java.nio.file.Files.getLastModifiedTime(f).toMillis))
-              .toSeq.sortBy(_._1)
-            p.getFileName.toString -> fs
-          }.toMap
-      }
-      val before = partFiles()
-      Thread.sleep(1100) // beat filesystem mtime granularity
-      // the sparse-commit regime: a few tombstoned ids touch a strict
-      // subset of the 16 buckets — the write-amplification bound the
-      // id-bucketed layout exists to deliver
-      val delIds = emb.select(col("vec_id").as("id"))
-        .filter(col("id") % 211 === 0)
-      val nDel = delIds.count()
-      Disaggregated.commitServeTierDeletes(spark, layout, delIds)
-      val after = partFiles()
-      val touched = delIds
-        .select(pmod(col("id"),
-          lit(Disaggregated.ServeTiersUpsertBuckets.toLong)).cast("int"))
-        .distinct().collect().map(_.getInt(0)).map(b => s"pb=$b").toSet
-      assert(touched.size < Disaggregated.ServeTiersUpsertBuckets,
-        "deleted ids cover every bucket — immutability check vacuous")
-      before.keys.filterNot(touched).foreach { pb =>
-        assert(after(pb) == before(pb),
-          s"untouched bucket $pb was rewritten by the delete commit")
-      }
-      touched.foreach { pb =>
-        assert(!after.contains(pb) || after(pb) != before(pb),
-          s"touched bucket $pb was NOT rewritten by the delete commit")
-      }
-      // the delete is a pure row drop: count down by |del|, no
-      // tombstoned id retrievable from the committed layout
-      val remaining = spark.read.parquet(layout)
-      assert(remaining.count() == emb.count() - nDel,
-        "delete commit changed more rows than the tombstone set")
-      assert(remaining.join(delIds, Seq("id"), "left_semi").count() == 0L,
-        "a tombstoned id survived the delete commit")
-    } finally graft.sources.VecFiles.deleteRecursively(scratch)
-    // and the PUBLISHED deleted layouts (the declared queries' stores):
-    // no tombstoned id in either — the indexed commit additionally
-    // sweeps any cell the delete emptied
-    import SparkEntry.{IvfCells, EmbD, DeleteMod}
-    val del = Tables.embeddings(spark, dir)
-      .select(col("vec_id").as("id"))
-      .filter(col("id") % DeleteMod === 0)
-    val flatPath = Disaggregated.ensureTieredServeDeleted(spark, dir,
-      ServeTierLayoutScales, DeleteMod)
-    assert(spark.read.parquet(flatPath)
-      .join(del, Seq("id"), "left_semi").count() == 0L,
-      "published deleted tiered layout still serves a tombstoned id")
-    val idxPath = Disaggregated.ensureTieredServeIndexedDeleted(spark,
-      dir, ServeTierLayoutScales, IvfCells, EmbD, DeleteMod)
-    assert(spark.read.parquet(idxPath)
-      .join(del, Seq("id"), "left_semi").count() == 0L,
-      "published deleted indexed tiered layout still serves a " +
-        "tombstoned id")
+      // a PRIVATE layout: the commit mutates this copy, never a shared
+      // ensure dir
+      val scratch = Files.createTempDirectory("graft-test-servetcommit-")
+      try {
+        val layout = scratch.resolve("tiers").toString
+        Disaggregated.writeServeTiersPartitioned(
+          Disaggregated.serveTierRows(emb, docsT), layout,
+          ServeTierLayoutScales, cells)
+        def partFiles(): Map[String, Seq[(String, Long, Long)]] = {
+          import scala.jdk.CollectionConverters._
+          Files.list(Paths.get(layout)).iterator().asScala
+            .filter(_.getFileName.toString.startsWith(s"$key="))
+            .map { p =>
+              val fs = Files.list(p).iterator().asScala
+                .filter(_.getFileName.toString.endsWith(".parquet"))
+                .map(f => (f.getFileName.toString, Files.size(f),
+                  Files.getLastModifiedTime(f).toMillis))
+                .toSeq.sortBy(_._1)
+              p.getFileName.toString -> fs
+            }.toMap
+        }
+        val before = partFiles()
+        val stored = spark.read.parquet(layout)
+        val mod = 211
+        val sparse = emb.select(col("vec_id").as("id"))
+          .filter(col("id") % mod === 0)
+        // a delete also drops every row of the partition holding id 1
+        val emptiedKey = stored.filter(col("id") === 1L)
+          .select(col(key)).collect()(0).getInt(0)
+        // a local relation: the commit rewrites the files `stored` lists
+        val idList = (if (upsert) sparse
+          else sparse.union(stored.filter(col(key) === emptiedKey)
+            .select(col("id"))).distinct()).collect().map(_.getLong(0)).toSeq
+        val ids = { val s = spark; import s.implicits._; idList.toDF("id") }
+        val nIds = idList.size
+        // touched = the layout's stored partitions of the ids, plus on an
+        // indexed upsert the cells their negated vectors assign to
+        val newCells = cells.filter(_ => upsert).toSeq.flatMap {
+          case (nCells, d) => graft.operators.Ivf.assign(
+              emb.join(ids.withColumnRenamed("id", "vec_id"), Seq("vec_id"),
+                "left_semi").select(col("vec_id"),
+                org.apache.spark.sql.functions.transform(col("embedding"),
+                  x => -x).as("embedding")), nCells, d)
+            .select(col("cell")).distinct().collect().map(_.getInt(0))
+        }
+        val touched = (stored.join(ids, Seq("id"), "left_semi")
+            .select(col(key)).distinct().collect().map(_.getInt(0)) ++
+          newCells).distinct.map(k => s"$key=$k").toSet
+        assert(touched.size < before.size,
+          "the commit touches every partition — immutability check vacuous")
+        Thread.sleep(1100) // beat filesystem mtime granularity
+        // a layout holding the crash marker is refused before any write
+        val pending = Paths.get(layout, "_COMMIT_PENDING")
+        Files.createFile(pending)
+        val refused = intercept[IllegalArgumentException](
+          Disaggregated.commitServeTiers(spark, layout, ids,
+            ServeTierLayoutScales, cells, upsert))
+        assert(refused.getMessage.contains(
+            "has a half-applied commit (_COMMIT_PENDING present)"),
+          refused.getMessage)
+        assert(partFiles() == before, "a refused commit wrote the layout")
+        Files.delete(pending)
+        val jobs = SparkJobs.count(spark)(Disaggregated.commitServeTiers(
+          spark, layout, ids, ServeTierLayoutScales, cells, upsert))
+        info(s"commit ran $jobs Spark jobs")
+        assert(jobs <= jobBudget, s"the commit ran $jobs Spark jobs")
+        // a finished commit leaves neither the marker nor its staging copy
+        assert(!Files.exists(pending), "the commit left _COMMIT_PENDING")
+        assert(Files.list(scratch).toArray.length == 1,
+          "the commit left a staging directory beside the layout")
+        val after = partFiles()
+        before.keys.filterNot(touched).foreach { p =>
+          assert(after(p) == before(p),
+            s"untouched partition $p was rewritten by the commit")
+        }
+        touched.foreach { p =>
+          assert(after.get(p) != before.get(p),
+            s"touched partition $p was NOT rewritten by the commit")
+        }
+        val committed = spark.read.parquet(layout)
+        if (upsert) {
+          // a row replacement, never an add or a drop, and the updated
+          // rows carry the flipped vector
+          assert(committed.count() == emb.count(),
+            "upsert commit changed the layout's row count")
+          val v0 = committed.filter(col("id") === 0)
+            .select(element_at(col("vec"), 1)).collect()(0).getFloat(0)
+          val e0 = emb.filter(col("vec_id") === 0)
+            .select(element_at(col("embedding"), 1)).collect()(0).getFloat(0)
+          assert(v0 == -e0, "updated row's vector was not flipped")
+        } else {
+          // a pure row drop: count down by |ids|, no deleted id left, and
+          // the partition the delete emptied is gone
+          assert(committed.count() == emb.count() - nIds,
+            "delete commit changed more rows than the tombstone set")
+          assert(committed.join(ids, Seq("id"), "left_semi").count() == 0L,
+            "a tombstoned id survived the delete commit")
+          assert(!after.contains(s"$key=$emptiedKey"),
+            s"the emptied partition $key=$emptiedKey was not swept")
+        }
+        // commit ≡ fresh build over the commit view: a stale row, a
+        // missed move or an unswept partition all break this equality
+        val view =
+          if (upsert) graft.operators.Search.negated(emb,
+            col("vec_id") % mod === 0)
+          else emb.join(ids.withColumnRenamed("id", "vec_id"), Seq("vec_id"),
+            "left_anti")
+        val expected = scratch.resolve("expected").toString
+        Disaggregated.writeServeTiersPartitioned(
+          Disaggregated.serveTierRows(view, docsT), expected,
+          ServeTierLayoutScales, cells)
+        assert(tieredLayoutRows(layout, key) ==
+            tieredLayoutRows(expected, key),
+          "committed tiered layout != fresh build over the commit view")
+      } finally graft.sources.VecFiles.deleteRecursively(scratch)
+      // the PUBLISHED committed layout (the one the declared queries
+      // read): the cheap pass reads only the used tiers' code chunks,
+      // never vec or the stored-but-unused tier, and a delete's ids are
+      // gone from it
+      val pubMod = if (upsert) SparkEntry.UpsertMod else SparkEntry.DeleteMod
+      val published = spark.read.parquet(Disaggregated
+        .ensureTieredServeCommitted(spark, dir, ServeTierLayoutScales, cells,
+          upsert, pubMod))
+      val used = ServeTierScales.map(s => s"code_$s")
+      val cheap = published.select(col("id") +: col("lang") +:
+        used.map(c => element_at(col(c), 1).cast("double").as(s"x_$c")): _*)
+      cheap.collect()
+      val unused = (ServeTierLayoutScales.toSet -- ServeTierScales.toSet)
+        .map(s => s"code_$s")
+      val scans = Disaggregated.scanSchemas(cheap)
+      assert(scans.nonEmpty, "no parquet scan in the committed cheap pass")
+      assert(scans.forall(s => !s.contains("vec") &&
+          unused.forall(c => !s.contains(c))),
+        s"committed cheap scan read vec or an unused tier ($unused): $scans")
+      if (!upsert)
+        assert(published.join(emb.select(col("vec_id").as("id"))
+            .filter(col("id") % pubMod === 0), Seq("id"), "left_semi")
+            .count() == 0L,
+          "published deleted tiered layout still serves a tombstoned id")
+    }
   }
 
   // ---- tiered snapshots, on each layout kind ---------------------------
@@ -1282,13 +1216,9 @@ class PlanSpec extends AnyFunSuite {
       : Map[String, (Long, Long)] = {
     import scala.jdk.CollectionConverters._
     import graft.sources.Disaggregated
-    val base = java.nio.file.Paths.get(indexed match {
-      case None => Disaggregated.ensureTieredServeFixture(spark, dir,
-        SparkEntry.ServeTierLayoutScales)
-      case Some((nCells, d, _)) => Disaggregated
-        .ensureTieredServeIndexedFixture(spark, dir,
-          SparkEntry.ServeTierLayoutScales, nCells, d)
-    })
+    val base = java.nio.file.Paths.get(Disaggregated.ensureTieredServe(spark,
+      dir, SparkEntry.ServeTierLayoutScales,
+      graft.operators.Search.tierCells(indexed)))
     val files = java.nio.file.Files.walk(base).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .map(f => base.relativize(f).toString ->
@@ -1358,6 +1288,27 @@ class PlanSpec extends AnyFunSuite {
         .collect().map(_.toSeq).toSet
       assert(storedRows == viewRows && viewRows.nonEmpty,
         "compacted as-of layout rows != the merge-on-read snapshot view")
+      // snapshot 2 is the whole upsert applied: its compaction equals a
+      // fresh build over the UpsertMod commit view, row for row with the
+      // stored partition key, so an upserted row left in its stale cell
+      // fails here
+      val cells = Search.tierCells(indexed)
+      val key = graft.sources.Disaggregated.serveTierKey(cells)
+      val fresh = java.nio.file.Files
+        .createTempDirectory("graft-test-servetfresh-")
+      try {
+        graft.sources.Disaggregated.writeServeTiersPartitioned(
+          graft.sources.Disaggregated.serveTierRows(
+            Search.negated(Tables.embeddings(spark, dir),
+              org.apache.spark.sql.functions.col("vec_id") % UpsertMod === 0),
+            Tables.documents(spark, dir)),
+          fresh.resolve("tiers").toString, ServeTierLayoutScales, cells)
+        assert(tieredLayoutRows(Search.ensureTieredServeCompacted(spark, dir,
+              ServeTierLayoutScales, indexed, UpsertMod, asOf = 2) + "/tiers",
+            key) == tieredLayoutRows(fresh.resolve("tiers").toString, key),
+          "compacted as-of 2 layout != a fresh build over the UpsertMod " +
+            "commit view")
+      } finally graft.sources.VecFiles.deleteRecursively(fresh)
       // and compaction never changes the snapshot
       assert(compactRows ==
           tieredRows(indexed, UpsertLog(UpsertMod, TieredAsOfSnapshot)) &&
@@ -1445,8 +1396,8 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, element_at}
     import SparkEntry.{ServeTierScales, ServeTierLayoutScales, IvfCells,
       EmbD}
-    val path = graft.sources.Disaggregated.ensureTieredServeIndexedFixture(
-      spark, dir, ServeTierLayoutScales, IvfCells, EmbD)
+    val path = graft.sources.Disaggregated.ensureTieredServe(spark, dir,
+      ServeTierLayoutScales, Some((IvfCells, EmbD)))
     val stored = spark.read.parquet(path)
     val used = ServeTierScales.map(s => s"code_$s")
     val cheap = stored

@@ -1,8 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -198,26 +196,7 @@ class RefineBlockPassSpec extends AnyFunSuite {
     } finally release()
   }
 
-  /** Spark jobs `f` runs, counted by a listener on a private job group. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"refine-job-budget-${System.nanoTime}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == tag)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(tag, "refine job budget")
-      try f finally sc.clearJobGroup()
-      org.apache.spark.sql.graft.ListenerDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get > 0, "listener saw no jobs")
-    jobs.get
-  }
+  private def jobsOf(f: => Unit): Int = SparkJobs.count(spark)(f)
 
   /** Spark jobs of one scoped `Disaggregated.refineTopK` call: the parquet
     * schema read, the seed pass, the seed rescore, the survivor count, and

@@ -1000,28 +1000,7 @@ class SearchSpec extends AnyFunSuite {
     }
   }
 
-  /** Spark jobs `f` starts, counted by a listener on a job group. */
-  private def jobsOf(f: => Unit): Int = {
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tag = s"serve-job-budget-${System.nanoTime}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == tag)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(tag, "serve job budget")
-      try f finally sc.clearJobGroup()
-      org.apache.spark.sql.graft.ListenerDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get > 0, "listener saw no jobs")
-    jobs.get
-  }
+  private def jobsOf(f: => Unit): Int = SparkJobs.count(spark)(f)
 
   /** Spark jobs of one warm tiered serve over a maintained copy, the
     * call the serve_mutating benchmark times (partitioned), and of its
@@ -1035,10 +1014,10 @@ class SearchSpec extends AnyFunSuite {
   test("tiered serve over a maintained copy stays within its Spark job budget") {
     import SparkEntry._
     import graft.sources.Disaggregated
-    val partitioned = Disaggregated.ensureTieredServeUpserted(
-      spark, dir, ServeTierLayoutScales, UpsertMod)
-    val indexed = Disaggregated.ensureTieredServeIndexedUpserted(
-      spark, dir, ServeTierLayoutScales, IvfCells, EmbD, UpsertMod)
+    val partitioned = Disaggregated.ensureTieredServeCommitted(
+      spark, dir, ServeTierLayoutScales, None, upsert = true, UpsertMod)
+    val indexed = Disaggregated.ensureTieredServeCommitted(spark, dir,
+      ServeTierLayoutScales, Some((IvfCells, EmbD)), upsert = true, UpsertMod)
     val calls = Seq[(String, () => Unit)](
       "partitioned" -> (() => Search.serveRequestsTieredOff(spark, dir,
         Some(partitioned), emb, docs, Bm25MultiQueries, FilterMultiRel,

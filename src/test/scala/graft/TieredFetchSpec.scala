@@ -41,11 +41,8 @@ class TieredFetchSpec extends AnyFunSuite {
     val base = spark.sparkContext.parallelize(rows.zipWithIndex.map {
       case ((lang, v), i) => (i.toLong * 5 + 3, lang, v) }, slices)
       .toDF("id", "lang", "vec")
-    val codes = Scales.map { sc =>
-      val t = if (Disaggregated.serveTierCodeBytes(sc) == 1) "byte" else "short"
-      transform(col("vec"), x => floor(x * math.pow(2.0, sc) + lit(0.5))
-        .cast(t)).as(s"code_$sc")
-    }
+    val codes = Scales.map(sc =>
+      Disaggregated.tierCode(col("vec"), sc).as(s"code_$sc"))
     val cell = if (indexed) Seq(pmod(hash(col("id")), lit(NCells))
       .as("cell")) else Nil
     base.select(Seq(col("id"), col("lang"), col("vec")) ++ codes ++ cell: _*)

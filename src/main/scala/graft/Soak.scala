@@ -265,15 +265,12 @@ object Soak {
         qid -> Seq(0.3, 0.5, 0.7)((qid % 3).toInt))
       val ks: Seq[(Long, Int)] = soakQs.map(_._1).map(qid =>
         qid -> (5 + (qid % 8).toInt))
+      val req = operators.Search.Requests(soakQs, filters, weights, ks,
+        SparkEntry.Bm25K1, SparkEntry.Bm25B, SparkEntry.RrfPoolN, nBuckets)
       def run(reqQids: Set[Long]) =
         operators.Search.serveRequestsOffPostings(spark, postingsRoot,
           vEmb, big.select(col("doc_id"), col("lang")), vMeta,
-          soakQs.filter(kv => reqQids(kv._1)),
-          filters.filter(kv => reqQids(kv._1)),
-          weights.filter(kv => reqQids(kv._1)),
-          ks.filter(kv => reqQids(kv._1)),
-          SparkEntry.Bm25K1, SparkEntry.Bm25B, SparkEntry.RrfPoolN,
-          nBuckets)
+          req.slice(reqQids))
       val all = run(soakQs.map(_._1).toSet).collect()
       val perQid = all.groupBy(_.getAs[Long]("qid"))
       require(perQid.keySet == soakQs.map(_._1).toSet,

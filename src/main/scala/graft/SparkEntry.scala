@@ -417,25 +417,12 @@ object SparkEntry {
     val rows = ps.par.map { p => graft.Sched.inPool(s, callerPool) {
       val rel = Refine.fetched(vSub, q, p).persist()
       val kerAll = kerBoth.filter(col("mode") === p.mode).drop("mode")
-      // ONE aggregate for the three set-relation counts (extras / nKer /
-      // nRel ride a single left-join scan of the two small persisted
-      // fetch sets — r19: the suite is driver-bound, so per-invariant
-      // count jobs are the cost, not the rows), and ONE tagged-union
-      // ranked join for the three recall counts (kernel top-K,
-      // partitioned-kernel top-K, relational top-K vs the shared exact
-      // set) — identical membership and tie-break per tag, 2 actions
-      // instead of 6 per mode
-      val statsRow = kerAll.select(col("qid"), col("id"))
-        .join(rel.select(col("qid"), col("id"))
-            .withColumn("in_rel", lit(true)),
-          Seq("qid", "id"), "left")
-        .crossJoin(rel.agg(count(lit(1)).as("n_rel")))
-        .agg(count(lit(1)).as("n_ker"),
-          sum(when(col("in_rel").isNull, 1L).otherwise(0L)).as("extras"),
-          first(col("n_rel")).as("n_rel"))
-        .collect()(0)
-      val (nKer, extras, nRel) =
-        (statsRow.getLong(0), statsRow.getLong(1), statsRow.getLong(2))
+      // ONE aggregate for the three set-relation counts
+      // ([[fetchSetStats]]), and ONE tagged-union ranked join for the
+      // three recall counts (kernel top-K, partitioned-kernel top-K,
+      // relational top-K vs the shared exact set) — identical membership
+      // and tie-break per tag, 2 actions instead of 6 per mode
+      val (nKer, extras, nRel) = fetchSetStats(kerAll, rel)
       val exact = exactByFam(p.isCos)
       val tagged = Seq(
         TopK.window(kerAll, p.k, ascending = !p.isCos)
@@ -460,6 +447,28 @@ object SparkEntry {
     exactByFam.values.foreach(_.unpersist(blocking = false))
     rows.toDF("mode", "subset_ok", "tighter_ok", "min_fetch_ok",
       "recall_floor_ok", "part_recall_ge_rel_ok")
+  }
+
+  /** (nKer, extras, nRel) of a kernel fetch set `kerAll` against the
+    * relational one `rel`, both (qid, id, ...): its size, its rows `rel`
+    * lacks, and `rel`'s size, from ONE left-join aggregate of the two
+    * small persisted sets (the suite is driver-bound, so per-invariant
+    * count jobs are the cost, not the rows). An empty kernel set has no
+    * row to carry `rel`'s count and sums nothing: all three read 0, so
+    * the invariants that need fetched rows report false. */
+  private[graft] def fetchSetStats(kerAll: DataFrame,
+                                   rel: DataFrame): (Long, Long, Long) = {
+    val r = kerAll.select(col("qid"), col("id"))
+      .join(rel.select(col("qid"), col("id"))
+          .withColumn("in_rel", lit(true)),
+        Seq("qid", "id"), "left")
+      .crossJoin(rel.agg(count(lit(1)).as("n_rel")))
+      .agg(count(lit(1)).as("n_ker"),
+        coalesce(sum(when(col("in_rel").isNull, 1L).otherwise(0L)),
+          lit(0L)).as("extras"),
+        coalesce(first(col("n_rel")), lit(0L)).as("n_rel"))
+      .collect()(0)
+    (r.getLong(0), r.getLong(1), r.getLong(2))
   }
 
   // session-scoped exact ground-truth cache: the brute-force N*Q scored
@@ -697,6 +706,36 @@ object SparkEntry {
         (if (asOf >= 1) umod else 0, if (asOf >= 2) dmod else 0)
       case At(path) => throw new IllegalArgumentException(
         s"no corpus view for the maintained copy at $path")
+    }
+  }
+
+  /** The oracle of a request serve (or its ledger) of [[RequestServes]]:
+    * the serve chain over the current corpus, or as-of over the
+    * snapshot-ServeAsOfSnapshot view (commit 1: ids ≡ 0 mod
+    * 2·Bm25UpsertMod re-indexed with the token and their vectors
+    * flipped), recomputed from the raw tables. */
+  private def requestOracleSql(indexed: Boolean, asOf: Boolean,
+                               ledger: Boolean): String = {
+    val (qs, st, mod, token, kind) =
+      if (asOf) (AsOfServeQueries, bm25AsOfStatsForOracle(),
+        2 * Bm25UpsertMod, PostingsUpsertToken, "abm25")
+      else (Bm25MultiQueries, bm25MultiStatsForOracle(), 0, "", "bm25")
+    val rel = qrelPathForOracle()
+    (indexed, ledger) match {
+      case (false, false) => SearchOracle.serveRequestsSql(EmbD, qs,
+        FilterMultiRel, FusionMultiRel, PageKMultiRel, Bm25K1, Bm25B,
+        RrfPoolN, st, rel, mod, token, mod, kind)
+      case (false, true) => SearchOracle.serveRequestsMetricsSql(EmbD, qs,
+        FilterMultiRel, FusionMultiRel, PageKMultiRel, Bm25K1, Bm25B,
+        RrfPoolN, st, rel, mod, token, mod, kind)
+      case (true, false) => SearchOracle.serveRequestsIndexedSql(EmbD, qs,
+        FilterMultiRel, FusionMultiRel, PageKMultiRel, Bm25K1, Bm25B,
+        RrfPoolN, IvfCells, IvfProbe, st, rel, mod, token, mod, kind)
+      case (true, true) =>
+        require(!asOf, "no oracle for the indexed as-of ledger")
+        SearchOracle.serveRequestsIndexedMetricsSql(EmbD, qs,
+          FilterMultiRel, FusionMultiRel, PageKMultiRel, Bm25K1, Bm25B,
+          RrfPoolN, IvfCells, IvfProbe, st, rel)
     }
   }
 
@@ -1822,7 +1861,7 @@ object SparkEntry {
   private def q(f: QFn): QFn =
     (s, dir) => { lastSfDir.set(dir); f(s, dir) }
 
-  private def tieredLayout(indexed: Boolean): Option[(Int, Int, Int)] =
+  private def layoutKind(indexed: Boolean): Option[(Int, Int, Int)] =
     if (indexed) Some((IvfCells, EmbD, IvfProbe)) else None
 
   // one mutating request stream per (plan, layout kind); the oracle twin
@@ -1834,7 +1873,50 @@ object SparkEntry {
       filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
       pageKMultiRelOf(s, dir), serveTierRelOf(s, dir),
       ServeTierLayoutScales, Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-      refineParams("cos_l1").alpha, tieredLayout(indexed), plan))
+      refineParams("cos_l1").alpha, layoutKind(indexed), plan))
+
+  // The batch request serves, the full request object (per-qid terms +
+  // langs + α + k bound from the stored relation, lexical post-filter,
+  // vector pre-filter, per-qid min-max, α_q fusion, per-qid page cut):
+  // name -> (indexed layout, as-of, ledger). The engine serves the spec
+  // (Search.serveRequestsAt, or its byte ledger serveRequestsLedger,
+  // the per-request accounting triple with the qid = -1 total); the
+  // oracle is requestOracleSql.
+  //  - indexed: the vector side off the at-rest IVF index, so both
+  //    request sides read partition-pruned layouts (term buckets on the
+  //    postings, probe cells + pushed lang predicate on the vector
+  //    scan); its ledger counts metadata bytes only for the qid's probed
+  //    cells and embeddings only for their lang matches.
+  //  - as-of: TIME-TRAVEL serving at snapshot ServeAsOfSnapshot of the
+  //    document-update log, both sides versioned in one plan (snapshot
+  //    postings for the lexical pool, flipped-prefix vectors for the
+  //    vector pool, the index merge-on-read); qid 0's terms include the
+  //    update token, so the snapshot choice is visible in candidacy
+  //    itself, and in its ledger's t_cands/bytes_text.
+  private val RequestServes: Seq[(String, (Boolean, Boolean, Boolean))] =
+    Seq(
+      "q_serve_requests" -> (false, false, false),
+      "q_serve_requests_metrics" -> (false, false, true),
+      "q_serve_requests_asof" -> (false, true, false),
+      "q_serve_requests_asof_metrics" -> (false, true, true),
+      "q_serve_requests_indexed" -> (true, false, false),
+      "q_serve_requests_indexed_asof" -> (true, true, false),
+      "q_serve_requests_indexed_metrics" -> (true, false, true))
+
+  private def requestServe(indexed: Boolean, asOf: Boolean,
+                           ledger: Boolean): QFn = q { (s, dir) =>
+    import graft.operators.Search
+    val req = Search.Requests(
+      if (asOf) asOfServeQueriesOf(s, dir) else bm25MultiQueriesOf(s, dir),
+      filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
+      pageKMultiRelOf(s, dir), Bm25K1, Bm25B, RrfPoolN, PostBuckets)
+    val snap = Option.when(asOf)(Search.UpdateLog(Bm25UpsertMod,
+      PostingsUpsertToken, ServeAsOfSnapshot))
+    if (ledger) Search.serveRequestsLedger(s, dir, emb(s, dir), docs(s, dir),
+      req, layoutKind(indexed), snap, EmbD)
+    else Search.serveRequestsAt(s, dir, emb(s, dir), docs(s, dir), req,
+      layoutKind(indexed), snap)
+  }
 
   // The batch tiered serves at PER-REQUEST PRECISION, the title knob
   // composed into serving: name -> (indexed layout, snapshot, ledger).
@@ -1889,9 +1971,9 @@ object SparkEntry {
       serveTierRelOf(s, dir), ServeTierLayoutScales, Bm25K1, Bm25B,
       RrfPoolN, PostBuckets, refineParams("cos_l1").alpha)
     if (ledger) graft.operators.Search.serveRequestsTieredMetrics(s, dir,
-      emb(s, dir), docs(s, dir), req, tieredLayout(indexed), snap, EmbD)
+      emb(s, dir), docs(s, dir), req, layoutKind(indexed), snap, EmbD)
     else graft.operators.Search.serveRequestsTiered(s, dir, emb(s, dir),
-      docs(s, dir), req, tieredLayout(indexed), snap)
+      docs(s, dir), req, layoutKind(indexed), snap)
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
@@ -2808,8 +2890,10 @@ object SparkEntry {
     // layout: union-of-langs pushed into the one probe-pruned scan,
     // per-qid (qid, lang) membership refined map-side
     "q_ann_filtered_multi_at_rest" -> q((s, dir) =>
-      graft.operators.Search.filteredTopKIndexedMulti(s, dir, emb(s, dir),
-        filterMultiRelOf(s, dir), K, IvfCells, EmbD, IvfProbe)),
+      graft.operators.Search.filteredTopKIndexedMulti(s,
+        s.read.parquet(graft.operators.Ivf.ensureIndex(s, dir, IvfCells,
+          EmbD)), emb(s, dir), filterMultiRelOf(s, dir), K, IvfCells, EmbD,
+        IvfProbe)),
     // PER-QUERY PAGE SIZE: each qid returns its OWN top-k from the
     // stored relation — one scan ranked to the largest k, per-qid prefix
     "q_ann_topk_multi_k" -> q((s, dir) => graft.operators.Search
@@ -2910,69 +2994,6 @@ object SparkEntry {
       .hybridLinearMultiWeighted(s, dir, emb(s, dir),
         bm25MultiQueriesOf(s, dir), fusionMultiRelOf(s, dir), Bm25K1,
         Bm25B, RrfPoolN, HybridK, PostBuckets)),
-    // THE FULL REQUEST OBJECT: per-qid terms + langs + α + k all bound
-    // from the stored relation, served end-to-end in one plan — the
-    // batch-serving shape of a complete search-API request (lexical
-    // post-filter, vector pre-filter, filtered min-max, α_q fusion,
-    // per-qid page cut)
-    "q_serve_requests" -> q((s, dir) => graft.operators.Search
-      .serveRequests(s, dir, emb(s, dir), docs(s, dir),
-        bm25MultiQueriesOf(s, dir), filterMultiRelOf(s, dir),
-        fusionMultiRelOf(s, dir), pageKMultiRelOf(s, dir), Bm25K1,
-        Bm25B, RrfPoolN, PostBuckets)),
-    // ... and its PER-REQUEST byte ledger: the accounting triple on the
-    // serving capstone — per-qid posting bytes, pre-filtered embedding
-    // bytes vs the unfiltered baseline, fusion fetches beyond the page,
-    // (save, fpr) per request plus the qid=-1 aggregate
-    "q_serve_requests_metrics" -> q((s, dir) => graft.operators.Search
-      .serveRequestsMetrics(s, dir, emb(s, dir), docs(s, dir),
-        bm25MultiQueriesOf(s, dir), filterMultiRelOf(s, dir),
-        fusionMultiRelOf(s, dir), pageKMultiRelOf(s, dir), Bm25K1,
-        Bm25B, RrfPoolN, PostBuckets, EmbD)),
-    // ... and TIME-TRAVEL SERVING — the two finished stories composed:
-    // the FULL request object served at snapshot 1 of the document-
-    // update log, both sides versioned in one plan (snapshot postings
-    // for the lexical pool, flipped-prefix embedding view for the
-    // vector pool); qid 0's terms include the upsert token, so the
-    // snapshot choice is visible in candidacy itself. Provably equal
-    // to the request object rebuilt over the commit-1 view
-    "q_serve_requests_asof" -> q((s, dir) => graft.operators.Search
-      .serveRequestsAsOf(s, dir, emb(s, dir), docs(s, dir),
-        asOfServeQueriesOf(s, dir), filterMultiRelOf(s, dir),
-        fusionMultiRelOf(s, dir), pageKMultiRelOf(s, dir), Bm25K1,
-        Bm25B, RrfPoolN, PostBuckets, Bm25UpsertMod,
-        PostingsUpsertToken, ServeAsOfSnapshot)),
-    // ... and ITS ledger — counting the SNAPSHOT's candidate sets: the
-    // token term contributes 0 posting rows at asOf 0 and the applied
-    // commit's docs at snapshot 1, so t_cands/bytes_text move with the
-    // snapshot; fused/page/fpr derive from the as-of pools
-    "q_serve_requests_asof_metrics" -> q((s, dir) => graft.operators
-      .Search.serveRequestsAsOfMetrics(s, dir, emb(s, dir), docs(s, dir),
-        asOfServeQueriesOf(s, dir), filterMultiRelOf(s, dir),
-        fusionMultiRelOf(s, dir), pageKMultiRelOf(s, dir), Bm25K1,
-        Bm25B, RrfPoolN, PostBuckets, EmbD, Bm25UpsertMod,
-        PostingsUpsertToken, ServeAsOfSnapshot)),
-    // ... and the capstone with the vector side off the AT-REST IVF
-    // index: BOTH request sides read partition-pruned layouts (term
-    // buckets on the postings, probe cells + pushed lang predicate on
-    // the vector scan) — the production serve at 100 TB
-    "q_serve_requests_indexed" -> q((s, dir) => graft.operators.Search
-      .serveRequestsIndexed(s, dir, emb(s, dir), docs(s, dir),
-        bm25MultiQueriesOf(s, dir), filterMultiRelOf(s, dir),
-        fusionMultiRelOf(s, dir), pageKMultiRelOf(s, dir), Bm25K1,
-        Bm25B, RrfPoolN, PostBuckets, IvfCells, EmbD, IvfProbe)),
-    // ... and the PRODUCTION capstone at a SNAPSHOT — time travel with
-    // both sides merge-on-read over their pruned layouts: snapshot
-    // postings for the lexical pool, the at-rest IVF index served
-    // base-minus-prefix ∪ re-assigned prefix rows for the vector pool
-    // (index files byte-immutable for every snapshot; probes derive
-    // from the snapshot's query vectors)
-    "q_serve_requests_indexed_asof" -> q((s, dir) => graft.operators
-      .Search.serveRequestsIndexedAsOf(s, dir, emb(s, dir), docs(s, dir),
-        asOfServeQueriesOf(s, dir), filterMultiRelOf(s, dir),
-        fusionMultiRelOf(s, dir), pageKMultiRelOf(s, dir), Bm25K1,
-        Bm25B, RrfPoolN, PostBuckets, IvfCells, EmbD, IvfProbe,
-        Bm25UpsertMod, PostingsUpsertToken, ServeAsOfSnapshot)),
     // ... and the TIERED capstone served ONLINE — the title knob per
     // streamed request: each microbatch runs the tiered serve for its
     // arriving requests with every bound relation (terms, langs, α, k,
@@ -3025,15 +3046,6 @@ object SparkEntry {
         bm25MultiQueriesOf(s, dir), filterMultiRelOf(s, dir),
         fusionMultiRelOf(s, dir), pageKMultiRelOf(s, dir), Bm25K1,
         Bm25B, RrfPoolN, PostBuckets)),
-    // ... and ITS ledger — the triple where partition pruning makes the
-    // vector-side save: metadata bytes only for the qid's probed cells,
-    // embeddings only for the lang-matching rows among them
-    "q_serve_requests_indexed_metrics" -> q((s, dir) => graft.operators
-      .Search.serveRequestsIndexedMetrics(s, dir, emb(s, dir),
-        docs(s, dir), bm25MultiQueriesOf(s, dir),
-        filterMultiRelOf(s, dir), fusionMultiRelOf(s, dir),
-        pageKMultiRelOf(s, dir), Bm25K1, Bm25B, RrfPoolN, PostBuckets,
-        IvfCells, EmbD, IvfProbe)),
     // lexical index DELETES, merge-on-read: tombstoned docs anti-joined
     // out of the candidates, stats left STALE until compaction — the
     // Lucene delete contract (docs unretrievable immediately, df/sumdl
@@ -3367,8 +3379,10 @@ object SparkEntry {
       graft.operators.BitplaneCompress.measure(
         Fixture.fp16VectorsCached(s, dir, D, KeepM).select(col("id"), col("vec")),
         D, keepE = 5, keepM = KeepM)),
-  ) ++ TieredServes.map { case (name, (indexed, snap, ledger)) =>
-    name -> tieredServe(indexed, snap, ledger) }
+  ) ++ RequestServes.map { case (name, (indexed, asOf, ledger)) =>
+    name -> requestServe(indexed, asOf, ledger) } ++
+    TieredServes.map { case (name, (indexed, snap, ledger)) =>
+      name -> tieredServe(indexed, snap, ledger) }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
@@ -3866,65 +3880,10 @@ object SparkEntry {
     "q_hybrid_linear_multi_w" -> SearchOracle.hybridLinearMultiWeightedSql(
       EmbD, Bm25MultiQueries, FusionMultiRel, Bm25K1, Bm25B, RrfPoolN,
       HybridK, bm25MultiStatsForOracle(), qrelPathForOracle()),
-    // the full request object: all four knob relations in one plan
-    "q_serve_requests" -> SearchOracle.serveRequestsSql(EmbD,
-      Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-      Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
-      qrelPathForOracle()),
     // drained request-stream serve is row-identical to the batch
     // capstone (per-request independence) — same oracle
-    "q_stream_serve_requests" -> SearchOracle.serveRequestsSql(EmbD,
-      Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-      Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
-      qrelPathForOracle()),
-    // the capstone's ledger: per-request counts/bytes off the same CTEs
-    "q_serve_requests_metrics" -> SearchOracle.serveRequestsMetricsSql(
-      EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-      PageKMultiRel, Bm25K1, Bm25B, RrfPoolN, bm25MultiStatsForOracle(),
-      qrelPathForOracle()),
-    // time-travel serving: the whole capstone recomputed over the
-    // commit-1 view — token-appended text for the applied prefix
-    // (tokenization, dl, df, candidacy; (n, sumdl) stale), flipped
-    // vectors for the same ids (float-exact negation, norms off the
-    // base table); idf literals from the SNAPSHOT stats so the token
-    // term's constant agrees with the recomputed snapshot df
-    "q_serve_requests_asof" -> SearchOracle.serveRequestsSql(EmbD,
-      AsOfServeQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-      Bm25K1, Bm25B, RrfPoolN, bm25AsOfStatsForOracle(),
-      qrelPathForOracle(), updatedTokenMod = 2 * Bm25UpsertMod,
-      updatedToken = PostingsUpsertToken,
-      vecNegMod = 2 * Bm25UpsertMod, relKind = "abm25"),
-    // its ledger over the same snapshot CTEs
-    "q_serve_requests_asof_metrics" ->
-      SearchOracle.serveRequestsMetricsSql(EmbD, AsOfServeQueries,
-        FilterMultiRel, FusionMultiRel, PageKMultiRel, Bm25K1, Bm25B,
-        RrfPoolN, bm25AsOfStatsForOracle(), qrelPathForOracle(),
-        updatedTokenMod = 2 * Bm25UpsertMod,
-        updatedToken = PostingsUpsertToken,
-        vecNegMod = 2 * Bm25UpsertMod, relKind = "abm25"),
-    // the indexed capstone: the vector pool re-derived through the
-    // probe-pruned per-qid-filtered at-rest chain
-    "q_serve_requests_indexed" -> SearchOracle.serveRequestsIndexedSql(
-      EmbD, Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-      PageKMultiRel, Bm25K1, Bm25B, RrfPoolN, IvfCells, IvfProbe,
-      bm25MultiStatsForOracle(), qrelPathForOracle()),
-    // the production capstone at a snapshot: the indexed chain
-    // (assignment, probes, rescore) recomputed from the commit view,
-    // the lexical chain from the snapshot text, idf literals from the
-    // snapshot stats
-    "q_serve_requests_indexed_asof" -> SearchOracle.serveRequestsIndexedSql(
-      EmbD, AsOfServeQueries, FilterMultiRel, FusionMultiRel,
-      PageKMultiRel, Bm25K1, Bm25B, RrfPoolN, IvfCells, IvfProbe,
-      bm25AsOfStatsForOracle(), qrelPathForOracle(),
-      updatedTokenMod = 2 * Bm25UpsertMod,
-      updatedToken = PostingsUpsertToken,
-      vecNegMod = 2 * Bm25UpsertMod, relKind = "abm25"),
-    // probe-aware per-request bytes off the same assignment chain
-    "q_serve_requests_indexed_metrics" ->
-      SearchOracle.serveRequestsIndexedMetricsSql(EmbD, Bm25MultiQueries,
-        FilterMultiRel, FusionMultiRel, PageKMultiRel, Bm25K1, Bm25B,
-        RrfPoolN, IvfCells, IvfProbe, bm25MultiStatsForOracle(),
-        qrelPathForOracle()),
+    "q_stream_serve_requests" ->
+      requestOracleSql(indexed = false, asOf = false, ledger = false),
     // the drained tiered request stream equals the batch tiered
     // capstone -> same oracle
     "q_stream_serve_requests_tiered" ->
@@ -4233,6 +4192,8 @@ object SparkEntry {
          |  CAST(SUM(p) AS BIGINT) AS psum, COUNT(*) AS n
          |FROM px GROUP BY 1, 2""".stripMargin
     },
-  ) ++ TieredServes.map { case (name, (indexed, snap, ledger)) =>
-    name -> tieredOracleSql(indexed, ledger, snapshotMods(snap)) }
+  ) ++ RequestServes.map { case (name, (indexed, asOf, ledger)) =>
+    name -> requestOracleSql(indexed, asOf, ledger) } ++
+    TieredServes.map { case (name, (indexed, snap, ledger)) =>
+      name -> tieredOracleSql(indexed, ledger, snapshotMods(snap)) }
 }

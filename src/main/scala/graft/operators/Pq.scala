@@ -1554,9 +1554,9 @@ object Pq {
         (0 until mSub).map(argminCode(_, codes)): _*)
   }
 
-  /** The broadcast probe relation: per (qid, probed cell) the carried
-    * dot(q, u_cell) — which IS the cheap numerator's qc term — plus
-    * qn2 and the ADC lookup table. */
+  /** The probe relation, broadcast where [[sphServe]] joins it: per
+    * (qid, probed cell) the carried dot(q, u_cell) — which IS the cheap
+    * numerator's qc term — plus qn2 and the ADC lookup table. */
   private def sphProbes(model: SphModel, q0: DataFrame, d: Int, nprobe: Int,
                         mSub: Int, codes: Int): DataFrame = {
     val sub = d / mSub
@@ -1569,11 +1569,11 @@ object Pq {
         col("p.cell").as("cell"), col("p.qc").as("qc"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("qc").desc, col("cell").asc)
-    broadcast(stacked
+    stacked
       .withColumn("pr", row_number().over(w))
       .filter(col("pr") <= nprobe)
       .select(Seq(col("qid"), col("cell"), col("qc"), col("qn2")) ++
-        adcTable(col("qvec"), mSub, codes, sub): _*))
+        adcTable(col("qvec"), mSub, codes, sub): _*)
   }
 
   /** The shared cheap-ADC + rerank + exact-rescore tail: `cheapEnc` is
@@ -1596,7 +1596,7 @@ object Pq {
       element_at(typedlit(table),
         (col("cell") * codes + col(s"code_$m") + 1).cast("int"))
     }.reduceLeft(_ + _)
-    val cheap = cheapEnc.join(probes, Seq("cell"))
+    val cheap = cheapEnc.join(broadcast(probes), Seq("cell"))
       .withColumn("score", sHatNum / (V.fnorm(n2hat) * V.fnorm(col("qn2"))))
     val cand = TopK.window(cheap, rerank).select(col("qid"), col("id"))
     val rescored = fetch

@@ -230,17 +230,8 @@ object Search {
                           sfDir: String, emb: DataFrame, nq: Int, k: Int,
                           nCells: Int, d: Int, nprobe: Int,
                           langs: Seq[String]): DataFrame = {
-    val path = Ivf.ensureIndex(spark, sfDir, nCells, d)
-    val stored = spark.read.parquet(path) // (id, embedding, n2, lang, cell)
-    val q = Ann.queriesOf(emb, nq).select(col("qid"), col("qvec"), col("qn2"))
-    val probes = broadcast(Ivf.probeCells(q, nCells, d, nprobe)
-      .join(q.select(col("qid"), col("qn2")), Seq("qid")))
-    val cells = probes.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val scored = stored
-      .filter(col("cell").isin(cells.toSeq: _*))
-      .filter(col("lang").isin(langs: _*))
-      .join(probes, Seq("cell"))
+    val scored = probedRows(spark.read.parquet(Ivf.ensureIndex(spark, sfDir,
+        nCells, d)), emb, nq, nCells, d, nprobe, langs)
       .withColumn("score", cosScore)
     // rank in place (keeping lang): WindowGroupLimit still applies
     val w = org.apache.spark.sql.expressions.Window
@@ -251,6 +242,25 @@ object Search {
       .select(col("qid"), col("rank"), col("id"), col("score"), col("lang"))
   }
 
+  /** The rows of the stored IVF relation `stored` (id, embedding, n2,
+    * lang, cell) in the probed cells of `emb`'s queries 0 until nq whose
+    * lang is in `langs`, each joined to its probing query (qid, qvec,
+    * qn2). The probed cells' union is a static partition filter and the
+    * langs a pushed row-group filter on the one scan. */
+  private def probedRows(stored: DataFrame, emb: DataFrame, nq: Int,
+                         nCells: Int, d: Int, nprobe: Int,
+                         langs: Seq[String]): DataFrame = {
+    val q = Ann.queriesOf(emb, nq).select(col("qid"), col("qvec"), col("qn2"))
+    val probes = Ivf.probeCells(q, nCells, d, nprobe)
+      .join(q.select(col("qid"), col("qn2")), Seq("qid"))
+    val cells = probes.select(col("cell")).distinct()
+      .collect().map(_.getInt(0)).sorted
+    stored
+      .filter(col("cell").isin(cells.toSeq: _*))
+      .filter(col("lang").isin(langs: _*))
+      .join(broadcast(probes), Seq("cell"))
+  }
+
   /**
    * PER-QUERY filters against the AT-REST IVF index — the 100 TB shape
    * of [[filteredTopKMulti]]: the layout stores lang beside the vectors,
@@ -258,29 +268,22 @@ object Search {
    * queries' langs as a pushed row-group filter; the per-qid (qid, lang)
    * membership then refines map-side against the broadcast relation.
    * Candidates are probed-cell-approximate exactly as
-   * [[filteredTopKIndexed]] is. Output (qid, rank, id, score, lang).
+   * [[filteredTopKIndexed]] is. `stored` is the index relation scored:
+   * the built layout ([[Ivf.ensureIndex]]) or a snapshot of it
+   * ([[serveRequestsAt]]'s merge-on-read view).
+   * Output (qid, rank, id, score, lang).
    */
   def filteredTopKIndexedMulti(spark: org.apache.spark.sql.SparkSession,
-                               sfDir: String, emb: DataFrame,
+                               stored: DataFrame, emb: DataFrame,
                                filters: Seq[(Long, String)], k: Int,
                                nCells: Int, d: Int,
                                nprobe: Int): DataFrame = {
     require(filters.nonEmpty, "filteredTopKIndexedMulti: empty relation")
     import spark.implicits._
     val nq = (filters.map(_._1).max + 1).toInt
-    val unionLangs = filters.map(_._2).distinct
-    val path = Ivf.ensureIndex(spark, sfDir, nCells, d)
-    val stored = spark.read.parquet(path) // (id, embedding, n2, lang, cell)
-    val q = Ann.queriesOf(emb, nq).select(col("qid"), col("qvec"), col("qn2"))
-    val probes = broadcast(Ivf.probeCells(q, nCells, d, nprobe)
-      .join(q.select(col("qid"), col("qn2")), Seq("qid")))
-    val cells = probes.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
     val qf = broadcast(filters.toDF("qid", "lang"))
-    val scored = stored
-      .filter(col("cell").isin(cells.toSeq: _*))
-      .filter(col("lang").isin(unionLangs: _*)) // pushed to the scan
-      .join(probes, Seq("cell"))
+    val scored = probedRows(stored, emb, nq, nCells, d, nprobe,
+        filters.map(_._2).distinct)
       .join(qf, Seq("qid", "lang"))             // per-qid refinement
       .withColumn("score", cosScore)
     val w = org.apache.spark.sql.expressions.Window
@@ -308,19 +311,9 @@ object Search {
     require(facets.nonEmpty, "groupedTopKIndexedMulti: empty relation")
     import spark.implicits._
     val nq = (facets.map(_._1).max + 1).toInt
-    val unionLangs = facets.map(_._2).distinct
-    val path = Ivf.ensureIndex(spark, sfDir, nCells, d)
-    val stored = spark.read.parquet(path)
-    val q = Ann.queriesOf(emb, nq).select(col("qid"), col("qvec"), col("qn2"))
-    val probes = broadcast(Ivf.probeCells(q, nCells, d, nprobe)
-      .join(q.select(col("qid"), col("qn2")), Seq("qid")))
-    val cells = probes.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
     val qf = broadcast(facets.toDF("qid", "lang"))
-    val scored = stored
-      .filter(col("cell").isin(cells.toSeq: _*))
-      .filter(col("lang").isin(unionLangs: _*))
-      .join(probes, Seq("cell"))
+    val scored = probedRows(spark.read.parquet(Ivf.ensureIndex(spark, sfDir,
+        nCells, d)), emb, nq, nCells, d, nprobe, facets.map(_._2).distinct)
       .join(qf, Seq("qid", "lang"))
       .withColumn("score", cosScore)
     val w = org.apache.spark.sql.expressions.Window
@@ -1252,6 +1245,7 @@ object Search {
   def bm25MultiMaxScoreMetricsOffPostings(spark: SparkSession,
       root: String, queries: Seq[(Long, Seq[String])], k1: Double,
       b: Double, topN: Int, nBuckets: Int, seedB: Int): DataFrame = {
+    import spark.implicits._
     val p = multiMaxScoreParts(spark, root, queries, k1, b,
       topN, nBuckets, seedB)
     // the qid's candidate posting rows: the union-pruned postings joined
@@ -1282,7 +1276,7 @@ object Search {
     // has no bounds/seeds/survivors rows at all and would silently
     // vanish from the ledger (and the qid=-1 row would no longer cover
     // the whole relation). It now emits an explicit all-zero row.
-    val qidUniverse = p.qt.select(col("qid")).distinct()
+    val qidUniverse = queries.map(_._1).distinct.toDF("qid")
     val perQid = qidUniverse
       .join(cands, Seq("qid"), "left")
       .join(nSeeds, Seq("qid"), "left").join(nSurv, Seq("qid"), "left")
@@ -1738,6 +1732,149 @@ object Search {
         col("tnorm"), col("vnorm"))
   }
 
+  // ---- the request serve: one batch over a layout kind × snapshot -------
+
+  /** One batch of serve requests, bound by qid: terms, lang filters,
+    * fusion weight and page size, plus the shared serve knobs.
+    * Construction checks the four relations agree: they name the same
+    * qids, and all but the filters bind exactly one row per qid (a qid
+    * with a page size but no filter would be paged from text alone; a
+    * duplicated weight or page row would duplicate its fused rows). A
+    * qid may filter on several langs, each once: its filter is a lang
+    * set. */
+  final case class Requests(queries: Seq[(Long, Seq[String])],
+                            filters: Seq[(Long, String)],
+                            weights: Seq[(Long, Double)],
+                            ks: Seq[(Long, Int)], k1: Double, b: Double,
+                            poolN: Int, nBuckets: Int) {
+    require(filters.nonEmpty, "requests: empty filter relation")
+    require(ks.nonEmpty, "requests: empty page relation")
+    Requests.agree(Seq("queries" -> queries.map(_._1),
+      "filters" -> filters.map(_._1), "weights" -> weights.map(_._1),
+      "ks" -> ks.map(_._1)))
+    private val dupFilters = filters.diff(filters.distinct).distinct.sorted
+    require(dupFilters.isEmpty,
+      s"requests: filters repeat (qid, lang) ${dupFilters.mkString(", ")}")
+    /** Query rows read off the query view: qids 0 until nq. */
+    def nq: Int = (filters.map(_._1).max + 1).toInt
+    /** The requests whose qid `keep` holds (a stream batch's arrivals). */
+    def slice(keep: Long => Boolean): Requests = {
+      def f[V](rel: Seq[(Long, V)]) = rel.filter(kv => keep(kv._1))
+      copy(queries = f(queries), filters = f(filters), weights = f(weights),
+        ks = f(ks))
+    }
+  }
+
+  object Requests {
+    /** Require the named qid columns to name the same qids, each once
+      * except in the filters. */
+    private[Search] def agree(qidsOf: Seq[(String, Seq[Long])]): Unit = {
+      val allQids = qidsOf.flatMap(_._2).toSet
+      qidsOf.foreach { case (rel, qids) =>
+        val missing = (allQids -- qids).toSeq.sorted
+        require(missing.isEmpty,
+          s"requests: $rel has no row for qid ${missing.mkString(", ")}")
+        val dup = qids.diff(qids.distinct).distinct.sorted
+        require(rel == "filters" || dup.isEmpty,
+          s"requests: $rel has more than one row for qid " +
+            dup.mkString(", "))
+      }
+    }
+  }
+
+  /** Snapshot `asOf` of the document-update log: commit 1 updates the
+    * documents with id ≡ 0 mod 2·`mod`, commit 2 the rest of mod `mod`.
+    * One update re-indexes a document's text with `token` appended AND
+    * flips its vector (v' = −v, the fixture's float-exact transform), so
+    * the one log drives both request sides; asOf 0 is the current
+    * corpus. */
+  final case class UpdateLog(mod: Int, token: String, asOf: Int)
+
+  /** A resolved request snapshot: the postings delta the lexical side
+    * merges on read (None: the postings as built), the query view (the
+    * embeddings, applied updates' vectors flipped) and, on the indexed
+    * kind, the stored index relation with the kind. */
+  private final case class RequestView(
+      delta: Option[DataFrame], queries: DataFrame,
+      index: Option[(DataFrame, (Int, Int, Int))])
+
+  /**
+   * Resolve `snap` over the layout kind: None is the built postings,
+   * `emb` and the built index. Snapshot `asOf` of the update log reads
+   * the versioned postings delta ([[ensureVersionedPostingsUpsertDeltas]])
+   * filtered to commits ≤ asOf, flips the applied prefix's vectors in the
+   * query view ([[negatedBy]]) and serves the index merge-on-read
+   * ([[upsertedIndex]]). The prefix's ids come from the generic versioned
+   * log over the DOCUMENTS table, not from the doc_ids present in
+   * posting rows: a document with empty/untokenized text must still flip
+   * its vector at its commit. Base postings, index files and the
+   * embedding table are byte-immutable for every snapshot.
+   */
+  private def resolveRequests(spark: SparkSession, sfDir: String,
+                              root: String, emb: DataFrame, nBuckets: Int,
+                              indexed: Option[(Int, Int, Int)],
+                              snap: Option[UpdateLog]): RequestView = {
+    def view(delta: Option[DataFrame], updIds: Option[DataFrame]) =
+      RequestView(delta, updIds.fold(emb)(negatedBy(emb, _)),
+        indexed.map { case kind @ (nCells, d, _) =>
+          val stored = spark.read.parquet(Ivf.ensureIndex(spark, sfDir,
+            nCells, d))
+          (updIds.fold(stored)(upsertedIndex(stored, _, nCells, d)), kind)
+        })
+    snap.fold(view(None, None)) { case UpdateLog(mod, token, asOf) =>
+      val delta = spark.read.parquet(ensureVersionedPostingsUpsertDeltas(
+          spark, sfDir, root, mod, nBuckets, token))
+        .filter(col("commit_v") <= asOf)
+        .select(col("term"), col("doc_id"), col("dl"), col("tf"), col("tb"))
+      val updIds = spark.read.parquet(Pq.ensureVersionedTombstonesOver(
+          spark, root, graft.Tables.documents(spark, sfDir)
+            .select(col("doc_id")), mod, idCol = "doc_id", tag = "_docs"))
+        .filter(col("commit_v") <= asOf)
+        .select(col("doc_id").as("id"))
+      view(Some(delta), Some(updIds))
+    }
+  }
+
+  /** The IVF index relation `stored` with the rows `updIds` (id) names
+    * upserted MERGE-ON-READ: their stored rows re-derived with the vector
+    * flipped (the norm is negation-invariant) and the cell re-assigned
+    * from the new value, every other row passed through. Equals the
+    * index rebuilt over the flipped corpus, which is what the oracle
+    * recomputes. No broadcast hint on the prefix joins: the prefix is
+    * corpus-fraction-sized, AQE sizes them. */
+  private def upsertedIndex(stored: DataFrame, updIds: DataFrame,
+                            nCells: Int, d: Int): DataFrame = {
+    val upd = stored.join(updIds, Seq("id"), "left_semi")
+      .select(col("id"), transform(col("embedding"), x => -x)
+        .as("embedding"), col("n2"), col("lang"))
+    val cols = Seq("id", "embedding", "n2", "lang", "cell").map(col)
+    stored.join(updIds, Seq("id"), "left_anti").select(cols: _*)
+      .unionByName(Ivf.assign(upd.select(col("id").as("vec_id"),
+          col("embedding")), nCells, d)
+        .select(col("id"), col("cell")).join(upd, Seq("id"))
+        .select(cols: _*))
+  }
+
+  /** The request serve up to the fused pool (qid, doc_id, fused, tnorm,
+    * vnorm): the lexical pool off the postings at `root` merged with the
+    * view's delta and post-filtered by `textMeta`; the vector pool off
+    * the view's index ([[filteredTopKIndexedMulti]]) or, on the
+    * partitioned kind, the view's query embeddings pre-filtered by
+    * `vecMeta` ([[filteredTopKMulti]]). */
+  private def requestPool(spark: SparkSession, root: String,
+                          textMeta: DataFrame, vecMeta: DataFrame,
+                          req: Requests, view: RequestView): DataFrame = {
+    val vec = view.index match {
+      case Some((stored, (nCells, d, nprobe))) =>
+        filteredTopKIndexedMulti(spark, stored, view.queries, req.filters,
+          req.poolN, nCells, d, nprobe)
+      case None =>
+        filteredTopKMulti(view.queries, vecMeta, req.filters, req.poolN)
+    }
+    serveFusedWith(spark, root, textMeta, req, vec.select(col("qid"),
+      col("id").as("doc_id"), col("score").as("vscore")), view.delta)
+  }
+
   /**
    * THE FULL REQUEST OBJECT — every per-request knob bound from ONE
    * relation, served end-to-end in ONE plan: each qid carries its own
@@ -1757,173 +1894,95 @@ object Search {
    * FILTERED list; fused = α_q·tnorm + (1−α_q)·vnorm; final cut at the
    * qid's own k. All relations bounded and broadcast; the corpus is
    * touched by exactly two scans (postings union + embedding scan).
+   *
+   * The layout kind: `indexed` = Some((nCells, d, nprobe)) serves the
+   * vector side off the AT-REST IVF INDEX, so BOTH request sides read
+   * partition-pruned layouts (probe cells a static partition filter, the
+   * per-qid lang predicate pushed into the SAME scan); its candidates
+   * are probed-cell-approximate. The snapshot: `snap` = Some(log) is
+   * TIME-TRAVEL serving at snapshot `asOf` of the document-update log,
+   * both sides versioned in one plan — the lexical pool reads the
+   * snapshot postings (base minus the applied prefix's docs ∪ their
+   * re-indexed delta rows; df from the snapshot, (n, sumdl) the stale
+   * base sidecar), the vector pool the snapshot's flipped vectors
+   * (queries AND candidates; indexed, merge-on-read with the probes off
+   * the snapshot's queries). Snapshot v is the request object REBUILT
+   * over the commit-prefix view, which the DuckDB oracle recomputes
+   * from the raw tables; asOf 0 serves the current corpus.
    * Output (qid, rank, doc_id, fused, tnorm, vnorm).
    */
+  def serveRequestsAt(spark: SparkSession, sfDir: String, emb: DataFrame,
+                      docMeta: DataFrame, req: Requests,
+                      indexed: Option[(Int, Int, Int)],
+                      snap: Option[UpdateLog]): DataFrame = {
+    val root = ensurePostingsLayout(spark, sfDir, req.nBuckets)
+    serveCut(spark, requestPool(spark, root, docMeta, docMeta, req,
+      resolveRequests(spark, sfDir, root, emb, req.nBuckets, indexed, snap)),
+      req.ks)
+  }
+
+  /** [[serveRequestsAt]] on the partitioned kind at the current
+    * snapshot, the request relations passed flat. */
   def serveRequests(spark: SparkSession, sfDir: String, emb: DataFrame,
                     docMeta: DataFrame, queries: Seq[(Long, Seq[String])],
                     filters: Seq[(Long, String)],
                     weights: Seq[(Long, Double)], ks: Seq[(Long, Int)],
                     k1: Double, b: Double, poolN: Int,
                     nBuckets: Int): DataFrame =
-    serveRequestsOffPostings(spark,
-      ensurePostingsLayout(spark, sfDir, nBuckets), emb, docMeta,
-      docMeta, queries, filters, weights, ks, k1, b, poolN, nBuckets)
+    serveRequestsAt(spark, sfDir, emb, docMeta, Requests(queries, filters,
+      weights, ks, k1, b, poolN, nBuckets), None, None)
 
-  /** [[serveRequests]] against an explicit postings layout and SPLIT
-    * metadata relations — the form the scale soak drives: the lexical
-    * index (and its post-filter metadata) over one corpus, the vector
-    * store (and its pre-filter metadata) over another, as deployed
-    * systems separate them. `textMeta`/`vecMeta` are both `docMeta` in
-    * the single-corpus fixture form. */
+  /** [[serveRequestsAt]] on the partitioned kind at the current snapshot,
+    * against an explicit postings layout and SPLIT metadata relations —
+    * the form the scale soak drives: the lexical index (and its
+    * post-filter metadata) over one corpus, the vector store (and its
+    * pre-filter metadata) over another, as deployed systems separate
+    * them. */
   def serveRequestsOffPostings(spark: SparkSession, root: String,
                                emb: DataFrame, textMeta: DataFrame,
                                vecMeta: DataFrame,
-                               queries: Seq[(Long, Seq[String])],
-                               filters: Seq[(Long, String)],
-                               weights: Seq[(Long, Double)],
-                               ks: Seq[(Long, Int)], k1: Double,
-                               b: Double, poolN: Int,
-                               nBuckets: Int): DataFrame =
-    serveCut(spark,
-      serveFused(spark, root, emb, textMeta, vecMeta, queries, filters,
-        weights, k1, b, poolN, nBuckets), ks)
+                               req: Requests): DataFrame =
+    serveCut(spark, requestPool(spark, root, textMeta, vecMeta, req,
+      RequestView(None, emb, None)), req.ks)
 
   /**
-   * [[serveRequests]] with the vector side served off the AT-REST IVF
-   * INDEX — the production capstone where BOTH request sides read
-   * partition-pruned layouts: the lexical pool off the term-bucketed
-   * postings (union-of-terms pruned), the vector pool off the
-   * cell-partitioned index via [[filteredTopKIndexedMulti]] (probe
-   * cells a static partition filter, the per-qid lang predicate pushed
-   * into the SAME scan — no metadata join at query time at all).
-   * Candidates on the vector side are probed-cell-approximate, as for
-   * every indexed serve.
+   * PER-REQUEST BYTE LEDGER of [[serveRequestsAt]] — the reference's
+   * first-class accounting triple (`ANNCode.py:316-318,363-369`) carried
+   * onto the serve, over the same layout kind and snapshot: one row PER
+   * REQUEST plus the aggregate row (qid = -1), each derived from that
+   * request's OWN slice of the same relations the serve plan reads (the
+   * [[bm25MultiMaxScoreMetrics]] pattern one rung up). Columns, see
+   * [[serveLedger]]: `t_cands` / `bytes_text` count the SNAPSHOT's
+   * candidate posting rows (a request whose terms include the update
+   * token retrieves 0 rows for it at asOf 0 and the applied commits'
+   * docs after); on the indexed kind `pc_rows` (the qid's probed cells'
+   * rows, partition pruning) beside `v_cands`; `fused` / `page` from the
+   * snapshot's fused pool; `save` and `fpr`. `v_cands` counts the lang
+   * pre-filter over the current ids: updates change vectors, not
+   * metadata or membership.
    */
-  def serveRequestsIndexed(spark: SparkSession, sfDir: String,
-                           emb: DataFrame, docMeta: DataFrame,
-                           queries: Seq[(Long, Seq[String])],
-                           filters: Seq[(Long, String)],
-                           weights: Seq[(Long, Double)],
-                           ks: Seq[(Long, Int)], k1: Double, b: Double,
-                           poolN: Int, nBuckets: Int, nCells: Int,
-                           d: Int, nprobe: Int): DataFrame = {
-    val root = ensurePostingsLayout(spark, sfDir, nBuckets)
-    val vecPool = filteredTopKIndexedMulti(spark, sfDir, emb, filters,
-        poolN, nCells, d, nprobe)
-      .select(col("qid"), col("id").as("doc_id"),
-        col("score").as("vscore"))
-    serveCut(spark,
-      serveFusedWith(spark, root, docMeta, queries, filters, weights,
-        k1, b, poolN, nBuckets, vecPool), ks)
-  }
-
-  /**
-   * [[serveRequestsMetrics]] for the INDEXED capstone
-   * ([[serveRequestsIndexed]]) — the byte triple where the vector-side
-   * saving is made by PARTITION PRUNING, not just the lang pre-filter:
-   * per request, the metadata column is read only for the qid's probed
-   * cells' rows (`pc_rows`·8) and embeddings only for the
-   * lang-matching rows among them (`v_cands`·4d), against the
-   * unfiltered-full-scan baseline N·(8+4d). Cell and (cell, lang)
-   * occupancies are bounded aggregates over the stored layout (models
-   * — nCells and nCells·|langs| rows); everything else follows the
-   * [[serveRequestsMetrics]] discipline (universe LEFT joins, explicit
-   * all-zero rows, qid = -1 aggregate, sum-of-parts = whole).
-   */
-  def serveRequestsIndexedMetrics(spark: SparkSession, sfDir: String,
-                                  emb: DataFrame, docMeta: DataFrame,
-                                  queries: Seq[(Long, Seq[String])],
-                                  filters: Seq[(Long, String)],
-                                  weights: Seq[(Long, Double)],
-                                  ks: Seq[(Long, Int)], k1: Double,
-                                  b: Double, poolN: Int, nBuckets: Int,
-                                  nCells: Int, d: Int,
-                                  nprobe: Int): DataFrame = {
-    require(ks.nonEmpty, "serveRequestsIndexedMetrics: empty page relation")
-    // guarded HERE, not left to filters.map(_._1).max below: an empty
-    // filter relation would otherwise surface as an opaque
-    // UnsupportedOperationException("empty.max") instead of the
-    // descriptive message the sibling entry points give
-    require(filters.nonEmpty,
-      "serveRequestsIndexedMetrics: empty filter relation")
-    import spark.implicits._
-    val root = ensurePostingsLayout(spark, sfDir, nBuckets)
-    val vecPool = filteredTopKIndexedMulti(spark, sfDir, emb, filters,
-        poolN, nCells, d, nprobe)
-      .select(col("qid"), col("id").as("doc_id"),
-        col("score").as("vscore"))
-    val fused = serveFusedWith(spark, root, docMeta, queries, filters,
-      weights, k1, b, poolN, nBuckets, vecPool)
-    val tAgg = servePostingBytes(spark, root, queries, nBuckets)
-    // the qid's probed-cell footprint off the SAME layout the indexed
-    // serve reads: cell / (cell, lang) occupancies are tiny aggregates
-    val stored = spark.read
-      .parquet(Ivf.ensureIndex(spark, sfDir, nCells, d))
-    val nq = (filters.map(_._1).max + 1).toInt
-    val q = Ann.queriesOf(emb, nq).select(col("qid"), col("qvec"))
-    val probeSet = Ivf.probeCells(q, nCells, d, nprobe)
-      .select(col("qid"), col("cell"))
-    val occ = stored.groupBy(col("cell")).agg(count(lit(1)).as("occ"))
-    val pcAgg = probeSet.join(occ, Seq("cell"))
-      .groupBy(col("qid")).agg(sum(col("occ")).as("pc_rows"))
-    val qf = broadcast(filters.toDF("qid", "lang"))
-    val langOcc = stored.groupBy(col("cell"), col("lang"))
-      .agg(count(lit(1)).as("n"))
-    val vcAgg = probeSet.join(langOcc, Seq("cell"))
-      .join(qf, Seq("qid", "lang"))
-      .groupBy(col("qid")).agg(sum(col("n")).as("v_cands"))
-    val fAgg = fused.groupBy(col("qid")).agg(count(lit(1)).as("fused"))
-    val nV = stored.count() // one bounded scalar (a model)
-    val qkRel = broadcast(ks.toDF("qid", "kq"))
-    val perQid = qkRel
-      .join(tAgg, Seq("qid"), "left")
-      .join(pcAgg, Seq("qid"), "left")
-      .join(vcAgg, Seq("qid"), "left")
-      .join(fAgg, Seq("qid"), "left")
-      .select(col("qid"),
-        coalesce(col("t_cands"), lit(0L)).as("t_cands"),
-        coalesce(col("pc_rows"), lit(0L)).as("pc_rows"),
-        coalesce(col("v_cands"), lit(0L)).as("v_cands"),
-        coalesce(col("fused"), lit(0L)).as("fused"),
-        least(col("kq").cast("long"),
-          coalesce(col("fused"), lit(0L))).as("page"),
-        coalesce(col("bytes_text"), lit(0L)).as("bytes_text"),
-        (coalesce(col("pc_rows"), lit(0L)) * lit(8L) +
-          coalesce(col("v_cands"), lit(0L)) * lit(4L * d))
-          .as("bytes_vec"),
-        lit((8L + 4L * d) * nV).as("bytes_vec_full"))
-    val total = perQid.agg(
-      sum(col("t_cands")).as("t_cands"),
-      sum(col("pc_rows")).as("pc_rows"),
-      sum(col("v_cands")).as("v_cands"),
-      sum(col("fused")).as("fused"),
-      sum(col("page")).as("page"),
-      sum(col("bytes_text")).as("bytes_text"),
-      sum(col("bytes_vec")).as("bytes_vec"),
-      sum(col("bytes_vec_full")).as("bytes_vec_full"))
-      .select(lit(-1L).as("qid") +: perQid.columns.filter(_ != "qid")
-        .map(col).toSeq: _*)
-    perQid.unionByName(total)
-      .withColumn("save", lit(1.0) -
-        (col("bytes_text") + col("bytes_vec")).cast("double") /
-          (col("bytes_text") + col("bytes_vec_full")).cast("double"))
-      .withColumn("fpr",
-        when(col("t_cands") + col("v_cands") === 0L, lit(0.0))
-          .otherwise((col("fused") - col("page")).cast("double") /
-            (col("t_cands") + col("v_cands")).cast("double")))
+  def serveRequestsLedger(spark: SparkSession, sfDir: String,
+                          emb: DataFrame, docMeta: DataFrame,
+                          req: Requests, indexed: Option[(Int, Int, Int)],
+                          snap: Option[UpdateLog], d: Int): DataFrame = {
+    val root = ensurePostingsLayout(spark, sfDir, req.nBuckets)
+    val view = resolveRequests(spark, sfDir, root, emb, req.nBuckets,
+      indexed, snap)
+    serveLedger(spark, root, req, view.delta, docMeta, view.queries,
+      emb.select(col("vec_id")), view.index, d,
+      requestPool(spark, root, docMeta, docMeta, req, view), None)
   }
 
   // ---- the tiered serve: per-request precision over one snapshot -------
 
-  /** One batch of tiered serve requests, bound by qid: terms, lang
-    * filters, fusion weight, page size and precision tier (a scaleLog2
-    * the layout stores), plus the layout's stored tiers and the shared
-    * serve knobs. Construction checks the five relations agree: they
-    * name the same qids, and all but the filters bind exactly one row
-    * per qid (a qid with a page size but no tier would be paged from
-    * text alone and dropped from the ledger; a duplicated tier row
-    * would duplicate its candidates). A qid may filter on several langs,
-    * each once: its filter is a lang set. */
+  /** One batch of tiered serve requests: the [[Requests]] of its terms,
+    * lang filters, fusion weights, page sizes and shared knobs, plus each
+    * qid's precision tier (a scaleLog2 the layout stores), the layout's
+    * stored tiers and the cushion's alpha. Construction checks the
+    * requests ([[Requests]]) and that the tiers bind exactly one row per
+    * qid of them (a qid with a page size but no tier would be paged from
+    * text alone and dropped from the ledger; a duplicated tier row would
+    * duplicate its candidates). */
   final case class TieredRequests(queries: Seq[(Long, Seq[String])],
                                   filters: Seq[(Long, String)],
                                   weights: Seq[(Long, Double)],
@@ -1932,31 +1991,14 @@ object Search {
                                   layoutScales: Seq[Int], k1: Double,
                                   b: Double, poolN: Int, nBuckets: Int,
                                   alpha: Double) {
-    require(filters.nonEmpty, "tiered requests: empty filter relation")
+    val requests: Requests =
+      Requests(queries, filters, weights, ks, k1, b, poolN, nBuckets)
     require(tiers.nonEmpty, "tiered requests: empty tier relation")
-    require(ks.nonEmpty, "tiered requests: empty page relation")
-    private val qidsOf = Seq("queries" -> queries.map(_._1),
-      "filters" -> filters.map(_._1), "weights" -> weights.map(_._1),
-      "ks" -> ks.map(_._1), "tiers" -> tiers.map(_._1))
-    private val allQids = qidsOf.flatMap(_._2).toSet
-    qidsOf.foreach { case (rel, qids) =>
-      val missing = (allQids -- qids).toSeq.sorted
-      require(missing.isEmpty,
-        s"tiered requests: $rel has no row for qid ${missing.mkString(", ")}")
-      val dup = qids.diff(qids.distinct).distinct.sorted
-      require(rel == "filters" || dup.isEmpty,
-        s"tiered requests: $rel has more than one row for qid " +
-          dup.mkString(", "))
-    }
-    private val dupFilters = filters.diff(filters.distinct).distinct.sorted
-    require(dupFilters.isEmpty,
-      s"tiered requests: filters repeat (qid, lang) " +
-        dupFilters.mkString(", "))
+    Requests.agree(Seq("ks" -> ks.map(_._1), "tiers" -> tiers.map(_._1)))
     val usedScales: Seq[Int] = tiers.map(_._2).distinct.sorted
     require(usedScales.toSet.subsetOf(layoutScales.toSet),
       s"tiers $usedScales not all stored in layout $layoutScales")
-    /** Query rows read off the query view: qids 0 until nq. */
-    def nq: Int = (filters.map(_._1).max + 1).toInt
+    def nq: Int = requests.nq
     /** The requests whose qid `keep` holds (a stream batch's arrivals). */
     def slice(keep: Long => Boolean): TieredRequests = {
       def f[V](rel: Seq[(Long, V)]) = rel.filter(kv => keep(kv._1))
@@ -2032,6 +2074,13 @@ object Search {
         .otherwise(col("embedding")).as("embedding"),
       col("label"))
 
+  /** `emb` with the vectors of the ids `ids` (id) holds negated, through
+    * a flag join: the id set is corpus-fraction-sized, so AQE sizes the
+    * join and it is never broadcast-hinted. */
+  private def negatedBy(emb: DataFrame, ids: DataFrame): DataFrame =
+    negated(emb.join(ids.select(col("id").as("vec_id")).withColumn("upd",
+      lit(1)), Seq("vec_id"), "left"), col("upd") === 1)
+
   /** The ids the versioned log anchored on `fixture` applies by `asOf`. */
   private def logIds(spark: SparkSession, fixture: String, mod: Int,
                      asOf: Int): DataFrame =
@@ -2057,9 +2106,6 @@ object Search {
       ensureTieredServeCommitted, upsertedServeTiers}
     val cells = tierCells(indexed)
     lazy val fixture = ensureTieredServe(spark, sfDir, layoutScales, cells)
-    def negatedBy(updIds: DataFrame): DataFrame = negated(
-      emb.join(updIds.select(col("id").as("vec_id")).withColumn("upd",
-        lit(1)), Seq("vec_id"), "left"), col("upd") === 1)
     val (stored, queries, deletes) = snap match {
       case Pristine => (spark.read.parquet(fixture), emb, false)
       case At(path) => (spark.read.parquet(path), emb, false)
@@ -2077,7 +2123,7 @@ object Search {
             spark, sfDir, layoutScales, indexed, mod, asOf) + "/tiers")
           else upsertedServeTiers(spark.read.parquet(fixture), updIds,
             layoutScales, cells)
-        (stored, negatedBy(updIds), false)
+        (stored, negatedBy(emb, updIds), false)
       case DeleteLog(mod, asOf) =>
         (spark.read.parquet(fixture)
           .join(logIds(spark, fixture, mod, asOf), Seq("id"), "left_anti"),
@@ -2090,7 +2136,7 @@ object Search {
         val updIds = log.filter(col("verb") === "U").select(col("id"))
         val delIds = log.filter(col("verb") === "D").select(col("id"))
         (upsertedServeTiers(base, updIds, layoutScales, cells)
-          .join(delIds, Seq("id"), "left_anti"), negatedBy(updIds), true)
+          .join(delIds, Seq("id"), "left_anti"), negatedBy(emb, updIds), true)
     }
     TieredView(stored, queries,
       if (deletes) stored.select(col("id").as("vec_id"))
@@ -2259,9 +2305,8 @@ object Search {
         fetch.withColumnRenamed("s_full", "score"), req.poolN)
       .select(col("qid"), col("id").as("doc_id"),
         col("score").as("vscore"))
-    (root, view, fetch, serveFusedWith(spark, root, docMeta, req.queries,
-      req.filters, req.weights, req.k1, req.b, req.poolN, req.nBuckets,
-      vecPool))
+    (root, view, fetch, serveFusedWith(spark, root, docMeta, req.requests,
+      vecPool, None))
   }
 
   /**
@@ -2315,16 +2360,11 @@ object Search {
    * codeBytes(tier_q)·d·`v_cands` (the request's OWN tier's code chunks,
    * read only for its candidate rows) + 4d·`fetched` (full-precision
    * rescue fetches), against the unfiltered full scan N·(8 + 4d). On the
-   * partitioned layout the lang column costs 8·N and `v_cands` counts
-   * the universe's lang matches; on the indexed layout it costs
-   * `pc_rows`·8, the stored rows of the qid's probed cells (partition
-   * pruning), and `v_cands` counts their lang matches, both off the
-   * snapshot's stored cell occupancies (rows an upsert moved are counted
-   * where they now live). N is the snapshot's id universe, so a delete
-   * leaves the accounting exactly as it leaves the serve. The
-   * [[serveRequestsMetrics]] discipline otherwise: universe LEFT joins,
-   * explicit all-zero rows, a qid = -1 total with tier = -1,
-   * sum-of-parts = whole.
+   * indexed layout the probed cells' occupancies come off the snapshot's
+   * stored relation (rows an upsert moved are counted where they now
+   * live). N is the snapshot's id universe, so a delete leaves the
+   * accounting exactly as it leaves the serve. Otherwise the one serve
+   * ledger ([[serveLedger]]), with a tier column, -1 on the total.
    */
   def serveRequestsTieredMetrics(spark: SparkSession, sfDir: String,
                                  emb: DataFrame, docMeta: DataFrame,
@@ -2332,70 +2372,15 @@ object Search {
                                  indexed: Option[(Int, Int, Int)],
                                  snap: TierSnapshot, d: Int): DataFrame = {
     import spark.implicits._
-    indexed.foreach { case (_, di, _) => require(di == d,
-      s"ledger d=$d differs from the indexed layout's d=$di") }
     val (root, view, fetch, fused) = tieredPool(spark, sfDir, emb, docMeta,
       req, indexed, snap)
-    val tAgg = servePostingBytes(spark, root, req.queries, req.nBuckets)
-    val qf = broadcast(req.filters.toDF("qid", "lang"))
-    val nV = view.universe.count() // one bounded scalar (a model)
-    // the lang column's bytes and the candidate counts per layout kind
-    val (occAggs, occCols, langBytes) = indexed match {
-      case None =>
-        val meta = docMeta.select(col("doc_id").as("id"), col("lang"))
-        val vAgg = view.universe.select(col("vec_id").as("id"))
-          .join(meta, Seq("id")).join(qf, Seq("lang"))
-          .groupBy(col("qid")).agg(count(lit(1)).as("v_cands"))
-        (Seq(vAgg), Seq("v_cands"), lit(8L * nV))
-      case Some((nCells, _, nprobe)) =>
-        val probeSet = Ivf.probeCells(Ann.queriesOf(view.queries, req.nq)
-            .select(col("qid"), col("qvec")), nCells, d, nprobe)
-          .select(col("qid"), col("cell"))
-        val occ = view.stored.groupBy(col("cell"))
-          .agg(count(lit(1)).as("occ"))
-        val pcAgg = probeSet.join(occ, Seq("cell"))
-          .groupBy(col("qid")).agg(sum(col("occ")).as("pc_rows"))
-        val langOcc = view.stored.groupBy(col("cell"), col("lang"))
-          .agg(count(lit(1)).as("n"))
-        val vcAgg = probeSet.join(langOcc, Seq("cell"))
-          .join(qf, Seq("qid", "lang"))
-          .groupBy(col("qid")).agg(sum(col("n")).as("v_cands"))
-        (Seq(pcAgg, vcAgg), Seq("pc_rows", "v_cands"),
-          coalesce(col("pc_rows"), lit(0L)) * lit(8L))
-    }
-    val fetchAgg = fetch.groupBy(col("qid"))
-      .agg(count(lit(1)).as("fetched"))
-    val fAgg = fused.groupBy(col("qid")).agg(count(lit(1)).as("fused"))
-    val trRel = broadcast(req.tiers.map { case (qid, s) =>
-      (qid, s, graft.sources.Disaggregated.serveTierCodeBytes(s)
-        .toLong * d) }.toDF("qid", "tier", "b_red"))
-    val qkRel = broadcast(req.ks.toDF("qid", "kq"))
-    val perQid = (tAgg +: occAggs :+ fetchAgg :+ fAgg)
-      .foldLeft(qkRel.join(trRel, Seq("qid")))(_.join(_, Seq("qid"), "left"))
-      .select(Seq(col("qid"), col("tier")) ++
-        (("t_cands" +: occCols) ++ Seq("fetched", "fused")).map(c =>
-          coalesce(col(c), lit(0L)).as(c)) ++ Seq(
-        least(col("kq").cast("long"),
-          coalesce(col("fused"), lit(0L))).as("page"),
-        coalesce(col("bytes_text"), lit(0L)).as("bytes_text"),
-        (langBytes +
-          col("b_red") * coalesce(col("v_cands"), lit(0L)) +
-          lit(4L * d) * coalesce(col("fetched"), lit(0L)))
-          .as("bytes_vec"),
-        lit((8L + 4L * d) * nV).as("bytes_vec_full")): _*)
-    val parts = perQid.columns.filterNot(Set("qid", "tier"))
-    val total = perQid.agg(sum(col(parts.head)).as(parts.head),
-        parts.tail.map(c => sum(col(c)).as(c)): _*)
-      .select(lit(-1L).as("qid") +: lit(-1).as("tier") +: parts.map(col)
-        .toSeq: _*)
-    perQid.unionByName(total)
-      .withColumn("save", lit(1.0) -
-        (col("bytes_text") + col("bytes_vec")).cast("double") /
-          (col("bytes_text") + col("bytes_vec_full")).cast("double"))
-      .withColumn("fpr",
-        when(col("t_cands") + col("v_cands") === 0L, lit(0.0))
-          .otherwise((col("fused") - col("page")).cast("double") /
-            (col("t_cands") + col("v_cands")).cast("double")))
+    val tierRel = req.tiers.map { case (qid, s) =>
+      (qid, s, graft.sources.Disaggregated.serveTierCodeBytes(s).toLong * d)
+    }.toDF("qid", "tier", "b_red")
+    serveLedger(spark, root, req.requests, None, docMeta, view.queries,
+      view.universe, indexed.map(view.stored -> _), d, fused,
+      Some((tierRel, fetch.groupBy(col("qid"))
+        .agg(count(lit(1)).as("fetched")))))
   }
 
   /** The per-qid candidate posting rows' counts and fully-read bytes —
@@ -2404,7 +2389,7 @@ object Search {
   private def servePostingBytes(spark: SparkSession, root: String,
                                 queries: Seq[(Long, Seq[String])],
                                 nBuckets: Int,
-                                upsertByIds: Option[DataFrame] = None)
+                                upsertByIds: Option[DataFrame])
       : DataFrame = {
     import spark.implicits._
     val unionTerms = queries.flatMap(_._2).distinct
@@ -2444,48 +2429,24 @@ object Search {
         col("tnorm"), col("vnorm"))
   }
 
-  /** [[serveRequests]]' shared pipeline up to the fused candidate pool
-    * (qid, doc_id, fused, tnorm, vnorm) — consumed by the result query
-    * (per-qid rank cut) and by its per-request byte ledger
-    * ([[serveRequestsMetrics]]), so both serve off the SAME relations. */
-  private def serveFused(spark: SparkSession, root: String,
-                         emb: DataFrame, textMeta: DataFrame,
-                         vecMeta: DataFrame,
-                         queries: Seq[(Long, Seq[String])],
-                         filters: Seq[(Long, String)],
-                         weights: Seq[(Long, Double)], k1: Double,
-                         b: Double, poolN: Int,
-                         nBuckets: Int): DataFrame =
-    serveFusedWith(spark, root, textMeta, queries, filters, weights, k1,
-      b, poolN, nBuckets,
-      filteredTopKMulti(emb, vecMeta, filters, poolN)
-        .select(col("qid"), col("id").as("doc_id"),
-          col("score").as("vscore")))
-
-  /** [[serveFused]] over an EXPLICIT vector pool (qid, doc_id, vscore)
-    * — lets the indexed serve swap in the at-rest probe-pruned vector
-    * side while the text pipeline and fusion stay shared. */
+  /** Every serve's lexical side and fusion up to the fused candidate pool
+    * (qid, doc_id, fused, tnorm, vnorm) over an EXPLICIT vector pool
+    * `vec` (qid, doc_id, vscore): the result query's page cut and the
+    * byte ledger both read it, so both serve off the SAME relations. */
   private def serveFusedWith(spark: SparkSession, root: String,
-                             textMeta: DataFrame,
-                             queries: Seq[(Long, Seq[String])],
-                             filters: Seq[(Long, String)],
-                             weights: Seq[(Long, Double)], k1: Double,
-                             b: Double, poolN: Int, nBuckets: Int,
+                             textMeta: DataFrame, req: Requests,
                              vec: DataFrame,
-                             upsertByIds: Option[DataFrame] = None)
-      : DataFrame = {
-    require(filters.nonEmpty && weights.nonEmpty,
-      "serveRequests: empty request relation")
+                             upsertByIds: Option[DataFrame]): DataFrame = {
     import spark.implicits._
     val meta = textMeta.select(col("doc_id"), col("lang"))
-    val qf = broadcast(filters.toDF("qid", "lang"))
-    val text = bm25MultiOffPostings(spark, root, queries, k1, b, poolN,
-        nBuckets, upsertByIds = upsertByIds)
+    val qf = broadcast(req.filters.toDF("qid", "lang"))
+    val text = bm25MultiOffPostings(spark, root, req.queries, req.k1, req.b,
+        req.poolN, req.nBuckets, upsertByIds = upsertByIds)
       .select(col("qid"), col("doc_id"), col("score").as("tscore"))
       .join(meta, Seq("doc_id"))
       .join(qf, Seq("qid", "lang"))
       .select(col("qid"), col("doc_id"), col("tscore"))
-    val qa = broadcast(weights.toDF("qid", "alpha"))
+    val qa = broadcast(req.weights.toDF("qid", "alpha"))
     val tmm = text.groupBy(col("qid"))
       .agg(min(col("tscore")).as("tmin"), max(col("tscore")).as("tmax"))
     val vmm = vec.groupBy(col("qid"))
@@ -2512,104 +2473,103 @@ object Search {
   }
 
   /**
-   * PER-REQUEST BYTE LEDGER on the serving capstone — the reference's
-   * first-class accounting triple (`ANNCode.py:316-318,363-369`)
-   * carried onto [[serveRequests]]: one row PER REQUEST of the
-   * relation plus the aggregate row (qid = -1), each derived from that
-   * request's OWN slice of the same relations the serve plan reads
-   * (the [[bm25MultiMaxScoreMetrics]] pattern one rung up). Columns:
+   * The serve ledgers' one assembly, for [[serveRequestsLedger]] and
+   * [[serveRequestsTieredMetrics]]: one row per request of the page
+   * relation, its per-qid aggregates LEFT-joined from it (a qid with zero
+   * matches emits an explicit all-zero row), with
    *
    *  - `t_cands` / `bytes_text`: the request's candidate posting rows
-   *    (union-pruned postings joined to ITS terms) and their
-   *    fully-read bytes (term chars + 24 — BM25 needs tf and dl; the
-   *    MaxScore ledger's row-width model),
-   *  - `v_cands` / `bytes_vec`: corpus vectors passing its lang
-   *    pre-filter, and what the filtered scan reads — the metadata
-   *    column over ALL N rows (8 B each) plus embeddings (4d B) for
-   *    the matching rows only; `bytes_vec_full` = N·(8+4d) is the
-   *    baseline an unfiltered scan pays (the pre-filter IS the
-   *    request's bandwidth mechanism),
+   *    (the union-pruned postings at `root`, `delta` merged on read,
+   *    joined to ITS terms) and their fully-read bytes (term chars + 24
+   *    — BM25 needs tf and dl; the MaxScore ledger's row-width model),
+   *  - the vector candidates by layout kind. Partitioned: `v_cands`, the
+   *    `universe` ids whose `docMeta` lang passes the request's
+   *    pre-filter, and the lang column read for ALL N rows (8 B each).
+   *    Indexed (`index`): `pc_rows`, the stored rows of the request's
+   *    probed cells (probes off the `queries` view), and `v_cands`, their
+   *    lang matches, both off the stored relation's cell and
+   *    (cell, lang) occupancies (bounded aggregates), the lang column
+   *    read for the `pc_rows` only (partition pruning),
+   *  - `bytes_vec`: those lang bytes plus 4d per candidate's embedding;
+   *    on the tiered serve (`tiered` = its (qid, tier, b_red) relation
+   *    and per-qid `fetched` counts) b_red per candidate's code chunk
+   *    plus 4d per full-precision fetch,
+   *  - `bytes_vec_full` = N·(8+4d), the unfiltered scan's bytes, N the
+   *    universe's rows (the pre-filter IS the request's bandwidth
+   *    mechanism),
    *  - `fused` / `page`: candidates entering the fusion stage (the
    *    full-outer union of its two top-poolN pools) and the page it
-   *    actually returns (min(k_q, fused)),
+   *    returns (min(k_q, fused)),
    *  - `save` = 1 − (bytes_text + bytes_vec)/(bytes_text +
-   *    bytes_vec_full) — the end-to-end request saving (the text side
-   *    is identical in both terms; the vector pre-filter is what
-   *    saves),
-   *  - `fpr` = (fused − page)/(t_cands + v_cands) — fetches into
-   *    fusion beyond the returned page, over the request's candidate
-   *    universe.
+   *    bytes_vec_full), the end-to-end request saving (the text side is
+   *    identical in both terms),
+   *  - `fpr` = (fused − page)/(t_cands + v_cands), fetches into fusion
+   *    beyond the returned page over the request's candidate universe,
+   *    0/0 defined as 0.0,
    *
-   * Everything stays RELATIONAL — per-qid aggregates over the same
-   * pruned-postings / lang-filter / fused relations, LEFT-joined from
-   * the request universe (a qid with zero matches emits an explicit
-   * all-zero row, 0/0 ratios defined as 0.0). The aggregate row sums
-   * the per-qid integers, so "sum of parts = whole" is a spec-asserted
-   * invariant.
+   * plus the qid = -1 total (tier -1) summing the per-qid integers, so
+   * "sum of parts = whole" is a spec-asserted invariant.
    */
-  def serveRequestsMetrics(spark: SparkSession, sfDir: String,
-                           emb: DataFrame, docMeta: DataFrame,
-                           queries: Seq[(Long, Seq[String])],
-                           filters: Seq[(Long, String)],
-                           weights: Seq[(Long, Double)],
-                           ks: Seq[(Long, Int)], k1: Double, b: Double,
-                           poolN: Int, nBuckets: Int,
-                           d: Int): DataFrame = {
-    require(ks.nonEmpty, "serveRequestsMetrics: empty page relation")
+  private def serveLedger(spark: SparkSession, root: String, req: Requests,
+                          delta: Option[DataFrame], docMeta: DataFrame,
+                          queries: DataFrame, universe: DataFrame,
+                          index: Option[(DataFrame, (Int, Int, Int))],
+                          d: Int, fused: DataFrame,
+                          tiered: Option[(DataFrame, DataFrame)])
+      : DataFrame = {
     import spark.implicits._
-    val root = ensurePostingsLayout(spark, sfDir, nBuckets)
-    val fused = serveFused(spark, root, emb, docMeta, docMeta, queries,
-      filters, weights, k1, b, poolN, nBuckets)
-    // the request's candidate posting rows: the SAME union-pruned scan
-    // bm25Multi serves from, joined to its terms
-    val tAgg = servePostingBytes(spark, root, queries, nBuckets)
-    // vectors passing the request's lang pre-filter — the rows the
-    // filtered scan actually fetches embeddings for
-    val meta = docMeta.select(col("doc_id").as("id"), col("lang"))
-    val qf = broadcast(filters.toDF("qid", "lang"))
-    val vAgg = emb.select(col("vec_id").as("id")).join(meta, Seq("id"))
-      .join(qf, Seq("lang"))
-      .groupBy(col("qid")).agg(count(lit(1)).as("v_cands"))
-    val nV = emb.count() // one bounded scalar (a model)
-    serveLedgerFrom(spark, fused, tAgg, vAgg, ks, nV, d)
-  }
-
-  /** The serve ledger's shared assembly (per-qid LEFT joins from the
-    * request universe, explicit all-zero rows, the qid = -1 aggregate,
-    * save/fpr ratios) — consumed by [[serveRequestsMetrics]] and its
-    * as-of twin so both derive the identical row shape from their own
-    * (fused, text-bytes, vector-candidate) relations. */
-  private def serveLedgerFrom(spark: SparkSession, fused: DataFrame,
-                              tAgg: DataFrame, vAgg: DataFrame,
-                              ks: Seq[(Long, Int)], nV: Long,
-                              d: Int): DataFrame = {
-    import spark.implicits._
+    index.foreach { case (_, (_, di, _)) => require(di == d,
+      s"ledger d=$d differs from the indexed layout's d=$di") }
+    def n(c: String): Column = coalesce(col(c), lit(0L))
+    val tAgg = servePostingBytes(spark, root, req.queries, req.nBuckets,
+      delta)
+    val qf = broadcast(req.filters.toDF("qid", "lang"))
+    val nV = universe.count() // one bounded scalar (a model)
+    val (occAggs, occCols, langBytes) = index match {
+      case None =>
+        val meta = docMeta.select(col("doc_id").as("id"), col("lang"))
+        val vAgg = universe.select(col("vec_id").as("id"))
+          .join(meta, Seq("id")).join(qf, Seq("lang"))
+          .groupBy(col("qid")).agg(count(lit(1)).as("v_cands"))
+        (Seq(vAgg), Seq("v_cands"), lit(8L * nV))
+      case Some((stored, (nCells, _, nprobe))) =>
+        val probeSet = Ivf.probeCells(Ann.queriesOf(queries, req.nq)
+            .select(col("qid"), col("qvec")), nCells, d, nprobe)
+          .select(col("qid"), col("cell"))
+        val occ = stored.groupBy(col("cell"))
+          .agg(count(lit(1)).as("occ"))
+        val pcAgg = probeSet.join(occ, Seq("cell"))
+          .groupBy(col("qid")).agg(sum(col("occ")).as("pc_rows"))
+        val langOcc = stored.groupBy(col("cell"), col("lang"))
+          .agg(count(lit(1)).as("n"))
+        val vcAgg = probeSet.join(langOcc, Seq("cell"))
+          .join(qf, Seq("qid", "lang"))
+          .groupBy(col("qid")).agg(sum(col("n")).as("v_cands"))
+        (Seq(pcAgg, vcAgg), Seq("pc_rows", "v_cands"), n("pc_rows") * lit(8L))
+    }
     val fAgg = fused.groupBy(col("qid")).agg(count(lit(1)).as("fused"))
-    val qkRel = broadcast(ks.toDF("qid", "kq"))
-    val perQid = qkRel
-      .join(tAgg, Seq("qid"), "left")
-      .join(vAgg, Seq("qid"), "left")
-      .join(fAgg, Seq("qid"), "left")
-      .select(col("qid"),
-        coalesce(col("t_cands"), lit(0L)).as("t_cands"),
-        coalesce(col("v_cands"), lit(0L)).as("v_cands"),
-        coalesce(col("fused"), lit(0L)).as("fused"),
-        least(col("kq").cast("long"),
-          coalesce(col("fused"), lit(0L))).as("page"),
-        coalesce(col("bytes_text"), lit(0L)).as("bytes_text"),
-        (lit(8L * nV) + coalesce(col("v_cands"), lit(0L)) *
-          lit(4L * d)).as("bytes_vec"),
-        lit((8L + 4L * d) * nV).as("bytes_vec_full"))
-    val total = perQid.agg(
-      sum(col("t_cands")).as("t_cands"),
-      sum(col("v_cands")).as("v_cands"),
-      sum(col("fused")).as("fused"),
-      sum(col("page")).as("page"),
-      sum(col("bytes_text")).as("bytes_text"),
-      sum(col("bytes_vec")).as("bytes_vec"),
-      sum(col("bytes_vec_full")).as("bytes_vec_full"))
-      .select(lit(-1L).as("qid") +: perQid.columns.filter(_ != "qid")
-        .map(col).toSeq: _*)
+    val keys = req.ks.toDF("qid", "kq")
+    val (base, tags, fetchAggs, candBytes) = tiered match {
+      case None => (keys, Nil, Nil, n("v_cands") * lit(4L * d))
+      case Some((tierRel, fetchAgg)) =>
+        (keys.join(broadcast(tierRel), Seq("qid")), Seq("tier"),
+          Seq(fetchAgg),
+          col("b_red") * n("v_cands") + lit(4L * d) * n("fetched"))
+    }
+    val counts = ("t_cands" +: occCols) ++ fetchAggs.map(_ => "fetched") :+
+      "fused"
+    val perQid = ((tAgg +: occAggs) ++ fetchAggs :+ fAgg)
+      .foldLeft(base)(_.join(_, Seq("qid"), "left"))
+      .select((col("qid") +: tags.map(col)) ++ counts.map(c => n(c).as(c)) ++
+        Seq(least(col("kq").cast("long"), n("fused")).as("page"),
+          n("bytes_text").as("bytes_text"),
+          (langBytes + candBytes).as("bytes_vec"),
+          lit((8L + 4L * d) * nV).as("bytes_vec_full")): _*)
+    val parts = perQid.columns.filterNot(("qid" +: tags).contains)
+    val total = perQid.agg(sum(col(parts.head)).as(parts.head),
+        parts.tail.map(c => sum(col(c)).as(c)): _*)
+      .select((lit(-1L).as("qid") +: tags.map(lit(-1).as(_))) ++
+        parts.map(col): _*)
     perQid.unionByName(total)
       .withColumn("save", lit(1.0) -
         (col("bytes_text") + col("bytes_vec")).cast("double") /
@@ -2618,231 +2578,6 @@ object Search {
         when(col("t_cands") + col("v_cands") === 0L, lit(0.0))
           .otherwise((col("fused") - col("page")).cast("double") /
             (col("t_cands") + col("v_cands")).cast("double")))
-  }
-
-  /**
-   * The document-update log's SNAPSHOT view of BOTH request sides — the
-   * relation pair every as-of serve reads. One update commit re-indexes
-   * a document's text AND re-embeds its vector, so ONE versioned log
-   * drives both: the lexical side is the versioned postings delta
-   * ([[ensureVersionedPostingsUpsertDeltas]]) filtered to commits ≤
-   * asOf; the vector side reads the applied-prefix doc ids from the
-   * generic versioned log ([[graft.operators.Pq
-   * .ensureVersionedTombstones]] anchored on the postings layout, here
-   * recording UPDATE commits) and flips those vectors (v' = −v, the
-   * fixture's float-exact transform) via a flag join — the
-   * corpus-fraction-sized prefix is never broadcast-hinted (AQE sizes
-   * it). Base postings files and the embedding table are byte-immutable
-   * for every snapshot.
-   */
-  private def serveAsOfSnapshot(spark: SparkSession, sfDir: String,
-                                root: String, emb: DataFrame, mod: Int,
-                                nBuckets: Int, token: String, asOf: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val delta = spark.read.parquet(
-        ensureVersionedPostingsUpsertDeltas(spark, sfDir, root, mod,
-          nBuckets, token))
-      .filter(col("commit_v") <= asOf)
-      .select(col("term"), col("doc_id"), col("dl"), col("tf"), col("tb"))
-    // the update-id log derives from the DOCUMENTS table, not from the
-    // doc_ids present in posting rows: a document with empty/untokenized
-    // text must still flip its vector at its commit (the log's domain is
-    // the corpus, independent of tokenization)
-    val updIds = spark.read.parquet(graft.operators.Pq
-        .ensureVersionedTombstonesOver(spark, root,
-          graft.Tables.documents(spark, sfDir).select(col("doc_id")),
-          mod, idCol = "doc_id", tag = "_docs"))
-      .filter(col("commit_v") <= asOf)
-      .select(col("doc_id").as("vec_id"))
-    val embAsOf = emb
-      .join(updIds.withColumn("upd", lit(1)), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        when(col("upd") === 1, transform(col("embedding"), x => -x))
-          .otherwise(col("embedding")).as("embedding"),
-        col("label"))
-    (delta, embAsOf, updIds)
-  }
-
-  /**
-   * TIME-TRAVEL SERVING — the serve capstone composed with the as-of
-   * verb: the FULL request object (per-qid terms + langs + α + k)
-   * served at snapshot `asOf` of the document-update log, both sides
-   * versioned in ONE plan. The lexical pool reads the snapshot postings
-   * (base minus the applied prefix's docs ∪ their re-indexed delta
-   * rows — df from the snapshot, (n, sumdl) the stale base sidecar,
-   * the merge-on-read contract); the vector pool reads the snapshot
-   * embedding view (applied prefix's vectors flipped — queries AND
-   * candidates, both derive from the store). asOf 0 serves the
-   * pre-update corpus; the latest asOf serves the fully-updated one.
-   * Snapshot v is provably the request object REBUILT over the
-   * commit-prefix view — the DuckDB oracle recomputes exactly that
-   * from the raw tables — which is what an auditor asks of a serving
-   * system with versioned indexes: reproduce yesterday's answer.
-   */
-  def serveRequestsAsOf(spark: SparkSession, sfDir: String,
-                        emb: DataFrame, docMeta: DataFrame,
-                        queries: Seq[(Long, Seq[String])],
-                        filters: Seq[(Long, String)],
-                        weights: Seq[(Long, Double)],
-                        ks: Seq[(Long, Int)], k1: Double, b: Double,
-                        poolN: Int, nBuckets: Int, mod: Int,
-                        token: String, asOf: Int): DataFrame = {
-    val root = ensurePostingsLayout(spark, sfDir, nBuckets)
-    val (delta, embAsOf, _) = serveAsOfSnapshot(spark, sfDir, root, emb,
-      mod, nBuckets, token, asOf)
-    serveCut(spark,
-      serveFusedWith(spark, root, docMeta, queries, filters, weights,
-        k1, b, poolN, nBuckets,
-        filteredTopKMulti(embAsOf, docMeta, filters, poolN)
-          .select(col("qid"), col("id").as("doc_id"),
-            col("score").as("vscore")),
-        upsertByIds = Some(delta)),
-      ks)
-  }
-
-  /**
-   * The vector side of the INDEXED as-of serve: the at-rest IVF layout
-   * served MERGE-ON-READ at a snapshot — base rows of the probed cells
-   * minus the applied prefix's ids, union the prefix's rows re-derived
-   * FROM THE LAYOUT ITSELF (their stored rows with the vector flipped,
-   * the norm unchanged — negation-invariant — and the cell re-assigned
-   * from the new value, then re-pruned to the probed cells). Base
-   * index files are byte-immutable for every snapshot; queries derive
-   * from the as-of embedding view so probe cells move with the commit.
-   * The merged view provably equals the index REBUILT over the
-   * snapshot (non-updated rows keep their assignment; updated rows
-   * carry the view's), which is exactly what the oracle recomputes.
-   */
-  private def filteredTopKIndexedMultiAsOf(spark: SparkSession,
-                                           sfDir: String,
-                                           embAsOf: DataFrame,
-                                           filters: Seq[(Long, String)],
-                                           k: Int, nCells: Int, d: Int,
-                                           nprobe: Int,
-                                           updIds: DataFrame): DataFrame = {
-    require(filters.nonEmpty, "filteredTopKIndexedMultiAsOf: empty relation")
-    import spark.implicits._
-    val nq = (filters.map(_._1).max + 1).toInt
-    val unionLangs = filters.map(_._2).distinct
-    val path = Ivf.ensureIndex(spark, sfDir, nCells, d)
-    val stored = spark.read.parquet(path)
-    val q = Ann.queriesOf(embAsOf, nq)
-      .select(col("qid"), col("qvec"), col("qn2"))
-    val probes = broadcast(Ivf.probeCells(q, nCells, d, nprobe)
-      .join(q.select(col("qid"), col("qn2")), Seq("qid")))
-    val cells = probes.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val updRel = updIds.select(col("vec_id").as("id"))
-    // no broadcast hint on the prefix excision/fetch: the applied
-    // prefix is corpus-fraction-sized, AQE sizes both joins
-    val base = stored
-      .filter(col("cell").isin(cells.toSeq: _*))
-      .filter(col("lang").isin(unionLangs: _*))
-      .join(updRel, Seq("id"), "left_anti")
-      .select(col("id"), col("embedding"), col("n2"), col("lang"),
-        col("cell"))
-    val updRows = stored.join(updRel, Seq("id"), "left_semi")
-      .select(col("id"),
-        transform(col("embedding"), x => -x).as("embedding"),
-        col("n2"), col("lang"))
-    val delta = Ivf.assign(
-        updRows.select(col("id").as("vec_id"), col("embedding")),
-        nCells, d)
-      .select(col("id"), col("cell"))
-      .join(updRows, Seq("id"))
-      .filter(col("cell").isin(cells.toSeq: _*) &&
-        col("lang").isin(unionLangs: _*))
-      .select(col("id"), col("embedding"), col("n2"), col("lang"),
-        col("cell"))
-    val qf = broadcast(filters.toDF("qid", "lang"))
-    val scored = base.unionByName(delta)
-      .join(probes, Seq("cell"))
-      .join(qf, Seq("qid", "lang"))
-      .withColumn("score", cosScore)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("score").desc, col("id").asc)
-    scored.select(col("qid"), col("id"), col("lang"), col("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("id"), col("score"),
-        col("lang"))
-  }
-
-  /**
-   * [[serveRequestsIndexed]] at a SNAPSHOT — time travel on the
-   * PRODUCTION capstone, where BOTH request sides read partition-pruned
-   * layouts merge-on-read: the lexical pool off the snapshot postings
-   * (base minus prefix ∪ re-indexed delta) and the vector pool off the
-   * at-rest IVF index at the same snapshot
-   * ([[filteredTopKIndexedMultiAsOf]]). One document-update log drives
-   * both sides; base postings and index files are byte-immutable for
-   * every snapshot. Candidates stay probed-cell-approximate, as for
-   * every indexed serve — with the probes derived from the snapshot's
-   * query vectors.
-   */
-  def serveRequestsIndexedAsOf(spark: SparkSession, sfDir: String,
-                               emb: DataFrame, docMeta: DataFrame,
-                               queries: Seq[(Long, Seq[String])],
-                               filters: Seq[(Long, String)],
-                               weights: Seq[(Long, Double)],
-                               ks: Seq[(Long, Int)], k1: Double,
-                               b: Double, poolN: Int, nBuckets: Int,
-                               nCells: Int, d: Int, nprobe: Int,
-                               mod: Int, token: String,
-                               asOf: Int): DataFrame = {
-    val root = ensurePostingsLayout(spark, sfDir, nBuckets)
-    val (delta, embAsOf, updIds) = serveAsOfSnapshot(spark, sfDir, root,
-      emb, mod, nBuckets, token, asOf)
-    val vecPool = filteredTopKIndexedMultiAsOf(spark, sfDir, embAsOf,
-        filters, poolN, nCells, d, nprobe, updIds)
-      .select(col("qid"), col("id").as("doc_id"),
-        col("score").as("vscore"))
-    serveCut(spark,
-      serveFusedWith(spark, root, docMeta, queries, filters, weights,
-        k1, b, poolN, nBuckets, vecPool, upsertByIds = Some(delta)),
-      ks)
-  }
-
-  /**
-   * [[serveRequestsMetrics]] at snapshot `asOf` — the ledger twin of
-   * [[serveRequestsAsOf]], counting the SNAPSHOT's candidate sets, not
-   * the current ones: `t_cands`/`bytes_text` aggregate the snapshot
-   * postings (a request whose terms include the update token retrieves
-   * 0 rows for it at asOf 0 and the applied commits' docs after — the
-   * snapshot choice is visible in the bytes), `fused`/`page`/`fpr`
-   * derive from the as-of fused pool. `v_cands` is the lang pre-filter
-   * count — updates change vectors, not metadata, so it is snapshot-
-   * invariant by design (and the bytes_vec formula with it).
-   */
-  def serveRequestsAsOfMetrics(spark: SparkSession, sfDir: String,
-                               emb: DataFrame, docMeta: DataFrame,
-                               queries: Seq[(Long, Seq[String])],
-                               filters: Seq[(Long, String)],
-                               weights: Seq[(Long, Double)],
-                               ks: Seq[(Long, Int)], k1: Double,
-                               b: Double, poolN: Int, nBuckets: Int,
-                               d: Int, mod: Int, token: String,
-                               asOf: Int): DataFrame = {
-    require(ks.nonEmpty, "serveRequestsAsOfMetrics: empty page relation")
-    import spark.implicits._
-    val root = ensurePostingsLayout(spark, sfDir, nBuckets)
-    val (delta, embAsOf, _) = serveAsOfSnapshot(spark, sfDir, root, emb,
-      mod, nBuckets, token, asOf)
-    val fused = serveFusedWith(spark, root, docMeta, queries, filters,
-      weights, k1, b, poolN, nBuckets,
-      filteredTopKMulti(embAsOf, docMeta, filters, poolN)
-        .select(col("qid"), col("id").as("doc_id"),
-          col("score").as("vscore")),
-      upsertByIds = Some(delta))
-    val tAgg = servePostingBytes(spark, root, queries, nBuckets,
-      upsertByIds = Some(delta))
-    val meta = docMeta.select(col("doc_id").as("id"), col("lang"))
-    val qf = broadcast(filters.toDF("qid", "lang"))
-    val vAgg = emb.select(col("vec_id").as("id")).join(meta, Seq("id"))
-      .join(qf, Seq("lang"))
-      .groupBy(col("qid")).agg(count(lit(1)).as("v_cands"))
-    val nV = emb.count() // one bounded scalar (a model)
-    serveLedgerFrom(spark, fused, tAgg, vAgg, ks, nV, d)
   }
 
   // ---- late-interaction (maxsim) multi-vector retrieval ----------------

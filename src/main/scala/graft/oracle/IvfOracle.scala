@@ -1492,7 +1492,7 @@ object IvfOracle {
    * The probe-pruned, per-qid-filtered vector POOL as a CTE chain
    * ending at `vtop(qid, doc_id, vscore)` — the at-rest indexed vector
    * side of the serve capstone
-   * ([[graft.operators.Search.serveRequestsIndexed]]): coarse
+   * ([[graft.operators.Search.serveRequestsAt]], indexed): coarse
    * assignment, per-qid nprobe cells, candidates restricted to the
    * union of the filter langs AND each qid's own set (via the
    * enclosing `qf`), exact cosine, top-poolN per qid. References an

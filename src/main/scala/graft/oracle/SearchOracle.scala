@@ -745,7 +745,7 @@ object SearchOracle {
   }
 
   /**
-   * The FULL REQUEST OBJECT ([[graft.operators.Search.serveRequests]]):
+   * The FULL REQUEST OBJECT ([[graft.operators.Search.serveRequestsAt]]):
    * per-qid term sets + lang filters + fusion weight + page size, all
    * bound from the stored relation (or VALUES), one end-to-end plan —
    * the multi-BM25 CTEs post-filtered by each qid's langs, the
@@ -879,8 +879,8 @@ object SearchOracle {
 
   /**
    * The INDEXED serve capstone
-   * ([[graft.operators.Search.serveRequestsIndexed]]): the same serve
-   * chain with the vector pool swapped for the probe-pruned,
+   * ([[graft.operators.Search.serveRequestsAt]] on the indexed kind): the
+   * same serve chain with the vector pool swapped for the probe-pruned,
    * per-qid-filtered at-rest pipeline
    * ([[IvfOracle.indexedFilteredPoolCtes]]).
    */
@@ -918,8 +918,8 @@ object SearchOracle {
 
   /**
    * The INDEXED capstone's per-request ledger
-   * ([[graft.operators.Search.serveRequestsIndexedMetrics]]): the
-   * bytes_vec term becomes probe-aware — the metadata column only for
+   * ([[graft.operators.Search.serveRequestsLedger]] on the indexed kind):
+   * the bytes_vec term becomes probe-aware — the metadata column only for
    * the qid's probed cells' rows, embeddings only for the
    * lang-matching rows among them — with cell / (cell, lang)
    * occupancies derived from the same assignment chain the indexed
@@ -1437,7 +1437,7 @@ object SearchOracle {
 
   /**
    * Per-request byte ledger on the serving capstone
-   * ([[graft.operators.Search.serveRequestsMetrics]]): per-qid counts
+   * ([[graft.operators.Search.serveRequestsLedger]]): per-qid counts
    * and byte sums over the SAME posting / lang-filter / fused
    * relations the serve plan reads, LEFT-joined from the request
    * universe (zero-match qids emit explicit all-zero rows, 0/0 ratios

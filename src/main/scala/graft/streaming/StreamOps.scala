@@ -1004,9 +1004,8 @@ object StreamOps {
   }
 
   /** Bump whenever anything upstream of a request-stream drain changes
-    * semantics: the serves ([[graft.operators.Search
-    * .serveRequestsOffPostings]], [[graft.operators.Search
-    * .serveRequestsTiered]]), the commit verbs,
+    * semantics: the serves ([[graft.operators.Search.serveRequestsAt]],
+    * [[graft.operators.Search.serveRequestsTiered]]), the commit verbs,
     * or the drain itself. The landing and drain dirs of all eight
     * request streams ([[serveRequestsOverStream]],
     * [[serveRequestsTieredOverStream]] and every plan of
@@ -1168,7 +1167,7 @@ object StreamOps {
    * shape for the FULL request object: request ids arrive as a real
    * file stream ([[StaticRequestsPerShard]] requests per landing shard,
    * one shard per trigger), and each microbatch runs the complete fused
-   * serve ([[graft.operators.Search.serveRequestsOffPostings]]) for ITS
+   * serve ([[graft.operators.Search.serveRequestsAt]]) for ITS
    * arriving requests only — per-request term sets, lang filters,
    * fusion weights, and page sizes sliced from the bound relations.
    * Everything in the serve is per-request independent (df/idf are
@@ -1187,19 +1186,16 @@ object StreamOps {
                               ks: Seq[(Long, Int)], k1: Double,
                               b: Double, poolN: Int,
                               nBuckets: Int): DataFrame = {
-    val root = graft.operators.Search.ensurePostingsLayout(spark, sfDir,
+    import graft.operators.Search
+    val req = Search.Requests(queries, filters, weights, ks, k1, b, poolN,
       nBuckets)
+    Search.ensurePostingsLayout(spark, sfDir, nBuckets)
     drainRequestStream(spark, sfDir,
       Seq("serve", queries, filters, weights, ks, k1, b, poolN, nBuckets),
       ks.map(_._1).sorted.grouped(StaticRequestsPerShard).toSeq) {
       (_, _, arrived) =>
-      graft.operators.Search.serveRequestsOffPostings(spark,
-        root, emb, docMeta, docMeta,
-        queries.filter(kv => arrived(kv._1)),
-        filters.filter(kv => arrived(kv._1)),
-        weights.filter(kv => arrived(kv._1)),
-        ks.filter(kv => arrived(kv._1)),
-        k1, b, poolN, nBuckets)
+      Search.serveRequestsAt(spark, sfDir, emb, docMeta, req.slice(arrived),
+        None, None)
     }
   }
 

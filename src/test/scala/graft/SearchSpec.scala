@@ -27,6 +27,14 @@ class SearchSpec extends AnyFunSuite {
   }
   private val indexedKind =
     Some((SparkEntry.IvfCells, SparkEntry.EmbD, SparkEntry.IvfProbe))
+  // the request bundle as SparkEntry binds it, over `queries`' terms
+  private def requests(queries: Seq[(Long, Seq[String])] =
+                         SparkEntry.Bm25MultiQueries): Search.Requests = {
+    import SparkEntry.{FilterMultiRel, FusionMultiRel, PageKMultiRel, Bm25K1,
+      Bm25B, RrfPoolN, PostBuckets}
+    Search.Requests(queries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
+      Bm25K1, Bm25B, RrfPoolN, PostBuckets)
+  }
 
   test("filteredTopK returns only candidates passing the metadata predicate") {
     val langs = Seq("fr", "de")
@@ -713,26 +721,19 @@ class SearchSpec extends AnyFunSuite {
   }
 
   test("indexed serve: page discipline holds; full probe recovers the brute serve") {
-    import SparkEntry.{Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-      PageKMultiRel, Bm25K1, Bm25B, RrfPoolN, PostBuckets, IvfCells,
-      EmbD, IvfProbe}
-    val idx = Search.serveRequestsIndexed(spark, dir, emb, docs,
-      Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-      Bm25K1, Bm25B, RrfPoolN, PostBuckets, IvfCells, EmbD, IvfProbe)
-      .collect()
+    import SparkEntry.{PageKMultiRel, IvfCells, EmbD}
+    val idx = Search.serveRequestsAt(spark, dir, emb, docs, requests(),
+      indexedKind, None).collect()
     PageKMultiRel.foreach { case (qid, kq) =>
       assert(idx.count(_.getAs[Long]("qid") == qid) == kq,
         s"indexed serve: qid $qid page not exactly $kq") }
     // at FULL probe the indexed vector pool equals the brute filtered
     // pool, so the whole fused serve must be bit-equal to the brute
     // capstone (the only approximation is cell pruning)
-    val full = Search.serveRequestsIndexed(spark, dir, emb, docs,
-      Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-      Bm25K1, Bm25B, RrfPoolN, PostBuckets, IvfCells, EmbD,
-      nprobe = IvfCells).collect().map(_.toSeq).toSet
-    val brute = Search.serveRequests(spark, dir, emb, docs,
-      Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-      Bm25K1, Bm25B, RrfPoolN, PostBuckets).collect().map(_.toSeq).toSet
+    val full = Search.serveRequestsAt(spark, dir, emb, docs, requests(),
+      Some((IvfCells, EmbD, IvfCells)), None).collect().map(_.toSeq).toSet
+    val brute = Search.serveRequestsAt(spark, dir, emb, docs, requests(),
+      None, None).collect().map(_.toSeq).toSet
     assert(full == brute && full.nonEmpty,
       "full-probe indexed serve diverged from the brute capstone")
   }
@@ -961,40 +962,40 @@ class SearchSpec extends AnyFunSuite {
   test("tiered request bundle rejects mismatched relations") {
     import SparkEntry.{Bm25MultiQueries => qs, FilterMultiRel => fs,
       FusionMultiRel => ws, PageKMultiRel => ks, ServeTierRel => ts}
+    // each case builds the tiered bundle and the non-tiered one from the
+    // same relations; the cases about the tiers bind the tiered one only
     def req(queries: Seq[(Long, Seq[String])] = qs,
             filters: Seq[(Long, String)] = fs,
             weights: Seq[(Long, Double)] = ws,
             pageKs: Seq[(Long, Int)] = ks,
-            tiers: Seq[(Long, Int)] = ts) =
-      Search.TieredRequests(queries, filters, weights, pageKs, tiers,
-        SparkEntry.ServeTierLayoutScales, 1.2, 0.75, 10, 4, 0.5)
-    req() // the fixture's relations agree
-    req(filters = fs :+ (1L -> "fr")) // filters may repeat a qid
-    val bad = Seq[(String, () => Search.TieredRequests)](
-      "tiers has no row for qid 3" -> (() => req(tiers = ts.init)),
-      "ks has no row for qid 3" -> (() => req(pageKs = ks.init)),
+            tiers: Seq[(Long, Int)] = ts) = Seq[() => Any](
+      () => Search.TieredRequests(queries, filters, weights, pageKs, tiers,
+        SparkEntry.ServeTierLayoutScales, 1.2, 0.75, 10, 4, 0.5),
+      () => Search.Requests(queries, filters, weights, pageKs, 1.2, 0.75,
+        10, 4))
+    req().foreach(_()) // the fixture's relations agree
+    req(filters = fs :+ (1L -> "fr")).foreach(_()) // a qid's lang set
+    val bad = Seq[(String, Seq[() => Any])](
+      "tiers has no row for qid 3" -> req(tiers = ts.init).take(1),
+      "ks has no row for qid 3" -> req(pageKs = ks.init),
       "queries has no row for qid 2" ->
-        (() => req(queries = qs.filter(_._1 != 2L))),
-      "filters has no row for qid 1" ->
-        (() => req(filters = fs.filter(_._1 != 1L))),
+        req(queries = qs.filter(_._1 != 2L)),
+      "filters has no row for qid 1" -> req(filters = fs.filter(_._1 != 1L)),
       "weights has no row for qid 4" ->
-        (() => req(queries = qs :+ (4L -> Seq("dup")),
-          filters = fs :+ (4L -> "en"), pageKs = ks :+ (4L -> 3),
-          tiers = ts :+ (4L -> 4))),
+        req(queries = qs :+ (4L -> Seq("dup")), filters = fs :+ (4L -> "en"),
+          pageKs = ks :+ (4L -> 3), tiers = ts :+ (4L -> 4)),
       "tiers has more than one row for qid 1" ->
-        (() => req(tiers = ts :+ (1L -> 4))),
-      "ks has more than one row for qid 0" ->
-        (() => req(pageKs = ks :+ (0L -> 5))),
+        req(tiers = ts :+ (1L -> 4)).take(1),
+      "ks has more than one row for qid 0" -> req(pageKs = ks :+ (0L -> 5)),
       "weights has more than one row for qid 2" ->
-        (() => req(weights = ws :+ (2L -> 0.1))),
+        req(weights = ws :+ (2L -> 0.1)),
       "queries has more than one row for qid 3" ->
-        (() => req(queries = qs :+ (3L -> Seq("merge")))),
-      "filters repeat (qid, lang) (1,en)" ->
-        (() => req(filters = fs :+ (1L -> "en"))),
-      "empty tier relation" -> (() => req(tiers = Nil)),
+        req(queries = qs :+ (3L -> Seq("merge"))),
+      "filters repeat (qid, lang) (1,en)" -> req(filters = fs :+ (1L -> "en")),
+      "empty tier relation" -> req(tiers = Nil).take(1),
       "not all stored in layout" ->
-        (() => req(tiers = ts.map { case (q, _) => q -> 6 })))
-    bad.foreach { case (why, build) =>
+        req(tiers = ts.map { case (q, _) => q -> 6 }).take(1))
+    for ((why, builds) <- bad; build <- builds) {
       val e = intercept[IllegalArgumentException](build())
       assert(e.getMessage.contains(why), s"$why: ${e.getMessage}")
     }
@@ -1035,6 +1036,36 @@ class SearchSpec extends AnyFunSuite {
     }
   }
 
+  /** Spark jobs of one warm request serve per query SparkEntry names,
+    * as counted before the non-tiered serves were folded onto
+    * [[Search.serveRequestsAt]]: the current partitioned serve, the
+    * indexed serve (with its probed-cell collect) and the as-of ledger
+    * (with the universe count). */
+  private val RequestServeJobBudget = Map("q_serve_requests" -> 23,
+    "q_serve_requests_indexed" -> 26, "q_serve_requests_asof_metrics" -> 40)
+
+  test("request serves stay within their Spark job budgets") {
+    import SparkEntry.{AsOfServeQueries, Bm25UpsertMod, PostingsUpsertToken,
+      ServeAsOfSnapshot, EmbD}
+    val log = Some(Search.UpdateLog(Bm25UpsertMod, PostingsUpsertToken,
+      ServeAsOfSnapshot))
+    val calls = Seq[(String, () => Unit)](
+      "q_serve_requests" -> (() => Search.serveRequestsAt(spark, dir, emb,
+        docs, requests(), None, None).collect()),
+      "q_serve_requests_indexed" -> (() => Search.serveRequestsAt(spark, dir,
+        emb, docs, requests(), indexedKind, None).collect()),
+      "q_serve_requests_asof_metrics" -> (() => Search.serveRequestsLedger(
+        spark, dir, emb, docs, requests(AsOfServeQueries), None, log, EmbD)
+        .collect()))
+    for ((name, call) <- calls) {
+      call() // builds the layouts outside the count
+      val jobs = jobsOf(call())
+      info(s"$name: $jobs jobs")
+      assert(jobs <= RequestServeJobBudget(name),
+        s"$name ran $jobs Spark jobs")
+    }
+  }
+
   test("tiered fetch equals the relational reference on the stored fixture layouts") {
     def rows(df: DataFrame) = df.select("qid", "id", "s_full").collect()
       .map(r => (r.getLong(0), r.getLong(1),
@@ -1069,13 +1100,9 @@ class SearchSpec extends AnyFunSuite {
   }
 
   test("indexed serve ledger: sum-of-parts, probe pruning strictly undercuts the brute ledger") {
-    import SparkEntry.{Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
-      PageKMultiRel, Bm25K1, Bm25B, RrfPoolN, PostBuckets, IvfCells,
-      EmbD, IvfProbe}
-    val led = Search.serveRequestsIndexedMetrics(spark, dir, emb, docs,
-      Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-      Bm25K1, Bm25B, RrfPoolN, PostBuckets, IvfCells, EmbD, IvfProbe)
-      .collect()
+    import SparkEntry.{PageKMultiRel, EmbD}
+    val led = Search.serveRequestsLedger(spark, dir, emb, docs, requests(),
+      indexedKind, None, EmbD).collect()
     val per = led.filter(_.getAs[Long]("qid") >= 0)
     val tot = led.filter(_.getAs[Long]("qid") == -1L)
     assert(per.length == PageKMultiRel.length && tot.length == 1)
@@ -1093,9 +1120,8 @@ class SearchSpec extends AnyFunSuite {
     }
     // per qid, the indexed vector bytes strictly undercut the brute
     // ledger's (same text side, pruning is the delta)
-    val brute = Search.serveRequestsMetrics(spark, dir, emb, docs,
-      Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-      Bm25K1, Bm25B, RrfPoolN, PostBuckets, EmbD).collect()
+    val brute = Search.serveRequestsLedger(spark, dir, emb, docs,
+      requests(), None, None, EmbD).collect()
       .filter(_.getAs[Long]("qid") >= 0)
       .map(r => r.getAs[Long]("qid") -> r).toMap
     per.foreach { r =>
@@ -1107,12 +1133,76 @@ class SearchSpec extends AnyFunSuite {
     }
   }
 
+  test("one request serve and ledger, both layout kinds: a qid matching nothing, a k past the fused pool") {
+    import SparkEntry.{Bm25K1, Bm25B, RrfPoolN, PostBuckets, EmbD}
+    // qid 1's term matches no posting and its lang no vector row; qid 2
+    // asks for more rows than its fused pool can hold (<= 2·poolN)
+    val bigK = 10000
+    val req = Search.Requests(
+      Seq(0L -> Seq("filter", "merge"), 1L -> Seq("zzqnomatchtokenzz"),
+        2L -> Seq("customer")),
+      Seq(0L -> "fr", 1L -> "zz", 2L -> "en", 2L -> "de"),
+      Seq(0L -> 0.5, 1L -> 0.5, 2L -> 0.3), Seq(0L -> 3, 1L -> 5, 2L -> bigK),
+      Bm25K1, Bm25B, RrfPoolN, PostBuckets)
+    val nV = emb.count()
+    for (kind <- Seq(None, indexedKind)) {
+      val served = Search.serveRequestsAt(spark, dir, emb, docs, req, kind,
+          None).collect().groupBy(_.getAs[Long]("qid"))
+        .view.mapValues(_.length.toLong).toMap
+      val led = Search.serveRequestsLedger(spark, dir, emb, docs, req, kind,
+        None, EmbD).collect().map(r => r.getAs[Long]("qid") -> r).toMap
+      assert(led.keySet == Set(-1L, 0L, 1L, 2L), s"$kind: ${led.keySet}")
+      // the qid matching nothing: no page rows, an all-zero count row,
+      // fpr's 0/0 defined as 0.0; the lang column is still read (every
+      // row, or the probed cells' rows), so bytes_vec is that alone and
+      // save is the ledger arithmetic over it, never NaN
+      assert(!served.contains(1L), s"$kind: qid 1 served rows")
+      val z = led(1L)
+      for (c <- Seq("t_cands", "v_cands", "fused", "page", "bytes_text"))
+        assert(z.getAs[Long](c) == 0L, s"$kind: qid 1 $c != 0")
+      assert(z.getAs[Double]("fpr") == 0.0, s"$kind: qid 1 fpr")
+      val langBytes =
+        if (kind.isEmpty) 8L * nV else 8L * z.getAs[Long]("pc_rows")
+      assert(z.getAs[Long]("bytes_vec") == langBytes)
+      assert(z.getAs[Long]("bytes_vec_full") == (8L + 4L * EmbD) * nV)
+      assert(z.getAs[Double]("save") == 1.0 - langBytes.toDouble /
+        ((8L + 4L * EmbD) * nV).toDouble, s"$kind: qid 1 save")
+      // k past the pool: the page is the whole fused pool, all served
+      val p = led(2L)
+      assert(p.getAs[Long]("fused") > 0L && p.getAs[Long]("fused") < bigK)
+      assert(p.getAs[Long]("page") == p.getAs[Long]("fused"))
+      assert(served(2L) == p.getAs[Long]("page"), s"$kind: qid 2 page")
+      assert(served(0L) == 3L && led(0L).getAs[Long]("page") == 3L)
+    }
+  }
+
+  test("as-of request forms: asOf 0 equals the current ledger on both kinds, and the indexed serve") {
+    import SparkEntry.{AsOfServeQueries, Bm25UpsertMod, PostingsUpsertToken,
+      EmbD}
+    // the indexed as-of ledger is a combination no query names; it must
+    // reduce to its current form at the empty commit prefix
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
+      .sortBy(_.mkString(","))
+    val req = requests(AsOfServeQueries)
+    val log0 = Some(Search.UpdateLog(Bm25UpsertMod, PostingsUpsertToken, 0))
+    for (kind <- Seq(None, indexedKind)) {
+      val cur = rows(Search.serveRequestsLedger(spark, dir, emb, docs, req,
+        kind, None, EmbD))
+      assert(cur.nonEmpty && rows(Search.serveRequestsLedger(spark, dir, emb,
+        docs, req, kind, log0, EmbD)) == cur,
+        s"indexed=$kind: the asOf-0 ledger differs from the current one")
+    }
+    assert(rows(Search.serveRequestsAt(spark, dir, emb, docs, req,
+      indexedKind, log0)) == rows(Search.serveRequestsAt(spark, dir, emb,
+      docs, req, indexedKind, None)),
+      "the indexed asOf-0 serve differs from the current one")
+  }
+
   test("serve-requests ledger: per-request rows, sum-of-parts total, ledger arithmetic") {
     import SparkEntry.{Bm25MultiQueries, FilterMultiRel, FusionMultiRel,
       PageKMultiRel, Bm25K1, Bm25B, RrfPoolN, PostBuckets, EmbD}
-    val led = Search.serveRequestsMetrics(spark, dir, emb, docs,
-      Bm25MultiQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-      Bm25K1, Bm25B, RrfPoolN, PostBuckets, EmbD).collect()
+    val led = Search.serveRequestsLedger(spark, dir, emb, docs, requests(),
+      None, None, EmbD).collect()
     val per = led.filter(_.getAs[Long]("qid") >= 0)
     val tot = led.filter(_.getAs[Long]("qid") == -1L)
     assert(per.length == PageKMultiRel.length && tot.length == 1,
@@ -1161,8 +1251,10 @@ class SearchSpec extends AnyFunSuite {
 
   test("per-qid filters at rest: each qid's slice equals the single-predicate indexed run") {
     import SparkEntry.{FilterMultiRel, K, IvfCells, EmbD, IvfProbe}
-    val multi = Search.filteredTopKIndexedMulti(spark, dir, emb,
-      FilterMultiRel, K, IvfCells, EmbD, IvfProbe).collect()
+    val multi = Search.filteredTopKIndexedMulti(spark,
+      spark.read.parquet(graft.operators.Ivf.ensureIndex(spark, dir,
+        IvfCells, EmbD)), emb, FilterMultiRel, K, IvfCells, EmbD, IvfProbe)
+      .collect()
     val allowed = FilterMultiRel.toSet
     assert(multi.nonEmpty)
     assert(multi.forall(r =>
@@ -1244,10 +1336,10 @@ class SearchSpec extends AnyFunSuite {
     // vector flips — the as-of path (flag joins, anti-join excision and
     // all) must reproduce the PLAIN serve bit-for-bit, including qid
     // 0's token term retrieving zero docs
-    val asOf0 = rows(Search.serveRequestsAsOf(spark, dir, emb, docs,
-      AsOfServeQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-      Bm25K1, Bm25B, RrfPoolN, PostBuckets, Bm25UpsertMod,
-      PostingsUpsertToken, asOf = 0))
+    def asOf(v: Int) = rows(Search.serveRequestsAt(spark, dir, emb, docs,
+      requests(AsOfServeQueries), None,
+      Some(Search.UpdateLog(Bm25UpsertMod, PostingsUpsertToken, v))))
+    val asOf0 = asOf(0)
     val pristine = rows(Search.serveRequests(spark, dir, emb, docs,
       AsOfServeQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
       Bm25K1, Bm25B, RrfPoolN, PostBuckets))
@@ -1257,10 +1349,7 @@ class SearchSpec extends AnyFunSuite {
     // docs (token candidacy) and flipped vectors change the answer, so
     // "which snapshot" is a visible property of the result, not a
     // bookkeeping column
-    val asOf1 = rows(Search.serveRequestsAsOf(spark, dir, emb, docs,
-      AsOfServeQueries, FilterMultiRel, FusionMultiRel, PageKMultiRel,
-      Bm25K1, Bm25B, RrfPoolN, PostBuckets, Bm25UpsertMod,
-      PostingsUpsertToken, asOf = 1))
+    val asOf1 = asOf(1)
     assert(asOf1 != asOf0, "snapshot 1 indistinguishable from 0")
     // the token qid specifically: snapshot 1 serves it commit-1 docs
     // (doc_id ≡ 0 mod 2·mod among its pages) that snapshot 0 cannot

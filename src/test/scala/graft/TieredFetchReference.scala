@@ -25,8 +25,8 @@ object TieredFetchReference {
                   indexed: Option[(Int, Int, Int)]): DataFrame = {
     import spark.implicits._
     val usedScales = req.usedScales
-    val qSel = broadcast(Ann.queriesOf(view.queries, req.nq)
-      .select(col("qid"), col("qvec"), col("qn2").as("nq2")))
+    val qSel = Ann.queriesOf(view.queries, req.nq)
+      .select(col("qid"), col("qvec"), col("qn2").as("nq2"))
     // indexed: the union of all probed cells as a static partition filter
     val (scan, cellCol, probeSet) = indexed match {
       case None => (view.stored, Seq.empty[Column], None)
